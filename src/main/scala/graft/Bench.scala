@@ -77,6 +77,12 @@ object Bench {
       // timed runs.
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    def errText(e: Throwable): String =
+      s"${e.getClass.getSimpleName}: ${String.valueOf(e.getMessage).take(200)}"
+    // End-of-suite phases keep going past a failed query; each failure
+    // still leaves one stderr line.
+    def warn(phase: String, what: String, e: Throwable): Unit =
+      System.err.println(s"[bench] $phase $what failed: ${errText(e)}")
     def esc(s: String): String =
       s.flatMap {
         case '"' => "\\\""; case '\\' => "\\\\"; case '\n' => "\\n"
@@ -250,7 +256,7 @@ object Bench {
         // run sequence is the diagnostic for JVM-accretion artifacts.
         perRun(name) = runs.toSeq
       } catch { case e: Throwable =>
-        failed(name) = s"${e.getClass.getSimpleName}: ${String.valueOf(e.getMessage).take(200)}"
+        failed(name) = errText(e)
         System.err.println(s"[bench] FAILED $name: ${failed(name)}")
       } finally {
         spark.catalog.clearCache()
@@ -376,7 +382,7 @@ object Bench {
       sentinels.foreach { n =>
         SparkEntry.queries.get(n).foreach { fn =>
           try sentinelEnd(n) = isolatedMedian(fn)
-          catch { case _: Throwable => () }
+          catch { case e: Throwable => warn("sentinel", n, e) }
         }
       }
     }
@@ -473,7 +479,7 @@ object Bench {
               iso = math.min(iso, isolatedMedian(fn))
             sviAttr(n) = (suite, iso, prior,
               sviVerdict(n, suite, iso, prior))
-          } catch { case _: Throwable => () }
+          } catch { case e: Throwable => warn("attribution", n, e) }
         }
       }
       val memoTargets = top.collect { case ("m", d) => d }
@@ -484,7 +490,7 @@ object Bench {
         memoTargets.flatMap(d => memoOwner.get(d._1)).distinct.foreach { qn =>
           SparkEntry.queries.get(qn).foreach { fn =>
             try fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-            catch { case _: Throwable => () }
+            catch { case e: Throwable => warn("memo re-populate", qn, e) }
             spark.catalog.clearCache(); System.gc()
           }
         }
@@ -508,7 +514,7 @@ object Bench {
               SparkEntry.queries.get(qn).foreach { fn =>
                 try fn(spark, sfDir).write.format("noop")
                   .mode("overwrite").save()
-                catch { case _: Throwable => () }
+                catch { case e: Throwable => warn("memo re-populate", qn, e) }
                 spark.catalog.clearCache(); System.gc()
               }
             }
@@ -570,7 +576,7 @@ object Bench {
       },"box_drift_median":${ms3(boxDriftMedian)},"prior_box_mismatch":$priorBoxMismatch,"family_drift_suspect":${famSuspects.map(f => s""""${esc(f)}"""").mkString("[", ",", "]")},"detail":"bench_line.json","sf":"${esc(sfDir)}"}""")
     try java.nio.file.Files.writeString(
       java.nio.file.Paths.get("bench_line.json"), fullLine + "\n")
-    catch { case _: Throwable => () }
+    catch { case e: Throwable => warn("write", "bench_line.json", e) }
     spark.stop()
   }
 }

@@ -220,6 +220,11 @@ object Pipeline {
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
       .config("spark.ui.enabled", "false")
+      // Static confs Bench sets (see its builder for the measurement):
+      // no Janino class-cache thrash across a long query list, and a
+      // bounded SQL status store.
+      .config("spark.sql.codegen.cache.maxEntries", "4096")
+      .config("spark.sql.ui.retainedExecutions", "8")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // Entry smoke with `observe()` — production metric collection

@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.StructType
 
 /** Loaders for the driver testdata tables (TESTDATA.md / FIXTURES.md §B).
   *
@@ -9,10 +10,32 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * columnar parquet scans with Catalyst predicate pushdown + column
   * pruning (filters/selects are applied by callers *on the returned
   * DataFrame*, which Catalyst pushes into the scan).
+  *
+  * Schema catalog. Inferring a parquet schema is a Spark job; the
+  * inferred schema is memoized through [[Memos.memo]] as `table_schema`,
+  * keyed by the table path and the session confs that change what
+  * inference yields (`inferTimestampNTZ.enabled`,
+  * `legacy.parquet.nanosAsLong`), and stamped with the path's file
+  * fingerprint. Every read after the first is
+  * `spark.read.schema(s).parquet(path)`, which runs no job; a table
+  * rewritten under the same path is re-inferred on its next read.
   */
 object Tables {
-  def table(spark: SparkSession, dir: String, name: String): DataFrame =
-    normalizeTimestamps(spark.read.parquet(s"$dir/$name.parquet"))
+  private val SchemaConfs = Seq(
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.legacy.parquet.nanosAsLong")
+
+  def table(spark: SparkSession, dir: String, name: String): DataFrame = {
+    val path = s"$dir/$name.parquet"
+    normalizeTimestamps(spark.read.schema(schema(spark, path)).parquet(path))
+  }
+
+  /** The schema of the parquet table at `path`, as an uncached
+    * `spark.read.parquet(path)` under the session's current confs infers
+    * it. */
+  private[graft] def schema(spark: SparkSession, path: String): StructType =
+    Memos.memo("table_schema", spark, Seq(path),
+      SchemaConfs.map(spark.conf.getOption))(spark.read.parquet(path).schema)
 
   /** The generator writes naive (isAdjustedToUTC=false) parquet
     * TIMESTAMP(MICROS) columns, which Spark 4 infers as TIMESTAMP_NTZ by

@@ -74,18 +74,13 @@ object BatchOps {
   }
 
   /** Session memo of the materialized customer rollup — same
-    * store-once-serve-many contract as [[productRollupMemo]] (the
+    * store-once-serve-many contract as [[productRollupCached]] (the
     * round-3/4 no-persist comment below recommended exactly this:
     * "persist the rollup at the session level"; the memo owns that
     * lifecycle). [[customerOrdersRollup]] stays the raw plan. */
-  private val customerRollupMemo = graft.Memos.register(
-    new java.util.concurrent.ConcurrentHashMap[(String, String), DataFrame]())
-
   def customerOrdersRollupCached(spark: SparkSession, dir: String): DataFrame =
-    customerRollupMemo.computeIfAbsent(
-      (spark.sparkContext.applicationId, dir),
-      _ => graft.Memos.timed("customer_rollup_memo")(
-        customerOrdersRollup(spark, dir).localCheckpoint()))
+    graft.Memos.memo("customer_rollup_memo", spark, Seq(dir))(
+      customerOrdersRollup(spark, dir).localCheckpoint())
 
   /** M0 flagship: tiered segmentation (C1), CLV (C2), recency banding (C3)
     * on top of the A1 rollup, thresholds from exact percentiles (A4).
@@ -156,22 +151,17 @@ object BatchOps {
     * Results are identical to grouping post-join; the shuffle payload is
     * what changes, and at 100 TB the fact side never carries dimension
     * strings through an exchange. */
-  /** Session memo of the materialized product rollup, keyed by
-    * (applicationId, dir) — the reference's batch processor materializes
-    * exactly this aggregate per run and serves every reader from the
-    * store (`python/batch_processor.py` caches it to Redis); here the
-    * |parts|-row checkpoint plays the store and three queries
+  /** Session memo of the materialized product rollup — the reference's
+    * batch processor materializes exactly this aggregate per run and
+    * serves every reader from the store (`python/batch_processor.py`
+    * caches it to Redis); here the |parts|-row checkpoint plays the
+    * store and three queries
     * ([[topPartsByRevenue]], [[productPerformance]], the registered
     * rollup itself) read it. [[productRollup]] stays the raw plan — the
     * shuffle-shape spec asserts on it. */
-  private val productRollupMemo = graft.Memos.register(
-    new java.util.concurrent.ConcurrentHashMap[(String, String), DataFrame]())
-
   def productRollupCached(spark: SparkSession, dir: String): DataFrame =
-    productRollupMemo.computeIfAbsent(
-      (spark.sparkContext.applicationId, dir),
-      _ => graft.Memos.timed("product_rollup_memo")(
-        productRollup(spark, dir).localCheckpoint()))
+    graft.Memos.memo("product_rollup_memo", spark, Seq(dir))(
+      productRollup(spark, dir).localCheckpoint())
 
   def productRollup(spark: SparkSession, dir: String): DataFrame = {
     val p = Tables.part(spark, dir)
@@ -210,7 +200,7 @@ object BatchOps {
     // run would do too: thresholds must see the full rollup, so a
     // barrier is semantically required before the per-row
     // categorization. The memoized checkpoint lives for the session
-    // (see productRollupMemo's scaladoc).
+    // (see productRollupCached's scaladoc).
     val roll = productRollupCached(spark, dir)
     val th = roll.agg(
       expr("percentile(revenue, 0.8)").as("p80_revenue"),
@@ -1879,23 +1869,19 @@ object BatchOps {
     * SQL spelling of the walk is an 8-level nested CASE tree that
     * costs ~1 s of Catalyst optimizer + codegen PER EXECUTION at any
     * data size (planning, not execution, cost), and re-creating even
-    * the LocalRelation per run re-pays 65k row conversions; keyed by
-    * applicationId like every session memo. */
-  private val hilbertLutMemo = graft.Memos.register(
-    new java.util.concurrent.ConcurrentHashMap[String, DataFrame]())
-
+    * the LocalRelation per run re-pays 65k row conversions. It reads no
+    * input, so the memo is keyed by the session alone. */
   private def hilbertLut(spark: SparkSession): DataFrame =
-    hilbertLutMemo.computeIfAbsent(spark.sparkContext.applicationId,
-      _ => graft.Memos.timed("hilbert_lut") {
-        val shift = 2 * ZorderBits - ZorderBucketLog
-        spark.createDataFrame(
-            for {
-              x <- 0 until (1 << ZorderBits)
-              y <- 0 until (1 << ZorderBits)
-            } yield (x.toLong, y.toLong, hilbertIndex(x, y) >> shift))
-          .toDF("npk", "nsk", "h_bucket")
-          .localCheckpoint()
-      })
+    graft.Memos.memo("hilbert_lut", spark, Nil) {
+      val shift = 2 * ZorderBits - ZorderBucketLog
+      spark.createDataFrame(
+          for {
+            x <- 0 until (1 << ZorderBits)
+            y <- 0 until (1 << ZorderBits)
+          } yield (x.toLong, y.toLong, hilbertIndex(x, y) >> shift))
+        .toDF("npk", "nsk", "h_bucket")
+        .localCheckpoint()
+    }
 
   private[graft] def hilbertIndex(x0: Int, y0: Int): Long = {
     val n = 1 << ZorderBits

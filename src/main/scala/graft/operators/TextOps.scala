@@ -792,23 +792,17 @@ object TextOps {
   def minhashCandidates(spark: SparkSession, dir: String): DataFrame =
     minhashCandidatesCore(spark, dir).orderBy("doc_a", "doc_b")
 
-  /** Session-scoped memo of the capped minhash candidate PAIR set —
-    * the [[nearDupPairsMemo]] contract applied to the minhash family:
-    * the checkpointed frame is pair-count-sized (bucket-capped — KBs),
-    * and both consumers ([[minhashCandidates]]' own query and
+  /** [[minhashCandidates]] without the presentation sort (the CoreSql
+    * convention): the session memo of the capped minhash candidate PAIR
+    * set — the [[nearDupPairsCore]] contract applied to the minhash
+    * family. The checkpointed frame is pair-count-sized (bucket-capped —
+    * KBs), and both consumers ([[minhashCandidates]]' own query and
     * [[minhashCalibration]]'s verify) read one materialization instead
     * of re-running the explode→signature→bucket pipeline each. */
-  private val minhashPairsMemo = graft.Memos.register(
-    new java.util.concurrent.ConcurrentHashMap[(String, String), DataFrame]())
-
-  /** [[minhashCandidates]] without the presentation sort (the CoreSql
-    * convention), memoized per (session, dir). */
   private def minhashCandidatesCore(spark: SparkSession,
       dir: String): DataFrame =
-    minhashPairsMemo.computeIfAbsent(
-      (spark.sparkContext.applicationId, dir),
-      _ => graft.Memos.timed("minhash_pairs")(
-        minhashCandidatesUncached(spark, dir).localCheckpoint()))
+    graft.Memos.memo("minhash_pairs", spark, Seq(dir))(
+      minhashCandidatesUncached(spark, dir).localCheckpoint())
 
   /** The explode→xor-minhash→capped-bucket pipeline behind the memo;
     * PlanSpec asserts the WindowGroupLimit cap against THIS builder
@@ -2657,37 +2651,29 @@ object TextOps {
        |FROM u0 LEFT JOIN lbl ON u0.d = lbl.v
        |ORDER BY 1""".stripMargin
 
-  /** Session-scoped memo of the CC labels, keyed by (applicationId, dir).
-    * The labels frame is the dedup pipeline's materialized intermediate:
-    * [[dedupComponents]] and [[nearDupSurvivors]] both consume it, and at
-    * 100 TB you would persist it once and fan out — recomputing the whole
+  /** [[dedupComponents]] without the presentation sort — the shared core
+    * for consumers that join the labels onward (a pre-join sort would be
+    * executed, then destroyed by the join shuffle) — as the session memo
+    * of the CC labels. The labels frame is the dedup pipeline's
+    * materialized intermediate: [[dedupComponents]] and
+    * [[nearDupSurvivors]] both consume it, and at 100 TB you would
+    * persist it once and fan out — recomputing the whole
     * candidates→verify→CC pipeline per consumer is the anti-pattern (r9
     * bench: each consumer paid ~3.4 s for an identical Pregel run). The
     * cached frame is the localCheckpoint'd label set (docs with ≥1
     * near-dup pair only — KBs, not corpus-sized), so the memo's block
-    * footprint is negligible and keyed entries die with the session. */
-  private val ccLabelMemo = graft.Memos.register(
-    new java.util.concurrent.ConcurrentHashMap[(String, String), DataFrame]())
-
-  /** [[dedupComponents]] without the presentation sort — the shared core
-    * for consumers that join the labels onward (a pre-join sort would be
-    * executed, then destroyed by the join shuffle). Memoized per
-    * (session, dir) via [[ccLabelMemo]]. */
+    * footprint is negligible. */
   private def dedupComponentsCore(spark: SparkSession,
       dir: String): DataFrame =
-    ccLabelMemo.computeIfAbsent((spark.sparkContext.applicationId, dir),
-      _ => graft.Memos.timed("cc_labels")(
-        dedupComponentsUncached(spark, dir)))
+    graft.Memos.memo("cc_labels", spark, Seq(dir))(
+      dedupComponentsUncached(spark, dir))
 
-  /** Session-scoped memo of the verified capped near-dup PAIR set —
-    * the edge list both graph consumers ([[dedupComponentsUncached]]'s
-    * CC and [[pageRankNearDup]]) build on. Same immutable-dir contract
-    * as [[ccLabelMemo]]; the checkpointed frame is pair-count-sized
-    * (KBs). */
-  private val nearDupPairsMemo = graft.Memos.register(
-    new java.util.concurrent.ConcurrentHashMap[(String, String), DataFrame]())
-
-  /** The memoized frame carries `jaccard` and the exact counts too:
+  /** Session memo of the verified capped near-dup PAIR set — the edge
+    * list both graph consumers ([[dedupComponentsUncached]]'s CC and
+    * [[pageRankNearDup]]) build on; the checkpointed frame is
+    * pair-count-sized (KBs).
+    *
+    * The memoized frame carries `jaccard` and the exact counts too:
     * [[dedupFeatures]] needs the score, [[nearDupJaccardCapped]] IS
     * this frame re-emitted, every graph consumer just ignores the
     * trailing columns, and keeping one memo (not several) means one
@@ -2696,16 +2682,14 @@ object TextOps {
     * [[dedupComponentsUncached]] reads positionally. */
   private def nearDupPairsCore(spark: SparkSession,
       dir: String): DataFrame =
-    nearDupPairsMemo.computeIfAbsent(
-      (spark.sparkContext.applicationId, dir),
-      _ => graft.Memos.timed("neardup_pairs")(
-        nearDupJaccard(spark, dir, Some(NearDupDocFreqCap))
-          .select(col("doc_a"), col("doc_b"), col("jaccard"),
-            col("n_inter"), col("n_union"))
-          .localCheckpoint()))
+    graft.Memos.memo("neardup_pairs", spark, Seq(dir))(
+      nearDupJaccard(spark, dir, Some(NearDupDocFreqCap))
+        .select(col("doc_a"), col("doc_b"), col("jaccard"),
+          col("n_inter"), col("n_union"))
+        .localCheckpoint())
 
   /** The REGISTERED capped-Jaccard query — exactly the
-    * [[nearDupPairsMemo]] frame (same pipeline, same cap) re-emitted
+    * [[nearDupPairsCore]] frame (same pipeline, same cap) re-emitted
     * in the oracle's column order, so the bench charges the
     * candidates→verify pipeline once (the memo populate, counted in
     * the total) instead of once per consumer. The DuckDB oracle
@@ -2724,7 +2708,7 @@ object TextOps {
         col("jaccard"))
       .orderBy("doc_a", "doc_b")
 
-  /** The actual candidates→verify→CC pipeline behind [[ccLabelMemo]]. */
+  /** The actual candidates→verify→CC pipeline behind [[dedupComponentsCore]]. */
   private def dedupComponentsUncached(spark: SparkSession,
       dir: String): DataFrame = {
     import org.apache.spark.graphx.{Edge, Graph}
@@ -4148,20 +4132,14 @@ object TextOps {
     * without it each ranker re-paid the corpus explode every run (the
     * r12 bench's last 3-5× max/min variance pair rode exactly that
     * recomputation). */
-  private val tfFrameMemo = graft.Memos.register(
-    new java.util.concurrent.ConcurrentHashMap[(String, String), DataFrame]())
-
-  /** The memoized (doc_id, term, tf) frame behind both rankers. */
   private def tfFrame(spark: SparkSession, dir: String): DataFrame =
-    tfFrameMemo.computeIfAbsent(
-      (spark.sparkContext.applicationId, dir),
-      _ => graft.Memos.timed("tf_frame")(
-        Tables.documents(spark, dir).filter(col("text").isNotNull)
-          .repartition(spark.sparkContext.defaultParallelism, col("doc_id"))
-          .select(col("doc_id"), explode(split(col("text"), " ")).as("term"))
-          .groupBy("doc_id", "term")
-          .agg(count(lit(1)).as("tf"))
-          .localCheckpoint()))
+    graft.Memos.memo("tf_frame", spark, Seq(dir))(
+      Tables.documents(spark, dir).filter(col("text").isNotNull)
+        .repartition(spark.sparkContext.defaultParallelism, col("doc_id"))
+        .select(col("doc_id"), explode(split(col("text"), " ")).as("term"))
+        .groupBy("doc_id", "term")
+        .agg(count(lit(1)).as("tf"))
+        .localCheckpoint())
 
   /** TF-IDF keyword extraction: top-[[TfidfK]] terms per document ranked
     * by `tf · (N / df)` — term frequency × inverse document frequency
@@ -4771,21 +4749,16 @@ object TextOps {
     * one per-doc aggregate; the three position probes are broadcast
     * hash joins against a table that never exceeds m rows. */
   /** Session-scoped memo of the [[bloomDecontam]] doc-grain screen
-    * frame — r18 optimization, the [[winnowPairsMemo]] convention: the
+    * frame — r18 optimization, the [[winnowPairsCore]] convention: the
     * screen has TWO registered consumers (`bloom_decontam` re-emits
     * it; [[decontamScreenAgreement]] reads its bloom AND exact columns)
     * and each used to re-run the full gram explode + filter build +
     * probe join per call. A decontamination verdict table is run once
     * per corpus release and fanned out in production; populate cost
     * visible as `bloom_screen` in `memo_populate`. */
-  private val bloomScreenMemo = graft.Memos.register(
-    new java.util.concurrent.ConcurrentHashMap[(String, String), DataFrame]())
-
   def bloomDecontam(spark: SparkSession, dir: String): DataFrame =
-    bloomScreenMemo.computeIfAbsent(
-      (spark.sparkContext.applicationId, dir),
-      _ => graft.Memos.timed("bloom_screen")(
-        bloomDecontamUncached(spark, dir).localCheckpoint()))
+    graft.Memos.memo("bloom_screen", spark, Seq(dir))(
+      bloomDecontamUncached(spark, dir).localCheckpoint())
       // the emitted order is part of the oracle contract — re-sort the
       // checkpoint read rather than trusting stored partition order
       .orderBy("doc_id")
@@ -7320,80 +7293,68 @@ object TextOps {
     * work amplification: 37 s for the explode's count at sf0.01 vs
     * 1.5 s through the barrier). The frame is one array row per doc
     * (~20 ints), so the materialization is KB-scale per partition at
-    * any corpus size. */
+    * any corpus size.
+    *
+    * The checkpoint is a session memo (cache only what is reused): the
+    * fingerprint frame is the shared front of THREE registered
+    * consumers ([[winnowPairs]]' populate, [[winnowDecontam]], and
+    * [[decontamScreenAgreement]] through the latter), and without the
+    * memo each consumer re-tokenized and re-winnowed the whole corpus
+    * into a FRESH per-call checkpoint — winnow_decontam alone paid
+    * ~1.3 s of its 2.0 s isolated median rebuilding a frame the session
+    * had already materialized. The populate cost stays visible as the
+    * `winnow_fp_docs` entry of `memo_populate` (counted once in the
+    * bench total). */
   private[graft] def winnowFpDocs(spark: SparkSession,
       dir: String): DataFrame =
-    winnowFpDocsMemo.computeIfAbsent(
-      (spark.sparkContext.applicationId, dir),
-      _ => graft.Memos.timed("winnow_fp_docs") {
-        Tables.documents(spark, dir)
-          .filter(col("text").isNotNull)
-          .repartition(spark.sparkContext.defaultParallelism, col("doc_id"))
-          .withColumn("h", expr(winnowKgramHashSqlExpr))
-          .filter(size(col("h")) >= 1)
-          .withColumn("fps", expr(winnowFpsFromHExpr))
-          .select(col("doc_id"), col("fps"))
-          .localCheckpoint()
-      })
-
-  /** Session-scoped memo of the [[winnowFpDocs]] checkpoint — r18
-    * optimization (guide §5: cache only what is reused, and the
-    * store-once-serve-many memo convention the pair/rollup frames
-    * already follow). The fingerprint frame is the shared front of
-    * THREE registered consumers ([[winnowPairs]]' populate,
-    * [[winnowDecontam]], and [[decontamScreenAgreement]] through the
-    * latter), and before this memo each consumer re-tokenized and
-    * re-winnowed the whole corpus into a FRESH per-call checkpoint —
-    * winnow_decontam alone paid ~1.3 s of its 2.0 s isolated median
-    * rebuilding a frame the session had already materialized. The
-    * populate cost stays visible as the `winnow_fp_docs` entry of
-    * `memo_populate` (counted once in the bench total, the adjudicated
-    * convention). */
-  private val winnowFpDocsMemo = graft.Memos.register(
-    new java.util.concurrent.ConcurrentHashMap[(String, String), DataFrame]())
+    graft.Memos.memo("winnow_fp_docs", spark, Seq(dir)) {
+      Tables.documents(spark, dir)
+        .filter(col("text").isNotNull)
+        .repartition(spark.sparkContext.defaultParallelism, col("doc_id"))
+        .withColumn("h", expr(winnowKgramHashSqlExpr))
+        .filter(size(col("h")) >= 1)
+        .withColumn("fps", expr(winnowFpsFromHExpr))
+        .select(col("doc_id"), col("fps"))
+        .localCheckpoint()
+    }
 
   /** Session-scoped memo of the winnow PAIR frame — the
     * [[nearDupPairsCore]] convention applied to the MOSS family: the
     * posting pipeline (winnowed fps → df cut → pair join) runs once
-    * per (session, dir) and its KB-sized checkpointed result feeds
+    * per session and input and its KB-sized checkpointed result feeds
     * every consumer ([[winnowPairs]] re-emits it; [[winnowComponents]]
     * clusters its thresholded edges). */
-  private val winnowPairsMemo = graft.Memos.register(
-    new java.util.concurrent.ConcurrentHashMap[(String, String), DataFrame]())
-
   private def winnowPairsCore(spark: SparkSession,
       dir: String): DataFrame =
-    winnowPairsMemo.computeIfAbsent(
-      (spark.sparkContext.applicationId, dir),
-      _ => graft.Memos.timed("winnow_pairs") {
-        val post = winnowFpDocs(spark, dir)
-          .select(col("doc_id"),
-            size(col("fps")).cast("long").as("n_fp"),
-            explode(col("fps")).as("fp"))
-        val wPost = Window.partitionBy("fp")
-        val kept = post
-          .withColumn("df", count(lit(1)).over(wPost))
-          .filter(col("df").between(2, NearDupDocFreqCap))
-          .drop("df")
-          .localCheckpoint()
-        val a = kept.select(col("fp"), col("doc_id").as("doc_a"),
-          col("n_fp").as("n_fp_a"))
-        val b = kept.select(col("fp"), col("doc_id").as("doc_b"),
-          col("n_fp").as("n_fp_b"))
-        a.join(b, Seq("fp"))
-          .filter(col("doc_a") < col("doc_b"))
-          .groupBy(col("doc_a"), col("doc_b"), col("n_fp_a"),
-            col("n_fp_b"))
-          .agg(count(lit(1)).as("n_shared_fp"))
-          .withColumn("overlap_mille",
-            expr("(n_shared_fp * 1000) div least(n_fp_a, n_fp_b)"))
-          .select(col("doc_a"), col("doc_b"), col("n_fp_a"),
-            col("n_fp_b"), col("n_shared_fp"), col("overlap_mille"))
-          .localCheckpoint()
-      })
+    graft.Memos.memo("winnow_pairs", spark, Seq(dir)) {
+      val post = winnowFpDocs(spark, dir)
+        .select(col("doc_id"),
+          size(col("fps")).cast("long").as("n_fp"),
+          explode(col("fps")).as("fp"))
+      val wPost = Window.partitionBy("fp")
+      val kept = post
+        .withColumn("df", count(lit(1)).over(wPost))
+        .filter(col("df").between(2, NearDupDocFreqCap))
+        .drop("df")
+        .localCheckpoint()
+      val a = kept.select(col("fp"), col("doc_id").as("doc_a"),
+        col("n_fp").as("n_fp_a"))
+      val b = kept.select(col("fp"), col("doc_id").as("doc_b"),
+        col("n_fp").as("n_fp_b"))
+      a.join(b, Seq("fp"))
+        .filter(col("doc_a") < col("doc_b"))
+        .groupBy(col("doc_a"), col("doc_b"), col("n_fp_a"),
+          col("n_fp_b"))
+        .agg(count(lit(1)).as("n_shared_fp"))
+        .withColumn("overlap_mille",
+          expr("(n_shared_fp * 1000) div least(n_fp_a, n_fp_b)"))
+        .select(col("doc_a"), col("doc_b"), col("n_fp_a"),
+          col("n_fp_b"), col("n_shared_fp"), col("overlap_mille"))
+        .localCheckpoint()
+    }
 
   /** BENCH NOTE (memo-backed): the registered query re-emits the
-    * [[winnowPairsMemo]] checkpoint; the pipeline cost appears once as
+    * [[winnowPairsCore]] checkpoint; the pipeline cost appears once as
     * the `winnow_pairs` entry of `memo_populate`. */
   def winnowPairs(spark: SparkSession, dir: String): DataFrame =
     winnowPairsCore(spark, dir).orderBy("doc_a", "doc_b")
@@ -7473,7 +7434,7 @@ object TextOps {
     * flagged singleton — transitive chains THROUGH templates must not
     * merge unrelated content.
     *
-    * Scale shape: edges are the KB-sized [[winnowPairsMemo]]
+    * Scale shape: edges are the KB-sized [[winnowPairsCore]]
     * checkpoint filtered by one predicate; every CC round is a hash
     * join + (vertex) aggregate over edge-count-sized frames with
     * checkpointed labels (flat lineage), converging in O(log
@@ -7553,18 +7514,13 @@ object TextOps {
     * broadcasts; the train side is one per-doc aggregate. No
     * corpus-side shuffle except the doc-grain count. */
   /** Session-scoped memo of the [[winnowDecontam]] doc-grain screen
-    * frame — same r18 convention as [[bloomScreenMemo]] (two registered
+    * frame — same r18 convention as [[bloomDecontam]] (two registered
     * consumers: `winnow_decontam` re-emits it, [[decontamScreenAgreement]]
     * reads the verdict column). Populate cost visible as
     * `winnow_screen` in `memo_populate`. */
-  private val winnowScreenMemo = graft.Memos.register(
-    new java.util.concurrent.ConcurrentHashMap[(String, String), DataFrame]())
-
   def winnowDecontam(spark: SparkSession, dir: String): DataFrame =
-    winnowScreenMemo.computeIfAbsent(
-      (spark.sparkContext.applicationId, dir),
-      _ => graft.Memos.timed("winnow_screen")(
-        winnowDecontamUncached(spark, dir).localCheckpoint()))
+    graft.Memos.memo("winnow_screen", spark, Seq(dir))(
+      winnowDecontamUncached(spark, dir).localCheckpoint())
       // emitted order is part of the oracle contract — re-sort the read
       .orderBy("doc_id")
 
@@ -8115,78 +8071,71 @@ object TextOps {
     * KB-scale Scala data (6 merge rows + 7 stat rows), not frames: the
     * per-round numbers are two aggregates over the Heaps-bounded vocab
     * checkpoint, collected while the trainer already holds it. */
-  private val bpeRoundsMemo = graft.Memos.register(
-    new java.util.concurrent.ConcurrentHashMap[(String, String),
-      (Seq[(Int, String, String, String, Long)],
-        Seq[(Int, Long, Long)])]())
-
   private def bpeTrain(spark: SparkSession, dir: String)
       : (Seq[(Int, String, String, String, Long)],
           Seq[(Int, Long, Long)]) =
-    bpeRoundsMemo.computeIfAbsent(
-      (spark.sparkContext.applicationId, dir),
-      _ => graft.Memos.timed("bpe_rounds") {
-        // (round, Σ freq·|syms| symbol mass, distinct symbol types) —
-        // both vocab-grain aggregates on the standing checkpoint.
-        def stats(v: DataFrame, r: Int): (Int, Long, Long) = {
-          val mass = v.agg(sum(col("freq") * size(col("syms")))
-            .cast("long")).collect()(0).getLong(0)
-          val types = v.select(explode(col("syms")).as("s"))
-            .agg(countDistinct(col("s"))).collect()(0).getLong(0)
-          (r, mass, types)
+    graft.Memos.memo("bpe_rounds", spark, Seq(dir)) {
+      // (round, Σ freq·|syms| symbol mass, distinct symbol types) —
+      // both vocab-grain aggregates on the standing checkpoint.
+      def stats(v: DataFrame, r: Int): (Int, Long, Long) = {
+        val mass = v.agg(sum(col("freq") * size(col("syms")))
+          .cast("long")).collect()(0).getLong(0)
+        val types = v.select(explode(col("syms")).as("s"))
+          .agg(countDistinct(col("s"))).collect()(0).getLong(0)
+        (r, mass, types)
+      }
+      var vocab = Tables.documents(spark, dir)
+        .filter(col("text").isNotNull)
+        .select(explode(tokens).as("word"))
+        .filter(length(col("word")) >= 2)
+        .groupBy("word").agg(count(lit(1)).as("freq"))
+        .select(col("freq"), expr(
+          "transform(sequence(1, length(word)), " +
+            "i -> substring(word, i, 1))").as("syms"))
+        .localCheckpoint()
+      val merges = scala.collection.mutable
+        .ArrayBuffer[(Int, String, String, String, Long)]()
+      val roundStats = scala.collection.mutable
+        .ArrayBuffer[(Int, Long, Long)](stats(vocab, 0))
+      val superseded = scala.collection.mutable.ArrayBuffer[DataFrame]()
+      try {
+        (1 to BpeMergeRounds).foreach { r =>
+          val win = vocab
+            .filter(size(col("syms")) >= 2)
+            .select(col("freq"), explode(expr(
+              "transform(sequence(1, size(syms) - 1), " +
+                "j -> struct(element_at(syms, j) AS a, " +
+                "element_at(syms, j + 1) AS b))")).as("p"))
+            .groupBy(col("p.a").as("a"), col("p.b").as("b"))
+            .agg(sum(col("freq")).as("n"))
+            .orderBy(col("n").desc, col("a"), col("b"))
+            .limit(1).collect()
+          require(win.nonEmpty, s"BPE round $r: no adjacent pairs left")
+          val (a, b, n) =
+            (win(0).getString(0), win(0).getString(1),
+              win(0).getLong(2))
+          merges += ((r, a, b, a + b, n))
+          // Greedy LTR merge as a fold — literals ride lit() columns
+          // (no SQL-string interpolation, no escaping surface). `get`
+          // (0-based) is the ANSI-safe last-element read: on an empty
+          // accumulator it returns NULL and the guard short-falls.
+          val next = vocab.select(col("freq"),
+            aggregate(col("syms"), array().cast("array<string>"),
+              (acc, s) => when(
+                get(acc, size(acc) - 1) === lit(a) && s === lit(b),
+                concat(slice(acc, lit(1), size(acc) - 1),
+                  array(lit(a + b))))
+                .otherwise(concat(acc, array(s))))
+              .as("syms"))
+            .localCheckpoint()
+          roundStats += stats(next, r)
+          superseded += vocab
+          vocab = next
         }
-        var vocab = Tables.documents(spark, dir)
-          .filter(col("text").isNotNull)
-          .select(explode(tokens).as("word"))
-          .filter(length(col("word")) >= 2)
-          .groupBy("word").agg(count(lit(1)).as("freq"))
-          .select(col("freq"), expr(
-            "transform(sequence(1, length(word)), " +
-              "i -> substring(word, i, 1))").as("syms"))
-          .localCheckpoint()
-        val merges = scala.collection.mutable
-          .ArrayBuffer[(Int, String, String, String, Long)]()
-        val roundStats = scala.collection.mutable
-          .ArrayBuffer[(Int, Long, Long)](stats(vocab, 0))
-        val superseded = scala.collection.mutable.ArrayBuffer[DataFrame]()
-        try {
-          (1 to BpeMergeRounds).foreach { r =>
-            val win = vocab
-              .filter(size(col("syms")) >= 2)
-              .select(col("freq"), explode(expr(
-                "transform(sequence(1, size(syms) - 1), " +
-                  "j -> struct(element_at(syms, j) AS a, " +
-                  "element_at(syms, j + 1) AS b))")).as("p"))
-              .groupBy(col("p.a").as("a"), col("p.b").as("b"))
-              .agg(sum(col("freq")).as("n"))
-              .orderBy(col("n").desc, col("a"), col("b"))
-              .limit(1).collect()
-            require(win.nonEmpty, s"BPE round $r: no adjacent pairs left")
-            val (a, b, n) =
-              (win(0).getString(0), win(0).getString(1),
-                win(0).getLong(2))
-            merges += ((r, a, b, a + b, n))
-            // Greedy LTR merge as a fold — literals ride lit() columns
-            // (no SQL-string interpolation, no escaping surface). `get`
-            // (0-based) is the ANSI-safe last-element read: on an empty
-            // accumulator it returns NULL and the guard short-falls.
-            val next = vocab.select(col("freq"),
-              aggregate(col("syms"), array().cast("array<string>"),
-                (acc, s) => when(
-                  get(acc, size(acc) - 1) === lit(a) && s === lit(b),
-                  concat(slice(acc, lit(1), size(acc) - 1),
-                    array(lit(a + b))))
-                  .otherwise(concat(acc, array(s))))
-                .as("syms"))
-              .localCheckpoint()
-            roundStats += stats(next, r)
-            superseded += vocab
-            vocab = next
-          }
-        } finally superseded.foreach(_.unpersist())
-        vocab.unpersist()
-        (merges.toSeq, roundStats.toSeq)
-      })
+      } finally superseded.foreach(_.unpersist())
+      vocab.unpersist()
+      (merges.toSeq, roundStats.toSeq)
+    }
 
   /** BPE TOKENIZE CENSUS — the merge table's CONSUMER side: what each
     * trained merge buys when the tokenizer runs. Per round 0..6

@@ -295,17 +295,11 @@ object VectorOps {
     *
     * Vectors sharing no cell with anyone produce no row (the documented
     * recall/coverage trade-off of LSH; more tables → more recall). */
-  private val lshPairsMemo = graft.Memos.register(
-    new java.util.concurrent.ConcurrentHashMap[(String, String),
-      DataFrame]())
-
   private def lshScoredPairs(spark: SparkSession, dir: String): DataFrame =
-    lshPairsMemo.computeIfAbsent(
-      (spark.sparkContext.applicationId, dir),
-      _ => graft.Memos.timed("lsh_scored_pairs")(
-        lshScoredPairsUncached(spark, dir).localCheckpoint()))
+    graft.Memos.memo("lsh_scored_pairs", spark, Seq(dir))(
+      lshScoredPairsUncached(spark, dir).localCheckpoint())
 
-  /** The actual candidate pipeline behind [[lshPairsMemo]] — SIX
+  /** The actual candidate pipeline behind [[lshScoredPairs]]'s memo — SIX
     * consumers (LSH top-1, cosine near-dup, label agreement/confusion,
     * hard negatives, recall@k) share the checkpointed pair frame
     * instead of re-running the explode/dedup/score stages each. */
@@ -733,24 +727,17 @@ object VectorOps {
   /** [[annIvfTrainedTop1]] with an explicit iteration count — the public
     * entry fixes `iters = LloydIters`; the parameter exists so the recall
     * harness can sweep it. */
-  /** Session-scoped memo of the TRAINED coarse quantizer, keyed by
-    * (applicationId, dir, iters) — the quantizer is trained once and
-    * then serves every consumer ([[annIvfTrainedTop1]],
-    * [[clusterProfile]], the recall harness), the same
-    * build-an-index-once contract as the PQ memo. C rows, checkpointed;
-    * immutable-dir assumption as elsewhere. */
-  private val trainedCentMemo = graft.Memos.register(
-    new java.util.concurrent.ConcurrentHashMap[(String, String, Int),
-      DataFrame]())
-
   /** [[LloydIters]]-trained coarse centroids (cent_id, cent_emb,
-    * cent_norm), memoized per (session, dir, iters). */
+    * cent_norm) — the session memo of the TRAINED coarse quantizer,
+    * keyed by `iters` as well as the dir. The quantizer is trained once
+    * and then serves every consumer ([[annIvfTrainedTop1]],
+    * [[clusterProfile]], the recall harness), the same
+    * build-an-index-once contract as the PQ memo. C rows,
+    * checkpointed. */
   private[graft] def trainedCoarseCentroids(spark: SparkSession,
       dir: String, iters: Int): DataFrame =
-    trainedCentMemo.computeIfAbsent(
-      (spark.sparkContext.applicationId, dir, iters),
-      _ => graft.Memos.timed("trained_centroids")(
-        trainedCoarseCentroidsUncached(spark, dir, iters)))
+    graft.Memos.memo("trained_centroids", spark, Seq(dir), iters)(
+      trainedCoarseCentroidsUncached(spark, dir, iters))
 
   private def trainedCoarseCentroidsUncached(spark: SparkSession,
       dir: String, iters: Int): DataFrame = {
@@ -1584,16 +1571,10 @@ object VectorOps {
     * compiles to WindowGroupLimit (map-side ≤ cap rows per query
     * before the exchange). Populate cost visible as `pq_shortlist` in
     * `memo_populate`. */
-  private val pqAdcMemo = graft.Memos.register(
-    new java.util.concurrent.ConcurrentHashMap[(String, String),
-      DataFrame]())
-
   private[graft] def pqShortlist(spark: SparkSession,
       dir: String): DataFrame =
-    pqAdcMemo.computeIfAbsent(
-      (spark.sparkContext.applicationId, dir),
-      _ => graft.Memos.timed("pq_shortlist")(
-        pqShortlistUncached(spark, dir).localCheckpoint()))
+    graft.Memos.memo("pq_shortlist", spark, Seq(dir))(
+      pqShortlistUncached(spark, dir).localCheckpoint())
 
   /** The [[PqRerankCap]] ADC-nearest candidates per query, ranked by
     * the exact-decimal (adc, c_id, cent_id) order — the shared stage of
@@ -1775,25 +1756,20 @@ object VectorOps {
     * codes and LUTs together. All three stages are partial+final hash
     * aggregates over broadcast-joined fan-outs: no shuffle carries more
     * than N×m rows. */
-  /** Session-scoped memo of the trained PQ index (codes + LUTs), keyed
-    * by (applicationId, dir) — the [[graft.operators.TextOps]] CC-label
-    * pattern applied to the other expensive materialized intermediate:
+  /** Session memo of the trained PQ index (codes + LUTs) — the
+    * [[graft.operators.TextOps]] CC-label pattern applied to the other expensive materialized intermediate:
     * a PQ index is trained and encoded ONCE and then queried many
     * times; re-running train+encode per query execution (bench: warmup
     * + 3 timed runs) is the anti-pattern, and at 100 TB the codes table
     * is exactly the artifact you persist (it is ~21× smaller than the
     * corpus — that is PQ's point). The memoized frame is the
-    * localCheckpoint'd N×(m codes + m LUTs) table; entries die with the
-    * session. */
-  private val pqMemo = graft.Memos.register(
-    new java.util.concurrent.ConcurrentHashMap[(String, String), DataFrame]())
-
+    * localCheckpoint'd N×(m codes + m LUTs) table. */
   private[graft] def pqEncode(spark: SparkSession, dir: String,
       n: Long): DataFrame =
-    pqMemo.computeIfAbsent((spark.sparkContext.applicationId, dir),
-      _ => graft.Memos.timed("pq_index")(pqEncodeUncached(spark, dir, n)))
+    graft.Memos.memo("pq_index", spark, Seq(dir))(
+      pqEncodeUncached(spark, dir, n))
 
-  /** The actual train+encode pipeline behind [[pqMemo]]. */
+  /** The actual train+encode pipeline behind [[pqEncode]]. */
   private def pqEncodeUncached(spark: SparkSession, dir: String,
       n: Long): DataFrame = {
     prepare(spark)
@@ -2158,37 +2134,30 @@ object VectorOps {
     * every unclustered vector. Completes the semantic-dedup path
     * candidates → threshold → cluster → survivors; same graph-cache
     * release discipline as the text-side components. */
-  /** Session-scoped memo of the semantic CC labels — same
-    * immutable-dir contract as the text side's `ccLabelMemo`; the
-    * checkpointed frame is component-member-sized (KBs). Added when
-    * `dedup_waterfall` became a second consumer: without it each caller
-    * re-ran the LSH scoring + a fresh GraphX Pregel job (the r9
-    * accretion anti-pattern the text memos exist to prevent). */
-  private val semLabelMemo = graft.Memos.register(
-    new java.util.concurrent.ConcurrentHashMap[(String, String), DataFrame]())
-
   /** Semantic CC labels (vec_id, component_id), memoized per
     * (session, dir) — shared by [[semanticDedupSurvivors]] and the
-    * dedup-waterfall provenance report. */
+    * dedup-waterfall provenance report. The checkpointed frame is
+    * component-member-sized (KBs). Without the memo each caller re-ran
+    * the LSH scoring + a fresh GraphX Pregel job (the r9 accretion
+    * anti-pattern the text memos exist to prevent). */
   private[graft] def semanticCcLabels(spark: SparkSession,
       dir: String): DataFrame =
-    semLabelMemo.computeIfAbsent((spark.sparkContext.applicationId, dir),
-      _ => graft.Memos.timed("semantic_cc_labels") {
-        import org.apache.spark.graphx.{Edge, Graph}
-        val pairs = lshScoredPairs(spark, dir)
-          .filter(col("cosine") >= NearDupMinCosine)
-          .select(col("a"), col("b"))
-        val g = Graph.fromEdges(
-          pairs.rdd.map(r => Edge(r.getLong(0), r.getLong(1), ())), ())
-        val cc = g.connectedComponents()
-        val labels = spark.createDataFrame(cc.vertices)
-          .toDF("vec_id", "component_id").localCheckpoint()
-        cc.unpersistVertices(blocking = false)
-        cc.edges.unpersist(blocking = false)
-        g.unpersistVertices(blocking = false)
-        g.edges.unpersist(blocking = false)
-        labels
-      })
+    graft.Memos.memo("semantic_cc_labels", spark, Seq(dir)) {
+      import org.apache.spark.graphx.{Edge, Graph}
+      val pairs = lshScoredPairs(spark, dir)
+        .filter(col("cosine") >= NearDupMinCosine)
+        .select(col("a"), col("b"))
+      val g = Graph.fromEdges(
+        pairs.rdd.map(r => Edge(r.getLong(0), r.getLong(1), ())), ())
+      val cc = g.connectedComponents()
+      val labels = spark.createDataFrame(cc.vertices)
+        .toDF("vec_id", "component_id").localCheckpoint()
+      cc.unpersistVertices(blocking = false)
+      cc.edges.unpersist(blocking = false)
+      g.unpersistVertices(blocking = false)
+      g.edges.unpersist(blocking = false)
+      labels
+    }
 
   def semanticDedupSurvivors(spark: SparkSession, dir: String): DataFrame = {
     val dropped = semanticCcLabels(spark, dir)
@@ -2428,17 +2397,11 @@ object VectorOps {
     * so the memo now stores exactly that slice (N×cap rows) and the
     * per-call rank window disappears from every consumer. Populate
     * cost visible as `mih_shortlist` in `memo_populate`. */
-  private val mihPairsMemo = graft.Memos.register(
-    new java.util.concurrent.ConcurrentHashMap[(String, String),
-      DataFrame]())
-
   private[graft] def mihShortlist(spark: SparkSession,
       dir: String): DataFrame =
-    mihPairsMemo.computeIfAbsent(
-      (spark.sparkContext.applicationId, dir),
-      _ => graft.Memos.timed("mih_shortlist")(
-        hammingShortlist(mihScoredPairsUncached(spark, dir))
-          .localCheckpoint()))
+    graft.Memos.memo("mih_shortlist", spark, Seq(dir))(
+      hammingShortlist(mihScoredPairsUncached(spark, dir))
+        .localCheckpoint())
 
   /** The banded pigeonhole candidate + Hamming-verify stage shared by
     * the MIH (64-bit sign codes) and RP (256-bit hyperplane codes)
@@ -2585,17 +2548,11 @@ object VectorOps {
     * [[MihRerankCap]]-capped slice, so that slice is what the memo
     * holds. Populate cost visible as `rp_shortlist` in
     * `memo_populate`. */
-  private val rpPairsMemo = graft.Memos.register(
-    new java.util.concurrent.ConcurrentHashMap[(String, String),
-      DataFrame]())
-
   private[graft] def rpShortlist(spark: SparkSession,
       dir: String): DataFrame =
-    rpPairsMemo.computeIfAbsent(
-      (spark.sparkContext.applicationId, dir),
-      _ => graft.Memos.timed("rp_shortlist")(
-        hammingShortlist(rpScoredPairsUncached(spark, dir))
-          .localCheckpoint()))
+    graft.Memos.memo("rp_shortlist", spark, Seq(dir))(
+      hammingShortlist(rpScoredPairsUncached(spark, dir))
+        .localCheckpoint())
 
   /** MULTI-PROBE stage-1 for the 256-bit codes: each query probes its
     * own (band, value) bucket AND the [[RpBandBits]] Hamming-1 flip
@@ -2608,21 +2565,15 @@ object VectorOps {
     * (candidates never come from a flooded bucket), while probing is
     * never capped (it is O(bands·bits) per query regardless of data).
     * The verify stays the full-code XOR popcount. */
-  private val rpMultiprobePairsMemo = graft.Memos.register(
-    new java.util.concurrent.ConcurrentHashMap[(String, String),
-      DataFrame]())
-
   /** Rank-capped multiprobe shortlist memo — r19, same change as
     * [[mihShortlist]]: all three consumers (multiprobe top-1, the
     * quality report through it, the rerank-cap curve) read only the
     * [[MihRerankCap]]-capped (hamming, c_id) rank slice. */
   private[graft] def rpMultiprobeShortlist(spark: SparkSession,
       dir: String): DataFrame =
-    rpMultiprobePairsMemo.computeIfAbsent(
-      (spark.sparkContext.applicationId, dir),
-      _ => graft.Memos.timed("rp_multiprobe_shortlist")(
-        hammingShortlist(rpMultiprobeScoredPairsUncached(spark, dir))
-          .localCheckpoint()))
+    graft.Memos.memo("rp_multiprobe_shortlist", spark, Seq(dir))(
+      hammingShortlist(rpMultiprobeScoredPairsUncached(spark, dir))
+        .localCheckpoint())
 
   /** The actual probe pipeline behind [[rpMultiprobeShortlist]] — the
     * FULL scored-pair frame the shortlist rank-caps. */
@@ -2725,14 +2676,9 @@ object VectorOps {
     * per (session, dir) like the other build-once eval artifacts: the
     * N² pass is paid one visible `memo_populate` time instead of once
     * per report evaluation. */
-  private val exactTop1Memo = graft.Memos.register(
-    new java.util.concurrent.ConcurrentHashMap[(String, String),
-      DataFrame]())
-
   private[graft] def exactTop1(spark: SparkSession, dir: String): DataFrame =
-    exactTop1Memo.computeIfAbsent(
-      (spark.sparkContext.applicationId, dir),
-      _ => graft.Memos.timed("exact_top1")(exactTop1Uncached(spark, dir)))
+    graft.Memos.memo("exact_top1", spark, Seq(dir))(
+      exactTop1Uncached(spark, dir))
 
   private def exactTop1Uncached(spark: SparkSession,
       dir: String): DataFrame = {

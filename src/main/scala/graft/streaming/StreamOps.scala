@@ -1239,7 +1239,9 @@ object StreamOps {
     * keys, keyed by `keyCols`) before writing. Each `v_<batchId>` dir is
     * the full merged snapshot (immutable version), and `latest` is
     * rewritten from it — the overwrite of `latest` only ever reads the
-    * just-written versioned dir, never the path it is replacing. */
+    * just-written versioned dir, never the path it is replacing. Both
+    * dirs are read back with the batch's own schema, the one the sink
+    * wrote them with, so no read runs a schema-inference job. */
   def dualWriteSink(df: DataFrame, keyCols: Seq[String], outDir: String,
                     checkpoint: String,
                     trigger: Trigger = Trigger.AvailableNow())
@@ -1257,11 +1259,11 @@ object StreamOps {
         batch.persist()
         val snapshot =
           if (fs.exists(new org.apache.hadoop.fs.Path(latestDir))) {
-            val old = spark.read.parquet(latestDir)
+            val old = spark.read.schema(batch.schema).parquet(latestDir)
             batch.unionByName(old.join(batch, keyCols, "left_anti"))
           } else batch
         snapshot.write.mode("overwrite").parquet(versionedDir)
-        spark.read.parquet(versionedDir)
+        spark.read.schema(batch.schema).parquet(versionedDir)
           .write.mode("overwrite").parquet(latestDir)
         batch.unpersist()
         ()

@@ -30,11 +30,11 @@ trait GraftSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   private val extraScratch = scala.collection.mutable.ArrayBuffer[String]()
 
-  /** A fresh fixture dir for tests that REWRITE a table another test in
-    * the suite also writes: the session-scoped memos (CC labels, PQ
-    * index) key on (session, dir) and assume a dir's content is
-    * immutable for the session — the same contract as any persisted
-    * index. Cleaned up with the suite. */
+  /** A fresh fixture dir, for tests that want their own tables instead
+    * of sharing [[scratch]] with the rest of the suite. Memos stay
+    * correct either way (they re-populate when a file under their input
+    * changes); a dir of its own keeps a test's fixture independent of
+    * what other tests write. Cleaned up with the suite. */
   def freshScratch(): String = {
     val d = Files.createTempDirectory("graft-test-").toString
     extraScratch.synchronized { extraScratch += d }
