@@ -1,252 +1,44 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
 
-/** Dev-only interleaved A/B timer for optimization candidates: runs the
-  * OLD and NEW forms of a rewritten operator alternately (ABAB…) in one
-  * JVM so box drift between JVMs cannot fake a verdict, and prints
-  * per-arm medians. Not registered anywhere; the legacy forms live here
-  * (copied verbatim from git history) so the main tree carries exactly
-  * one implementation. Usage:
-  *   SPARK_GRAFT_SF_DIR=... SPARK_GRAFT_CPUS=32 \
-  *     sbt "runMain graft.AbProbe <probe>[ <rounds>]"
+/** Dev-only interleaved A/B timer: runs registered queries alternately
+  * (ABAB…) in one JVM, so drift of the machine between JVMs cannot fake a
+  * verdict, and prints each arm's median. To compare two forms of an
+  * operator, register both under their own names. Usage:
+  *   SPARK_GRAFT_SF_DIR=... \
+  *     sbt "runMain graft.AbProbe <query>,<query>[,...] [<rounds>]"
   */
 object AbProbe {
-  import graft.operators.{BatchOps, GlobalRank}
-
-  /** Legacy r18 keySkewReport: three per-key arms, each its own scan +
-    * count + global two-phase rank. */
-  private def keySkewReportLegacy(spark: SparkSession,
-      dir: String): DataFrame = {
-    val li = Tables.lineitem(spark, dir)
-    def forKey(keyCol: String): DataFrame = {
-      val counts = li.groupBy(col(keyCol).as("k"))
-        .agg(count(lit(1)).as("x"))
-      GlobalRank.withRowNumber(counts, "i", Seq(col("x"), col("k")))
-        .agg(count(lit(1)).as("n_keys"), sum(col("x")).as("n_rows"),
-          max(col("x")).as("max_rows"),
-          sum(col("i") * col("x")).as("s1"))
-        .select(lit(keyCol).as("key_col"), col("n_keys"), col("n_rows"),
-          col("max_rows"),
-          expr("(max_rows * 1000) div n_rows").as("max_share_mille"),
-          expr("(1000 * (2 * s1 - (n_keys + 1) * n_rows))" +
-            " div (n_keys * n_rows)").as("gini_mille"))
-    }
-    forKey("l_suppkey")
-      .unionByName(forKey("l_partkey"))
-      .unionByName(forKey("l_orderkey"))
-      .orderBy("key_col")
-  }
-
-  /** Legacy r18 revenueReconciliation line side: join the raw fact to
-    * orders, aggregate to day grain after. */
-  private def revenueReconciliationLegacy(spark: SparkSession,
-      dir: String): DataFrame = {
-    val fromOrders = Tables.orders(spark, dir)
-      .groupBy(to_date(col("o_orderdate")).as("day"))
-      .agg(sum(col("o_totalprice").cast("decimal(18,2)")).as("header_rev"),
-        count(lit(1)).as("n_orders"))
-    val fromLines = Tables.lineitem(spark, dir)
-      .join(Tables.orders(spark, dir).select("o_orderkey", "o_orderdate"),
-        col("l_orderkey") === col("o_orderkey"))
-      .groupBy(to_date(col("o_orderdate")).as("day"))
-      .agg(sum(col("l_extendedprice").cast("decimal(18,2)") *
-          (lit(1).cast("decimal(18,2)") -
-            col("l_discount").cast("decimal(18,2)"))).as("line_rev"),
-        count(lit(1)).as("n_lines"))
-    fromOrders.join(fromLines, Seq("day"), "full_outer")
-      .select(col("day"),
-        coalesce(col("n_orders"), lit(0L)).as("n_orders"),
-        coalesce(col("n_lines"), lit(0L)).as("n_lines"),
-        coalesce(col("header_rev"), lit(0).cast("decimal(18,2)"))
-          .cast("double").as("header_rev"),
-        coalesce(col("line_rev"), lit(0).cast("decimal(18,2)"))
-          .cast("double").as("line_rev"),
-        (coalesce(col("line_rev"), lit(0).cast("decimal(18,2)")) -
-          coalesce(col("header_rev"), lit(0).cast("decimal(18,2)")))
-          .cast("double").as("delta"))
-      .orderBy("day")
-  }
-
-  /** Legacy r18 basketRules: marginals from a second fact-wide
-    * DISTINCT; pair counts re-planned from the raw fact. */
-  private def basketRulesLegacy(spark: SparkSession,
-      dir: String): DataFrame = {
-    val lp = Tables.lineitem(spark, dir)
-      .select(col("l_orderkey"), col("l_partkey")).distinct()
-    val itemN = lp.groupBy(col("l_partkey")).agg(count(lit(1)).as("n_item"))
-    val total = lp.agg(countDistinct(col("l_orderkey")).as("t"))
-    val und = Tables.lineitem(spark, dir)
-      .select(col("l_orderkey"), col("l_partkey"))
-      .groupBy("l_orderkey")
-      .agg(array_sort(collect_set(col("l_partkey"))).as("parts"))
-      .filter(size(col("parts")) > 1)
-      .select(explode(expr(
-        """flatten(transform(parts, x ->
-             transform(filter(parts, y -> y > x), y ->
-               named_struct('part_a', x, 'part_b', y))))""")).as("p"))
-      .groupBy(col("p.part_a").as("part_a"),
-        col("p.part_b").as("part_b"))
-      .agg(count(lit(1)).as("n_ab"))
-      .filter(col("n_ab") >= BatchOps.BasketRuleMinCount)
-    val directed = und.select("part_a", "part_b", "n_ab")
-      .unionByName(und.select(col("part_b").as("part_a"),
-        col("part_a").as("part_b"), col("n_ab")))
-    directed
-      .join(itemN.select(col("l_partkey").as("part_a"),
-        col("n_item").as("n_a")), Seq("part_a"))
-      .join(itemN.select(col("l_partkey").as("part_b"),
-        col("n_item").as("n_b")), Seq("part_b"))
-      .crossJoin(broadcast(total))
-      .select(col("part_a"), col("part_b"), col("n_ab"), col("n_a"),
-        col("n_b"),
-        (col("n_ab").cast("double") / col("t").cast("double"))
-          .as("support"),
-        (col("n_ab").cast("double") / col("n_a").cast("double"))
-          .as("confidence"),
-        ((col("n_ab") * col("t")).cast("double") /
-          (col("n_a") * col("n_b")).cast("double")).as("lift"))
-      .orderBy(desc("lift"), col("part_a"), col("part_b"))
-      .limit(BatchOps.BasketRuleTopK)
-  }
-
-  /** Legacy r18 min-label fixpoint round loop (no hop, isEmpty
-    * convergence job) — for A/B against the pointer-doubled observed
-    * form behind the three CC queries. */
-  private def minLabelFixpointLegacy(adj: DataFrame): DataFrame = {
-    val ownT = adj.schema("v").dataType
-    var labels = adj.groupBy("u")
-      .agg(min(col("v")).as("mv"))
-      .select(col("u"), least(col("mv"), col("u")).as("l"))
-      .localCheckpoint()
-    var converged = false
-    var rounds = 0
-    while (!converged) {
-      val next = adj
-        .join(labels.select(col("u").as("v"), col("l").as("lv")), "v")
-        .select(col("u"), col("lv"), lit(null).cast(ownT).as("own"))
-        .unionByName(labels.select(col("u"), col("l").as("lv"),
-          col("l").as("own")))
-        .groupBy("u")
-        .agg(min(col("lv")).as("l"), min(col("own")).as("own"))
-        .select(col("u"), col("l"), (col("l") < col("own")).as("moved"))
-        .localCheckpoint()
-      converged = next.filter(col("moved")).isEmpty
-      labels = next.select("u", "l")
-      rounds += 1
-    }
-    println(s"[abprobe] cc_fixpoint old rounds=$rounds")
-    labels
-  }
-
-  private val probeObsId = new java.util.concurrent.atomic.AtomicLong(0L)
-
-  /** No-hop variant WITH the observed-metric convergence — isolates
-    * the hop's contribution from the one-job-per-round change. */
-  private def minLabelFixpointNoHopObs(adj: DataFrame): DataFrame = {
-    val ownT = adj.schema("v").dataType
-    var labels = adj.groupBy("u")
-      .agg(min(col("v")).as("mv"))
-      .select(col("u"), least(col("mv"), col("u")).as("l"))
-      .localCheckpoint()
-    var converged = false
-    var rounds = 0
-    while (!converged) {
-      val obs = org.apache.spark.sql.Observation(
-        s"abprobe_moved_${probeObsId.incrementAndGet()}")
-      val next = adj
-        .join(labels.select(col("u").as("v"), col("l").as("lv")), "v")
-        .select(col("u"), col("lv"), lit(null).cast(ownT).as("own"))
-        .unionByName(labels.select(col("u"), col("l").as("lv"),
-          col("l").as("own")))
-        .groupBy("u")
-        .agg(min(col("lv")).as("l"), min(col("own")).as("own"))
-        .select(col("u"), col("l"), (col("l") < col("own")).as("moved"))
-        .observe(obs, count(when(col("moved"), lit(1))).as("n_moved"))
-        .localCheckpoint()
-      converged = obs.get("n_moved").asInstanceOf[Long] == 0L
-      labels = next.select("u", "l")
-      rounds += 1
-    }
-    println(s"[abprobe] cc_fixpoint nohop_obs rounds=$rounds")
-    labels
-  }
-
-  private def ccAdj(spark: SparkSession, dir: String): DataFrame = {
-    val pairs = SparkEntry.queries("neardup_jaccard_capped")(spark, dir)
-      .select(col("doc_a"), col("doc_b"))
-    pairs.select(col("doc_a").as("u"), col("doc_b").as("v"))
-      .unionByName(pairs.select(col("doc_b").as("u"), col("doc_a").as("v")))
-  }
-
   def main(args: Array[String]): Unit = {
-    val probe = if (args.nonEmpty) args(0) else "key_skew_report"
+    if (args.isEmpty) {
+      System.err.println(
+        "usage: runMain graft.AbProbe <query>,<query>[,...] [<rounds>]")
+      sys.exit(2)
+    }
+    val arms = args(0).split(",").toSeq.map(_.trim).filter(_.nonEmpty)
+      .map(n => n -> SparkEntry.queries.getOrElse(n,
+        sys.error(s"unknown query: $n")))
     val rounds = if (args.length > 1) args(1).toInt else 4
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    val arms: Seq[(String, () => DataFrame)] = probe match {
-      case "key_skew_report" => Seq(
-        "old" -> (() => keySkewReportLegacy(spark, sfDir)),
-        "new" -> (() => BatchOps.keySkewReport(spark, sfDir)))
-      case "revenue_reconciliation" => Seq(
-        "old" -> (() => revenueReconciliationLegacy(spark, sfDir)),
-        "new" -> (() => BatchOps.revenueReconciliation(spark, sfDir)))
-      case "basket_rules" => Seq(
-        "old" -> (() => basketRulesLegacy(spark, sfDir)),
-        "new" -> (() => BatchOps.basketRules(spark, sfDir)))
-      case "containment_phases" => Seq(
-        // front = the df-capped posting build ONLY (no checkpoint —
-        // the noop sink consumes it directly); full = the query.
-        "front" -> (() => {
-          val docs = graft.operators.TextOps.shingleDocs(spark, sfDir)
-          val post = docs.select(col("doc_id"), col("lang"), col("n_sh"),
-            explode(col("sh")).as("shingle"))
-          val wPost = org.apache.spark.sql.expressions.Window
-            .partitionBy("shingle", "lang")
-          post.withColumn("df", count(lit(1)).over(wPost))
-            .filter(col("df").between(2,
-              graft.operators.TextOps.NearDupDocFreqCap))
-            .drop("df")
-        }),
-        "full" -> (() => graft.operators.TextOps
-          .nearDupContainment(spark, sfDir)))
-      case "cc_fixpoint" => Seq(
-        "old" -> (() => minLabelFixpointLegacy(ccAdj(spark, sfDir))),
-        "nohop_obs" -> (() => minLabelFixpointNoHopObs(ccAdj(spark, sfDir))),
-        "new" -> (() => {
-          val (l, r) = graft.operators.TextOps
-            .minLabelFixpointWithRounds(ccAdj(spark, sfDir))
-          println(s"[abprobe] cc_fixpoint new rounds=$r")
-          l
-        }))
-      case other => sys.error(s"unknown probe: $other")
-    }
+    val spark = Session.local(Session.cpus)
+    def run(fn: (SparkSession, String) => DataFrame): Unit =
+      fn(spark, sfDir).write.format("noop").mode("overwrite").save()
     // one untimed warmup per arm, then ABAB… timed rounds
-    arms.foreach { case (_, f) =>
-      f().write.format("noop").mode("overwrite").save(); System.gc() }
+    arms.foreach { case (_, fn) => run(fn); System.gc() }
     val times = scala.collection.mutable.Map[String, Vector[Double]]()
       .withDefaultValue(Vector.empty)
     (1 to rounds).foreach { _ =>
-      arms.foreach { case (n, f) =>
+      arms.foreach { case (n, fn) =>
         val t0 = System.nanoTime()
-        f().write.format("noop").mode("overwrite").save()
+        run(fn)
         times(n) = times(n) :+ (System.nanoTime() - t0) / 1e9
         spark.catalog.clearCache(); System.gc()
       }
     }
     arms.foreach { case (n, _) =>
       val s = times(n).sorted
-      println(f"[abprobe] $probe%s arm=$n%s median=${s(s.length / 2)}%.3f " +
+      println(f"[abprobe] arm=$n%s median=${s(s.length / 2)}%.3f " +
         s"runs=${times(n).map(t => f"$t%.3f").mkString(",")}")
     }
     spark.stop()

@@ -37,46 +37,8 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      // r12 context-accretion levers — the fix for the r11 verdict's
-      // ann_ivf_top1 4.92 s full-run vs 1.55 s isolated order. Both are
-      // STATIC confs (must be set before the session exists):
-      // - codegen.cache.maxEntries default 100: a 177-query suite
-      //   generates far more than 100 codegen units, so the Janino class
-      //   cache thrashes ACROSS queries and every generated class is
-      //   recompiled (and its JIT profile restarted) when its query
-      //   re-runs after eviction — compile churn landing INSIDE timed
-      //   runs, biased toward plan-heavy late-position queries.
-      // - ui.retainedExecutions default 1000: the SQLAppStatusListener
-      //   retains metrics for ~1200 executions per full bench even with
-      //   the UI off; bounding it keeps the listener bus and status
-      //   store from growing with suite position.
-      // MEASURED (r12, full 177-query run at sf0.1): ann_ivf_top1
-      // 4.92 → 1.25 s, neardup_jaccard 4.02 → 2.04, oov_rate
-      // 1.36 → 1.04, doc_chunks 0.61 → 0.35; end-of-suite sentinel
-      // re-runs match isolated times (ann_ivf_top1 1.03 s) and the JVM
-      // code cache peaks at ~173 MB of the 1 GiB reserve — confirming
-      // the codegen-cache eviction diagnosis over the code-cache one.
-      .config("spark.sql.codegen.cache.maxEntries", "4096")
-      .config("spark.sql.ui.retainedExecutions", "8")
-      // Broadcast blocks, shuffle files, and non-returned localCheckpoint
-      // RDDs are reclaimed by the ContextCleaner only when their driver
-      // references are GC'd — and a 96-query bench in a 24 GiB heap may
-      // never GC on its own, so dead blocks accrete across queries (the
-      // r9 product_performance 3→39→47 s within-run degradation). The
-      // explicit per-query System.gc() below bounds that growth BETWEEN
-      // queries; the periodic cleaner GC is deliberately left at its
-      // default (30 min) — a short interval fires full-GC pauses INSIDE
-      // timed runs.
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = Session.cpus.toString
+    val spark = Session.local(Session.cpus)
     def errText(e: Throwable): String =
       s"${e.getClass.getSimpleName}: ${String.valueOf(e.getMessage).take(200)}"
     // End-of-suite phases keep going past a failed query; each failure
@@ -172,89 +134,71 @@ object Bench {
     val selected =
       if (args.isEmpty) SparkEntry.queries
       else SparkEntry.queries.filter { case (n, _) => args.contains(n) }
+    /** Times `fn` as noop writes and returns every timed run in execution
+      * order. `warmups` untimed runs come first: the first run of a
+      * heavy-codegen query pays one-off Janino/JIT compilation, and an
+      * end-of-suite re-run needs a second pass to re-settle what the suite
+      * left behind (evicted codegen classes, a ContextCleaner backlog, a
+      * cold code cache). Every run is followed, outside its timed window,
+      * by `clearCache` and `System.gc()`: the ContextCleaner frees a run's
+      * dead shuffle and broadcast blocks only after a GC has collected the
+      * objects that reference them, so without it the next run inherits
+      * them. The 500 ms sleep after the warmups
+      * lets the cleaner, which works asynchronously, drain before the first
+      * timed run instead of during it.
+      *
+      * On a shared VM a burst of stolen CPU inside one run can make it 10×
+      * slower. While the median exceeds twice the min, extra runs are taken
+      * (up to MAX_RUNS), so one stall cannot own the median; a query that is
+      * slow on every run keeps failing the test and stays slow. */
+    def measure(fn: (SparkSession, String) => org.apache.spark.sql.DataFrame,
+        warmups: Int): Seq[Double] = {
+      def run(): Unit =
+        fn(spark, sfDir).write.format("noop").mode("overwrite").save()
+      (1 to warmups).foreach { _ =>
+        run(); spark.catalog.clearCache(); System.gc()
+      }
+      Thread.sleep(500)
+      val runs = scala.collection.mutable.ArrayBuffer[Double]()
+      def timedRun(): Unit = {
+        val t0 = System.nanoTime()
+        run()
+        runs += (System.nanoTime() - t0) / 1e9
+        spark.catalog.clearCache(); System.gc()
+      }
+      (1 to RUNS).foreach(_ => timedRun())
+      while (runs.length < MAX_RUNS && {
+          val s = runs.sorted; s(runs.length / 2) > 2 * s.head
+        }) timedRun()
+      runs.toSeq
+    }
+    // The recorded value: median of the FASTEST `RUNS` runs, which is the
+    // plain median when no extra run was taken. Steal only ever slows a
+    // run, so after extra runs the lower tail is the steady-state
+    // estimate; all raw runs still ship in bench_line.json `runs`.
+    def fastestMedian(runs: Seq[Double]): Double = {
+      val fastest = runs.sorted.take(RUNS)
+      fastest(fastest.length / 2)
+    }
     selected.toSeq.zipWithIndex.foreach { case ((name, fn), qIdx) =>
       val memoKeysBefore = Memos.populateSeconds.keySet
-      val runs = scala.collection.mutable.ArrayBuffer[Double]()
       try {
-        // One untimed warmup execution: the first run of a heavy-codegen
-        // query pays one-off Janino/JIT compilation (round-6 example:
-        // minute_metrics median 2.64 s vs min 0.52 s with only 3 timed
-        // runs) — excluding it makes the medians steady-state numbers.
-        fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-        spark.catalog.clearCache()
-        // GC the WARMUP's garbage too: the per-run System.gc() below
-        // only fires after each TIMED run, so without this the first
-        // timed run inherited the warmup's dead shuffle/broadcast blocks
-        // and ContextCleaner work — a reproducible first-run spike on
-        // heavy-shuffle queries (r10/r11 raw runs: the max run was the
-        // FIRST timed run for neardup_jaccard_prefix in every recorded
-        // bench: 22.3/8.0/11.1 vs steady-state ~2.3). The short sleep
-        // lets the ContextCleaner — which processes the gc-discovered
-        // garbage ASYNCHRONOUSLY — drain its shuffle/broadcast removals
-        // before the first timed run instead of during it (the gc alone
-        // cut the spike 11.1→7.4 s; the overlap is the remainder).
-        System.gc()
-        Thread.sleep(500)
-        // One timed-run helper; the System.gc() between runs sits OUTSIDE
-        // the timed window and lets the ContextCleaner release the
-        // previous run's dead shuffle/broadcast blocks — without it a
-        // heavy-shuffle query's own re-runs accrete disk state for the
-        // whole warmup+6 sequence (no driver GC ever fires inside one
-        // query's runs; the per-query gc in `finally` is too late).
-        def timedRun(): Unit = {
-          val t0 = System.nanoTime()
-          fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-          runs += (System.nanoTime() - t0) / 1e9
-          spark.catalog.clearCache()
-          System.gc()
-        }
-        (1 to RUNS).foreach { _ => timedRun() }
-        // Adaptive re-run on detected interference: this sandbox is a
-        // VM on a shared hypervisor (cumulative /proc/stat steal ≈
-        // 0.15% but BURSTY — ~10³ stolen CPU-seconds over a session),
-        // and one burst landing inside a timed run produces a 10× wild
-        // number on an arbitrary query (r10 full benches: simhash 32 s,
-        // bm25 13 s, top_parts 10 s — a different query every time,
-        // min unchanged). When the median exceeds 2× the same-set min —
-        // the interference signature, and exactly the criterion the
-        // recorded number is judged on — take extra runs (bounded by
-        // MAX_RUNS) so a single stall can't own the median. Genuine
-        // degradation (every run slow) keeps failing the criterion:
-        // extra runs then reproduce the slowness, not dilute it. The
-        // rule is deterministic and applies to every query equally.
-        while (runs.length < MAX_RUNS && {
-            val s = runs.sorted; s(runs.length / 2) > 2 * s.head
-          }) timedRun()
-        // Recorded value: median of the FASTEST `RUNS` runs. With no
-        // interference re-runs this is exactly the plain median of 3.
-        // When re-runs were taken, timing noise on a shared VM is
-        // strictly additive (a steal burst only ever slows a run, never
-        // speeds one), so the lower tail is the steady-state estimate —
-        // an r10 burst spanned 4 consecutive runs of one query
-        // ([4.1, 14.0, 25.3, 30.2, 2.2, 2.7]) and the all-runs median
-        // recorded 14 s for a 2.2 s plan. All raw runs still ship in
-        // bench_line.json `runs` (execution order) for audit.
-        val sorted = runs.sorted
-        val fastest = sorted.take(RUNS)
-        med(name) = fastest(fastest.length / 2)
+        val runs = measure(fn, warmups = 1)
+        med(name) = fastestMedian(runs)
         // min/max (the variance signal the sentinels watch) are
         // STEADY-STATE: the first timed run is reported separately in
         // `first_run` — queries that build per-invocation state
         // (in-function localCheckpoint, index populate) reproducibly
-        // pay cleaner/compilation backlog exactly once there
-        // (minhash_calibration max/min 5.3, ann_pq_top1 7.3 in r13 —
-        // both first-run effects), which otherwise drowns the
-        // interference signal max/min exists to expose.
+        // pay cleaner/compilation backlog exactly once there, which
+        // otherwise drowns the interference signal max/min exists to
+        // expose.
         firstRun(name) = runs.head
-        // Guard against a single-timed-run configuration (RUNS lowered
-        // to 1 or a future early-exit): runs.tail would be empty and
-        // steady.head would throw AFTER the timing loop succeeded.
         val steady = if (runs.length > 1) runs.tail.sorted else runs.sorted
         lo(name) = steady.head
         hi(name) = steady.last
         // Execution order preserved (not sorted): bimodality across the
         // run sequence is the diagnostic for JVM-accretion artifacts.
-        perRun(name) = runs.toSeq
+        perRun(name) = runs
       } catch { case e: Throwable =>
         failed(name) = errText(e)
         System.err.println(s"[bench] FAILED $name: ${failed(name)}")
@@ -295,44 +239,13 @@ object Bench {
     // jit/classes columns above say which resource). Skipped when an
     // explicit query subset was requested.
     // Shared end-of-suite measurement (sentinels + attribution): the
-    // SAME interference defense as the suite loop — untimed warmup,
-    // RUNS timed runs, adaptive re-runs while the median exceeds 2× the
-    // same-set min (bounded by MAX_RUNS), median of the fastest RUNS —
-    // so the isolated discriminator is never noisier than the suite
-    // numbers it adjudicates (a steal burst inside a plain 3-run loop
-    // would read as "isolated ≈ inflated suite" = a phantom regression).
+    // SAME interference defense as the suite loop, so the isolated
+    // discriminator is never noisier than the suite numbers it
+    // adjudicates, plus a second warmup to re-settle the JVM state the
+    // whole suite left behind.
     def isolatedMedian(
         fn: (SparkSession, String) => org.apache.spark.sql.DataFrame)
-        : Double = {
-      val runs = scala.collection.mutable.ArrayBuffer[Double]()
-      // TWO untimed warmups (r15 verdict order #3): one warmup was
-      // enough at natural suite position, but an END-OF-SUITE isolated
-      // re-run starts from whatever JVM state 315 queries left behind
-      // (evicted codegen classes to re-Janino, a ContextCleaner backlog,
-      // a post-full-GC cold code cache) and one pass did not reliably
-      // re-settle it — the r15 dsir_weights inversion (isolated 4.29 s
-      // vs in-suite 1.90 s) is the signature. The second warmup runs
-      // after the first's GC, so the timed runs start from the same
-      // steady state the suite loop's runs see.
-      (1 to 2).foreach { _ =>
-        fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-        spark.catalog.clearCache()
-        System.gc()
-      }
-      Thread.sleep(500)
-      def one(): Unit = {
-        val t0 = System.nanoTime()
-        fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-        runs += (System.nanoTime() - t0) / 1e9
-        spark.catalog.clearCache(); System.gc()
-      }
-      (1 to RUNS).foreach(_ => one())
-      while (runs.length < MAX_RUNS && {
-          val s = runs.sorted; s(runs.length / 2) > 2 * s.head
-        }) one()
-      val fastest = runs.sorted.take(RUNS)
-      fastest(fastest.length / 2)
-    }
+        : Double = fastestMedian(measure(fn, warmups = 2))
     val sentinelEnd = scala.collection.mutable.LinkedHashMap[String, Double]()
     if (args.isEmpty) {
       // simhash_pairs and minhash_calibration joined the list in r13:

@@ -212,21 +212,7 @@ object Pipeline {
 
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      // Static confs Bench sets (see its builder for the measurement):
-      // no Janino class-cache thrash across a long query list, and a
-      // bounded SQL status store.
-      .config("spark.sql.codegen.cache.maxEntries", "4096")
-      .config("spark.sql.ui.retainedExecutions", "8")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local(Session.cpus)
     // Entry smoke with `observe()` — production metric collection
     // WITHOUT a second pass: the Observation rides the same action
     // that materializes the frame (at 100 TB a separate metrics

@@ -1,14 +1,13 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 
 /** Optimization-round tool: dump `.explain("formatted")` for named queries
   * to `plans/<round>/<query>_<tag>.txt` — the before/after plan evidence the
   * optimization deliverables require. Usage:
   *   runMain graft.PlanDump <tag> <query>[,<query>...]
-  * `tag` is typically `before` or `after`; the SF dir and core count come
-  * from the same env vars as [[Bench]] so the plans match the benched
-  * configuration. Dumps are cheap (no execution beyond what query
+  * `tag` is typically `before` or `after`; the SF dir comes from the same
+  * env var as [[Bench]] and the session from [[Session.local]], so the
+  * plans match the benched configuration. Dumps are cheap (no execution beyond what query
   * construction itself triggers, e.g. 1-row anchor collects or memo
   * population warmups).
   */
@@ -24,19 +23,8 @@ object PlanDump {
       if (args.length > 1) args(1).split(",").toSeq.map(_.trim).filter(_.nonEmpty)
       else SparkEntry.queries.keys.toSeq
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val outDir = sys.env.getOrElse("SPARK_GRAFT_PLAN_DIR", "plans/r18")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.codegen.cache.maxEntries", "4096")
-      .config("spark.sql.ui.retainedExecutions", "8")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local(Session.cpus)
     Files.createDirectories(Paths.get(outDir))
     names.foreach { name =>
       SparkEntry.queries.get(name) match {

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.operators.VectorOps
 
@@ -8,22 +7,15 @@ import graft.operators.VectorOps
   * variants against the exact brute-force nearest neighbor, per Lloyd
   * iteration count (0 = the untrained stride-sampled quantizer of
   * `annIvfTop1`). Dev tool — run with
-  * `sbt "runMain graft.RecallSweep [sfDir]"`; the measured numbers are
+  * `sbt "runMain graft.RecallSweep [sfDir]"` (cores from
+  * `SPARK_GRAFT_CPUS`, see [[Session]]); the measured numbers are
   * documented at [[VectorOps.LloydIters]]. Not part of the driver
   * contract (Verify/Bench) and registered in no query map. */
 object RecallSweep {
   def main(args: Array[String]): Unit = {
     val dir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.01"
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    graft.functions.DotProduct.register(spark)
+    val spark = Session.local(Session.cpus)
+    graft.functions.Natives.ensure(spark)
     // Exact top-1 by brute force (N² dots — the harness runs at small SF
     // only; the engine's scalable exact path is cosineTopK's broadcast
     // form). Same (cosine desc, c_id asc) tiebreak as the ANN queries.

@@ -65,8 +65,8 @@ object Tables {
     * timestamp. Integer `div` keeps the conversion exact and matches
     * DuckDB's native TIMESTAMP_NS read at millisecond granularity.
     *
-    * The conf belongs in the SparkSession builder (Bench/Verify/tests all
-    * set it); the fallback here only covers sessions built elsewhere, and
+    * The conf belongs in the session builder ([[Session.local]] sets
+    * it); the fallback here only covers sessions built elsewhere, and
     * only fires when the conf is unset — it never changes an explicitly
     * configured value, so behavior is not call-order dependent. */
   private def eventsWithTs(spark: SparkSession, dir: String): DataFrame = {

@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -133,21 +132,16 @@ case class DotPrefixes(left: Expression, right: Expression, ks: Seq[Int])
 }
 
 object DotPrefixes {
-  /** Idempotently register `vec_dot_prefixes(a, b, 'k1,k2,…')` — the
+  /** Builder from SQL children: `vec_dot_prefixes(a, b, 'k1,k2,…')` — the
     * checkpoint list rides as a foldable string literal, parsed once at
-    * resolution time (same registry-based registration as
-    * [[DotProduct]]). */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "vec_dot_prefixes",
-      (children: Seq[Expression]) => {
-        require(children.length == 3,
-          s"vec_dot_prefixes takes 3 arguments, got ${children.length}")
-        require(children(2).foldable,
-          "vec_dot_prefixes checkpoints must be a literal string")
-        val ks = children(2).eval().toString
-          .split(",").map(_.trim.toInt).toSeq
-        DotPrefixes(children.head, children(1), ks)
-      },
-      "internal")
+    * resolution time ([[Natives]]). */
+  def fromChildren(children: Seq[Expression]): DotPrefixes = {
+    require(children.length == 3,
+      s"vec_dot_prefixes takes 3 arguments, got ${children.length}")
+    require(children(2).foldable,
+      "vec_dot_prefixes checkpoints must be a literal string")
+    val ks = children(2).eval().toString
+      .split(",").map(_.trim.toInt).toSeq
+    DotPrefixes(children.head, children(1), ks)
+  }
 }

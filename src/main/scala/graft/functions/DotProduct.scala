@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -118,18 +117,10 @@ case class DotProduct(left: Expression, right: Expression)
 }
 
 object DotProduct {
-  /** Idempotently register `vec_dot` in the session's function registry
-    * so `expr("vec_dot(a, b)")` (and SQL text) resolves to this
-    * Expression. Registry-based registration is the lightweight sibling
-    * of a SparkSessionExtensions injection — appropriate here because
-    * the function is self-contained (no analyzer/optimizer rules). */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "vec_dot",
-      (children: Seq[Expression]) => {
-        require(children.length == 2,
-          s"vec_dot takes 2 arguments, got ${children.length}")
-        DotProduct(children.head, children(1))
-      },
-      "internal")
+  /** Builder from SQL children: `vec_dot(a, b)` ([[Natives]]). */
+  def fromChildren(children: Seq[Expression]): DotProduct = {
+    require(children.length == 2,
+      s"vec_dot takes 2 arguments, got ${children.length}")
+    DotProduct(children.head, children(1))
+  }
 }

@@ -1,8 +1,6 @@
 package graft.functions
 
 import org.apache.spark.sql.SparkSessionExtensions
-import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 
 /** SparkSessionExtensions injector for the engine's native functions —
   * the configuration-driven registration path:
@@ -12,56 +10,12 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
   * }}}
   *
   * gives a pure-SQL user (`spark-sql`, Thrift server, a notebook with no
-  * graft import) `vec_dot`, `simhash60`, `poly_roll`, `quant_stats`,
-  * `sign_bits`, and `vec_dot_prefixes` in every session, resolved to the same codegen'd
-  * expressions the library API uses. The operators in `graft.operators`
-  * do not REQUIRE the extension to be installed — they self-register
-  * through the session registry on first use ([[DotProduct.register]] /
-  * [[Simhash60.register]] / [[PolyRollHash.register]] /
-  * [[QuantStats.register]] / [[SignBits.register]]) — so the injector
-  * exists for the SQL front door, not as a hidden dependency. Keep the injected set equal to the
-  * registered-native set (spec-pinned: "GraftExtensions injects every
-  * registered native" in DotProductSpec). */
+  * graft import) every function in [[Natives]] in every session, resolved
+  * to the same codegen'd expressions the library API uses. The operators
+  * in `graft.operators` do not REQUIRE the extension to be installed —
+  * they install what is missing through [[Natives.ensure]] — so the
+  * injector exists for the SQL front door, not as a hidden dependency. */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectFunction((
-      new FunctionIdentifier("vec_dot"),
-      new ExpressionInfo(classOf[DotProduct].getName, "vec_dot"),
-      (children: Seq[Expression]) => {
-        require(children.length == 2,
-          s"vec_dot takes 2 arguments, got ${children.length}")
-        DotProduct(children.head, children(1))
-      }))
-    ext.injectFunction((
-      new FunctionIdentifier("simhash60"),
-      new ExpressionInfo(classOf[Simhash60].getName, "simhash60"),
-      (children: Seq[Expression]) => {
-        require(children.length == 1,
-          s"simhash60 takes 1 argument, got ${children.length}")
-        Simhash60(children.head)
-      }))
-    ext.injectFunction((
-      new FunctionIdentifier("poly_roll"),
-      new ExpressionInfo(classOf[PolyRollHash].getName, "poly_roll"),
-      PolyRollHash.fromChildren _))
-    ext.injectFunction((
-      new FunctionIdentifier("quant_stats"),
-      new ExpressionInfo(classOf[QuantStats].getName, "quant_stats"),
-      QuantStats.fromChildren _))
-    ext.injectFunction((
-      new FunctionIdentifier("sign_bits"),
-      new ExpressionInfo(classOf[SignBits].getName, "sign_bits"),
-      SignBits.fromChildren _))
-    ext.injectFunction((
-      new FunctionIdentifier("vec_dot_prefixes"),
-      new ExpressionInfo(classOf[DotPrefixes].getName, "vec_dot_prefixes"),
-      (children: Seq[Expression]) => {
-        require(children.length == 3,
-          s"vec_dot_prefixes takes 3 arguments, got ${children.length}")
-        require(children(2).foldable,
-          "vec_dot_prefixes checkpoints must be a literal string")
-        DotPrefixes(children.head, children(1),
-          children(2).eval().toString.split(",").map(_.trim.toInt).toSeq)
-      }))
-  }
+  override def apply(ext: SparkSessionExtensions): Unit =
+    Natives.all.foreach(ext.injectFunction)
 }

@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, Literal, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -92,8 +91,8 @@ case class PolyRollHash(child: Expression, base: Long, mod: Long)
 
 object PolyRollHash {
   /** Builder from SQL children: `poly_roll(arr, baseL, modL)` — base and
-    * mod must be literal integers (they parameterize the generated code).
-    * Shared by the session registry path and [[GraftExtensions]]. */
+    * mod must be literal integers (they parameterize the generated code);
+    * listed in [[Natives]]. */
   def fromChildren(children: Seq[Expression]): PolyRollHash = {
     require(children.length == 3,
       s"poly_roll takes 3 arguments, got ${children.length}")
@@ -106,9 +105,4 @@ object PolyRollHash {
     PolyRollHash(children.head,
       lit(children(1), "base"), lit(children(2), "mod"))
   }
-
-  /** Idempotent session registration of `poly_roll(arr, baseL, modL)`. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "poly_roll", fromChildren _, "internal")
 }

@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, Literal, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -144,8 +143,8 @@ case class QuantStats(child: Expression, levels: Int)
 
 object QuantStats {
   /** Builder from SQL children: `quant_stats(vec, levels)` — levels must
-    * be a literal integer (it parameterizes the generated code). Shared
-    * by the session registry path and [[GraftExtensions]]. */
+    * be a literal integer (it parameterizes the generated code); listed
+    * in [[Natives]]. */
   def fromChildren(children: Seq[Expression]): QuantStats = {
     require(children.length == 2,
       s"quant_stats takes 2 arguments, got ${children.length}")
@@ -162,9 +161,4 @@ object QuantStats {
     }
     QuantStats(children.head, levels)
   }
-
-  /** Idempotent session registration of `quant_stats(vec, levels)`. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "quant_stats", fromChildren _, "internal")
 }

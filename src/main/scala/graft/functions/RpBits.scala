@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, TernaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -171,12 +170,6 @@ object RpBits {
       s"rp_bits takes 3 arguments, got ${children.length}")
     RpBits(children.head, children(1), children(2))
   }
-
-  /** Idempotently register `rp_bits` (the [[DotProduct.register]]
-    * pattern). */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "rp_bits", fromChildren _, "internal")
 }
 
 /** The deterministic hyperplane bank behind [[RpBits]]: plane `h` is the

@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, TernaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -132,10 +131,4 @@ object SignBits {
       s"sign_bits takes 3 arguments, got ${children.length}")
     SignBits(children.head, children(1), children(2))
   }
-
-  /** Idempotently register `sign_bits` in the session's function
-    * registry (the [[DotProduct.register]] pattern). */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "sign_bits", fromChildren _, "internal")
 }

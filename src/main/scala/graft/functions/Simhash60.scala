@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -89,15 +88,10 @@ case class Simhash60(child: Expression) extends UnaryExpression {
 }
 
 object Simhash60 {
-  /** Idempotent session registration (same mechanism as
-    * [[DotProduct.register]]). */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "simhash60",
-      (children: Seq[Expression]) => {
-        require(children.length == 1,
-          s"simhash60 takes 1 argument, got ${children.length}")
-        Simhash60(children.head)
-      },
-      "internal")
+  /** Builder from SQL children: `simhash60(hashes)` ([[Natives]]). */
+  def fromChildren(children: Seq[Expression]): Simhash60 = {
+    require(children.length == 1,
+      s"simhash60 takes 1 argument, got ${children.length}")
+    Simhash60(children.head)
+  }
 }

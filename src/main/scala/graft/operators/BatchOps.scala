@@ -483,8 +483,8 @@ object BatchOps {
       .select("p_partkey", "p_name", "revenue", "units_sold", "order_count")
 
   /** O2: ORDER BY RANDOM() LIMIT 1 (data_generator.py:157,166). rand() is
-    * seeded per-partition, so it would pick a different row at local[4] vs
-    * local[32]; instead we order by a value-derived md5 — a deterministic
+    * seeded per-partition, so it would pick a different row at 4 cores vs
+    * 32; instead we order by a value-derived md5 — a deterministic
     * pseudo-random total order at any parallelism that BOTH engines
     * compute identically (murmur3 would be Spark-only and forfeit the
     * oracle). Still TakeOrderedAndProject: per-partition top-1, k-row

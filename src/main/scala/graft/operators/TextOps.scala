@@ -893,7 +893,7 @@ object TextOps {
     * is a single integer per doc — the cheapest near-dup signature to
     * store at 100 TB. */
   def simhashPairs(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.Simhash60.register(spark)
+    graft.functions.Natives.ensure(spark)
     // The fingerprint is ONE native expression over the per-doc hash
     // list ([[graft.functions.Simhash60]]) — the previous 60-column
     // sum(CASE) aggregate plus 60-term bit assembly was the last wide
@@ -1011,8 +1011,7 @@ object TextOps {
     * hash (the pair side is small enough that AQE broadcasts it). No
     * stage is quadratic beyond the already-capped candidate screen. */
   def dedupFeatures(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.Simhash60.register(spark)
-    graft.functions.DotProduct.register(spark)
+    graft.functions.Natives.ensure(spark)
     val pairs = nearDupPairsCore(spark, dir)
     val sim = shingleHashes(spark, dir)
       .groupBy("doc_id")
@@ -1907,7 +1906,7 @@ object TextOps {
     * pipeline), unlike a bucket membership whose size is data-coupled
     * across documents and therefore rank-capped. */
   def rollingFingerprints(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.PolyRollHash.register(spark)
+    graft.functions.Natives.ensure(spark)
     Tables.documents(spark, dir)
       // Null-text docs emit NO fingerprint row, by construction on BOTH
       // sides (the oracle filters identically): the inner posexplode

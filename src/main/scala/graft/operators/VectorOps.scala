@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.Tables
+import graft.functions.Natives
 
 /** Similarity search over the `embeddings` table (`vec_id`,
   * `embedding: array<float>` (64-dim), `label`) — the ANN component of a
@@ -127,13 +128,6 @@ object VectorOps {
     * contract as [[sq]]). */
   private def dot(a: String, b: String): Column = expr(s"vec_dot($a, $b)")
 
-  /** Every public entry point registers the expression first (idempotent,
-    * per session). */
-  private def prepare(spark: SparkSession): Unit = {
-    graft.functions.DotProduct.register(spark)
-    graft.functions.DotPrefixes.register(spark)
-  }
-
   /** Signed projection onto a sparse hyperplane, unrolled. */
   private def proj(c: String, h: Array[(Int, Int)]): Column =
     h.map { case (d, s) => lit(s) * elem(c, d) }.reduce(_ + _)
@@ -171,7 +165,7 @@ object VectorOps {
   /** Per-vector L2 norm + dimension — the normalization pass run before
     * indexing a corpus. */
   def embeddingNorms(spark: SparkSession, dir: String): DataFrame = {
-    prepare(spark)
+    Natives.ensure(spark)
     Tables.embeddings(spark, dir)
       .select(
         col("vec_id"), col("label"),
@@ -183,7 +177,7 @@ object VectorOps {
   /** Per-label corpus stats with the norm sum carried in decimal so the
     * aggregate is order-independent. */
   def labelStats(spark: SparkSession, dir: String): DataFrame = {
-    prepare(spark)
+    Natives.ensure(spark)
     Tables.embeddings(spark, dir)
       .select(col("label"), sqrt(sq("embedding")).as("l2_norm"))
       .groupBy("label")
@@ -204,7 +198,7 @@ object VectorOps {
     * one side is a sampled subset; the norm sum rides in decimal so the
     * aggregate is order-independent. */
   def docEmbeddingStats(spark: SparkSession, dir: String): DataFrame = {
-    prepare(spark)
+    Natives.ensure(spark)
     val d = Tables.documents(spark, dir)
       .select(col("doc_id"), col("n_chars"))
     val e = Tables.embeddings(spark, dir)
@@ -243,7 +237,7 @@ object VectorOps {
     * (cosine desc, vec_id) — deterministic tiebreak. The cosine is rounded
     * to 9 dp on output (ranking uses the unrounded value). */
   def cosineTopK(spark: SparkSession, dir: String, k: Int = 3): DataFrame = {
-    prepare(spark)
+    Natives.ensure(spark)
     val e = Tables.embeddings(spark, dir)
     // Norms are precomputed per VECTOR, not per pair — sqrt(Σx²) then a
     // multiply is the same float ops as computing both inside the pair, so
@@ -305,7 +299,7 @@ object VectorOps {
     * instead of re-running the explode/dedup/score stages each. */
   private def lshScoredPairsUncached(spark: SparkSession,
       dir: String): DataFrame = {
-    prepare(spark)
+    Natives.ensure(spark)
     val e = Tables.embeddings(spark, dir)
       .repartition(spark.sparkContext.defaultParallelism, col("vec_id"))
     val hashed = e.select(
@@ -624,7 +618,7 @@ object VectorOps {
     * rank-capped at [[CellCap]] so in-cell scoring is bounded by
     * min(stride, cap)² per cell even on a degenerately clustered corpus. */
   def annIvfTop1(spark: SparkSession, dir: String): DataFrame = {
-    prepare(spark)
+    Natives.ensure(spark)
     // NUMBERED repartition: AQE coalesces shuffle stages by BYTES, and
     // this stage is tiny in bytes but heavy in compute (N×C dot
     // products) — byte-based coalescing would serialize it onto 1-2
@@ -741,7 +735,7 @@ object VectorOps {
 
   private def trainedCoarseCentroidsUncached(spark: SparkSession,
       dir: String, iters: Int): DataFrame = {
-    prepare(spark)
+    Natives.ensure(spark)
     val e = Tables.embeddings(spark, dir)
       .repartition(spark.sparkContext.defaultParallelism, col("vec_id"))
       .select(col("vec_id"), col("embedding"),
@@ -802,7 +796,7 @@ object VectorOps {
 
   private[graft] def annIvfTrainedTop1Iter(spark: SparkSession, dir: String,
       iters: Int): DataFrame = {
-    prepare(spark)
+    Natives.ensure(spark)
     val e = Tables.embeddings(spark, dir)
       .repartition(spark.sparkContext.defaultParallelism, col("vec_id"))
       .select(col("vec_id"), col("embedding"),
@@ -973,7 +967,7 @@ object VectorOps {
     * centroids ride the broadcast, embeddings never shuffle), shared by
     * [[clusterProfile]] and [[clusterSample]]. */
   private def trainedAssignment(spark: SparkSession, dir: String): DataFrame = {
-    prepare(spark)
+    Natives.ensure(spark)
     val e = Tables.embeddings(spark, dir)
       .repartition(spark.sparkContext.defaultParallelism, col("vec_id"))
       .select(col("vec_id"), col("embedding"), col("label"),
@@ -1219,7 +1213,7 @@ object VectorOps {
     * quantization); the margin subtracts two such exact-derived
     * doubles, so it is bit-deterministic. */
   def labelCohesion(spark: SparkSession, dir: String): DataFrame = {
-    prepare(spark)
+    Natives.ensure(spark)
     val w = Window.partitionBy("label").orderBy("vec_id")
     val capped = Tables.embeddings(spark, dir)
       .select(col("vec_id"), col("embedding"), col("label"),
@@ -1339,7 +1333,7 @@ object VectorOps {
     * driver-trivial at any corpus size and rides one broadcast
     * nested-loop; nothing touches the corpus at all. */
   def clusterSeparation(spark: SparkSession, dir: String): DataFrame = {
-    prepare(spark)
+    Natives.ensure(spark)
     val t = trainedCoarseCentroids(spark, dir, LloydIters)
     val a = t.select(col("cent_id"), col("cent_emb").as("emb_a"),
       col("cent_norm").as("norm_a"))
@@ -1591,7 +1585,7 @@ object VectorOps {
 
   private[graft] def pqAdcScoredUncached(spark: SparkSession,
       dir: String): DataFrame = {
-    prepare(spark)
+    Natives.ensure(spark)
     val e = Tables.embeddings(spark, dir)
       .repartition(spark.sparkContext.defaultParallelism, col("vec_id"))
       .select(col("vec_id"), col("embedding"),
@@ -1772,7 +1766,7 @@ object VectorOps {
   /** The actual train+encode pipeline behind [[pqEncode]]. */
   private def pqEncodeUncached(spark: SparkSession, dir: String,
       n: Long): DataFrame = {
-    prepare(spark)
+    Natives.ensure(spark)
     val off = (s: Int) => s * PqSubDims
     // EVERYTHING long-form: one narrow (vec, subspace, slice) frame
     // feeds init assignment, training, and the trained encode. The
@@ -2042,7 +2036,7 @@ object VectorOps {
     * — and max is order-independent on identical IEEE doubles, so both
     * moments are hash-exact. */
   def pqDistortion(spark: SparkSession, dir: String): DataFrame = {
-    prepare(spark)
+    Natives.ensure(spark)
     val n = Tables.embeddings(spark, dir).count()
     val arms = (0 until PqSubspaces)
       .map(s => s"$s, element_at(l$s, code$s + 1)").mkString(", ")
@@ -2246,7 +2240,7 @@ object VectorOps {
     * arithmetic is unchanged, so the oracle SQL (still unrolled) remains
     * bit-identical. */
   def embeddingQuantize(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.QuantStats.register(spark)
+    Natives.ensure(spark)
     Tables.embeddings(spark, dir)
       .select(col("vec_id"),
         expr(s"quant_stats(embedding, $QuantLevels)").as("q"))
@@ -2375,7 +2369,7 @@ object VectorOps {
     * [[mihShortlist]] memo instead. */
   private[graft] def mihScoredPairsUncached(spark: SparkSession,
       dir: String): DataFrame = {
-    graft.functions.SignBits.register(spark)
+    Natives.ensure(spark)
     // Native band packer (graft.functions.SignBits): the aggregate()
     // HOF this replaces evaluated an interpreted lambda per ELEMENT —
     // per vector per band, the binary-quantization hot path at scale.
@@ -2474,7 +2468,7 @@ object VectorOps {
     * md5-salted hyperplane bits raise the measured ceiling
     * 0.154 → 0.484 at the same rerank cap. */
   def annMihRerankTop1(spark: SparkSession, dir: String): DataFrame = {
-    prepare(spark)
+    Natives.ensure(spark)
     cosineRerankTop1(spark, dir, mihShortlist(spark, dir))
   }
 
@@ -2531,7 +2525,7 @@ object VectorOps {
     * Registered queries read the rank-capped [[rpShortlist]] memo. */
   private[graft] def rpScoredPairsUncached(spark: SparkSession,
       dir: String): DataFrame = {
-    graft.functions.RpBits.register(spark)
+    Natives.ensure(spark)
     val bandCols = (0 until RpBands).map { j =>
       expr(s"rp_bits(embedding, $j, $RpBandBits)").as(s"b$j")
     }
@@ -2579,7 +2573,7 @@ object VectorOps {
     * FULL scored-pair frame the shortlist rank-caps. */
   private def rpMultiprobeScoredPairsUncached(spark: SparkSession,
       dir: String): DataFrame = {
-    graft.functions.RpBits.register(spark)
+    Natives.ensure(spark)
     val bandCols = (0 until RpBands).map { j =>
       expr(s"rp_bits(embedding, $j, $RpBandBits)").as(s"b$j")
     }
@@ -2623,7 +2617,7 @@ object VectorOps {
     * into the stop-cap) — the knob a retrieval deployment turns when
     * recall matters more than query latency. */
   def annRpMultiprobeTop1(spark: SparkSession, dir: String): DataFrame = {
-    prepare(spark)
+    Natives.ensure(spark)
     cosineRerankTop1(spark, dir, rpMultiprobeShortlist(spark, dir))
   }
 
@@ -2651,7 +2645,7 @@ object VectorOps {
     * smaller than the raw embeddings, mergeable, and the candidate
     * stage never touches a float. */
   def annRpRerankTop1(spark: SparkSession, dir: String): DataFrame = {
-    prepare(spark)
+    Natives.ensure(spark)
     cosineRerankTop1(spark, dir, rpShortlist(spark, dir))
   }
 
@@ -2682,7 +2676,7 @@ object VectorOps {
 
   private def exactTop1Uncached(spark: SparkSession,
       dir: String): DataFrame = {
-    prepare(spark)
+    Natives.ensure(spark)
     val e = Tables.embeddings(spark, dir)
       .select(col("vec_id"), col("embedding"),
         sqrt(sq("embedding")).as("norm"))
@@ -2706,7 +2700,7 @@ object VectorOps {
   }
 
   def annQualityReport(spark: SparkSession, dir: String): DataFrame = {
-    prepare(spark)
+    Natives.ensure(spark)
     val exact = exactTop1(spark, dir)
     val tot = exact.agg(count(lit(1)).as("n_queries"))
     def familyRow(name: String, picks: DataFrame): DataFrame =
@@ -2793,7 +2787,7 @@ object VectorOps {
     * candidate lists, and the curve itself is a single 1-row aggregate
     * unpivoted to [[RecallKs]] grain. */
   def lshRecallAtK(spark: SparkSession, dir: String): DataFrame = {
-    prepare(spark)
+    Natives.ensure(spark)
     val exact = exactTop1(spark, dir)
     val scored = lshScoredPairs(spark, dir)
     val oriented = scored
@@ -2845,7 +2839,7 @@ object VectorOps {
     * no embedding ever joins; the rank window runs on the capped
     * candidate lists. */
   def rpMultiprobeRecallAtK(spark: SparkSession, dir: String): DataFrame = {
-    prepare(spark)
+    Natives.ensure(spark)
     val exact = exactTop1(spark, dir)
     // the memo already carries the capped (hamming, c_id) rank — read
     // it, no per-call window.
@@ -3479,7 +3473,7 @@ object VectorOps {
     * pair frame (embeddings never re-shuffle), the pick is a
     * partial+final hash aggregate at val-vector grain. */
   def semanticDecontam(spark: SparkSession, dir: String): DataFrame = {
-    prepare(spark)
+    Natives.ensure(spark)
     val cross = lshScoredPairs(spark, dir)
       .withColumn("a_val", isVal("a"))
       .withColumn("b_val", isVal("b"))
@@ -3549,7 +3543,7 @@ object VectorOps {
     * pass over the pair stream and reduced by four max(struct)
     * partial aggregates — no pair-row explode, no window. */
   def matryoshkaRecall(spark: SparkSession, dir: String): DataFrame = {
-    prepare(spark)
+    Natives.ensure(spark)
     // All prefix dots ride ONE fused native loop per pair
     // (`vec_dot_prefixes`, functions/DotPrefixes.scala) — the
     // compositional slice-per-k form allocated two array copies per

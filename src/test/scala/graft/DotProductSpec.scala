@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions.{col, expr}
-import graft.functions.DotProduct
+import graft.functions.{DotProduct, Natives}
 
 /** The native `vec_dot` Expression: codegen and interpreted paths must
   * agree bit-exactly with the scala-side left-to-right fold, and data
@@ -13,7 +13,7 @@ class DotProductSpec extends GraftSpec {
   import spark.implicits._
 
   test("vec_dot matches the strict left-to-right fold bit-exactly") {
-    DotProduct.register(spark)
+    Natives.ensure(spark)
     val a = Array.tabulate(64)(j => (j * 0.37f + 0.11f) * (if (j % 3 == 0) -1 else 1))
     val b = Array.tabulate(64)(j => (j * 1.13f - 7.5f))
     // The contract: ascending index, left-to-right double accumulation.
@@ -31,7 +31,7 @@ class DotProductSpec extends GraftSpec {
   }
 
   test("vec_dot is null-intolerant on arrays and loud on corruption") {
-    DotProduct.register(spark)
+    Natives.ensure(spark)
     val rows = Seq((Array(1.0f, 2.0f), Array(3.0f, 4.0f))).toDF("a", "b")
     // Null ARRAY → null result (standard null-intolerant binary op).
     assert(rows.select(expr("vec_dot(a, cast(null as array<float>))"))
@@ -47,7 +47,7 @@ class DotProductSpec extends GraftSpec {
   }
 
   test("simhash60 is order-independent and matches a scala fold") {
-    graft.functions.Simhash60.register(spark)
+    Natives.ensure(spark)
     val hs = Array(0x7ffL, 0x123456789abL, 0x0L, 0xfff000fff000L, 0x1L)
     def ref(xs: Seq[Long]): Long = {
       var sig = 0L
@@ -72,7 +72,7 @@ class DotProductSpec extends GraftSpec {
   }
 
   test("poly_roll folds in array order and matches a scala fold") {
-    graft.functions.PolyRollHash.register(spark)
+    Natives.ensure(spark)
     val b = 1048573L; val m = 2147483647L
     val hs = Seq((0, 17L), (1, 99L), (2, 5L))
     def ref(xs: Seq[Long]): Long = xs.foldLeft(0L)((a, h) => (a * b + h) % m)
@@ -112,6 +112,25 @@ class DotProductSpec extends GraftSpec {
       String.valueOf(neg.getCause).contains("negative"))
   }
 
+  test("Natives.ensure installs each native once and never replaces one") {
+    import org.apache.spark.sql.catalyst.FunctionIdentifier
+    import org.apache.spark.sql.catalyst.analysis.FunctionRegistry.FunctionBuilder
+    val vecDot = FunctionIdentifier("vec_dot")
+    def builder(s: org.apache.spark.sql.SparkSession) =
+      s.sessionState.functionRegistry.lookupFunctionBuilder(vecDot).get
+    Natives.ensure(spark)
+    val first = builder(spark)
+    Natives.ensure(spark)
+    assert(builder(spark) eq first, "second ensure replaced vec_dot")
+    // A name the session already has keeps its builder.
+    val other = spark.newSession()
+    val mine: FunctionBuilder = DotProduct.fromChildren
+    other.sessionState.functionRegistry.registerFunction(vecDot, mine, "scala_udf")
+    Natives.ensure(other)
+    assert(builder(other) eq mine)
+    assert(Natives.names.forall(n => other.catalog.functionExists(n)))
+  }
+
   test("GraftExtensions injects every registered native via spark.sql.extensions") {
     import org.apache.spark.sql.SparkSession
     // Build a SECOND session on the same context with the extension
@@ -140,12 +159,9 @@ class DotProductSpec extends GraftSpec {
       assert(r.getDouble(0) == 11.0)
       assert(r.getLong(1) == 3L)
       assert(r.getLong(2) == (7L * 10L + 3L) % 97L)
-      // The injected set must equal the registered-native set: every
-      // native the library self-registers resolves via the injector too.
-      val injected =
-        Seq("vec_dot", "simhash60", "poly_roll", "quant_stats",
-          "sign_bits", "vec_dot_prefixes")
-      injected.foreach { f =>
+      // The injected set is the Natives list: every native the
+      // operators install resolves via the injector too.
+      Natives.names.foreach { f =>
         assert(s2.catalog.functionExists(f), s"$f not injected")
       }
       // sign_bits resolves and packs strictly-positive signs.
@@ -169,7 +185,7 @@ class DotProductSpec extends GraftSpec {
   }
 
   test("quant_stats matches the unrolled min-max-floor arithmetic") {
-    graft.functions.QuantStats.register(spark)
+    Natives.ensure(spark)
     val xs = Array.tabulate(64)(j => (j * 0.73f - 11.2f) * (if (j % 5 == 0) -1 else 1))
     // Reference: left-associated least/greatest chain + per-element
     // floor codes — the exact arithmetic the old unrolled projection used.
@@ -209,7 +225,7 @@ class DotProductSpec extends GraftSpec {
   }
 
   test("vec_dot rejects non-array inputs at analysis time") {
-    DotProduct.register(spark)
+    Natives.ensure(spark)
     val e = intercept[Exception] {
       Seq(1).toDF("x").select(expr("vec_dot(x, x)")).head
     }
@@ -219,8 +235,7 @@ class DotProductSpec extends GraftSpec {
 
   test("vec_dot_prefixes checkpoints equal vec_dot over each prefix, " +
       "bit-exactly, on both paths") {
-    graft.functions.DotPrefixes.register(spark)
-    DotProduct.register(spark)
+    Natives.ensure(spark)
     val ks = Seq(8, 16, 32, 64)
     val a = Array.tabulate(64)(j => (j * 0.29f - 3.7f) * (if (j % 5 == 2) -1 else 1))
     val b = Array.tabulate(64)(j => (j * 0.91f + 0.03f))
@@ -249,7 +264,7 @@ class DotProductSpec extends GraftSpec {
   }
 
   test("vec_dot_prefixes fails loudly short of the last checkpoint") {
-    graft.functions.DotPrefixes.register(spark)
+    Natives.ensure(spark)
     val rows = Seq((Array(1.0f, 2.0f), Array(3.0f, 4.0f))).toDF("a", "b")
     val boom = intercept[Exception] {
       rows.select(expr("vec_dot_prefixes(a, b, '2,4')")).head

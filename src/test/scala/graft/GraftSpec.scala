@@ -11,19 +11,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * are expressed as miniature table dirs, not mocks). */
 trait GraftSpec extends AnyFunSuite with BeforeAndAfterAll {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName(getClass.getSimpleName)
-    // Managed tables (the bucketed-layout specs) land in a temp
-    // warehouse, never ./spark-warehouse inside the repo.
-    .config("spark.sql.warehouse.dir",
-      Files.createTempDirectory("graft-warehouse-").toString)
-    .config("spark.sql.shuffle.partitions", 4)
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  /** Tests run on 4 cores whatever `SPARK_GRAFT_CPUS` says. */
+  lazy val spark: SparkSession = Session.local(4)
 
   lazy val scratch: String =
     Files.createTempDirectory("graft-test-").toString

@@ -99,10 +99,6 @@ object WindowGateSpec {
     ("CdcOps.scala", "upsertLatestOf") -> "data-keyed: user_id",
     ("CdcOps.scala", "userFunnel") -> "data-keyed: user_id",
     ("CdcOps.scala", "withSessionSeq") -> "data-keyed: user_id",
-    ("AbProbe.scala", "main") ->
-      ("dev-only interleaved A/B probe: carries verbatim copies of " +
-        "allowlisted sites' legacy forms; never registered, never " +
-        "benched"),
     ("TextOps.scala", "bigramSurprisal") -> "data-keyed: doc_id",
     ("TextOps.scala", "dsirWeights") -> "data-keyed: doc_id",
     ("TextOps.scala", "bm25TopK") ->
