@@ -397,28 +397,9 @@ object Bench {
       }
       val memoTargets = top.collect { case ("m", d) => d }
       if (memoTargets.nonEmpty) {
-        Memos.clearAll()
-        spark.catalog.clearCache()
-        System.gc(); Thread.sleep(500)
-        memoTargets.flatMap(d => memoOwner.get(d._1)).distinct.foreach { qn =>
-          SparkEntry.queries.get(qn).foreach { fn =>
-            try fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-            catch { case e: Throwable => warn("memo re-populate", qn, e) }
-            spark.catalog.clearCache(); System.gc()
-          }
-        }
-        val iso = Memos.populateSeconds
-        // Retry-once on an unclassifiable reading, keeping the MIN —
-        // the same rule the query path applies (r17: the
-        // trained_centroids memo landed `unclassified` on a one-shot
-        // cold re-populate whose reading a second pass would have
-        // washed out). One retry re-populates ALL flagged memos (they
-        // share the clearAll/owner-query machinery), so it runs only
-        // when some verdict needs it.
-        var isoMin = iso
-        if (memoTargets.exists { case (n, suite, prior, _) =>
-          iso.get(n).exists(i =>
-            sviVerdict(n, suite, i, prior) == "unclassified") }) {
+        // Clear every memo and re-run each flagged memo's owner query, so
+        // each memo is populated once, cold; returns the populate seconds.
+        def repopulate(): Map[String, Double] = {
           Memos.clearAll()
           spark.catalog.clearCache()
           System.gc(); Thread.sleep(500)
@@ -431,7 +412,19 @@ object Bench {
                 spark.catalog.clearCache(); System.gc()
               }
             }
-          val retry = Memos.populateSeconds
+          Memos.populateSeconds
+        }
+        val iso = repopulate()
+        // Retry-once on an unclassifiable reading, keeping the MIN —
+        // the same rule the query path applies: a one-shot cold
+        // re-populate can land `unclassified` where a second pass would
+        // wash the reading out. One retry re-populates ALL flagged memos,
+        // so it runs only when some verdict needs it.
+        var isoMin = iso
+        if (memoTargets.exists { case (n, suite, prior, _) =>
+          iso.get(n).exists(i =>
+            sviVerdict(n, suite, i, prior) == "unclassified") }) {
+          val retry = repopulate()
           isoMin = iso.map { case (n, i) =>
             n -> math.min(i, retry.getOrElse(n, i)) }
         }

@@ -1,6 +1,8 @@
 package graft
 
 import java.nio.file.Files
+import org.apache.logging.log4j.Level
+import org.apache.logging.log4j.core.config.Configurator
 import org.apache.spark.sql.SparkSession
 
 /** The one way the engine builds a session. Every main and the test
@@ -49,6 +51,10 @@ object Session {
       .config("spark.sql.warehouse.dir", warehouse.toString)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    // WindowGateSpec is the gate for unpartitioned windows, so the per-run
+    // WARN adds nothing.
+    Configurator.setLevel(
+      "org.apache.spark.sql.execution.window.WindowExec", Level.ERROR)
     spark
   }
 }

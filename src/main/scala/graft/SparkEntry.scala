@@ -1156,8 +1156,8 @@ object SparkEntry {
     "dup_span_removal" -> TextOps.dupSpanRemovalOracleSql,
     // Production ingest screen: new batch vs standing corpus.
     "incremental_dedup" -> TextOps.incrementalDedupOracleSql,
-    // Arrival-order screen: every doc vs every earlier doc_id; the
-    // streaming Tws twin is spec-pinned to this operator.
+    // Arrival-order screen: every doc vs every earlier doc_id;
+    // `StreamOps.firstSeenScreenStream` is spec-pinned to this operator.
     "first_seen_screen" -> TextOps.firstSeenScreenOracleSql,
     // Per-bin train/val drift over a fixed histogram (no scalar PSI —
     // a transcendental log and an ordered float sum are both

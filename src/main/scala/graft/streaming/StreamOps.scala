@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
 import org.apache.spark.sql.types._
 
 /** One change event, the streaming row type (testdata `events` schema;
@@ -60,13 +60,6 @@ case class ChangeRow(user_id: Long, event_id: Long, ts_ms: Long,
 /** Per-key change-log state: the chain's current tail version. */
 case class ChainState(ts_ms: Long, event_id: Long, value: Double)
 
-/** One OPEN session in [[UserSessionsProcessor]]'s per-key ListState:
-  * [start, last+gap) with its running count and exact cent sum. */
-case class OpenSession(start_ms: Long, last_ms: Long, n_events: Long,
-    cents: Long)
-
-/** [[StreamOps.userSessionsTws]] output: a CLOSED session, end =
-  * last event + gap (the native `session_window` close boundary). */
 /** One fingerprint of one document for the first-seen screen: the
   * whole-text hash (`kind` = "t") or one chunk hash (`kind` = "c"),
   * prefixed into a single key namespace, plus the doc's chunk count so
@@ -78,9 +71,6 @@ case class DocFingerprint(doc_id: Long, fp: String, kind: String,
   * fingerprint already carried by a strictly smaller doc_id? */
 case class FpSeen(doc_id: Long, kind: String, shared: Boolean,
   n_chunks: Int)
-
-case class SessionRow(user_id: Long, session_start_ms: Long,
-    session_end_ms: Long, n_events: Long, total_value: Double)
 
 /** One funnel-relevant event for [[StreamOps.eventFunnelStream]]
   * (micros since epoch — the exact precision the batch operator's
@@ -129,10 +119,13 @@ case class DocScreen(doc_id: Long, n_fp: Long, n_hits: Long,
   * The reference consumes Kafka with hand-rolled `for message in consumer`
   * loops (`python/cdc_processor.py:266`, `python/stream_processor.py:376`);
   * here every flow is a declarative streaming plan over one source
-  * DataFrame, so the same logical query runs over Kafka in production and a
-  * `MemoryStream`/file source in tests. Event-time + watermark replaces the
-  * reference's processing-time stamping (`stream_processor.py:56`) — a
-  * documented semantic upgrade (SURVEY §2.7 T8).
+  * DataFrame, so the same logical query runs over any source whose rows
+  * decode to the event shape: Kafka-shaped records through [[decodeKafka]],
+  * or a `MemoryStream`/file source in tests. No Kafka connector ships
+  * with the engine, so no source or sink here opens one. Event-time +
+  * watermark replaces the reference's processing-time stamping
+  * (`stream_processor.py:56`) — a documented semantic upgrade (SURVEY
+  * §2.7 T8).
   *
   * Scale posture: every stateful operator keys on user_id/event_type —
   * state is hash-partitioned across executors, no driver state, and
@@ -162,19 +155,6 @@ object StreamOps {
     StructField("event_type", StringType),
     StructField("value", DoubleType),
     StructField("props", StringType)))
-
-  /** S2: Kafka CDC source over N topics — the two reference consumers
-    * (`cdc_processor.py:254-261`, `stream_processor.py:370`) are two
-    * streaming queries over this one definition, each with its own
-    * checkpoint. Not runnable in this container (no Kafka); the code path
-    * is the production wiring. */
-  def kafkaSource(spark: SparkSession, servers: String,
-                  topics: Seq[String]): DataFrame =
-    spark.readStream.format("kafka")
-      .option("kafka.bootstrap.servers", servers)
-      .option("subscribe", topics.mkString(","))
-      .option("startingOffsets", "earliest")
-      .load()
 
   /** S3: decode the Kafka value into typed events (flat event shape):
     * one `from_json` against the fixed schema — schema-lax like the
@@ -407,51 +387,6 @@ object StreamOps {
         col("session_window.end").as("session_end"),
         col("user_id"), col("n_events"), col("total_value"))
 
-  /** [[userSessions]] on the Spark-4 arbitrary-state API
-    * (`transformWithState` + [[UserSessionsProcessor]]) — the THIRD
-    * `*Tws` twin (after [[upsertLatestTws]] and [[velocityStateTws]]),
-    * and the first to carry MERGEABLE state: where the native
-    * `session_window` operator owns interval merging internally, the
-    * processor holds each key's open sessions as a typed `ListState`
-    * and replays the same merge rule (an event extends a session iff
-    * `ts < last + gap`, strict — new session iff the silence reaches
-    * the gap), closing a session through ONE per-key event-time timer
-    * once the watermark passes `last + gap`. Emitted rows carry the
-    * identical boundary contract (start = first event, end = last +
-    * gap) and the identical decimal(18,2) value sum (exact cents in
-    * state), so the spec pins both implementations to equal output on
-    * a shared fixture. Millisecond-grain timestamps are assumed (the
-    * `java.sql.Timestamp` feed); the native operator merges at
-    * microsecond grain, so sub-ms-distinct boundary events could split
-    * the twins — none exist in any feed this engine reads. */
-  def userSessionsTws(events: Dataset[Event]): Dataset[SessionRow] = {
-    import events.sparkSession.implicits._
-    events
-      .withWatermark("ts", "10 minutes")
-      .groupByKey(_.user_id)
-      .transformWithState(
-        new UserSessionsProcessor(graft.operators.CdcOps.SessionGapMs),
-        org.apache.spark.sql.streaming.TimeMode.EventTime(),
-        OutputMode.Append())
-  }
-
-  /** Streaming exactly-once replay screen — the LIVE twin of
-    * `CdcOps.replayDedup`: an at-least-once delivery layer redelivers
-    * event ids on rebalance/retry, and this collapses them with state
-    * BOUNDED by the watermark horizon. `dropDuplicatesWithinWatermark`
-    * is the load-bearing choice over plain `dropDuplicates`: the plain
-    * form keeps every id seen FOREVER (the classic unbounded-state
-    * leak on an infinite stream — its uses in [[newUsersDaily]] are
-    * deliberate whole-history semantics), while the within-watermark
-    * form drops an id's state as soon as no admissible replay can
-    * still arrive, which is exactly the at-least-once contract: a
-    * delivery layer redelivers within its retry horizon, not days
-    * later. Append mode; each id emits exactly once. */
-  def replayScreen(events: Dataset[Event]): Dataset[Event] =
-    events
-      .withWatermark("ts", "10 minutes")
-      .dropDuplicatesWithinWatermark("event_id")
-
   /** Stream-static enrichment: each live event joined to its entity's
     * dimension row — the everyday CDC pattern (enrich the change feed
     * with the customer segment before alerting/routing). The static
@@ -528,9 +463,9 @@ object StreamOps {
   }
 
   /** STATEFUL first-seen dedup screen — the live twin of
-    * `TextOps.firstSeenScreen` and the engine's FOURTH
-    * `transformWithState` surface: where [[ingestScreen]] screens
-    * against a FIXED corpus statelessly, this one screens each arrival
+    * `TextOps.firstSeenScreen`, on `transformWithState`: where
+    * [[ingestScreen]] screens against a FIXED corpus statelessly, this
+    * one screens each arrival
     * against EVERYTHING THAT ARRIVED BEFORE IT and grows the seen-set
     * as it goes — the semantics of a continuously-ingesting dedup
     * gate. Each doc fans out to its fingerprints (one whole-text hash
@@ -603,9 +538,9 @@ object StreamOps {
   }
 
   /** LIVE ordered-step funnel — the streaming twin of
-    * `CdcOps.eventFunnel` and the engine's FIFTH `transformWithState`
-    * surface: per-user anchors for "view, then click STRICTLY after
-    * the first view, then purchase strictly after that first
+    * `CdcOps.eventFunnel`, on `transformWithState`: per-user anchors
+    * for "view, then click STRICTLY after the first view, then
+    * purchase strictly after that first
     * qualifying click", held as three micros longs of keyed value
     * state and advanced MONOTONICALLY (an anchor, once set, never
     * moves — exactly the batch operator's chained conditional
@@ -623,7 +558,7 @@ object StreamOps {
     * per-key slice first) against state holding all earlier batches'
     * anchors. Same-instant ties do NOT advance (strict `>`, pinned
     * both sides). State: 3 longs per user who ever viewed —
-    * entity-bounded, the same cardinality class as the T3/T5 twins;
+    * entity-bounded, the same cardinality class as T3/T5 keyed state;
     * never expires for the same reason the first-seen screen's
     * doesn't (an expired anchor would silently re-admit a conversion
     * already counted). */
@@ -757,24 +692,8 @@ object StreamOps {
     * last-click pick is a second stateful stage downstream when
     * needed. */
   def attributionJoin(events: DataFrame,
-                      window: String = AttributionWindowInterval): DataFrame = {
-    val clicks = events
-      .filter(col("event_type") === "click")
-      .select(col("user_id").as("click_user"),
-        col("event_id").as("click_id"), col("ts").as("click_ts"))
-      .withWatermark("click_ts", "10 minutes")
-    val purchases = events
-      .filter(col("event_type") === "purchase")
-      .select(col("user_id"), col("event_id").as("purchase_id"),
-        col("value"), col("ts").as("purchase_ts"))
-      .withWatermark("purchase_ts", "10 minutes")
-    purchases.join(clicks,
-      col("user_id") === col("click_user") &&
-        col("click_ts") <= col("purchase_ts") &&
-        col("purchase_ts") <= col("click_ts") + expr(s"interval $window"))
-      .select(col("purchase_id"), col("user_id"), col("value"),
-        col("purchase_ts"), col("click_id"), col("click_ts"))
-  }
+                      window: String = AttributionWindowInterval): DataFrame =
+    attribution(events, window, "inner")
 
   /** LEFT OUTER stream-stream join — [[attributionJoin]] plus the
     * organic-purchase rows: a purchase with no in-window click is held
@@ -786,7 +705,12 @@ object StreamOps {
     * the join condition bounds event time in both directions — plus
     * the outer side's held rows, which the watermark evicts. */
   def attributionJoinOuter(events: DataFrame,
-      window: String = AttributionWindowInterval): DataFrame = {
+      window: String = AttributionWindowInterval): DataFrame =
+    attribution(events, window, "left_outer")
+
+  /** The one body of both attribution joins; only the join type differs. */
+  private def attribution(events: DataFrame, window: String,
+                          joinType: String): DataFrame = {
     val clicks = events
       .filter(col("event_type") === "click")
       .select(col("user_id").as("click_user"),
@@ -801,22 +725,27 @@ object StreamOps {
       col("user_id") === col("click_user") &&
         col("click_ts") <= col("purchase_ts") &&
         col("purchase_ts") <= col("click_ts") + expr(s"interval $window"),
-      "left_outer")
+      joinType)
       .select(col("purchase_id"), col("user_id"), col("value"),
         col("purchase_ts"), col("click_id"), col("click_ts"))
   }
 
-  /** Streaming exactly-once dedup: at-least-once CDC transports redeliver
-    * events, and every downstream counter would double-count them. Keyed
-    * on event_id with watermark-bounded state
-    * (`dropDuplicatesWithinWatermark`): a redelivery arriving within the
-    * watermark horizon is dropped, state for old ids is evicted as the
-    * watermark advances — bounded memory at any throughput, the standard
-    * first stage in front of the aggregations below. */
-  def dedupEvents(events: DataFrame,
-                  horizon: String = "10 minutes"): DataFrame =
+  /** Streaming exactly-once dedup — the live twin of
+    * `CdcOps.replayDedup`: at-least-once CDC transports redeliver event
+    * ids on rebalance/retry, and every downstream counter would
+    * double-count them. Keyed on event_id, a redelivery arriving within
+    * the 10-minute watermark horizon is dropped; each id emits exactly
+    * once (append mode), the standard first stage in front of the
+    * aggregations below. `dropDuplicatesWithinWatermark`, not plain
+    * `dropDuplicates`: the plain form keeps every id FOREVER, the
+    * unbounded-state leak of an infinite stream (its uses in
+    * [[newUsersDaily]] are deliberate whole-history semantics), while
+    * this form evicts an id once no admissible redelivery can still
+    * arrive. That is the at-least-once contract: a delivery layer
+    * redelivers within its retry horizon, not days later. */
+  def dedupEvents(events: DataFrame): DataFrame =
     events
-      .withWatermark("ts", horizon)
+      .withWatermark("ts", "10 minutes")
       .dropDuplicatesWithinWatermark("event_id")
 
   /** Live CDC offset-continuity auditor — the streaming twin of
@@ -905,26 +834,6 @@ object StreamOps {
       }
   }
 
-  /** [[upsertLatest]] on Spark 4's NEW arbitrary-state API
-    * (`transformWithState` + [[UpsertLatestProcessor]]): same per-key
-    * latest-wins fold, same tombstone semantics, same emitted rows —
-    * the spec pins both implementations to identical output on a shared
-    * fixture. The new API is where streaming state is headed (typed
-    * state VARIABLES with per-variable TTL, timers, composite state on
-    * one key) and requires the RocksDB state store provider — which is
-    * this engine's documented 100 TB configuration anyway. Kept beside
-    * the `flatMapGroupsWithState` form, not replacing it: the classic
-    * API runs on the default HDFS-backed store and remains the
-    * broadest-compatibility path. */
-  def upsertLatestTws(events: Dataset[Event]): Dataset[UpsertRow] = {
-    import events.sparkSession.implicits._
-    events
-      .groupByKey(_.user_id)
-      .transformWithState(new UpsertLatestProcessor,
-        org.apache.spark.sql.streaming.TimeMode.None(),
-        OutputMode.Update())
-  }
-
   /** Streaming twin of `CdcOps.changeLog`: per-key field-level diffs
     * between consecutive row versions, as keyed state carrying only the
     * previous (ts_ms, event_id, value) per key. Each trigger folds its
@@ -971,7 +880,7 @@ object StreamOps {
     * (SURVEY §7.3), and — unlike `ProcessingTimeTimeout` under the
     * default ASAP trigger — never makes the engine spin no-data
     * micro-batches re-checking wall clocks, so `processAllAvailable`
-    * observes an idle query (the round-4 `sbt test` livelock).
+    * observes an idle query instead of livelocking a test.
     * Expiry is silent, like the reference's: `flatMapGroupsWithState`
     * returns an empty iterator on timeout (`mapGroupsWithState` would be
     * forced to re-emit a stale row). */
@@ -1063,44 +972,19 @@ object StreamOps {
       }
   }
 
-  /** [[velocityState]] on Spark 4's NEW arbitrary-state API
-    * (`transformWithState` + [[VelocityProcessor]]): same per-minute
-    * bucket accumulation, same watermark-rule eviction, same 5-min
-    * whole-key event-time TTL, same emitted rows — the spec pins both
-    * implementations to identical output on a shared fixture (the
-    * [[upsertLatestTws]] pattern, extended to COMPOSITE state). Where
-    * the classic form serializes the whole bucket map as one value per
-    * key, this one holds a typed `MapState[Long, VelBucket]` — per-BUCKET
-    * state-store rows, so a batch touching one minute of a key with
-    * hundreds of live buckets rewrites one entry, not the map — and
-    * replaces `EventTimeTimeout` with an explicit event-time timer.
-    * Requires the RocksDB state store provider (the documented 100 TB
-    * configuration). */
-  def velocityStateTws(events: Dataset[Event],
-                       threshold: Double = 50.0): Dataset[Velocity] = {
-    import events.sparkSession.implicits._
-    events
-      .withWatermark("ts", "10 minutes")
-      .groupByKey(_.event_type)
-      .transformWithState(new VelocityProcessor(threshold),
-        org.apache.spark.sql.streaming.TimeMode.EventTime(),
-        OutputMode.Update())
-  }
-
   /** STREAMING QUANTILE SKETCH — the live twin of
     * `TextOps.quantileSketchGrouped` and the sketch family's native
     * streaming use: the per-language bottom-k register set maintained
-    * INCREMENTALLY as `transformWithState` ValueState (the engine's
-    * sixth `*Tws` surface). The bottom-k rule is the merge law itself
-    * — fold the batch's incoming draws into the stored registers, keep
-    * the K smallest — so state is bounded at K rows per language
-    * FOREVER (no watermark, no TTL, no timer: a rank sketch never
-    * expires), and the streamed register set after any prefix of the
-    * corpus is bit-identical to the batch sketch over the same rows —
-    * the spec pins exactly that, registers and p50 read-out both,
-    * with the corpus split across micro-batches so the cross-batch
-    * merge path genuinely runs. Draws replicate the batch side's
-    * md5('qsk'||doc_id) 60-bit integer in JVM arithmetic. */
+    * INCREMENTALLY as `transformWithState` ValueState. The bottom-k
+    * rule is the merge law itself — fold the batch's incoming draws
+    * into the stored registers, keep the K smallest — so state is
+    * bounded at K rows per language FOREVER (no watermark, no TTL, no
+    * timer: a rank sketch never expires), and the streamed register set
+    * after any prefix of the corpus is bit-identical to the batch
+    * sketch over the same rows — the spec pins exactly that, registers
+    * and p50 read-out both, with the corpus split across micro-batches
+    * so the cross-batch merge path genuinely runs. Draws replicate the
+    * batch side's md5('qsk'||doc_id) 60-bit integer in JVM arithmetic. */
   def quantileSketchStream(docs: Dataset[DocArrival])
       : Dataset[SketchSnapshot] = {
     import docs.sparkSession.implicits._
@@ -1113,10 +997,9 @@ object StreamOps {
   }
 
   /** STREAMING WINNOW DECONTAMINATION SCREEN — the live twin of
-    * `TextOps.winnowDecontam` and the engine's SEVENTH
-    * `transformWithState` surface: arriving train documents are
-    * winnow-fingerprinted IN FLIGHT with the exact batch expression
-    * chain (`TextOps.winnowKgramHashSqlExpr` + the window-minimum
+    * `TextOps.winnowDecontam`, on `transformWithState`: arriving train
+    * documents are winnow-fingerprinted IN FLIGHT with the exact batch
+    * expression chain (`TextOps.winnowKgramHashSqlExpr` + the window-minimum
     * selection — shared strings, not a re-derivation) and screened
     * against a broadcast dirty index built once from the held-out
     * eval corpus — the [[ingestScreen]] stream-static device, so the
@@ -1209,27 +1092,16 @@ object StreamOps {
     high.unionByName(bulk)
   }
 
-  /** S4: Kafka producer sink for the alert stream
-    * (`realtime-alerts`, stream_processor.py:306-308; send_message
-    * utils.py:76-100) — JSON value, string key. Production wiring; tests
-    * use memory/parquet sinks. */
-  /** The Kafka record projection of [[kafkaAlertSink]]: string key =
-    * entity id, JSON value = the whole alert row (send_message's shape,
-    * utils.py:76-100). Split out so the serialization is testable
-    * without a broker. */
+  /** S4: the Kafka record shape of the alert stream (`realtime-alerts`,
+    * stream_processor.py:306-308): string key = entity id, JSON value =
+    * the whole alert row (send_message's shape, utils.py:76-100). No
+    * Kafka connector ships with this engine, so the projection is what
+    * it keeps: the shape a producer sink would write, testable without
+    * a broker. */
   def alertRecords(alerts: DataFrame): DataFrame =
     alerts.select(
       col("user_id").cast("string").as("key"),
       to_json(struct(col("*"))).as("value"))
-
-  def kafkaAlertSink(alerts: DataFrame, servers: String,
-                     topic: String, checkpoint: String): StreamingQuery =
-    alertRecords(alerts)
-      .writeStream.format("kafka")
-      .option("kafka.bootstrap.servers", servers)
-      .option("topic", topic)
-      .option("checkpointLocation", checkpoint)
-      .start()
 
   /** S5: versioned + `:latest` dual-write KV sink
     * (`load_to_redis`, batch_processor.py:178-193 / utils.py:128-136).
@@ -1302,12 +1174,6 @@ object StreamOps {
       .start()
 }
 
-/** The [[StreamOps.upsertLatestTws]] processor: one typed ValueState
-  * variable per key holding the latest (ts, event_id)-max version; a
-  * delete verb clears the variable and emits a tombstone row. Logic is
-  * deliberately identical to the `flatMapGroupsWithState` fold in
-  * [[StreamOps.upsertLatest]] so the two APIs are directly comparable
-  * (and comparably tested). */
 /** The [[StreamOps.firstSeenScreenStream]] processor: per-fingerprint
   * min-arrived-doc_id in ONE long of value state. A row is `shared`
   * iff some STRICTLY smaller doc_id carried the fingerprint — from a
@@ -1463,170 +1329,6 @@ class FunnelProcessor(windowUs: Option[Long] = None)
     anchors.update(st)
     val sr = Seq(st.a0_us, st.a1_us, st.a2_us).count(_ != 0L)
     Iterator.single(FunnelReach(user, sr, st.a0_us, st.a1_us, st.a2_us))
-  }
-}
-
-class UpsertLatestProcessor
-    extends org.apache.spark.sql.streaming.StatefulProcessor[
-      Long, Event, UpsertRow] {
-  import org.apache.spark.sql.streaming.{TimeMode, TimerValues, TTLConfig, ValueState}
-  import org.apache.spark.sql.{Encoders, streaming}
-
-  @transient private var latest: ValueState[LatestState] = _
-
-  override def init(outputMode: streaming.OutputMode,
-      timeMode: TimeMode): Unit =
-    latest = getHandle.getValueState[LatestState]("latest",
-      Encoders.product[LatestState], TTLConfig.NONE)
-
-  override def handleInputRows(userId: Long, rows: Iterator[Event],
-      timerValues: TimerValues): Iterator[UpsertRow] = {
-    val incoming = rows.map(e =>
-      LatestState(e.ts.getTime, e.event_id, e.event_type, e.value))
-    val stored =
-      if (latest.exists()) Iterator.single(latest.get()) else Iterator.empty
-    val top = (stored ++ incoming).maxBy(s => (s.ts_ms, s.event_id))
-    val isDelete = top.event_type == "error" // op 'd'
-    if (isDelete) latest.clear() else latest.update(top)
-    Iterator.single(UpsertRow(userId, top.event_type, top.value,
-      top.ts_ms, deleted = isDelete))
-  }
-}
-
-/** The [[StreamOps.velocityStateTws]] processor: T4's per-minute bucket
-  * accumulator on the new API. Composite per-key state is a typed
-  * `MapState` (bucket-start-millis → [[VelBucket]]) so each live minute
-  * is its own state-store entry, and the classic form's
-  * `EventTimeTimeout` becomes ONE explicit event-time timer per key —
-  * replace-not-accumulate (`listTimers` + `deleteTimer` before
-  * `registerTimer`), mirroring `GroupState.setTimeoutTimestamp`
-  * semantics so a stale timer can never clear a key that has since
-  * seen data. Bucket accumulation, the watermark eviction rule, emitted
-  * rows, and the alert threshold are all deliberately identical to
-  * [[StreamOps.velocityState]] — the spec runs both on a shared fixture
-  * and requires equal output. */
-class VelocityProcessor(threshold: Double)
-    extends org.apache.spark.sql.streaming.StatefulProcessor[
-      String, Event, Velocity] {
-  import org.apache.spark.sql.streaming.{ExpiredTimerInfo, MapState, TimeMode, TimerValues, TTLConfig}
-  import org.apache.spark.sql.{Encoders, streaming}
-
-  private val MinuteMs = 60L * 1000
-  private val TtlMs = 5L * 60 * 1000
-
-  @transient private var buckets: MapState[Long, VelBucket] = _
-
-  override def init(outputMode: streaming.OutputMode,
-      timeMode: TimeMode): Unit =
-    buckets = getHandle.getMapState[Long, VelBucket]("buckets",
-      Encoders.scalaLong, Encoders.product[VelBucket], TTLConfig.NONE)
-
-  override def handleInputRows(etype: String, rows: Iterator[Event],
-      timerValues: TimerValues): Iterator[Velocity] = {
-    val evs = rows.toSeq
-    val touched = evs
-      .groupBy(e => e.ts.getTime / MinuteMs * MinuteMs)
-      .map { case (b, es) =>
-        val p = if (buckets.containsKey(b)) buckets.getValue(b)
-                else VelBucket(0.0, 0L)
-        b -> VelBucket(p.units + es.map(_.value).sum, p.n_events + es.size)
-      }
-    touched.foreach { case (b, v) => buckets.updateValue(b, v) }
-    // Same eviction rule as the classic twin: a bucket is dropped only
-    // once no admissible event can still target it.
-    val wm = timerValues.getCurrentWatermarkInMs()
-    buckets.keys().toSeq.filter(_ + TtlMs <= wm).foreach(buckets.removeKey)
-    getHandle.listTimers().foreach(getHandle.deleteTimer)
-    val maxTs = evs.map(_.ts.getTime).max
-    // Must exceed the current watermark (engine requirement); maxTs
-    // alone can trail it by up to the lateness allowance.
-    getHandle.registerTimer(math.max(maxTs, wm) + TtlMs)
-    touched.toSeq.sortBy(_._1).iterator.map { case (b, v) =>
-      Velocity(etype, b, v.units, v.n_events, v.units > threshold)
-    }
-  }
-
-  override def handleExpiredTimer(etype: String, timerValues: TimerValues,
-      expiredTimerInfo: ExpiredTimerInfo): Iterator[Velocity] = {
-    // Key silent for the TTL of event time: drop its whole state,
-    // silently — the classic twin's hasTimedOut branch.
-    buckets.clear()
-    Iterator.empty
-  }
-}
-
-/** The [[StreamOps.userSessionsTws]] processor: gap-merged
-  * sessionization as explicit state. Per key, a typed `ListState` of
-  * disjoint OPEN sessions; every batch folds its (ts-sorted) events in
-  * as single-event sessions and re-merges the sorted list with the
-  * native operator's strict rule (merge iff `start < prev.last + gap`
-  * — a bridging event can collapse two formerly-separate sessions,
-  * which is exactly why the state must stay a LIST until the watermark
-  * freezes it). One event-time timer per key sits at the EARLIEST open
-  * close boundary; on fire, sessions whose `last + gap ≤ watermark`
-  * are emitted closed (append semantics — each session exactly once)
-  * and the timer re-arms for the survivors. Values accumulate as exact
-  * cents (the decimal(18,2) HALF_UP rule of the native twin's cast) so
-  * the emitted double is the same value the native sum produces. */
-class UserSessionsProcessor(gapMs: Long)
-    extends org.apache.spark.sql.streaming.StatefulProcessor[
-      Long, Event, SessionRow] {
-  import org.apache.spark.sql.streaming.{ExpiredTimerInfo, ListState, TimeMode, TimerValues, TTLConfig}
-  import org.apache.spark.sql.{Encoders, streaming}
-
-  @transient private var sessions: ListState[OpenSession] = _
-
-  override def init(outputMode: streaming.OutputMode,
-      timeMode: TimeMode): Unit =
-    sessions = getHandle.getListState[OpenSession]("sessions",
-      Encoders.product[OpenSession], TTLConfig.NONE)
-
-  private def cents(v: Double): Long =
-    BigDecimal(v).setScale(2, BigDecimal.RoundingMode.HALF_UP)
-      .underlying.unscaledValue.longValueExact
-
-  private def merge(all: Seq[OpenSession]): List[OpenSession] =
-    all.sortBy(s => (s.start_ms, s.last_ms))
-      .foldLeft(List.empty[OpenSession]) { (acc, s) =>
-        acc match {
-          case h :: t if s.start_ms < h.last_ms + gapMs =>
-            OpenSession(h.start_ms, math.max(h.last_ms, s.last_ms),
-              h.n_events + s.n_events, h.cents + s.cents) :: t
-          case _ => s :: acc
-        }
-      }.reverse
-
-  private def armTimer(open: Seq[OpenSession], wm: Long): Unit = {
-    getHandle.listTimers().foreach(getHandle.deleteTimer)
-    if (open.nonEmpty) {
-      // Earliest close boundary; must exceed the current watermark
-      // (engine requirement — an admissible late event can trail it).
-      val next = open.map(_.last_ms + gapMs).min
-      getHandle.registerTimer(math.max(next, wm + 1))
-    }
-  }
-
-  override def handleInputRows(userId: Long, rows: Iterator[Event],
-      timerValues: TimerValues): Iterator[SessionRow] = {
-    val incoming = rows.toSeq.map(e =>
-      OpenSession(e.ts.getTime, e.ts.getTime, 1L, cents(e.value)))
-    val merged = merge(sessions.get().toSeq ++ incoming)
-    sessions.clear()
-    merged.foreach(sessions.appendValue)
-    armTimer(merged, timerValues.getCurrentWatermarkInMs())
-    Iterator.empty
-  }
-
-  override def handleExpiredTimer(userId: Long, timerValues: TimerValues,
-      expiredTimerInfo: ExpiredTimerInfo): Iterator[SessionRow] = {
-    val wm = timerValues.getCurrentWatermarkInMs()
-    val (closed, open) = sessions.get().toSeq.sortBy(_.start_ms)
-      .partition(_.last_ms + gapMs <= wm)
-    sessions.clear()
-    open.foreach(sessions.appendValue)
-    armTimer(open, wm)
-    closed.iterator.map(s => SessionRow(userId, s.start_ms,
-      s.last_ms + gapMs, s.n_events, s.cents / 100.0))
   }
 }
 

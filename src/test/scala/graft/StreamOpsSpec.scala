@@ -416,15 +416,29 @@ class StreamOpsSpec extends GraftSpec {
     try {
       // User 7: two events 5 min apart (one session), then one 3 h later
       // (a second session — the 2 h gap expired between them).
+      // User 3: an OUT-OF-ORDER bridge inside one batch — 10:00 and 13:30
+      // arrive first, then 11:45 lands between and chains all three into
+      // ONE session (11:45 < 10:00's close at 12:00, and 13:30 < 11:45's
+      // close at 13:45).
       in.addData(
         event(1, "2024-01-01 10:00:00", 7, "click", 10.0),
         event(2, "2024-01-01 10:05:00", 7, "view", 5.0),
-        event(3, "2024-01-01 13:10:00", 7, "purchase", 20.0))
+        event(3, "2024-01-01 13:10:00", 7, "purchase", 20.0),
+        event(5, "2024-01-01 10:00:00", 3, "click", 1.25),
+        event(6, "2024-01-01 13:30:00", 3, "view", 2.5),
+        event(7, "2024-01-01 11:45:00", 3, "click", 4.0))
       q.processAllAvailable()
       // Advance the watermark far past every session's close so append
       // mode finalizes them all.
       in.addData(event(4, "2024-01-02 12:00:00", 8, "click", 1.0))
       q.processAllAvailable()
+      val bridged = spark.table("sessions")
+        .filter($"user_id" === 3L).collect()
+        .map(r => (r.getAs[java.sql.Timestamp]("session_start"),
+          r.getAs[java.sql.Timestamp]("session_end"),
+          r.getAs[Long]("n_events"), r.getAs[Double]("total_value")))
+      assert(bridged.toSeq == Seq((ts("2024-01-01 10:00:00"),
+        ts("2024-01-01 15:30:00"), 3L, 7.75)))
       val rows = spark.table("sessions")
         .filter($"user_id" === 7L)
         .orderBy("session_start").collect()
@@ -438,103 +452,6 @@ class StreamOpsSpec extends GraftSpec {
       assert(rows(0).getAs[Long]("n_events") == 2L)
       assert(rows(0).getAs[Double]("total_value") == 15.0)
       assert(rows(1).getAs[Long]("n_events") == 1L)
-    } finally q.stop()
-  }
-
-  test("sessions: transformWithState twin emits identical rows to the " +
-      "native session_window (RocksDB, list-state merge)") {
-    import org.apache.spark.sql.functions.{col, timestamp_millis}
-    implicit val sqlCtx = spark.sqlContext
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    val batches = Seq(
-      // User 7: the native test's shape — 5-min pair, then a 3-h jump.
-      // User 3: OUT-OF-ORDER bridge inside one batch — 10:00 and 13:30
-      // arrive first (two sessions), then 11:45 lands between and
-      // chains all three into ONE session (11:45 < 10:00's close at
-      // 12:00, and 13:30 < 11:45's close at 13:45) — the case that
-      // forces the processor to keep a LIST and re-merge, not a
-      // single open-session scalar.
-      Seq(event(1, "2024-01-01 10:00:00", 7, "click", 10.0),
-        event(2, "2024-01-01 10:05:00", 7, "view", 5.0),
-        event(3, "2024-01-01 13:10:00", 7, "purchase", 20.0),
-        event(4, "2024-01-01 10:00:00", 3, "click", 1.25),
-        event(5, "2024-01-01 13:30:00", 3, "view", 2.5),
-        event(6, "2024-01-01 11:45:00", 3, "click", 4.0)),
-      // Two watermark-advancing flush batches: the first finalizes every
-      // session close (max close 15:30 < wm 1/2 11:50), the second gives
-      // the timer path a batch to fire in if the no-data batch after a
-      // watermark advance ever stops being scheduled.
-      Seq(event(7, "2024-01-02 12:00:00", 8, "click", 1.0)),
-      Seq(event(8, "2024-01-02 12:30:00", 8, "click", 1.0)))
-    def collect(name: String, out: org.apache.spark.sql.DataFrame,
-        in: MemoryStream[Event],
-        q: org.apache.spark.sql.streaming.StreamingQuery):
-        Set[(Long, Long, Long, Long, Double)] = {
-      try batches.foreach { b => in.addData(b); q.processAllAvailable() }
-      finally q.stop()
-      spark.table(name).collect().toSet[org.apache.spark.sql.Row]
-        .map { r =>
-          (r.getAs[Long]("user_id"),
-            r.getAs[java.sql.Timestamp]("session_start").getTime,
-            r.getAs[java.sql.Timestamp]("session_end").getTime,
-            r.getAs[Long]("n_events"), r.getAs[Double]("total_value"))
-        }.filter(_._1 != 8L) // the flush user's sessions stay open
-    }
-    try {
-      val inN = MemoryStream[Event]
-      val native = collect("sess_native", null, inN,
-        StreamOps.userSessions(inN.toDF()).writeStream.format("memory")
-          .queryName("sess_native").outputMode("append").start())
-      val inT = MemoryStream[Event]
-      val tws = collect("sess_tws", null, inT,
-        StreamOps.userSessionsTws(inT.toDS())
-          .select(col("user_id"),
-            timestamp_millis(col("session_start_ms")).as("session_start"),
-            timestamp_millis(col("session_end_ms")).as("session_end"),
-            col("n_events"), col("total_value"))
-          .writeStream.format("memory")
-          .queryName("sess_tws").outputMode("append").start())
-      // The fixture's load-bearing rows actually happened: user 3's
-      // bridge collapsed to one 10:00→15:30 session of 3 events, and
-      // user 7 split in two.
-      assert(tws.contains((3L, ts("2024-01-01 10:00:00").getTime,
-        ts("2024-01-01 15:30:00").getTime, 3L, 7.75)))
-      assert(tws.count(_._1 == 7L) == 2)
-      assert(tws == native)
-    } finally prev match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
-    }
-  }
-
-  test("replay screen: within-watermark redeliveries collapse, each id " +
-      "emits exactly once") {
-    implicit val sqlCtx = spark.sqlContext
-    val in = MemoryStream[Event]
-    val q = StreamOps.replayScreen(in.toDS())
-      .writeStream.format("memory").queryName("replay_screen")
-      .outputMode("append").start()
-    try {
-      // Batch 1: ids 1-3, with id 1 delivered twice in the same batch.
-      in.addData(
-        event(1, "2024-01-01 10:00:00", 1, "click", 1.0),
-        event(1, "2024-01-01 10:00:00", 1, "click", 1.0),
-        event(2, "2024-01-01 10:00:30", 2, "view", 2.0),
-        event(3, "2024-01-01 10:01:00", 1, "purchase", 3.0))
-      q.processAllAvailable()
-      // Batch 2: id 2 REDELIVERED within the 10-min horizon (must be
-      // suppressed by state), plus a fresh id 4.
-      in.addData(
-        event(2, "2024-01-01 10:00:30", 2, "view", 2.0),
-        event(4, "2024-01-01 10:02:00", 2, "view", 4.0))
-      q.processAllAvailable()
-      val ids = spark.table("replay_screen").collect()
-        .map(_.getAs[Long]("event_id")).toSeq
-      assert(ids.sorted == Seq(1L, 2L, 3L, 4L),
-        s"each id exactly once, got $ids")
     } finally q.stop()
   }
 
@@ -647,9 +564,14 @@ class StreamOpsSpec extends GraftSpec {
       // cross-batch redelivery of event 1, still inside the horizon
       in.addData(event(1, "2024-01-01 10:00:00", 1, "click", 1.0))
       q.processAllAvailable()
+      // a redelivery of event 2 beside a fresh id 4: only 4 emits
+      in.addData(
+        event(2, "2024-01-01 10:00:30", 2, "view", 2.0),
+        event(4, "2024-01-01 10:02:00", 2, "view", 4.0))
+      q.processAllAvailable()
       val ids = spark.table("dedup_events").collect()
         .map(_.getAs[Long]("event_id")).toSeq.sorted
-      assert(ids == Seq(1L, 2L))
+      assert(ids == Seq(1L, 2L, 4L), s"each id exactly once, got $ids")
     } finally q.stop()
   }
 
@@ -686,110 +608,45 @@ class StreamOpsSpec extends GraftSpec {
     }
   }
 
-  test("T5: transformWithState twin emits identical rows to upsertLatest " +
-      "on a shared fixture (RocksDB provider)") {
-    // The new-API path (upsertLatestTws + UpsertLatestProcessor) requires
-    // the RocksDB provider; run BOTH implementations under it so the only
-    // variable is the state API. The fixture exercises every branch:
-    // multi-key, cross-trigger fold, an out-of-order late event that must
-    // lose to stored state, a tombstone, and post-tombstone resurrection.
+  test("T4: velocity folds late events and clears a silent key") {
+    // Multi-key, same-bucket accumulation, a minute-spanning batch, an
+    // out-of-order event folding into an older live bucket, threshold
+    // alerts, watermark-driven bucket eviction, and a key going silent
+    // past the TTL (its whole state clears) then returning with fresh
+    // counts.
     implicit val sqlCtx = spark.sqlContext
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    val batches = Seq(
-      Seq(event(1, "2024-01-01 10:00:00", 7, "signup", 1.0),
-        event(2, "2024-01-01 10:05:00", 7, "purchase", 2.0),
-        event(3, "2024-01-01 10:01:00", 8, "signup", 3.0)),
-      Seq(event(4, "2024-01-01 09:00:00", 7, "click", 4.0), // late: loses
-        event(5, "2024-01-01 11:00:00", 8, "error", 0.0)),  // tombstone
-      Seq(event(6, "2024-01-01 12:00:00", 8, "signup", 5.0))) // resurrect
-    def run(name: String,
-            f: org.apache.spark.sql.Dataset[Event] =>
-              org.apache.spark.sql.Dataset[UpsertRow]): Seq[(Long, String,
-        Double, Long, Boolean)] = {
-      val in = MemoryStream[Event]
-      val q = f(in.toDS()).writeStream.format("memory").queryName(name)
-        .outputMode("update").start()
-      try {
-        batches.foreach { b => in.addData(b); q.processAllAvailable() }
-        spark.table(name).as[UpsertRow].collect().toSeq
-          .map(r => (r.user_id, r.last_event_type, r.last_value,
-            r.last_ts_ms, r.deleted)).sorted
-      } finally q.stop()
-    }
-    try {
-      val classic = run("t5_twin_classic", StreamOps.upsertLatest)
-      val tws = run("t5_twin_tws", StreamOps.upsertLatestTws)
-      assert(tws.nonEmpty)
-      assert(tws == classic)
-    } finally prev match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
-    }
-  }
-
-  test("T4: transformWithState twin emits identical rows to velocityState " +
-      "on a shared fixture (RocksDB provider)") {
-    // Second instance of the new-API pattern (the T5 twin proved it for
-    // ValueState): COMPOSITE per-key state as MapState + an explicit
-    // event-time timer replacing EventTimeTimeout. The fixture exercises
-    // every branch: multi-key, same-bucket accumulation, a
-    // minute-spanning batch, an out-of-order event folding into an older
-    // live bucket, threshold alerts, watermark-driven bucket eviction,
-    // and a key going silent past the TTL (timer fires, state clears)
-    // then returning with fresh counts.
-    implicit val sqlCtx = spark.sqlContext
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+    val in = MemoryStream[Event]
+    val q = StreamOps.velocityState(in.toDS(), threshold = 50.0)
+      .writeStream.format("memory").queryName("t4_fold_ttl")
+      .outputMode("update").start()
     val batches = Seq(
       Seq(event(1, "2024-01-01 10:00:10", 1, "purchase", 30.0),
         event(2, "2024-01-01 10:00:20", 1, "purchase", 25.0), // alert
         event(3, "2024-01-01 10:01:05", 2, "view", 10.0)),
       Seq(event(4, "2024-01-01 10:01:30", 1, "purchase", 5.0),
         event(5, "2024-01-01 10:00:40", 1, "purchase", 10.0)), // late fold
-      // Advances purchase's watermark far past view's last event + TTL:
-      // view's whole-key state must clear (timer), old buckets evict.
+      // Advances the watermark far past view's last event + TTL: view's
+      // whole-key state must clear, old buckets evict.
       Seq(event(6, "2024-01-01 10:30:00", 1, "purchase", 1.0)),
       // view returns: counts restart from zero, not 10.0 + 2.0.
       Seq(event(7, "2024-01-01 10:31:00", 2, "view", 2.0)))
-    def run(name: String,
-            f: org.apache.spark.sql.Dataset[Event] =>
-              org.apache.spark.sql.Dataset[Velocity]): Seq[(String, Long,
-        Double, Long, Boolean)] = {
-      val in = MemoryStream[Event]
-      val q = f(in.toDS()).writeStream.format("memory").queryName(name)
-        .outputMode("update").start()
-      try {
-        batches.foreach { b => in.addData(b); q.processAllAvailable() }
-        spark.table(name).as[Velocity].collect().toSeq
-          .map(v => (v.event_type, v.window_start_ms, v.units, v.n_events,
-            v.alert)).sorted
-      } finally q.stop()
-    }
     try {
-      val classic = run("t4_twin_classic",
-        StreamOps.velocityState(_, threshold = 50.0))
-      val tws = run("t4_twin_tws",
-        StreamOps.velocityStateTws(_, threshold = 50.0))
-      assert(tws.nonEmpty)
-      // The fixture's key behaviors actually happened: the 10:00 bucket
-      // alerted at 55 then re-emitted at 65 after the late fold, and
-      // view's return row carries FRESH counts.
-      assert(tws.contains(("purchase", ts("2024-01-01 10:00:00").getTime,
+      batches.take(3).foreach { b => in.addData(b); q.processAllAvailable() }
+      // One state row per live key: view's timed out, purchase's remains.
+      assert(q.lastProgress.stateOperators.head.numRowsTotal == 1L)
+      in.addData(batches(3)); q.processAllAvailable()
+      val rows = spark.table("t4_fold_ttl").as[Velocity].collect().toSeq
+        .map(v => (v.event_type, v.window_start_ms, v.units, v.n_events,
+          v.alert))
+      // The 10:00 bucket alerted at 55 then re-emitted at 65 after the
+      // late fold, and view's return row carries FRESH counts.
+      assert(rows.contains(("purchase", ts("2024-01-01 10:00:00").getTime,
         55.0, 2L, true)))
-      assert(tws.contains(("purchase", ts("2024-01-01 10:00:00").getTime,
+      assert(rows.contains(("purchase", ts("2024-01-01 10:00:00").getTime,
         65.0, 3L, true)))
-      assert(tws.contains(("view", ts("2024-01-01 10:31:00").getTime,
+      assert(rows.contains(("view", ts("2024-01-01 10:31:00").getTime,
         2.0, 1L, false)))
-      assert(tws == classic)
-    } finally prev match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
-    }
+    } finally q.stop()
   }
 
   test("T7: alert union carries both rule streams with severity") {
@@ -1374,7 +1231,7 @@ class StreamOpsSpec extends GraftSpec {
     // rows. An awkward 3-way slicing (uneven sizes, a batch boundary
     // right after a duplicate's first copy) exercises both the
     // in-batch fold and the cross-batch state path; RocksDB is the
-    // scale provider the Tws API targets.
+    // scale provider for `transformWithState` state.
     implicit val sqlCtx = spark.sqlContext
     val key = "spark.sql.streaming.stateStore.providerClass"
     val prev = spark.conf.getOption(key)
@@ -1428,7 +1285,7 @@ class StreamOpsSpec extends GraftSpec {
     // The screen's state IS the product — a restart that lost the
     // seen-set would re-admit every duplicate. File source (offsets in
     // the checkpoint) + foreachBatch (recoverable sink), the T5
-    // restart discipline applied to the fourth Tws surface.
+    // restart discipline applied to the first-seen screen.
     val key = "spark.sql.streaming.stateStore.providerClass"
     val prev = spark.conf.getOption(key)
     spark.conf.set(key,
@@ -1852,7 +1709,7 @@ class StreamOpsSpec extends GraftSpec {
     // The exactly-once ledger must recover: a post-restart redelivery
     // is suppressible ONLY from checkpointed state. File source
     // (offsets in the checkpoint) + foreachBatch (recoverable sink) —
-    // the T5 restart discipline on the seventh Tws surface. The
+    // the T5 restart discipline on the winnow screen. The
     // contaminated doc shares a 9-word verbatim run with the eval
     // suite (≥ w+k−1 = 7, winnowing's guarantee floor).
     import org.apache.spark.sql.functions.col
