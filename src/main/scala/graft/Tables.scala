@@ -81,28 +81,6 @@ object Tables {
     }
   }
 
-  /** S1/S7 production transport: the reference reads and writes its
-    * relational state over a JDBC connection (`python/utils.py:43-61`
-    * executes SQL against Postgres). Parquet is the driver-contract
-    * surface in this container (no database available); these wrappers
-    * complete the source/sink inventory — predicates/projections on the
-    * returned frame push down to the remote database via Catalyst's JDBC
-    * pushdown, and `partitionColumn` options parallelize the read across
-    * executors at scale. */
-  def jdbc(spark: SparkSession, url: String, table: String,
-           options: Map[String, String] = Map.empty): DataFrame =
-    spark.read.format("jdbc")
-      .option("url", url).option("dbtable", table)
-      .options(options).load()
-
-  /** JDBC sink twin of [[jdbc]] (`python/utils.py:52-61` insert path). */
-  def writeJdbc(df: DataFrame, url: String, table: String,
-                mode: String = "append",
-                options: Map[String, String] = Map.empty): Unit =
-    df.write.format("jdbc")
-      .option("url", url).option("dbtable", table)
-      .options(options).mode(mode).save()
-
   /** Hive-layout partitioned parquet sink — the standard 100 TB fact
     * layout: one directory per partition value, so a reader filtering
     * on the partition column scans only matching directories

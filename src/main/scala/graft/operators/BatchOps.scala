@@ -2712,7 +2712,7 @@ object BatchOps {
     * join keyed on the parent key, and the level count is
     * log_fanout(N) — ~13 levels at 100 TB key cardinality, each a
     * bounded self-contained job (this is exactly the shape the
-    * GraphX/DataFrame fixpoints in the dedup family hand-roll;
+    * GraphX connected-components search of the dedup family runs;
     * `WITH RECURSIVE` is its declarative form, and the spec pins it to
     * the closed-form depth floor(log_fanout k)).
     *

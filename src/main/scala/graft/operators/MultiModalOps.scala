@@ -257,65 +257,96 @@ object MultiModalOps {
     }
   }
 
-  /** REAL RIFF/WAVE parser: validates the `RIFF`/`WAVE` magics and the
-    * declared RIFF size, walks the chunk list (honoring odd-size pad
-    * bytes, as the spec requires), reads the PCM format fields from
-    * `fmt `, then iterates the `data` chunk's little-endian 16-bit
-    * frames for peak amplitude and total energy (sum of squares — each
-    * term ≤ 2³⁰, so the Long sum is exact below ~2³³ samples; far above
-    * any real audio clip). Malformed containers throw (corruption is a
-    * signal, not a skip). Partition-parallel, one
-    * output row per payload — the decode-stage contract. */
+  // Little-endian readers over container bytes, shared by the WAV and
+  // BMP parsers below.
+  private def u16le(b: Array[Byte], o: Int): Int =
+    (b(o) & 0xff) | ((b(o + 1) & 0xff) << 8)
+  private def u32le(b: Array[Byte], o: Int): Long =
+    (b(o) & 0xffL) | ((b(o + 1) & 0xffL) << 8) |
+      ((b(o + 2) & 0xffL) << 16) | ((b(o + 3) & 0xffL) << 24)
+  private def i32le(b: Array[Byte], o: Int): Int = u32le(b, o).toInt
+  private def tag4(b: Array[Byte], o: Int): String =
+    new String(b, o, 4, "US-ASCII")
+  /** Signed PCM16 sample at byte offset `o` (sign-extended LE16). */
+  private def pcm16(b: Array[Byte], o: Int): Int = u16le(b, o).toShort.toInt
+
+  /** Format fields and `data` chunk location of a validated WAV. */
+  private final case class WavChunks(sampleRate: Int, channels: Int,
+      bits: Int, blockAlign: Int, dataOff: Int, dataLen: Long)
+
+  /** The one RIFF/WAVE chunk walk: validates the `RIFF`/`WAVE` magics
+    * and the declared RIFF size, walks the chunk list (honoring odd-size
+    * pad bytes, as the spec requires; a chunk that overruns the container
+    * throws), reads the PCM format fields from `fmt ` and requires PCM16
+    * mono with blockAlign 2. Malformed containers throw (corruption is a
+    * signal, not a skip); messages name the calling `stage` and doc. */
+  private def wavChunks(b: Array[Byte], stage: String,
+      docId: Long): WavChunks = {
+    require(b.length >= 12 && tag4(b, 0) == "RIFF" && tag4(b, 8) == "WAVE",
+      s"$stage: not a RIFF/WAVE container (doc $docId)")
+    require(u32le(b, 4) == b.length - 8,
+      s"$stage: RIFF size ${u32le(b, 4)} != ${b.length - 8} (doc $docId)")
+    var off = 12
+    var sampleRate = -1; var channels = -1; var bits = -1
+    var blockAlign = -1; var dataOff = -1; var dataLen = -1L
+    while (off + 8 <= b.length) {
+      val id = tag4(b, off); val sz = u32le(b, off + 4)
+      require(off + 8 + sz <= b.length,
+        s"$stage: chunk '$id' overruns container (doc $docId)")
+      id match {
+        case "fmt " =>
+          require(u16le(b, off + 8) == 1, s"$stage: not PCM (doc $docId)")
+          channels = u16le(b, off + 10)
+          sampleRate = u32le(b, off + 12).toInt
+          blockAlign = u16le(b, off + 20)
+          bits = u16le(b, off + 22)
+        case "data" => dataOff = off + 8; dataLen = sz
+        case _ => // unknown chunks are legal; skip
+      }
+      off += 8 + sz.toInt + (sz.toInt & 1) // odd chunks carry a pad byte
+    }
+    require(sampleRate > 0 && dataOff >= 0,
+      s"$stage: missing fmt/data chunk (doc $docId)")
+    require(bits == 16 && channels == 1 && blockAlign == 2,
+      s"$stage: expected PCM16 mono with blockAlign 2, got " +
+        s"bits=$bits channels=$channels blockAlign=$blockAlign (doc $docId)")
+    WavChunks(sampleRate, channels, bits, blockAlign, dataOff, dataLen)
+  }
+
+  /** `documents` → (doc_id, n) with n = length(text) clamped to
+    * [1, [[WavMaxSamples]]]: the sample count of each synthesized WAV. */
+  private def wavInputs(spark: SparkSession,
+      dir: String): Dataset[(Long, Int)] = {
+    import spark.implicits._
+    Tables.documents(spark, dir)
+      .select(col("doc_id"),
+        least(greatest(coalesce(length(col("text")), lit(0)), lit(1)),
+          lit(WavMaxSamples)).cast("int").as("n"))
+      .as[(Long, Int)]
+  }
+
+  /** REAL RIFF/WAVE parser: the [[wavChunks]] walk, then the `data`
+    * chunk's little-endian 16-bit frames for peak amplitude and total
+    * energy (sum of squares — each term ≤ 2³⁰, so the Long sum is exact
+    * below ~2³³ samples; far above any real audio clip).
+    * Partition-parallel, one output row per payload — the decode-stage
+    * contract. */
   def wavDecode(payloads: Dataset[WavPayload]): Dataset[WavFeatures] = {
     import payloads.sparkSession.implicits._
     payloads.mapPartitions { it =>
       it.map { p =>
         val b = p.payload
-        def u16(o: Int): Int = (b(o) & 0xff) | ((b(o + 1) & 0xff) << 8)
-        def u32(o: Int): Long =
-          (b(o) & 0xffL) | ((b(o + 1) & 0xffL) << 8) |
-            ((b(o + 2) & 0xffL) << 16) | ((b(o + 3) & 0xffL) << 24)
-        def tag(o: Int): String = new String(b, o, 4, "US-ASCII")
-        require(b.length >= 12 && tag(0) == "RIFF" && tag(8) == "WAVE",
-          s"wav_decode: not a RIFF/WAVE container (doc ${p.doc_id})")
-        require(u32(4) == b.length - 8,
-          s"wav_decode: RIFF size ${u32(4)} != ${b.length - 8} (doc ${p.doc_id})")
-        var off = 12
-        var sampleRate = -1; var channels = -1; var bits = -1
-        var blockAlign = -1; var dataOff = -1; var dataLen = -1L
-        while (off + 8 <= b.length) {
-          val id = tag(off); val sz = u32(off + 4)
-          require(off + 8 + sz <= b.length,
-            s"wav_decode: chunk '$id' overruns container (doc ${p.doc_id})")
-          id match {
-            case "fmt " =>
-              require(u16(off + 8) == 1,
-                s"wav_decode: not PCM (doc ${p.doc_id})")
-              channels = u16(off + 10)
-              sampleRate = u32(off + 12).toInt
-              blockAlign = u16(off + 20)
-              bits = u16(off + 22)
-            case "data" => dataOff = off + 8; dataLen = sz
-            case _ => // unknown chunks are legal; skip
-          }
-          off += 8 + sz.toInt + (sz.toInt & 1) // odd chunks carry a pad byte
-        }
-        require(sampleRate > 0 && dataOff >= 0,
-          s"wav_decode: missing fmt/data chunk (doc ${p.doc_id})")
-        require(bits == 16 && channels == 1 && blockAlign == 2,
-          s"wav_decode: expected PCM16 mono with blockAlign 2, got " +
-            s"bits=$bits channels=$channels blockAlign=$blockAlign " +
-            s"(doc ${p.doc_id})")
-        val nSamples = dataLen / blockAlign
+        val c = wavChunks(b, "wav_decode", p.doc_id)
+        val nSamples = c.dataLen / c.blockAlign
         var i = 0; var peak = 0; var energy = 0L
         while (i < nSamples) {
-          val s = u16(dataOff + 2 * i).toShort.toInt // sign-extend LE16
+          val s = pcm16(b, c.dataOff + 2 * i)
           val a = math.abs(s)
           if (a > peak) peak = a
           energy += s.toLong * s.toLong
           i += 1
         }
-        WavFeatures(p.doc_id, sampleRate, channels, bits, nSamples,
+        WavFeatures(p.doc_id, c.sampleRate, c.channels, c.bits, nSamples,
           b.length, peak, energy)
       }
     }
@@ -338,40 +369,20 @@ object MultiModalOps {
     * air that wastes training tokens; their count and longest length
     * drive a trim/split decision). One pass over the PCM frames per
     * container, all-integer, run accounting by the same ±1-boundary
-    * rule as every gap-island op. Same parse rigor as [[wavDecode]]
-    * (magics, declared sizes, pad bytes; malformed throws). */
+    * rule as every gap-island op. Parsed by the same [[wavChunks]] walk
+    * as [[wavDecode]]. */
   def audioClipping(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val in = Tables.documents(spark, dir)
-      .select(col("doc_id"),
-        least(greatest(coalesce(length(col("text")), lit(0)), lit(1)),
-          lit(WavMaxSamples)).cast("int").as("n"))
-      .as[(Long, Int)]
-    wavEncode(in).mapPartitions { it =>
+    wavEncode(wavInputs(spark, dir)).mapPartitions { it =>
       it.map { p =>
         val b = p.payload
-        def u16(o: Int): Int = (b(o) & 0xff) | ((b(o + 1) & 0xff) << 8)
-        def tag(o: Int): String = new String(b, o, 4, "US-ASCII")
-        require(b.length >= 12 && tag(0) == "RIFF" && tag(8) == "WAVE",
-          s"audio_clipping: not a RIFF/WAVE container (doc ${p.doc_id})")
-        var off = 12
-        var dataOff = -1; var dataLen = -1L
-        while (off + 8 <= b.length) {
-          val id = tag(off)
-          val sz = ((b(off + 4) & 0xffL) | ((b(off + 5) & 0xffL) << 8) |
-            ((b(off + 6) & 0xffL) << 16) | ((b(off + 7) & 0xffL) << 24))
-          if (id == "data") { dataOff = off + 8; dataLen = sz }
-          off += 8 + sz.toInt + (sz.toInt & 1)
-        }
-        require(dataOff >= 0,
-          s"audio_clipping: missing data chunk (doc ${p.doc_id})")
-        val n = (dataLen / 2).toInt
+        val c = wavChunks(b, "audio_clipping", p.doc_id)
+        val n = (c.dataLen / 2).toInt
         var i = 0
         var nClipped = 0L; var nSilent = 0L
         var nRuns = 0L; var longest = 0L; var cur = 0L
         while (i < n) {
-          val s = u16(dataOff + 2 * i).toShort.toInt
-          val a = math.abs(s)
+          val a = math.abs(pcm16(b, c.dataOff + 2 * i))
           if (a >= ClipAbs) nClipped += 1
           if (a <= SilenceAbs) {
             nSilent += 1
@@ -459,12 +470,7 @@ object MultiModalOps {
     * status-grain aggregate, a broadcast 1-row total. */
   def codecIntegrityScreen(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val in = Tables.documents(spark, dir)
-      .select(col("doc_id"),
-        least(greatest(coalesce(length(col("text")), lit(0)), lit(1)),
-          lit(WavMaxSamples)).cast("int").as("n"))
-      .as[(Long, Int)]
-    val statuses = wavEncode(in).mapPartitions { it =>
+    val statuses = wavEncode(wavInputs(spark, dir)).mapPartitions { it =>
       it.map { p =>
         val orig = p.payload
         val b =
@@ -473,14 +479,10 @@ object MultiModalOps {
           } else if (p.doc_id % CorruptTruncMod == 0)
             java.util.Arrays.copyOf(orig, CorruptTruncLen)
           else orig
-        def tag(o: Int): String = new String(b, o, 4, "US-ASCII")
-        def u32(o: Int): Long =
-          (b(o) & 0xffL) | ((b(o + 1) & 0xffL) << 8) |
-            ((b(o + 2) & 0xffL) << 16) | ((b(o + 3) & 0xffL) << 24)
         val status =
           if (b.length < 44) "truncated"
-          else if (tag(0) != "RIFF" || tag(8) != "WAVE") "bad_magic"
-          else if (u32(4) != b.length - 8L) "size_mismatch"
+          else if (tag4(b, 0) != "RIFF" || tag4(b, 8) != "WAVE") "bad_magic"
+          else if (u32le(b, 4) != b.length - 8L) "size_mismatch"
           else "ok"
         (p.doc_id, status)
       }
@@ -517,12 +519,11 @@ object MultiModalOps {
        |ORDER BY g.status""".stripMargin
 
   /** The RESAMPLE stage of an audio pipeline: parse the genuine WAV
-    * container (same chunk walk as [[wavDecode]] — magics, declared
-    * sizes, odd-chunk pad bytes), then DECIMATE the PCM stream by
-    * [[WavDecim]] (every 2nd sample; nearest-sample decimation, the
-    * exact-integer member of the resampling family — a windowed-sinc
-    * low-pass would put IEEE float accumulation between the engines)
-    * and emit peak/energy over the kept samples. The output frame
+    * container (the [[wavChunks]] walk of [[wavDecode]]), then DECIMATE
+    * the PCM stream by [[WavDecim]] (every 2nd sample; nearest-sample
+    * decimation, the exact-integer member of the resampling family — a
+    * windowed-sinc low-pass would put IEEE float accumulation between the
+    * engines) and emit peak/energy over the kept samples. The output frame
     * carries in/out rates and counts, so downstream stages see a
     * genuine 4 kHz clip. Partition-parallel, constant memory. */
   def wavResample(payloads: Dataset[WavPayload]): Dataset[WavResampled] = {
@@ -530,43 +531,18 @@ object MultiModalOps {
     payloads.mapPartitions { it =>
       it.map { p =>
         val b = p.payload
-        def u16(o: Int): Int = (b(o) & 0xff) | ((b(o + 1) & 0xff) << 8)
-        def u32(o: Int): Long =
-          (b(o) & 0xffL) | ((b(o + 1) & 0xffL) << 8) |
-            ((b(o + 2) & 0xffL) << 16) | ((b(o + 3) & 0xffL) << 24)
-        def tag(o: Int): String = new String(b, o, 4, "US-ASCII")
-        require(b.length >= 12 && tag(0) == "RIFF" && tag(8) == "WAVE",
-          s"wav_resample: not a RIFF/WAVE container (doc ${p.doc_id})")
-        var off = 12
-        var sampleRate = -1; var dataOff = -1; var dataLen = -1L
-        while (off + 8 <= b.length) {
-          val id = tag(off); val sz = u32(off + 4)
-          require(off + 8 + sz <= b.length,
-            s"wav_resample: chunk '$id' overruns container (doc ${p.doc_id})")
-          id match {
-            case "fmt " =>
-              require(u16(off + 8) == 1 && u16(off + 10) == 1 &&
-                u16(off + 22) == 16,
-                s"wav_resample: expected PCM16 mono (doc ${p.doc_id})")
-              sampleRate = u32(off + 12).toInt
-            case "data" => dataOff = off + 8; dataLen = sz
-            case _ => // unknown chunks are legal; skip
-          }
-          off += 8 + sz.toInt + (sz.toInt & 1)
-        }
-        require(sampleRate > 0 && dataOff >= 0,
-          s"wav_resample: missing fmt/data chunk (doc ${p.doc_id})")
-        val nIn = dataLen / 2
+        val c = wavChunks(b, "wav_resample", p.doc_id)
+        val nIn = c.dataLen / 2
         var i = 0; var nOut = 0L; var peak = 0; var energy = 0L
         while (i < nIn) {
-          val s = u16(dataOff + 2 * i).toShort.toInt
+          val s = pcm16(b, c.dataOff + 2 * i)
           val a = math.abs(s)
           if (a > peak) peak = a
           energy += s.toLong * s.toLong
           nOut += 1
           i += WavDecim
         }
-        WavResampled(p.doc_id, sampleRate, sampleRate / WavDecim,
+        WavResampled(p.doc_id, c.sampleRate, c.sampleRate / WavDecim,
           nIn, nOut, peak, energy)
       }
     }
@@ -575,15 +551,8 @@ object MultiModalOps {
   /** End-to-end resample query: synthesize the WAV, parse + decimate,
     * emit all-integer stats over the kept samples. The oracle
     * recomputes the decimated stream from the sample FORMULA. */
-  def audioResample(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    val in = Tables.documents(spark, dir)
-      .select(col("doc_id"),
-        least(greatest(coalesce(length(col("text")), lit(0)), lit(1)),
-          lit(WavMaxSamples)).cast("int").as("n"))
-      .as[(Long, Int)]
-    wavResample(wavEncode(in)).toDF().orderBy("doc_id")
-  }
+  def audioResample(spark: SparkSession, dir: String): DataFrame =
+    wavResample(wavEncode(wavInputs(spark, dir))).toDF().orderBy("doc_id")
 
   /** DuckDB oracle for [[audioResample]] — the same clamped sample
     * count, the same (docId·31 + i·17) PCM formula over the kept
@@ -615,15 +584,8 @@ object MultiModalOps {
     * oracle recomputes every feature from (doc_id, length(text)) alone —
     * it never sees the bytes — so a hash match proves the full encode →
     * container → parse → features loop is byte-correct. */
-  def wavFeatures(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    val in = Tables.documents(spark, dir)
-      .select(col("doc_id"),
-        least(greatest(coalesce(length(col("text")), lit(0)), lit(1)),
-          lit(WavMaxSamples)).cast("int").as("n"))
-      .as[(Long, Int)]
-    wavDecode(wavEncode(in)).toDF().orderBy("doc_id")
-  }
+  def wavFeatures(spark: SparkSession, dir: String): DataFrame =
+    wavDecode(wavEncode(wavInputs(spark, dir))).toDF().orderBy("doc_id")
 
   // --------------------------------------------------------------------
   // Real codec #2: BMP (24-bit uncompressed). Like WAVE, the format is a
@@ -699,6 +661,41 @@ object MultiModalOps {
     }
   }
 
+  /** BMP header fields of the container starting at byte `at`: declared
+    * file size, DIB header size, dimensions, planes, bits per pixel and
+    * compression, plus `pixels`, the absolute offset of the pixel array
+    * (`at` + offBits), and the 4-byte-padded 24-bit row stride. */
+  private final case class BmpHeader(fileSize: Int, pixels: Int,
+      dibSize: Int, w: Int, h: Int, planes: Int, bpp: Int,
+      compression: Int) {
+    val stride: Int = ((w * 3 + 3) / 4) * 4
+    /** Offset of image row `y` (top-down); rows are stored bottom-up. */
+    def row(y: Int): Int = pixels + (h - 1 - y) * stride
+  }
+
+  /** The one BMP header reader; the caller has checked the `BM` magic
+    * and that 54 header bytes follow `at`. */
+  private def bmpHeader(b: Array[Byte], at: Int): BmpHeader =
+    BmpHeader(i32le(b, at + 2), at + i32le(b, at + 10), i32le(b, at + 14),
+      i32le(b, at + 18), i32le(b, at + 22), u16le(b, at + 26),
+      u16le(b, at + 28), i32le(b, at + 30))
+
+  /** A `BM` magic at `at` with a full 54-byte header after it. */
+  private def isBmp(b: Array[Byte], at: Int): Boolean =
+    at + 54 <= b.length && b(at) == 'B'.toByte && b(at + 1) == 'M'.toByte
+
+  /** `documents` → (doc_id, w, h): the geometry of each synthesized BMP
+    * ([[bmpWidth]] of the text length, [[bmpHeight]] of the doc id). */
+  private def bmpInputs(spark: SparkSession,
+      dir: String): Dataset[(Long, Int, Int)] = {
+    import spark.implicits._
+    Tables.documents(spark, dir)
+      .select(col("doc_id"),
+        (coalesce(length(col("text")), lit(0)) % 13 + 4).cast("int").as("w"),
+        (col("doc_id") % 11 + 3).cast("int").as("h"))
+      .as[(Long, Int, Int)]
+  }
+
   /** REAL BMP parser: validates the `BM` magic and declared file size,
     * reads the DIB header (requires the 40-byte BITMAPINFOHEADER,
     * 24 bpp, uncompressed, one plane, positive height), then walks the
@@ -713,33 +710,29 @@ object MultiModalOps {
     payloads.mapPartitions { it =>
       it.map { p =>
         val b = p.payload
-        def u16(o: Int): Int = (b(o) & 0xff) | ((b(o + 1) & 0xff) << 8)
-        def i32(o: Int): Int =
-          (b(o) & 0xff) | ((b(o + 1) & 0xff) << 8) |
-            ((b(o + 2) & 0xff) << 16) | ((b(o + 3) & 0xff) << 24)
-        require(b.length >= 54 && b(0) == 'B'.toByte && b(1) == 'M'.toByte,
+        require(isBmp(b, 0),
           s"bmp_decode: not a BMP container (doc ${p.doc_id})")
-        require(i32(2) == b.length,
-          s"bmp_decode: declared size ${i32(2)} != ${b.length} (doc ${p.doc_id})")
-        val offBits = i32(10)
-        require(i32(14) == 40,
-          s"bmp_decode: expected BITMAPINFOHEADER (40), got ${i32(14)} " +
+        val hd = bmpHeader(b, 0)
+        require(hd.fileSize == b.length,
+          s"bmp_decode: declared size ${hd.fileSize} != ${b.length} " +
             s"(doc ${p.doc_id})")
-        val w = i32(18); val h = i32(22)
+        require(hd.dibSize == 40,
+          s"bmp_decode: expected BITMAPINFOHEADER (40), got ${hd.dibSize} " +
+            s"(doc ${p.doc_id})")
+        val w = hd.w; val h = hd.h
         require(w > 0 && h > 0,
           s"bmp_decode: expected positive bottom-up dims, got ${w}x$h " +
             s"(doc ${p.doc_id})")
-        require(u16(26) == 1 && u16(28) == 24 && i32(30) == 0,
+        require(hd.planes == 1 && hd.bpp == 24 && hd.compression == 0,
           s"bmp_decode: expected 1 plane, 24 bpp, BI_RGB; got " +
-            s"planes=${u16(26)} bpp=${u16(28)} compression=${i32(30)} " +
-            s"(doc ${p.doc_id})")
-        val stride = ((w * 3 + 3) / 4) * 4
-        require(offBits + stride * h <= b.length,
+            s"planes=${hd.planes} bpp=${hd.bpp} " +
+            s"compression=${hd.compression} (doc ${p.doc_id})")
+        require(hd.pixels + hd.stride * h <= b.length,
           s"bmp_decode: pixel array overruns container (doc ${p.doc_id})")
         var maxByte = 0; var pixelSum = 0L; var topRowChecksum = 0L
         var y = 0
         while (y < h) {                          // image coords, top-down
-          val rowOff = offBits + (h - 1 - y) * stride // bottom-up storage
+          val rowOff = hd.row(y)
           var j = 0
           while (j < w * 3) {
             val v = b(rowOff + j) & 0xff
@@ -750,7 +743,7 @@ object MultiModalOps {
           }
           y += 1
         }
-        BmpFeatures(p.doc_id, w, h, 24, stride, w * h, b.length, maxByte,
+        BmpFeatures(p.doc_id, w, h, 24, hd.stride, w * h, b.length, maxByte,
           pixelSum, topRowChecksum)
       }
     }
@@ -785,27 +778,22 @@ object MultiModalOps {
     payloads.mapPartitions { it =>
       it.map { p =>
         val b = p.payload
-        def u16(o: Int): Int = (b(o) & 0xff) | ((b(o + 1) & 0xff) << 8)
-        def i32(o: Int): Int =
-          (b(o) & 0xff) | ((b(o + 1) & 0xff) << 8) |
-            ((b(o + 2) & 0xff) << 16) | ((b(o + 3) & 0xff) << 24)
-        require(b.length >= 54 && b(0) == 'B'.toByte && b(1) == 'M'.toByte,
+        require(isBmp(b, 0),
           s"bmp_resize: not a BMP container (doc ${p.doc_id})")
-        require(i32(14) == 40 && u16(28) == 24 && i32(30) == 0,
+        val hd = bmpHeader(b, 0)
+        require(hd.dibSize == 40 && hd.bpp == 24 && hd.compression == 0,
           s"bmp_resize: unsupported DIB/bpp/compression (doc ${p.doc_id})")
-        val offBits = i32(10)
-        val w = i32(18); val h = i32(22)
+        val w = hd.w; val h = hd.h
         require(w >= gw && h >= gh,
           s"bmp_resize: image ${w}x$h smaller than the $gw×$gh grid " +
             s"(doc ${p.doc_id})")
-        val stride = ((w * 3 + 3) / 4) * 4
-        require(offBits + stride * h <= b.length,
+        require(hd.pixels + hd.stride * h <= b.length,
           s"bmp_resize: pixel array overruns container (doc ${p.doc_id})")
         val blockSum = Array.ofDim[Long](gw * gh)
         val blockN = Array.ofDim[Long](gw * gh)
         var y = 0
         while (y < h) {
-          val rowOff = offBits + (h - 1 - y) * stride
+          val rowOff = hd.row(y)
           val by = y * gh / h
           var x = 0
           while (x < w) {
@@ -872,30 +860,24 @@ object MultiModalOps {
     payloads.mapPartitions { it =>
       it.map { p =>
         val b = p.payload
-        def u16(o: Int): Int = (b(o) & 0xff) | ((b(o + 1) & 0xff) << 8)
-        def i32(o: Int): Int =
-          (b(o) & 0xff) | ((b(o + 1) & 0xff) << 8) |
-            ((b(o + 2) & 0xff) << 16) | ((b(o + 3) & 0xff) << 24)
         var off = 0; var f = 0; var sampled = 0
         var pixelSum = 0L; var maxByte = 0
         var fw = 0; var fh = 0
         while (off < b.length) {
-          require(off + 54 <= b.length &&
-            b(off) == 'B'.toByte && b(off + 1) == 'M'.toByte,
+          require(isBmp(b, off),
             s"video_sample: frame $f is not a BMP (doc ${p.doc_id})")
-          val frameLen = i32(off + 2)
+          val hd = bmpHeader(b, off)
+          val frameLen = hd.fileSize
           require(frameLen > 54 && off + frameLen <= b.length,
             s"video_sample: frame $f overruns container (doc ${p.doc_id})")
           if (f % FrameStride == 0) {
-            val offBits = i32(off + 10)
-            val w = i32(off + 18); val h = i32(off + 22)
-            require(u16(off + 28) == 24 && i32(off + 30) == 0,
+            val w = hd.w; val h = hd.h
+            require(hd.bpp == 24 && hd.compression == 0,
               s"video_sample: frame $f not 24bpp BI_RGB (doc ${p.doc_id})")
             fw = w; fh = h
-            val stride = ((w * 3 + 3) / 4) * 4
             var y = 0
             while (y < h) {
-              val rowOff = off + offBits + (h - 1 - y) * stride
+              val rowOff = hd.row(y)
               var j = 0
               while (j < w * 3) {
                 val v = b(rowOff + j) & 0xff
@@ -970,15 +952,8 @@ object MultiModalOps {
     * recomputes blocks from the pixel FORMULA (never the bytes), so the
     * hash match proves the decode→resize loop honors geometry, row
     * order, and stride. */
-  def imageResize(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    val in = Tables.documents(spark, dir)
-      .select(col("doc_id"),
-        (coalesce(length(col("text")), lit(0)) % 13 + 4).cast("int").as("w"),
-        (col("doc_id") % 11 + 3).cast("int").as("h"))
-      .as[(Long, Int, Int)]
-    bmpResize(bmpEncode(in)).toDF().orderBy("doc_id")
-  }
+  def imageResize(spark: SparkSession, dir: String): DataFrame =
+    bmpResize(bmpEncode(bmpInputs(spark, dir))).toDF().orderBy("doc_id")
 
   /** DuckDB oracle for [[imageResize]] — per-pixel gray from the
     * [[bmpByte]] formula, the same floor-scaled block mapping, the same
@@ -1022,15 +997,8 @@ object MultiModalOps {
     * (doc_id, length(text)) alone — it never sees the bytes — so a hash
     * match proves the full encode → container → parse → features loop is
     * byte-correct, including row order and stride padding. */
-  def bmpFeatures(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    val in = Tables.documents(spark, dir)
-      .select(col("doc_id"),
-        (coalesce(length(col("text")), lit(0)) % 13 + 4).cast("int").as("w"),
-        (col("doc_id") % 11 + 3).cast("int").as("h"))
-      .as[(Long, Int, Int)]
-    bmpDecode(bmpEncode(in)).toDF().orderBy("doc_id")
-  }
+  def bmpFeatures(spark: SparkSession, dir: String): DataFrame =
+    bmpDecode(bmpEncode(bmpInputs(spark, dir))).toDF().orderBy("doc_id")
 
   /** DuckDB oracle for [[bmpFeatures]] — features from first principles
     * (the pixel formula in SQL), independent of the container bytes. */
@@ -1452,56 +1420,36 @@ object MultiModalOps {
   val DupDegreeCap = 3
 
   /** IMAGE NEAR-DUP CLUSTERS — the multimodal member of the dedup
-    * family's cluster step (text has exact/minhash/simhash → CC;
-    * images had only the Hamming-1 census): connected components over
-    * the hash-grain neighbor graph (present aHashes at Hamming
+    * family's cluster step: connected components ([[Components.label]])
+    * over the hash-grain neighbor graph (present aHashes at Hamming
     * distance 1), then per cluster the image mass and the kept
     * representative. The decisive scale property is the GRAIN: the
     * graph's node set is bounded by the CODE SPACE (2^{grid bits} =
-    * 4096 here, 2^64 capped by distinct-present for real pHashes),
-    * NOT the corpus — a billion images collapse to the same ≤4096
-    * nodes before the closure runs, and per-image mass joins the
-    * labels afterwards. BECAUSE the guarded edge set is code-space-
-    * bounded (≤ 2^12 × gridbits ÷ 2 pairs, data-INDEPENDENT), the
-    * closure itself is a driver-side union-find over one bounded
-    * collect — the same ≤-constant-rows contract as GlobalRank's
-    * per-partition offset collect, and the third (and only other)
-    * argued collect in the library. The r14 form ran the
-    * `dedupComponentsDf` min-label fixpoint here: exact, but ~8
-    * scheduled jobs (join + aggregate + checkpoint + convergence
-    * probe per round) to label a ≤25k-edge constant graph — 1.4 s of
-    * pure scheduling at ANY scale factor (measured r15: 1.82 → 1.23 s
-    * at sf0.1 — the remainder is the decode+groups front plus the
-    * variant-explode edge join, both genuinely distributed). The DATA-scaled dedup graphs (text near-dup CC) keep
-    * their distributed fixpoints — this shortcut is sound ONLY
-    * because the node set is a code space. The oracle is DuckDB's
-    * exact WITH RECURSIVE reachability closure, so a wrong union
-    * cannot hash-match.
+    * 4096 here, distinct-present hashes for real 64-bit pHashes), NOT
+    * the corpus — a billion images collapse to the same ≤4096 nodes
+    * before the closure runs, and per-image mass joins the labels
+    * afterwards. The oracle is DuckDB's exact WITH RECURSIVE
+    * reachability closure, so a wrong label cannot hash-match.
     *
-    * DENSITY GUARD (round 13 — the r12 over-merge caution made
-    * structural): a hash whose Hamming-1 degree exceeds
+    * DENSITY GUARD: a hash whose Hamming-1 degree exceeds
     * [[DupDegreeCap]] is a HUB — the signature of a DENSE code-space
     * region, where tight-radius transitive closure chains unrelated
-    * images (this corpus's 12-bit space measured degrees 1-6 over 69
-    * present hashes at sf0.01 and chained ALL of them into one
-    * cluster). Hub-incident edges are excluded from the closure and
+    * images (this corpus's 12-bit space has degrees 1-6 over 69 present
+    * hashes at sf0.01, and an unguarded closure chains ALL of them into
+    * one cluster). Hub-incident edges are excluded from the closure and
     * each hub emits as its own singleton cluster, FLAGGED `is_hub` —
-    * the guard decision is an observable column, mirrored verbatim in
-    * the oracle's recursive closure (same degree CTE, same predicate),
-    * so the guard itself is cross-engine-exact. This is the
-    * high-degree-node removal every near-dup clusterer at scale
-    * applies (the doc-frequency stop-shingle cut's graph twin); the
-    * conservation laws (Σ n_images = corpus, Σ n_hashes = census) are
-    * unchanged and spec-pinned, and a sparse real 64-bit pHash space
-    * makes no hash a hub — the guard only bites where density would
-    * have over-merged. */
+    * the guard decision is an observable column, mirrored in the
+    * oracle's recursive closure (same degree CTE, same predicate), so
+    * the guard itself is cross-engine-exact. The conservation laws
+    * (Σ n_images = corpus, Σ n_hashes = census) are spec-pinned, and a
+    * sparse real 64-bit pHash space makes no hash a hub — the guard
+    * only bites where density would have over-merged. */
   def imageDupClusters(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.DataFrame
     val groups = imageResize(spark, dir)
       .groupBy("ahash")
       .agg(count(lit(1)).as("n_images"), min(col("doc_id")).as("keep_id"))
-      // Four consumers (variant explode, edge presence join, hub flag,
-      // final label join) over a ≤ 2^12-row frame: checkpoint once.
+      // Three consumers (variant explode, edge presence join, final
+      // label join) over a ≤ 2^12-row frame: checkpoint once.
       .localCheckpoint()
     val nbits = ResizeGridW * ResizeGridH
     val edges = groups.select(col("ahash"),
@@ -1509,57 +1457,12 @@ object MultiModalOps {
           col("ahash").bitwiseXOR(lit(1 << k))): _*)).as("variant"))
       .filter(col("variant") > col("ahash"))
       .join(groups.select(col("ahash").as("variant")), "variant")
-      .select(col("ahash").as("a"), col("variant").as("b"))
-    val fullAdj = edges.select(col("a").as("u"), col("b").as("v"))
-      .unionByName(edges.select(col("b").as("u"), col("a").as("v")))
-      // Degree census + the guarded edge set both read it: checkpoint
-      // (code-space-bounded, ≤ 2^12 × nbits rows).
-      .localCheckpoint()
-    val hubs = fullAdj.groupBy("u")
-      .agg(count(lit(1)).as("deg"))
-      .filter(col("deg") > DupDegreeCap)
-      .select(col("u"))
-    val adj = fullAdj
-      .join(broadcast(hubs), Seq("u"), "left_anti")
-      .join(broadcast(hubs.select(col("u").as("v"))), Seq("v"), "left_anti")
-    // Driver-bounded union-find over the guarded edge set: ≤ code-space
-    // × gridbits rows of two longs by construction (see scaladoc) —
-    // never corpus-scaled. Labels = min node id per component, matching
-    // the recursive-closure oracle exactly.
-    // The int cast is sound ONLY while the code space fits 31 bits —
-    // the exact generalization limit of this shortcut. A future 64-bit
-    // pHash space must lift the driver arithmetic to Long BEFORE
-    // widening the grid: a silent non-ANSI downcast here would collide
-    // distinct hashes and over-merge clusters with no error.
-    require(nbits < 31, s"ahash space 2^$nbits exceeds the Int driver " +
-      "union-find; widen the collect to Long first")
-    val edgeArr = adj.filter(col("u") < col("v"))
-      .select(col("u").cast("int"), col("v").cast("int")).collect()
-    val parent = scala.collection.mutable.HashMap.empty[Int, Int]
-    def find(x: Int): Int = {
-      var r = x
-      while (parent.getOrElse(r, r) != r) r = parent(r)
-      var c = x
-      while (parent.getOrElse(c, c) != c) {
-        val nx = parent(c); parent(c) = r; c = nx
-      }
-      r
-    }
-    edgeArr.foreach { row =>
-      val (u, v) = (row.getInt(0), row.getInt(1))
-      val (ru, rv) = (find(u), find(v))
-      if (ru != rv) parent(math.max(ru, rv)) = math.min(ru, rv)
-    }
-    val labelSeq = edgeArr
-      .flatMap(r => Seq(r.getInt(0), r.getInt(1))).distinct
-      .map(u => (u, find(u))).toSeq
-    import spark.implicits._
-    val labels = labelSeq.toDF("u", "l")
+      .select(col("ahash").cast("long"), col("variant").cast("long"))
+    val labels = Components.label(edges, Some(DupDegreeCap))
+      .select(col("v").cast("int").as("ahash"),
+        col("component_id").cast("int").as("l"), col("is_hub").as("hub"))
     groups
-      .join(labels.select(col("u").as("ahash"), col("l")), Seq("ahash"),
-        "left")
-      .join(broadcast(hubs.select(col("u").as("ahash"),
-        lit(true).as("hub"))), Seq("ahash"), "left")
+      .join(labels, Seq("ahash"), "left")
       .select(coalesce(col("l"), col("ahash")).as("cluster_id"),
         col("n_images"), col("keep_id"),
         coalesce(col("hub"), lit(false)).as("hub"))

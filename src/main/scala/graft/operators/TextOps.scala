@@ -2353,229 +2353,24 @@ object TextOps {
        |WHERE rk <= $StratumSampleK
        |ORDER BY lang, rk""".stripMargin
 
-  /** Min-label propagation with pointer doubling over a SYMMETRIC edge
-    * list `(doc_a, doc_b)`: every vertex repeatedly adopts the smallest
-    * label in its neighborhood, then hops to its label's label
-    * (`label := label(label)`) — the shortcutting step of
-    * Shiloach-Vishkin-style connected components. Labels are always
-    * component-internal vertex ids and only ever decrease, so the hop
-    * preserves correctness while squaring the distance a minimum
-    * travels per round: a diameter-d component converges in O(log d)
-    * rounds instead of d (spec-pinned on a path fixture: a 16-path
-    * closes in 4 rounds, where plain propagation needs 15). Each round
-    * is one edges⋈labels join + min-aggregate + one labels⋈labels hop
-    * join — the hop joins the SMALL label table with itself, not the
-    * edge set, so the added per-round cost is |V|-scale while the saved
-    * rounds are |E|-scale. The driver only ever sees a ONE-SCALAR
-    * convergence count per round (the anchor-collect pattern, not a
-    * data collect). `localCheckpoint` cuts the growing lineage so round
-    * N's plan does not replay rounds 1..N−1; superseded checkpoints are
-    * unpersisted on EVERY exit path (localCheckpoint blocks otherwise
-    * live until RDD GC — a non-convergence abort must not leak them).
-    *
-    * Returns the fixpoint labels `(v, label)` and the round count. */
-  private[graft] def propagateMinLabels(edges: DataFrame): (DataFrame, Int) = {
-    // Seed with round 1 for free: label₀(v) = min(v, min N(v)) is one
-    // aggregate over the edge list — a full propagation round costs
-    // strictly more, so starting one step in saves the most expensive
-    // round.
-    var labelsCp = edges.groupBy(col("doc_a").as("v"))
-      .agg(min(col("doc_b")).as("nmin"))
-      .select(col("v"), least(col("v"), col("nmin")).as("label"))
-      .localCheckpoint()
-    val MaxRounds = 20
-    var round = 0
-    var converged = false
-    val superseded = scala.collection.mutable.ArrayBuffer[DataFrame]()
-    try {
-      while (!converged && round < MaxRounds) {
-        val labels = labelsCp.select(col("v"), col("label"))
-        val neighborMin = edges
-          .join(labels, edges("doc_b") === labels("v"))
-          .groupBy(edges("doc_a").as("nv"))
-          .agg(min(col("label")).as("nlabel"))
-        val stepped = labels
-          .join(neighborMin, labels("v") === col("nv"), "left_outer")
-          .select(col("v"), col("label").as("prev"),
-            least(col("label"), coalesce(col("nlabel"), col("label")))
-              .as("label"))
-        // Pointer doubling: adopt label(label(v)). Every label value is
-        // itself a vertex (a min over component vertex ids), so the
-        // self-join resolves; left_outer + coalesce keeps the row if a
-        // label has no own row (cannot happen on symmetric input, but
-        // correctness must not depend on it).
-        val hopped = stepped.as("a")
-          .join(stepped.select(col("v").as("lv"), col("label").as("llabel"))
-            .as("b"),
-            col("a.label") === col("b.lv"), "left_outer")
-          .select(col("a.v").as("v"),
-            least(col("a.label"), coalesce(col("llabel"), col("a.label")))
-              .as("label"),
-            col("a.prev").as("prev"))
-          .select(col("v"), col("label"),
-            // Labels only decrease: changed ⇔ strictly smaller.
-            (col("label") < col("prev")).as("changed"))
-          .localCheckpoint()
-        converged = hopped.filter(col("changed")).limit(1).count() == 0
-        superseded += labelsCp
-        labelsCp = hopped
-        round += 1
-      }
-      require(converged, s"label propagation did not converge in $MaxRounds")
-    } catch {
-      // On any failure the current checkpoint is dead too — release it
-      // (on success it backs the returned plan and must survive).
-      case t: Throwable => labelsCp.unpersist(); throw t
-    } finally superseded.foreach(_.unpersist())
-    (labelsCp.select(col("v"), col("label")), round)
-  }
-
   /** Near-dup CLUSTERS from near-dup pairs: connected components over
-    * the capped-Jaccard edge set, labeled by the component's minimum
-    * doc_id — the step that turns pairwise detections into dedup groups
-    * (keep `component_id`, drop the rest).
-    *
-    * The component search is GraphX `connectedComponents` — Spark's own
-    * operator for exactly this, and the one place in the engine where
-    * the RDD layer earns its keep: Pregel's per-iteration cost is an
-    * in-memory join over cached vertex/edge RDDs with only still-active
-    * vertices participating, no per-round eager materialization or
-    * driver round-trip. Measured against the DataFrame alternatives at
-    * sf0.1 (1557 vertices, 13-18 round convergence): GraphX 1.6 s vs
-    * 3.5 s for batched min-label propagation and 3.7 s for
-    * hash-to-min — DataFrame rounds pay fixed per-round
-    * checkpoint+convergence-job overhead that Pregel does not. GraphX
-    * CC assigns every vertex the component's minimum vertex id,
-    * deterministically, which is precisely this operator's contract
-    * (recursive-CTE oracle). Undirected semantics are built in, so the
-    * pair list needs no symmetrization. At 100 TB: diameter-bound
-    * iterations over an edge set that is already blocked AND df-capped
-    * upstream; vertices = docs with ≥1 near-dup pair only.
-    * [[propagateMinLabels]] remains as the pure-DataFrame path (spec:
-    * "pointer doubling closes a 16-path in O(log d) rounds"). */
+    * the capped-Jaccard edge set, each doc labelled by its component's
+    * minimum doc_id ([[Components.label]]) — the step that turns
+    * pairwise detections into dedup groups (keep `component_id`, drop
+    * the rest). Vertices are docs with ≥1 near-dup pair only; at scale
+    * the search is diameter-bound over an edge set already blocked and
+    * df-capped upstream. Served from the `cc_labels` memo. */
   def dedupComponents(spark: SparkSession, dir: String): DataFrame =
     dedupComponentsCore(spark, dir).orderBy("doc_id")
 
-  /** Connected components as a PURE-DataFrame iteration — the
-    * no-GraphX twin of [[dedupComponents]], same labels, same oracle.
-    * Min-label propagation: l(u) starts at min(u, N(u)) and each round
-    * folds in the minimum label of u's neighborhood; the fixpoint
-    * (reached in O(log diameter) rounds — the shared loop pointer-
-    * doubles) assigns every vertex its component's minimum doc_id,
-    * exactly GraphX's convention. The driver loop is ONE count() per
-    * round for the convergence test — the same coordination Pregel
-    * does internally — and each round's labels are localCheckpoint'd
-    * (KB-sized: only docs with ≥1 pair) so lineage stays flat instead
-    * of growing a join-tree per iteration.
-    *
-    * Why it exists alongside the GraphX form: Catalyst sees THROUGH
-    * this one (AQE sizes every round's shuffle; the edge frame is the
-    * memoized checkpoint), it needs no second execution engine, and
-    * integer min-labels make it oracle-checkable — the same reasons
-    * the PageRank twin is DataFrame-shaped. The Pregel form remains
-    * the deep-graph path (diameter ≫ rounds). */
-  def dedupComponentsDf(spark: SparkSession, dir: String): DataFrame = {
-    val pairs = nearDupPairsCore(spark, dir)
-    // No checkpoint here: pairs IS the memoized checkpoint, and the
-    // symmetrization is one cheap projection per consumer round.
-    val adj = pairs.select(col("doc_a").as("u"), col("doc_b").as("v"))
-      .unionByName(pairs.select(col("doc_b").as("u"), col("doc_a").as("v")))
-    minLabelFixpoint(adj)
-      .select(col("u").as("doc_id"), col("l").as("component_id"))
+  /** [[dedupComponents]] computed fresh on every call instead of served
+    * from the `cc_labels` memo: same labels, same oracle, and its bench
+    * time is the full connected-components search over the memoized
+    * pair set. */
+  def dedupComponentsDf(spark: SparkSession, dir: String): DataFrame =
+    Components.label(nearDupPairsCore(spark, dir).select("doc_a", "doc_b"))
+      .select(col("v").as("doc_id"), col("component_id"))
       .orderBy("doc_id")
-  }
-
-  /** Min-label CC fixpoint over a symmetric adjacency `(u, v)` — the
-    * shared round loop of [[dedupComponentsDf]],
-    * [[dedupComponentsGuarded]] and [[winnowComponents]] (labels seed
-    * at min(u, N(u)); each round folds in the neighborhood minimum;
-    * fixpoint = component minima, GraphX's convention). Returns the
-    * converged `(u, l)` labels, one row per vertex of `adj`.
-    *
-    * r18 optimization (guide §2.4 — share exchanges): a round used to
-    * run edges⋈labels(on v) → groupBy(u) → labels⋈(on u) — the second
-    * join existed only to compare the new neighborhood minimum with
-    * the vertex's own label. Folding the own label INTO the aggregate
-    * as a unioned row (marked via a second column so the old label
-    * comes back out of the same groupBy) removes that join and its
-    * exchange: a round is now join(v) → union → groupBy(u), two
-    * shuffles instead of three, with identical results —
-    * min(neighbor labels ∪ {own}) = least(own, neighbor-min), and
-    * moved ⇔ new label strictly below own ⇔ the old form's
-    * (ln < l). Honest local measurement: NEUTRAL at sf0.1 (the label
-    * frame is KB-sized there, so AQE broadcast both old joins and the
-    * dropped exchange was nearly free); the win is the at-scale shape,
-    * where a data-sized label frame pays a real shuffle join per
-    * round. Each round still ends in ONE localCheckpoint carrying its
-    * own `moved` flag (the convergence test reads the checkpoint, no
-    * re-join). */
-  /** Session-unique suffix source for the fixpoint's observed-metric
-    * names (an [[org.apache.spark.sql.Observation]] name must not be
-    * shared across concurrent queries). */
-  private val ccObsId = new java.util.concurrent.atomic.AtomicLong(0L)
-
-  private def minLabelFixpoint(adj: DataFrame): DataFrame =
-    minLabelFixpointWithRounds(adj)._1
-
-  /** [[minLabelFixpoint]] with its round count exposed — the spec pins
-    * the pointer-doubling round bound on a crafted path graph. */
-  private[graft] def minLabelFixpointWithRounds(
-      adj: DataFrame): (DataFrame, Int) = {
-    val ownT = adj.schema("v").dataType
-    var labels = adj.groupBy("u")
-      .agg(min(col("v")).as("mv"))
-      .select(col("u"), least(col("mv"), col("u")).as("l"))
-      .localCheckpoint()
-    var converged = false
-    var rounds = 0
-    while (!converged) {
-      // Neighbor-min step (the r18 shared-exchange form: own label
-      // folded into the aggregate as a unioned row).
-      val stepped = adj
-        .join(labels.select(col("u").as("v"), col("l").as("lv")), "v")
-        .select(col("u"), col("lv"), lit(null).cast(ownT).as("own"))
-        .unionByName(labels.select(col("u"), col("l").as("lv"),
-          col("l").as("own")))
-        .groupBy("u")
-        .agg(min(col("lv")).as("l"), min(col("own")).as("own"))
-      // r19 (verdict order #4): ONE pointer-doubling hop — adopt
-      // l(l(u)) off the stepped map. Every label value is itself a
-      // vertex with its own row (labels are mins over vertex ids; the
-      // own-row union keeps every vertex present), so the self-join
-      // resolves; left_outer + coalesce keeps correctness independent
-      // of that invariant. Measured on the sf0.1 near-dup graph:
-      // rounds 18 → 13. A SECOND composed hop was A/B'd and rejected
-      // — it cut zero further rounds (the residual round count is
-      // bounded by neighbor-propagation distance through the graph,
-      // not by pointer-chain depth: mid-path vertices' labels point
-      // at local minima, so deeper jumps land off the min's path) and
-      // its extra join cost ~+0.8 s. The fixpoint (labels = component
-      // minima) and the convergence test (any label strictly below
-      // the round-start own) are unchanged, so the emitted labels are
-      // identical.
-      val hop = stepped.select(col("u").as("hu"), col("l").as("hl"))
-      // Convergence rides an OBSERVED metric on the checkpoint job
-      // itself ("fold the convergence test into the checkpoint
-      // action"): the moved-row count is collected by the same action
-      // that materializes the round, so a round costs exactly ONE
-      // Spark job instead of checkpoint + isEmpty.
-      val obs = org.apache.spark.sql.Observation(
-        s"cc_moved_${ccObsId.incrementAndGet()}")
-      val next = stepped
-        .join(hop, col("l") === col("hu"), "left_outer")
-        .select(col("u"),
-          least(col("l"), coalesce(col("hl"), col("l"))).as("l2"),
-          col("own"))
-        .select(col("u"), col("l2").as("l"),
-          (col("l2") < col("own")).as("moved"))
-        .observe(obs, count(when(col("moved"), lit(1))).as("n_moved"))
-        .localCheckpoint()
-      converged = obs.get("n_moved").asInstanceOf[Long] == 0L
-      labels = next.select("u", "l")
-      rounds += 1
-    }
-    (labels, rounds)
-  }
 
   /** Near-dup degree above which a document is a HUB for
     * [[dedupComponentsGuarded]] (shared with the oracle). Shipped-corpus
@@ -2584,43 +2379,22 @@ object TextOps {
     * boilerplate-heavy crawl is where it matters. */
   val TextDupDegreeCap = 5
 
-  /** DENSITY-GUARDED text CC — [[dedupComponentsDf]] with the
-    * [[MultiModalOps.imageDupClusters]] degree guard applied to the
-    * DOCUMENT graph: a doc whose verified near-dup degree exceeds
-    * [[TextDupDegreeCap]] is a HUB (template/boilerplate family
-    * center — exactly what [[pageRankNearDup]] scores high), its edges
-    * are excluded from the closure, and it emits as its own flagged
-    * singleton component. This is the structural answer to CC's
-    * over-merge failure mode at corpus scale: transitive chains
-    * A≈B≈C≈… through template pages merge unrelated content; cutting
-    * at the high-degree nodes bounds every component's diameter
-    * through hubs at zero while keeping genuine pairwise clusters
-    * intact. Universe and labels otherwise identical to the unguarded
-    * twin; the oracle runs the same degree predicate inside its
-    * recursive closure, so the guard itself is hash-verified. */
-  def dedupComponentsGuarded(spark: SparkSession, dir: String): DataFrame = {
-    val pairs = nearDupPairsCore(spark, dir)
-    val adj = pairs.select(col("doc_a").as("u"), col("doc_b").as("v"))
-      .unionByName(pairs.select(col("doc_b").as("u"), col("doc_a").as("v")))
-      .localCheckpoint() // degree census + guarded closure both read it
-    val hubs = adj.groupBy("u")
-      .agg(count(lit(1)).as("deg"))
-      .filter(col("deg") > TextDupDegreeCap)
-      .select(col("u"))
-    val gAdj = adj
-      .join(hubs, Seq("u"), "left_anti")
-      .join(hubs.select(col("u").as("v")), Seq("v"), "left_anti")
-    // Round loop shared with the unguarded twin — see
-    // [[minLabelFixpoint]] (r18: one exchange per round removed).
-    val labels = minLabelFixpoint(gAdj)
-    adj.select("u").distinct()
-      .join(labels, Seq("u"), "left")
-      .join(hubs.select(col("u"), lit(true).as("hub")), Seq("u"), "left")
-      .select(col("u").as("doc_id"),
-        coalesce(col("l"), col("u")).as("component_id"),
-        coalesce(col("hub"), lit(false)).as("is_hub"))
+  /** DENSITY-GUARDED text CC — [[dedupComponents]] with the hub guard
+    * of [[Components.label]] at [[TextDupDegreeCap]]: a doc whose
+    * verified near-dup degree exceeds the cap is a HUB (a
+    * template/boilerplate family centre — exactly what
+    * [[pageRankNearDup]] scores high), its edges are excluded from the
+    * closure, and it emits as its own flagged singleton component. This
+    * is the structural answer to CC's over-merge failure mode at corpus
+    * scale: transitive chains A≈B≈C≈… through template pages merge
+    * unrelated content; cutting at the high-degree nodes keeps genuine
+    * pairwise clusters intact. The oracle runs the same degree predicate
+    * inside its recursive closure, so the guard itself is hash-verified. */
+  def dedupComponentsGuarded(spark: SparkSession, dir: String): DataFrame =
+    Components.label(nearDupPairsCore(spark, dir).select("doc_a", "doc_b"),
+        Some(TextDupDegreeCap))
+      .select(col("v").as("doc_id"), col("component_id"), col("is_hub"))
       .orderBy("doc_id")
-  }
 
   /** DuckDB oracle for [[dedupComponentsGuarded]] — same capped pair
     * base, same degree predicate, same guarded recursive closure. */
@@ -2654,21 +2428,21 @@ object TextOps {
     * for consumers that join the labels onward (a pre-join sort would be
     * executed, then destroyed by the join shuffle) — as the session memo
     * of the CC labels. The labels frame is the dedup pipeline's
-    * materialized intermediate: [[dedupComponents]] and
-    * [[nearDupSurvivors]] both consume it, and at 100 TB you would
-    * persist it once and fan out — recomputing the whole
-    * candidates→verify→CC pipeline per consumer is the anti-pattern (r9
-    * bench: each consumer paid ~3.4 s for an identical Pregel run). The
-    * cached frame is the localCheckpoint'd label set (docs with ≥1
-    * near-dup pair only — KBs, not corpus-sized), so the memo's block
-    * footprint is negligible. */
+    * materialized intermediate: [[dedupComponents]], [[nearDupSurvivors]],
+    * [[dedupBestSurvivors]], [[dedupWeights]] and [[dedupWaterfall]] all
+    * consume it, and at 100 TB you would persist it once and fan out
+    * rather than rerun the whole candidates→verify→CC pipeline per
+    * consumer. The cached frame is the localCheckpoint'd label set (docs
+    * with ≥1 near-dup pair only — KBs, not corpus-sized), so the memo's
+    * block footprint is negligible. */
   private def dedupComponentsCore(spark: SparkSession,
       dir: String): DataFrame =
     graft.Memos.memo("cc_labels", spark, Seq(dir))(
-      dedupComponentsUncached(spark, dir))
+      Components.label(nearDupPairsCore(spark, dir).select("doc_a", "doc_b"))
+        .select(col("v").as("doc_id"), col("component_id")))
 
   /** Session memo of the verified capped near-dup PAIR set — the edge
-    * list both graph consumers ([[dedupComponentsUncached]]'s CC and
+    * list the graph consumers (the near-dup components and
     * [[pageRankNearDup]]) build on; the checkpointed frame is
     * pair-count-sized (KBs).
     *
@@ -2676,9 +2450,7 @@ object TextOps {
     * [[dedupFeatures]] needs the score, [[nearDupJaccardCapped]] IS
     * this frame re-emitted, every graph consumer just ignores the
     * trailing columns, and keeping one memo (not several) means one
-    * checkpoint and one pipeline run feed ALL pair consumers. Column
-    * ORDER (doc_a, doc_b, …) is load-bearing:
-    * [[dedupComponentsUncached]] reads positionally. */
+    * checkpoint and one pipeline run feed ALL pair consumers. */
   private def nearDupPairsCore(spark: SparkSession,
       dir: String): DataFrame =
     graft.Memos.memo("neardup_pairs", spark, Seq(dir))(
@@ -2706,29 +2478,6 @@ object TextOps {
       .select(col("doc_a"), col("doc_b"), col("n_inter"), col("n_union"),
         col("jaccard"))
       .orderBy("doc_a", "doc_b")
-
-  /** The actual candidates→verify→CC pipeline behind [[dedupComponentsCore]]. */
-  private def dedupComponentsUncached(spark: SparkSession,
-      dir: String): DataFrame = {
-    import org.apache.spark.graphx.{Edge, Graph}
-    val pairs = nearDupPairsCore(spark, dir)
-    val edgeRdd = pairs.rdd.map(r => Edge(r.getLong(0), r.getLong(1), ()))
-    val g = Graph.fromEdges(edgeRdd, ())
-    val cc = g.connectedComponents()
-    // Pregel runs eagerly, so the labels exist now; checkpoint the SMALL
-    // result (vertices with ≥1 near-dup pair only) and release the
-    // graph's cached vertex/edge RDDs deterministically — without this,
-    // every invocation (bench: warmup + 3 timed runs × 2 consumers)
-    // leaves a full graph's cached partitions in the block manager until
-    // RDD GC, the exact accretion class the bench hunts.
-    val out = spark.createDataFrame(cc.vertices)
-      .toDF("doc_id", "component_id").localCheckpoint()
-    cc.unpersistVertices(blocking = false)
-    cc.edges.unpersist(blocking = false)
-    g.unpersistVertices(blocking = false)
-    g.edges.unpersist(blocking = false)
-    out
-  }
 
   /** The dedup pipeline's FINAL step: the corpus with near-duplicate
     * clusters collapsed to one representative each. A document survives
@@ -3065,7 +2814,7 @@ object TextOps {
     * Scale shape: each peel round is one semi-join of the blocked,
     * capped edge set against the shrinking alive set + one degree
     * aggregate — never corpus-sized, lineage cut per round
-    * (localCheckpoint) exactly like the CC fixpoint twin. */
+    * (localCheckpoint). */
   def kcoreNearDup(spark: SparkSession, dir: String): DataFrame = {
     val edges = kcoreEdges(spark, dir)
     val initDeg = edges.groupBy("src").agg(count(lit(1)).as("deg0"))
@@ -7419,51 +7168,25 @@ object TextOps {
   val WinnowCompMille = 250
 
   /** WINNOW COMPONENTS — the cluster step of the MOSS family: the
-    * density-guarded DataFrame connected components
-    * ([[dedupComponentsGuarded]]'s device verbatim) over the
-    * [[winnowPairs]] edge set at the [[WinnowCompMille]] overlap
-    * floor. This closes the passage-copy loop the family opened:
-    * doc-level Jaccard DILUTES passage-level copying (the
-    * [[winnowMatchSpans]] motivation), so template/boilerplate
-    * families that share passages — not whole documents — never reach
-    * the shingle pipeline's components; here they collapse to
-    * representatives too. Same hub rule as the text graph: a doc whose
-    * winnow degree exceeds [[TextDupDegreeCap]] is a template carrier,
-    * its edges are cut from the closure, and it emits as its own
-    * flagged singleton — transitive chains THROUGH templates must not
-    * merge unrelated content.
-    *
-    * Scale shape: edges are the KB-sized [[winnowPairsCore]]
-    * checkpoint filtered by one predicate; every CC round is a hash
-    * join + (vertex) aggregate over edge-count-sized frames with
-    * checkpointed labels (flat lineage), converging in O(log
-    * diameter) rounds (pointer-doubled). */
-  def winnowComponents(spark: SparkSession, dir: String): DataFrame = {
-    val pairs = winnowPairsCore(spark, dir)
-      .filter(col("overlap_mille") >= WinnowCompMille)
-      .select(col("doc_a"), col("doc_b"))
-    val adj = pairs.select(col("doc_a").as("u"), col("doc_b").as("v"))
-      .unionByName(pairs.select(col("doc_b").as("u"),
-        col("doc_a").as("v")))
-      .localCheckpoint() // degree census + closure + universe read it
-    val hubs = adj.groupBy("u")
-      .agg(count(lit(1)).as("deg"))
-      .filter(col("deg") > TextDupDegreeCap)
-      .select(col("u"))
-    val gAdj = adj
-      .join(hubs, Seq("u"), "left_anti")
-      .join(hubs.select(col("u").as("v")), Seq("v"), "left_anti")
-    // Round loop shared with the jaccard CC twins — see
-    // [[minLabelFixpoint]] (r18: one exchange per round removed).
-    val labels = minLabelFixpoint(gAdj)
-    adj.select("u").distinct()
-      .join(labels, Seq("u"), "left")
-      .join(hubs.select(col("u"), lit(true).as("hub")), Seq("u"), "left")
-      .select(col("u").as("doc_id"),
-        coalesce(col("l"), col("u")).as("component_id"),
-        coalesce(col("hub"), lit(false)).as("is_hub"))
+    * density-guarded connected components of [[dedupComponentsGuarded]]
+    * ([[Components.label]] at [[TextDupDegreeCap]]) over the
+    * [[winnowPairs]] edge set at the [[WinnowCompMille]] overlap floor.
+    * This closes the passage-copy loop the family opened: doc-level
+    * Jaccard DILUTES passage-level copying (the [[winnowMatchSpans]]
+    * motivation), so template/boilerplate families that share passages —
+    * not whole documents — never reach the shingle pipeline's
+    * components; here they collapse to representatives too. Same hub
+    * rule as the text graph: a doc whose winnow degree exceeds the cap is
+    * a template carrier, its edges are cut from the closure, and it emits
+    * as its own flagged singleton — transitive chains THROUGH templates
+    * must not merge unrelated content. Edges are the KB-sized
+    * [[winnowPairsCore]] checkpoint filtered by one predicate. */
+  def winnowComponents(spark: SparkSession, dir: String): DataFrame =
+    Components.label(winnowPairsCore(spark, dir)
+        .filter(col("overlap_mille") >= WinnowCompMille)
+        .select(col("doc_a"), col("doc_b")), Some(TextDupDegreeCap))
+      .select(col("v").as("doc_id"), col("component_id"), col("is_hub"))
       .orderBy("doc_id")
-  }
 
   /** DuckDB oracle for [[winnowComponents]] — the [[winnowPairs]]
     * oracle as the edge base, the same degree predicate, the same

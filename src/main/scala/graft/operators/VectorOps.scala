@@ -2121,38 +2121,27 @@ object VectorOps {
        |WHERE cosine >= $NearDupMinCosine
        |ORDER BY 1, 2""".stripMargin
 
-  /** SEMANTIC dedup survivors — the embedding-space mirror of
-    * `TextOps.nearDupSurvivors`: cosine near-dup pairs (LSH-blocked)
-    * become connected components (GraphX CC, labels = component-min
-    * vec_id), and the corpus keeps each component's representative plus
-    * every unclustered vector. Completes the semantic-dedup path
-    * candidates → threshold → cluster → survivors; same graph-cache
-    * release discipline as the text-side components. */
-  /** Semantic CC labels (vec_id, component_id), memoized per
-    * (session, dir) — shared by [[semanticDedupSurvivors]] and the
-    * dedup-waterfall provenance report. The checkpointed frame is
-    * component-member-sized (KBs). Without the memo each caller re-ran
-    * the LSH scoring + a fresh GraphX Pregel job (the r9 accretion
-    * anti-pattern the text memos exist to prevent). */
+  /** Semantic CC labels (vec_id, component_id): connected components
+    * over the cosine near-dup pairs ([[Components.label]], labels =
+    * component-min vec_id), memoized per (session, dir) and shared by
+    * [[semanticDedupSurvivors]] and the dedup-waterfall provenance
+    * report, so neither re-runs the LSH scoring and the component search.
+    * The checkpointed frame is component-member-sized (KBs). */
   private[graft] def semanticCcLabels(spark: SparkSession,
       dir: String): DataFrame =
     graft.Memos.memo("semantic_cc_labels", spark, Seq(dir)) {
-      import org.apache.spark.graphx.{Edge, Graph}
-      val pairs = lshScoredPairs(spark, dir)
-        .filter(col("cosine") >= NearDupMinCosine)
-        .select(col("a"), col("b"))
-      val g = Graph.fromEdges(
-        pairs.rdd.map(r => Edge(r.getLong(0), r.getLong(1), ())), ())
-      val cc = g.connectedComponents()
-      val labels = spark.createDataFrame(cc.vertices)
-        .toDF("vec_id", "component_id").localCheckpoint()
-      cc.unpersistVertices(blocking = false)
-      cc.edges.unpersist(blocking = false)
-      g.unpersistVertices(blocking = false)
-      g.edges.unpersist(blocking = false)
-      labels
+      Components.label(lshScoredPairs(spark, dir)
+          .filter(col("cosine") >= NearDupMinCosine)
+          .select(col("a"), col("b")))
+        .select(col("v").as("vec_id"), col("component_id"))
     }
 
+  /** SEMANTIC dedup survivors — the embedding-space mirror of
+    * `TextOps.nearDupSurvivors`: cosine near-dup pairs (LSH-blocked)
+    * become connected components, and the corpus keeps each component's
+    * representative (its minimum vec_id) plus every unclustered vector.
+    * Completes the semantic-dedup path candidates → threshold → cluster
+    * → survivors. */
   def semanticDedupSurvivors(spark: SparkSession, dir: String): DataFrame = {
     val dropped = semanticCcLabels(spark, dir)
       .filter(col("vec_id") =!= col("component_id"))

@@ -6,9 +6,10 @@ import scala.util.matching.Regex
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Source-scan guard for the engine's one front door: sessions are built
-  * only by [[Session.local]] and native functions are registered only by
-  * [[graft.functions.Natives.ensure]], so a second copy of either, free to
-  * drift from the first, fails here. Matches run over whole files, so a
+  * only by [[Session.local]], native functions are registered only by
+  * [[graft.functions.Natives.ensure]] and connected components are
+  * computed only by [[graft.operators.Components.label]], so a second copy
+  * of any of them, free to drift from the first, fails here. Matches run over whole files, so a
   * call wrapped across lines is still found; matches on comment lines are
   * skipped. */
 class FrontDoorSpec extends AnyFunSuite {
@@ -35,5 +36,11 @@ class FrontDoorSpec extends AnyFunSuite {
     assert(filesMatching(
       """createOrReplaceTempFunction|registerFunction""".r) ===
       Set("Natives.scala"))
+  }
+
+  test("only Components.scala runs connected components") {
+    assert(filesMatching(
+      """connectedComponents|Graph\s*\.\s*fromEdges""".r) ===
+      Set("Components.scala"))
   }
 }

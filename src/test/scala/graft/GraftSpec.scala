@@ -5,14 +5,19 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Shared test harness: one local session per suite, plus a scratch dir
+object GraftSpec {
+  /** The one session of the test JVM, built on first use and shared by
+    * every suite. Tests run on 4 cores whatever `SPARK_GRAFT_CPUS` says. */
+  lazy val session: SparkSession = Session.local(4)
+}
+
+/** Shared test harness: the JVM's one local session, plus a scratch dir
   * where suites materialize tiny parquet fixtures shaped like the testdata
   * tables (the operators' API takes a table directory, so boundary cases
   * are expressed as miniature table dirs, not mocks). */
 trait GraftSpec extends AnyFunSuite with BeforeAndAfterAll {
 
-  /** Tests run on 4 cores whatever `SPARK_GRAFT_CPUS` says. */
-  lazy val spark: SparkSession = Session.local(4)
+  lazy val spark: SparkSession = GraftSpec.session
 
   lazy val scratch: String =
     Files.createTempDirectory("graft-test-").toString

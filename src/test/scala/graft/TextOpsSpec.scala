@@ -181,41 +181,6 @@ class TextOpsSpec extends GraftSpec {
     assert(pr(1L)._2 > pr(2L)._2, "hub must outrank leaves")
   }
 
-  test("pointer doubling closes a 16-path in O(log d) rounds") {
-    // Path graph 1-2-…-16 (diameter 15): plain min-label propagation
-    // needs 15 rounds for the minimum to reach vertex 16; with the
-    // label(label(v)) hop the deficit grows 1→4→10→22, so labels hit
-    // the fixpoint in round 3 and round 4 detects convergence.
-    val path = (1 to 15).map(i => (i.toLong, (i + 1).toLong))
-    val e = path.toDF("doc_a", "doc_b")
-    val sym = e.unionByName(
-      e.select($"doc_b".as("doc_a"), $"doc_a".as("doc_b")))
-    val (labels, rounds) = TextOps.propagateMinLabels(sym)
-    val got = labels.collect()
-      .map(r => r.getAs[Long]("v") -> r.getAs[Long]("label")).toMap
-    assert(got.size == 16 && got.values.forall(_ == 1L), s"bad labels: $got")
-    assert(rounds <= 5,
-      s"pointer doubling should close a 16-path in ~4 rounds, took $rounds")
-  }
-
-  test("CC fixpoint closes a 16-path in O(log d) rounds with min labels") {
-    // r19: minLabelFixpoint (the shared round loop of the three CC
-    // queries) gained the same label(label(u)) hop as
-    // propagateMinLabels — a path graph that plain neighbor-min
-    // propagation closes in diameter rounds must now close in ~log d,
-    // with the labels unchanged (every vertex → component min).
-    val path = (1 to 15).map(i => (i.toLong, (i + 1).toLong))
-    val e = path.toDF("u", "v")
-    val sym = e.unionByName(e.select($"v".as("u"), $"u".as("v")))
-    val (labels, rounds) = TextOps.minLabelFixpointWithRounds(sym)
-    val got = labels.collect()
-      .map(r => r.getAs[Long]("u") -> r.getAs[Long]("l")).toMap
-    assert(got.size == 16 && got.values.forall(_ == 1L), s"bad labels: $got")
-    assert(rounds <= 6,
-      s"hopped min-label fixpoint should close a 16-path in ~5 rounds, " +
-        s"took $rounds")
-  }
-
   test("split assignment is total and stable across calls") {
     val a = TextOps.trainValSplit(spark, scratch).collect()
     val b = TextOps.trainValSplit(spark, scratch).collect()

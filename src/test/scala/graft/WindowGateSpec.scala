@@ -205,8 +205,8 @@ class WindowGateSpec extends AnyFunSuite {
       "day grain: calendar-bounded",
     ("CdcOps.scala", "cumulativeReachOf") ->
       "day-spine grain: calendar-bounded",
-    ("MultiModalOps.scala", "u32") ->
-      "status-enum grain (audioFormatCensus total): 4 statuses",
+    ("MultiModalOps.scala", "codecIntegrityScreen") ->
+      "status-enum grain: 4 statuses",
     ("TextOps.scala", "curriculumInterleave") ->
       "distinct-source grain: source enum (~5)",
     ("TextOps.scala", "qualityCalibration") ->
