@@ -2,7 +2,9 @@ package graft
 
 import java.nio.file.Files
 import org.apache.logging.log4j.Level
-import org.apache.logging.log4j.core.config.Configurator
+import org.apache.logging.log4j.core.{Filter, LoggerContext}
+import org.apache.logging.log4j.core.config.{Configurator, LoggerConfig}
+import org.apache.logging.log4j.core.filter.StringMatchFilter
 import org.apache.spark.sql.SparkSession
 
 /** The one way the engine builds a session. Every main and the test
@@ -55,6 +57,30 @@ object Session {
     // WARN adds nothing.
     Configurator.setLevel(
       "org.apache.spark.sql.execution.window.WindowExec", Level.ERROR)
+    dropStreamingAqeNotices()
     spark
+  }
+
+  /** Spark WARNs once or twice per streaming query start that it turns
+    * AQE off: `MicroBatchExecution` for every stateful plan whatever the
+    * session conf says, and `ResolveWriteToStream` whenever AQE is on in
+    * the session, which batch queries need. No caller can act on either,
+    * so exactly these two messages are dropped; every other message of
+    * the two loggers still prints at the root level. */
+  private def dropStreamingAqeNotices(): Unit = {
+    val ctx = LoggerContext.getContext(false)
+    Seq(
+      "ResolveWriteToStream" -> "is not supported in streaming DataFrames",
+      "MicroBatchExecution" -> "Disabling AQE since AQE is not supported in stateful"
+    ).foreach { case (cls, text) =>
+      val name = s"org.apache.spark.sql.execution.streaming.runtime.$cls"
+      val lc = new LoggerConfig(name, null, true) // null level: the parent's
+      lc.addFilter(StringMatchFilter.newBuilder().setMatchString(text)
+        .setOnMatch(Filter.Result.DENY).setOnMismatch(Filter.Result.NEUTRAL)
+        .build())
+      // putIfAbsent: a later session in the same JVM keeps the first.
+      ctx.getConfiguration.addLogger(name, lc)
+    }
+    ctx.updateLoggers()
   }
 }

@@ -5326,7 +5326,7 @@ object TextOps {
     * `near` at [[IngestNearShare]] chunk overlap ⊃ `partial` ⊃
     * `novel`), with "seen" = "a STRICTLY smaller doc_id carries the
     * same fingerprint". [[graft.streaming.StreamOps.firstSeenScreenStream]]
-    * is the live twin: same fingerprints held in keyed RocksDB state,
+    * is the live twin: same fingerprints held in keyed streaming state,
     * spec-pinned to emit identical verdicts on a replayed sequence.
     *
     * Scale shape: first-occurrence is `min(doc_id)` per fingerprint —

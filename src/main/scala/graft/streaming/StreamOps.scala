@@ -78,11 +78,11 @@ case class FpSeen(doc_id: Long, kind: String, shared: Boolean,
 case class FunnelEvent(user_id: Long, event_type: String, ts_us: Long,
     event_id: Long)
 
-/** Per-user funnel anchors held in [[FunnelProcessor]]'s value state:
-  * micros of the first view / first strictly-later click / first
-  * strictly-later purchase. 0 = step not reached (epoch-0 events are
-  * out of the data contract — documented sentinel, one long cheaper
-  * than three Options in RocksDB). */
+/** Per-user funnel anchors held in [[StreamOps.eventFunnelStream]]'s
+  * keyed state: micros of the first view / first strictly-later click /
+  * first strictly-later purchase. 0 = step not reached (epoch-0 events
+  * are out of the data contract — documented sentinel, one long cheaper
+  * than three Options in state). */
 case class FunnelAnchors(a0_us: Long, a1_us: Long, a2_us: Long)
 
 /** [[StreamOps.eventFunnelStream]] output: the user's current funnel
@@ -97,6 +97,10 @@ case class DocArrival(doc_id: Long, lang: String, n_chars: Long)
 /** One register of the streaming bottom-k sketch: the md5-derived
   * draw `u` decides survival, `v` is the sketched value. */
 case class SketchReg(u: Long, doc_id: Long, v: Long)
+
+/** Per-language state of [[StreamOps.quantileSketchStream]]: the
+  * bottom-k registers and the number of docs the key has seen. */
+case class SketchState(regs: Seq[SketchReg], n_seen: Long)
 
 /** [[StreamOps.quantileSketchStream]] output: the per-language sketch
   * after a micro-batch — total docs this key has ever seen (strictly
@@ -127,11 +131,18 @@ case class DocScreen(doc_id: Long, n_fp: Long, n_hits: Long,
   * (`stream_processor.py:56`) — a documented semantic upgrade (SURVEY
   * §2.7 T8).
   *
+  * Keyed state has one API: every arbitrary-state surface is a
+  * `mapGroupsWithState`/`flatMapGroupsWithState` fold (the reference's
+  * keyed mutable state, `stream_processor.py:111-125,197-212`), and the
+  * emit-once ledgers are `dropDuplicates`. All of them run on the default
+  * state store and recover from the checkpoint on restart.
+  *
   * Scale posture: every stateful operator keys on user_id/event_type —
   * state is hash-partitioned across executors, no driver state, and
   * watermarks bound window state. At 100 TB/day the knobs are RocksDB state
   * store + `spark.sql.shuffle.partitions` sized to the key cardinality;
-  * nothing here collects to the driver.
+  * both are session confs, not code paths. Nothing here collects to the
+  * driver.
   */
 object StreamOps {
 
@@ -463,19 +474,20 @@ object StreamOps {
   }
 
   /** STATEFUL first-seen dedup screen — the live twin of
-    * `TextOps.firstSeenScreen`, on `transformWithState`: where
-    * [[ingestScreen]] screens against a FIXED corpus statelessly, this
-    * one screens each arrival
-    * against EVERYTHING THAT ARRIVED BEFORE IT and grows the seen-set
-    * as it goes — the semantics of a continuously-ingesting dedup
-    * gate. Each doc fans out to its fingerprints (one whole-text hash
-    * + one hash per 64/48-token chunk, the exact `docChunks` geometry;
-    * a null text gets a per-doc sentinel so it still emits);
-    * [[FirstSeenProcessor]] holds min-arrived-doc_id PER FINGERPRINT
-    * in keyed value state (RocksDB at scale — state cardinality is the
-    * distinct-fingerprint count, the same set the batch screen's
-    * aggregate materializes) and flags a fingerprint `shared` iff a
-    * strictly smaller doc_id already carried it. Verdict assembly is
+    * `TextOps.firstSeenScreen`: where [[ingestScreen]] screens against a
+    * FIXED corpus statelessly, this one screens each arrival against
+    * EVERYTHING THAT ARRIVED BEFORE IT and grows the seen-set as it
+    * goes — the semantics of a continuously-ingesting dedup gate. Each
+    * doc fans out to its fingerprints (one whole-text hash + one hash
+    * per 64/48-token chunk, the exact `docChunks` geometry; a null text
+    * gets a per-doc sentinel so it still emits). Keyed state holds ONE
+    * long per fingerprint, the min arrived doc_id (state cardinality is
+    * the distinct-fingerprint count, the same set the batch screen's
+    * aggregate materializes), and a row is `shared` iff a STRICTLY
+    * smaller doc_id carried the fingerprint — from a previous batch
+    * (state) or earlier in this batch's key group. Two occurrences
+    * inside one doc never mark each other shared (strict `<`, the batch
+    * operator's `first_doc < doc_id`). Verdict assembly is
     * [[firstSeenVerdicts]] — a PLAIN per-batch aggregation, because
     * every doc's fingerprint rows emit inside the doc's own
     * micro-batch (the stateful stage is row-in/row-out).
@@ -483,9 +495,12 @@ object StreamOps {
     * Replay contract (spec-pinned): streaming the corpus in doc_id
     * order — in ANY micro-batch slicing — emits exactly the batch
     * operator's verdicts, because "strictly smaller doc_id seen
-    * before" is slicing-invariant under ordered replay: the processor
-    * folds in-batch rows in doc_id order against state that holds the
-    * min of all earlier batches. */
+    * before" is slicing-invariant under ordered replay: the fold sorts
+    * its bounded per-key slice by doc_id (Spark does not order group
+    * iterators) and runs against state that holds the min of all
+    * earlier batches. State never expires: the seen-set IS the product,
+    * bounded by upstream retention, not by a TTL that would silently
+    * re-admit old duplicates. */
   def firstSeenScreenStream(docs: DataFrame): Dataset[FpSeen] = {
     import graft.operators.TextOps.{ChunkStride, ChunkTokens}
     import docs.sparkSession.implicits._
@@ -509,9 +524,18 @@ object StreamOps {
         col("f.kind").as("kind"), col("n_chunks"))
       .as[DocFingerprint]
       .groupByKey(_.fp)
-      .transformWithState(new FirstSeenProcessor,
-        org.apache.spark.sql.streaming.TimeMode.None(),
-        OutputMode.Update())
+      .flatMapGroupsWithState[Long, FpSeen](
+        OutputMode.Update, GroupStateTimeout.NoTimeout) {
+        case (_, rows, firstDoc) =>
+          var minSeen = firstDoc.getOption.getOrElse(Long.MaxValue)
+          val out = rows.toSeq.sortBy(_.doc_id).map { r =>
+            val shared = minSeen < r.doc_id
+            if (r.doc_id < minSeen) minSeen = r.doc_id
+            FpSeen(r.doc_id, r.kind, shared, r.n_chunks)
+          }
+          firstDoc.update(minSeen)
+          out.iterator
+      }
   }
 
   /** Per-doc verdict assembly over [[FpSeen]] rows — shared by the
@@ -538,10 +562,9 @@ object StreamOps {
   }
 
   /** LIVE ordered-step funnel — the streaming twin of
-    * `CdcOps.eventFunnel`, on `transformWithState`: per-user anchors
-    * for "view, then click STRICTLY after the first view, then
-    * purchase strictly after that first
-    * qualifying click", held as three micros longs of keyed value
+    * `CdcOps.eventFunnel`: per-user anchors for "view, then click
+    * STRICTLY after the first view, then purchase strictly after that
+    * first qualifying click", held as three micros longs of keyed
     * state and advanced MONOTONICALLY (an anchor, once set, never
     * moves — exactly the batch operator's chained conditional
     * first-occurrence semantics, which on an ordered replay a forward
@@ -553,15 +576,17 @@ object StreamOps {
     * Replay contract (spec-pinned): streaming events in (ts, event_id)
     * order — in ANY micro-batch slicing — yields the batch funnel,
     * because anchor advancement is slicing-invariant under ordered
-    * replay: the in-batch fold runs in (ts_us, event_id) order (Spark
-    * does not order group iterators, so the fold sorts its bounded
-    * per-key slice first) against state holding all earlier batches'
-    * anchors. Same-instant ties do NOT advance (strict `>`, pinned
-    * both sides). State: 3 longs per user who ever viewed —
-    * entity-bounded, the same cardinality class as T3/T5 keyed state;
-    * never expires for the same reason the first-seen screen's
-    * doesn't (an expired anchor would silently re-admit a conversion
-    * already counted). */
+    * replay: the in-batch fold resolves each step to the minimum
+    * qualifying timestamp, which is what a fold in timestamp order
+    * computes, against state holding all earlier batches' anchors.
+    * Same-instant ties do NOT advance (strict `>`, pinned both sides).
+    * An optional conversion deadline (`windowUs`) needs no extra state:
+    * it is first-view + window, recomputed from the stored anchor and
+    * inclusive at the boundary (`CdcOps.eventFunnelWindowed`'s rule).
+    * State: 3 longs per user who ever viewed — entity-bounded, the same
+    * cardinality class as T3/T5 keyed state; never expires for the same
+    * reason the first-seen screen's doesn't (an expired anchor would
+    * silently re-admit a conversion already counted). */
   def eventFunnelStream(events: Dataset[Event],
       windowUs: Option[Long] = None): Dataset[FunnelReach] = {
     import events.sparkSession.implicits._
@@ -572,15 +597,69 @@ object StreamOps {
         unix_micros(col("ts")).as("ts_us"), col("event_id"))
       .as[FunnelEvent]
       .groupByKey(_.user_id)
-      .transformWithState(new FunnelProcessor(windowUs),
-        org.apache.spark.sql.streaming.TimeMode.None(),
-        OutputMode.Update())
+      .flatMapGroupsWithState[FunnelAnchors, FunnelReach](
+        OutputMode.Update, GroupStateTimeout.NoTimeout) {
+        case (user, rows, anchors) =>
+          var st = anchors.getOption.getOrElse(FunnelAnchors(0L, 0L, 0L))
+          def inWindow(a0: Long, ts: Long): Boolean =
+            windowUs.forall(w => ts <= a0 + w)
+          // ONE pass over the batch slice, no sort, no row buffer: a step
+          // whose predecessor anchor is already FIXED at batch entry folds
+          // to a running min online (its qualifying predicate is a
+          // constant); only a step whose predecessor may still advance
+          // WITHIN this batch buffers its bare timestamps, because the
+          // chained minimum needs the predecessor's final value. So a user
+          // with a0 and a1 set costs O(1); an open chain costs at most its
+          // step-1/step-2 longs in the batch slice.
+          val a0Fixed = st.a0_us != 0L
+          val a1Fixed = st.a1_us != 0L
+          var m0 = Long.MaxValue; var m1 = Long.MaxValue
+          var m2 = Long.MaxValue
+          val buf1 = scala.collection.mutable.ArrayBuffer.empty[Long]
+          val buf2 = scala.collection.mutable.ArrayBuffer.empty[Long]
+          rows.foreach { r =>
+            if (r.event_type == steps(0)) {
+              if (!a0Fixed && r.ts_us < m0) m0 = r.ts_us
+            } else if (r.event_type == steps(1)) {
+              if (st.a1_us == 0L) {
+                if (a0Fixed) {
+                  if (r.ts_us > st.a0_us && inWindow(st.a0_us, r.ts_us) &&
+                    r.ts_us < m1) m1 = r.ts_us
+                } else buf1 += r.ts_us
+              }
+            } else if (r.event_type == steps(2)) {
+              if (st.a2_us == 0L) {
+                if (a1Fixed) {
+                  if (r.ts_us > st.a1_us && inWindow(st.a0_us, r.ts_us) &&
+                    r.ts_us < m2) m2 = r.ts_us
+                } else buf2 += r.ts_us
+              }
+            }
+          }
+          if (!a0Fixed && m0 != Long.MaxValue) st = st.copy(a0_us = m0)
+          if (st.a1_us == 0L && st.a0_us != 0L) {
+            val q = if (a0Fixed) m1
+              else buf1.foldLeft(Long.MaxValue)((acc, t) =>
+                if (t > st.a0_us && inWindow(st.a0_us, t) && t < acc) t
+                else acc)
+            if (q != Long.MaxValue) st = st.copy(a1_us = q)
+          }
+          if (st.a2_us == 0L && st.a1_us != 0L) {
+            val q = if (a1Fixed) m2
+              else buf2.foldLeft(Long.MaxValue)((acc, t) =>
+                if (t > st.a1_us && inWindow(st.a0_us, t) && t < acc) t
+                else acc)
+            if (q != Long.MaxValue) st = st.copy(a2_us = q)
+          }
+          anchors.update(st)
+          val sr = Seq(st.a0_us, st.a1_us, st.a2_us).count(_ != 0L)
+          Iterator.single(FunnelReach(user, sr, st.a0_us, st.a1_us, st.a2_us))
+      }
   }
 
   /** [[eventFunnelStream]] under `CdcOps.eventFunnelWindowed`'s
     * conversion deadline — the live form a growth dashboard actually
-    * runs (a deadline needs NO extra state: it is a0 + window,
-    * recomputed from the stored first-view anchor). */
+    * runs. */
   def eventFunnelWindowedStream(events: Dataset[Event]): Dataset[FunnelReach] =
     eventFunnelStream(events, Some(
       graft.operators.CdcOps.FunnelWindowHours * 3600L * 1000000L))
@@ -926,10 +1005,10 @@ object StreamOps {
     * bucket is dropped only once no admissible event can still target it
     * (an event for bucket b has ts < b + 1 min ≤ b + TTL ≤ watermark ⇒
     * it would be rejected as late upstream). Evicting at `key-max ts −
-    * TTL` — the earlier design — let an admissible late event re-open an
-    * evicted bucket with only its own partial counts, silently
-    * retracting the bucket's prior total (and possibly a fired alert) in
-    * an upsert consumer. A key silent for 5 min of event time drops its
+    * TTL` instead would let an admissible late event re-open an evicted
+    * bucket with only its own partial counts, silently retracting the
+    * bucket's prior total (and possibly a fired alert) in an upsert
+    * consumer. A key silent for 5 min of event time drops its
     * whole state via `EventTimeTimeout` (same no-livelock rationale as
     * T3). */
   def velocityState(events: Dataset[Event],
@@ -975,30 +1054,60 @@ object StreamOps {
   /** STREAMING QUANTILE SKETCH — the live twin of
     * `TextOps.quantileSketchGrouped` and the sketch family's native
     * streaming use: the per-language bottom-k register set maintained
-    * INCREMENTALLY as `transformWithState` ValueState. The bottom-k
-    * rule is the merge law itself — fold the batch's incoming draws
-    * into the stored registers, keep the K smallest — so state is
-    * bounded at K rows per language FOREVER (no watermark, no TTL, no
-    * timer: a rank sketch never expires), and the streamed register set
-    * after any prefix of the corpus is bit-identical to the batch
-    * sketch over the same rows — the spec pins exactly that, registers
-    * and p50 read-out both, with the corpus split across micro-batches
-    * so the cross-batch merge path genuinely runs. Draws replicate the
-    * batch side's md5('qsk'||doc_id) 60-bit integer in JVM arithmetic. */
+    * INCREMENTALLY in one keyed [[SketchState]] (registers + seen
+    * count). The bottom-k rule is the merge law itself — stored ∪
+    * incoming, keep the K smallest (u, doc_id) — so a register survives
+    * iff its draw is among the K smallest this key has seen, however
+    * arrivals were batched; state is bounded at K rows per language
+    * FOREVER (no watermark, no TTL, no timer: a rank sketch never
+    * expires), and the streamed register set after any prefix of the
+    * corpus is bit-identical to the batch sketch over the same rows —
+    * the spec pins exactly that, registers and p50 read-out both, with
+    * the corpus split across micro-batches so the cross-batch merge
+    * path genuinely runs. Each snapshot carries an order-free Σu
+    * (mod 2^61−1) register-set checksum and the p50 covering read-out
+    * (smallest v whose value-rank·100 ≥ k_eff·50 — the batch read-out
+    * rule verbatim). */
   def quantileSketchStream(docs: Dataset[DocArrival])
       : Dataset[SketchSnapshot] = {
     import docs.sparkSession.implicits._
+    val k = graft.operators.TextOps.GroupQSampleK
     docs
       .groupByKey(_.lang)
-      .transformWithState(new QuantileSketchProcessor(
-          graft.operators.TextOps.GroupQSampleK),
-        org.apache.spark.sql.streaming.TimeMode.None(),
-        OutputMode.Update())
+      .flatMapGroupsWithState[SketchState, SketchSnapshot](
+        OutputMode.Update, GroupStateTimeout.NoTimeout) {
+        case (lang, rows, state) =>
+          val incoming = rows.map(d =>
+            SketchReg(sketchDraw(d.doc_id), d.doc_id, d.n_chars)).toSeq
+          val prev = state.getOption.getOrElse(SketchState(Nil, 0L))
+          val merged = (prev.regs ++ incoming)
+            .sortBy(r => (r.u, r.doc_id)).take(k)
+          val nSeen = prev.n_seen + incoming.size
+          state.update(SketchState(merged, nSeen))
+          val kEff = merged.size.toLong
+          val p50 = merged.sortBy(r => (r.v, r.doc_id)).zipWithIndex
+            .collectFirst { case (r, i) if (i + 1) * 100 >= kEff * 50 => r.v }
+            .getOrElse(0L)
+          val checksum = merged.foldLeft(0L)((a, r) =>
+            (a + r.u) % 2305843009213693951L)
+          Iterator.single(
+            SketchSnapshot(lang, nSeen, merged.size, checksum, p50))
+      }
+  }
+
+  /** The batch sketch's md5('qsk' || doc_id) 60-bit draw, in JVM
+    * arithmetic: the first 15 hex chars of the digest parsed base-16 —
+    * SQL `conv(substring(md5(concat('qsk', doc_id)), 1, 15), 16, 10)`
+    * exactly. */
+  private def sketchDraw(docId: Long): Long = {
+    val hex = java.security.MessageDigest.getInstance("MD5")
+      .digest(s"qsk$docId".getBytes("UTF-8")).map("%02x".format(_)).mkString
+    java.lang.Long.parseLong(hex.substring(0, 15), 16)
   }
 
   /** STREAMING WINNOW DECONTAMINATION SCREEN — the live twin of
-    * `TextOps.winnowDecontam`, on `transformWithState`: arriving train
-    * documents are winnow-fingerprinted IN FLIGHT with the exact batch
+    * `TextOps.winnowDecontam`: arriving train documents are
+    * winnow-fingerprinted IN FLIGHT with the exact batch
     * expression chain (`TextOps.winnowKgramHashSqlExpr` + the window-minimum
     * selection — shared strings, not a re-derivation) and screened
     * against a broadcast dirty index built once from the held-out
@@ -1010,15 +1119,16 @@ object StreamOps {
     *
     * The stateful stage guards the DELIVERY contract, not the math:
     * an at-least-once source redelivers documents on retry/rebalance
-    * and across restarts, and [[WinnowScreenProcessor]] holds one
-    * boolean of ValueState per doc_id so each document's verdict
-    * emits EXACTLY ONCE — in-batch duplicates, later-batch
-    * redeliveries, and post-restart redeliveries (state recovers from
-    * the checkpoint; spec-pinned on RocksDB) all suppress. State
-    * never expires: the screened-set is the screen's ledger, bounded
-    * by upstream retention exactly like the first-seen screen's
-    * seen-set, not by a TTL that would silently re-admit a
-    * redelivery.
+    * and across restarts, and a `dropDuplicates("doc_id")` with no
+    * watermark keeps every screened doc_id in checkpointed state, so
+    * each document's verdict emits EXACTLY ONCE — in-batch duplicates,
+    * later-batch redeliveries, and post-restart redeliveries all
+    * suppress. The rows for one doc are identical by construction
+    * (same text → same fingerprints → same stateless screen math), so
+    * which copy survives does not matter. State never expires: the
+    * screened-set is the screen's ledger, bounded by upstream retention
+    * exactly like the first-seen screen's seen-set, not by a TTL that
+    * would silently re-admit a redelivery.
     *
     * Scale shape: the dirty index collapses the EVAL SUITE to its
     * distinct winnowed fingerprints (~2/(w+1) ≈ 40% of its distinct
@@ -1054,10 +1164,7 @@ object StreamOps {
       .withColumn("hit_mille", expr("(1000 * n_hits) div n_fp"))
       .withColumn("contaminated", col("n_hits") > 0)
       .as[DocScreen]
-      .groupByKey(_.doc_id)
-      .transformWithState(new WinnowScreenProcessor,
-        org.apache.spark.sql.streaming.TimeMode.None(),
-        OutputMode.Update())
+      .dropDuplicates("doc_id")
   }
 
   /** P7+C7+T7: rule alerts with severity, unioned into ONE alert stream —
@@ -1107,11 +1214,26 @@ object StreamOps {
     * (`load_to_redis`, batch_processor.py:178-193 / utils.py:128-136).
     * The stream arrives in update mode, so each micro-batch holds only the
     * CHANGED keys — the reference's Redis sink upserts per key, so the
-    * delta is merged with the previous `latest` (delta ∪ untouched old
-    * keys, keyed by `keyCols`) before writing. Each `v_<batchId>` dir is
-    * the full merged snapshot (immutable version), and `latest` is
-    * rewritten from it — the overwrite of `latest` only ever reads the
-    * just-written versioned dir, never the path it is replacing. Both
+    * delta is merged with the previous snapshot (delta ∪ untouched old
+    * keys, keyed by `keyCols`). Batch n writes the merged snapshot to the
+    * immutable version `v_<n>`, then republishes `latest` from it.
+    *
+    * Crash safety: the merge base is `v_<n−1>`, the last complete
+    * version (none for batch 0), never `latest`, which batch n itself
+    * overwrites. Spark's overwrite deletes `latest` before its write job
+    * commits, so a kill after `v_<n>`, inside the `latest` overwrite, or
+    * after it but before the checkpoint commits batch n leaves `v_<n−1>`
+    * intact; the restart replays batch n with the same delta against the
+    * same base and rewrites `v_<n>` and `latest` to the content a run
+    * without the kill writes. Foreach-batch ids run 0, 1, 2, … with no
+    * gap, and `commits/n−1` is written only after batch n−1's sink
+    * returned, so `v_<n−1>` exists whenever batch n runs. A reader of
+    * `latest` can find it missing during the overwrite; `v_<n>` is the
+    * stable read.
+    *
+    * Versions are kept unbounded: they are the reference's timestamped
+    * history, and recovery itself needs only `v_<n−1>`, so pruning older
+    * versions is the consumer's retention policy, not the sink's. Both
     * dirs are read back with the batch's own schema, the one the sink
     * wrote them with, so no read runs a schema-inference job. */
   def dualWriteSink(df: DataFrame, keyCols: Seq[String], outDir: String,
@@ -1124,19 +1246,18 @@ object StreamOps {
       .trigger(trigger)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         val spark = batch.sparkSession
-        val latestDir = s"$outDir/latest"
         val versionedDir = s"$outDir/v_$batchId"
-        val fs = new org.apache.hadoop.fs.Path(outDir)
-          .getFileSystem(spark.sparkContext.hadoopConfiguration)
         batch.persist()
         val snapshot =
-          if (fs.exists(new org.apache.hadoop.fs.Path(latestDir))) {
-            val old = spark.read.schema(batch.schema).parquet(latestDir)
+          if (batchId == 0) batch
+          else {
+            val old = spark.read.schema(batch.schema)
+              .parquet(s"$outDir/v_${batchId - 1}")
             batch.unionByName(old.join(batch, keyCols, "left_anti"))
-          } else batch
+          }
         snapshot.write.mode("overwrite").parquet(versionedDir)
         spark.read.schema(batch.schema).parquet(versionedDir)
-          .write.mode("overwrite").parquet(latestDir)
+          .write.mode("overwrite").parquet(s"$outDir/latest")
         batch.unpersist()
         ()
       }
@@ -1172,223 +1293,4 @@ object StreamOps {
       .option("checkpointLocation", checkpoint)
       .trigger(Trigger.ProcessingTime(interval))
       .start()
-}
-
-/** The [[StreamOps.firstSeenScreenStream]] processor: per-fingerprint
-  * min-arrived-doc_id in ONE long of value state. A row is `shared`
-  * iff some STRICTLY smaller doc_id carried the fingerprint — from a
-  * previous batch (state) or earlier in this batch's key group (the
-  * in-group fold runs in doc_id order; Spark does not order group
-  * iterators, so the fold sorts its bounded per-key slice first). Two
-  * occurrences inside one doc never mark each other shared (strict
-  * `<`), mirroring the batch operator's `first_doc < doc_id`. State
-  * never expires: the seen-set IS the product (a production deployment
-  * bounds it the way the batch corpus is bounded — by upstream
-  * retention — not by a TTL that would silently re-admit old
-  * duplicates). */
-class FirstSeenProcessor
-    extends org.apache.spark.sql.streaming.StatefulProcessor[
-      String, DocFingerprint, FpSeen] {
-  import org.apache.spark.sql.streaming.{TimeMode, TimerValues, TTLConfig, ValueState}
-  import org.apache.spark.sql.{Encoders, streaming}
-
-  @transient private var firstDoc: ValueState[Long] = _
-
-  override def init(outputMode: streaming.OutputMode,
-      timeMode: TimeMode): Unit =
-    firstDoc = getHandle.getValueState[Long]("first_doc",
-      Encoders.scalaLong, TTLConfig.NONE)
-
-  override def handleInputRows(fp: String, rows: Iterator[DocFingerprint],
-      timerValues: TimerValues): Iterator[FpSeen] = {
-    var minSeen = if (firstDoc.exists()) firstDoc.get() else Long.MaxValue
-    val out = rows.toSeq.sortBy(_.doc_id).map { r =>
-      val shared = minSeen < r.doc_id
-      if (r.doc_id < minSeen) minSeen = r.doc_id
-      FpSeen(r.doc_id, r.kind, shared, r.n_chunks)
-    }
-    firstDoc.update(minSeen)
-    out.iterator
-  }
-}
-
-/** The [[StreamOps.winnowDecontamStream]] processor: one boolean of
-  * value state per doc_id — the exactly-once emission ledger. The
-  * verdict rows arriving for one doc are IDENTICAL by construction
-  * (same text → same fingerprints → same stateless screen math), so
-  * suppression needs no reconciliation: the first arrival emits, every
-  * later one (in-batch, later-batch, or post-restart) is dropped.
-  * State never expires — see the operator's Scaladoc. */
-class WinnowScreenProcessor
-    extends org.apache.spark.sql.streaming.StatefulProcessor[
-      Long, DocScreen, DocScreen] {
-  import org.apache.spark.sql.streaming.{TimeMode, TimerValues, TTLConfig, ValueState}
-  import org.apache.spark.sql.{Encoders, streaming}
-
-  @transient private var screened: ValueState[Boolean] = _
-
-  override def init(outputMode: streaming.OutputMode,
-      timeMode: TimeMode): Unit =
-    screened = getHandle.getValueState[Boolean]("screened",
-      Encoders.scalaBoolean, TTLConfig.NONE)
-
-  override def handleInputRows(docId: Long, rows: Iterator[DocScreen],
-      timerValues: TimerValues): Iterator[DocScreen] = {
-    if (screened.exists()) Iterator.empty
-    else {
-      screened.update(true)
-      rows.take(1)
-    }
-  }
-}
-
-/** The [[StreamOps.eventFunnelStream]] processor: three micros anchors
-  * per user in ONE product row of value state, advanced by a forward
-  * fold in (ts_us, event_id) order (sorted per bounded key-slice —
-  * Spark does not order group iterators). Each anchor sets at most
-  * once; a step event qualifies only when the previous anchor exists
-  * and its timestamp is STRICTLY greater (same-instant ties never
-  * advance — `CdcOps.eventFunnel`'s pinned rule). Emits the user's
-  * post-fold progress once per batch appearance. */
-class FunnelProcessor(windowUs: Option[Long] = None)
-    extends org.apache.spark.sql.streaming.StatefulProcessor[
-      Long, FunnelEvent, FunnelReach] {
-  import org.apache.spark.sql.streaming.{TimeMode, TimerValues, TTLConfig, ValueState}
-  import org.apache.spark.sql.{Encoders, streaming}
-
-  @transient private var anchors: ValueState[FunnelAnchors] = _
-
-  override def init(outputMode: streaming.OutputMode,
-      timeMode: TimeMode): Unit =
-    anchors = getHandle.getValueState[FunnelAnchors]("funnel_anchors",
-      Encoders.product[FunnelAnchors], TTLConfig.NONE)
-
-  override def handleInputRows(user: Long, rows: Iterator[FunnelEvent],
-      timerValues: TimerValues): Iterator[FunnelReach] = {
-    val steps = graft.operators.CdcOps.FunnelSteps
-    var st =
-      if (anchors.exists()) anchors.get() else FunnelAnchors(0L, 0L, 0L)
-    // The optional conversion deadline needs NO extra state: it is
-    // first-view + window, recomputed from the stored anchor
-    // (inclusive at the boundary — `CdcOps.eventFunnelWindowed`'s
-    // pinned rule).
-    def inWindow(a0: Long, ts: Long): Boolean =
-      windowUs.forall(w => ts <= a0 + w)
-    // ONE pass over the batch slice, no sort, no row buffer: because
-    // anchors only ever advance to the MINIMUM qualifying timestamp
-    // (strict > the predecessor, monotone), processing in timestamp
-    // order is equivalent to resolving, per step, min{ts > final
-    // predecessor anchor} — so a step whose predecessor anchor is
-    // already FIXED at batch entry folds to a running min online
-    // (its qualifying predicate is a constant), and only a step whose
-    // predecessor may still advance WITHIN this batch must buffer its
-    // bare timestamps (the chained minimum needs the predecessor's
-    // final value). Memory bound, explicit: O(1) per key once a0 and
-    // a1 are set (the steady state of every converted or converting
-    // user — nothing is ever buffered again); for a user whose chain
-    // is still open, at most that user's step-1/step-2 LONGS in the
-    // batch slice — the same worst case the old full sort had, minus
-    // the event-id/type payloads and the sort itself.
-    val a0Fixed = st.a0_us != 0L
-    val a1Fixed = st.a1_us != 0L
-    var m0 = Long.MaxValue; var m1 = Long.MaxValue; var m2 = Long.MaxValue
-    val buf1 = scala.collection.mutable.ArrayBuffer.empty[Long]
-    val buf2 = scala.collection.mutable.ArrayBuffer.empty[Long]
-    rows.foreach { r =>
-      if (r.event_type == steps(0)) {
-        if (!a0Fixed && r.ts_us < m0) m0 = r.ts_us
-      } else if (r.event_type == steps(1)) {
-        if (st.a1_us == 0L) {
-          if (a0Fixed) {
-            if (r.ts_us > st.a0_us && inWindow(st.a0_us, r.ts_us) &&
-              r.ts_us < m1) m1 = r.ts_us
-          } else buf1 += r.ts_us
-        }
-      } else if (r.event_type == steps(2)) {
-        if (st.a2_us == 0L) {
-          if (a1Fixed) {
-            if (r.ts_us > st.a1_us && inWindow(st.a0_us, r.ts_us) &&
-              r.ts_us < m2) m2 = r.ts_us
-          } else buf2 += r.ts_us
-        }
-      }
-    }
-    if (!a0Fixed && m0 != Long.MaxValue) st = st.copy(a0_us = m0)
-    if (st.a1_us == 0L && st.a0_us != 0L) {
-      val q = if (a0Fixed) m1
-        else buf1.foldLeft(Long.MaxValue)((acc, t) =>
-          if (t > st.a0_us && inWindow(st.a0_us, t) && t < acc) t else acc)
-      if (q != Long.MaxValue) st = st.copy(a1_us = q)
-    }
-    if (st.a2_us == 0L && st.a1_us != 0L) {
-      val q = if (a1Fixed) m2
-        else buf2.foldLeft(Long.MaxValue)((acc, t) =>
-          if (t > st.a1_us && inWindow(st.a0_us, t) && t < acc) t else acc)
-      if (q != Long.MaxValue) st = st.copy(a2_us = q)
-    }
-    anchors.update(st)
-    val sr = Seq(st.a0_us, st.a1_us, st.a2_us).count(_ != 0L)
-    Iterator.single(FunnelReach(user, sr, st.a0_us, st.a1_us, st.a2_us))
-  }
-}
-
-/** The [[StreamOps.quantileSketchStream]] processor: per-language
-  * bottom-k registers as one typed `ValueState` list. `handleInputRows`
-  * IS the sketch's merge law — stored ∪ incoming, keep the k smallest
-  * (u, doc_id) — so a register survives iff its draw is among the k
-  * smallest seen by this key so far, regardless of how arrivals were
-  * batched; that is the property the batch twin's merge spec pins and
-  * the reason no timer, watermark, or TTL exists here (rank-sketch
-  * state never expires, it is bounded by construction). The emitted
-  * snapshot carries an order-free Σu (mod 2^61) register-set checksum
-  * and the p50 covering read-out (smallest v whose value-rank·100 ≥
-  * k_eff·50 — the batch read-out rule verbatim). */
-class QuantileSketchProcessor(k: Int)
-    extends org.apache.spark.sql.streaming.StatefulProcessor[
-      String, DocArrival, SketchSnapshot] {
-  import org.apache.spark.sql.streaming.{TimeMode, TimerValues, TTLConfig, ValueState}
-  import org.apache.spark.sql.{Encoders, streaming}
-
-  @transient private var regs: ValueState[List[SketchReg]] = _
-  @transient private var seen: ValueState[Long] = _
-
-  override def init(outputMode: streaming.OutputMode,
-      timeMode: TimeMode): Unit = {
-    regs = getHandle.getValueState[List[SketchReg]]("regs",
-      Encoders.kryo[List[SketchReg]], TTLConfig.NONE)
-    seen = getHandle.getValueState[Long]("seen",
-      Encoders.scalaLong, TTLConfig.NONE)
-  }
-
-  /** The batch side's md5('qsk' || doc_id) 60-bit draw, in JVM
-    * arithmetic: first 15 hex chars of the digest parsed base-16 —
-    * matching SQL `conv(substring(md5(concat('qsk', doc_id)), 1, 15),
-    * 16, 10)` exactly. */
-  private def draw(docId: Long): Long = {
-    val md = java.security.MessageDigest.getInstance("MD5")
-    val hex = md.digest(s"qsk$docId".getBytes("UTF-8"))
-      .map("%02x".format(_)).mkString
-    java.lang.Long.parseLong(hex.substring(0, 15), 16)
-  }
-
-  override def handleInputRows(lang: String, rows: Iterator[DocArrival],
-      timerValues: TimerValues): Iterator[SketchSnapshot] = {
-    val incoming = rows.map(d => SketchReg(draw(d.doc_id), d.doc_id,
-      d.n_chars)).toSeq
-    val stored = if (regs.exists()) regs.get() else Nil
-    val merged = (stored ++ incoming)
-      .sortBy(r => (r.u, r.doc_id)).take(k).toList
-    regs.update(merged)
-    val nSeen = (if (seen.exists()) seen.get() else 0L) + incoming.size
-    seen.update(nSeen)
-    val kEff = merged.size.toLong
-    val byV = merged.sortBy(r => (r.v, r.doc_id))
-    val p50 = byV.zipWithIndex
-      .collectFirst { case (r, i) if (i + 1) * 100 >= kEff * 50 => r.v }
-      .getOrElse(0L)
-    val checksum = merged.foldLeft(0L)((a, r) =>
-      (a + r.u) % 2305843009213693951L)
-    Iterator.single(SketchSnapshot(lang, nSeen, merged.size, checksum,
-      p50))
-  }
 }

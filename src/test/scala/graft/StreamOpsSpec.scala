@@ -734,6 +734,75 @@ class StreamOpsSpec extends GraftSpec {
     } finally q.stop()
   }
 
+  test("S5: a restart after a kill anywhere in a batch's sink writes the " +
+      "same latest as a run without the kill") {
+    // Three batches of upserts into the sink, one single-file slice per
+    // batch. The last batch touches only user 4: a merge base that lost
+    // the other users shows here.
+    import java.io.File
+    import org.apache.commons.io.FileUtils
+    val base = java.nio.file.Files
+      .createTempDirectory("graft-s5-crash-").toString
+    val inDir = s"$base/in"
+    new File(inDir).mkdirs()
+    val schema = implicitly[org.apache.spark.sql.Encoder[Event]].schema
+    def startSink(out: String, ckpt: String, trigger: Trigger) =
+      StreamOps.dualWriteSink(
+        StreamOps.upsertLatest(
+          spark.readStream.schema(schema).parquet(inDir).as[Event]).toDF(),
+        Seq("user_id"), out, ckpt, trigger)
+    def latest(out: String): Set[UpsertRow] =
+      spark.read.parquet(s"$out/latest").as[UpsertRow].collect().toSet
+    try {
+      val q = startSink(s"$base/out", s"$base/ckpt",
+        Trigger.ProcessingTime("100 milliseconds"))
+      try Seq(
+          Seq(event(1, "2024-01-01 10:00:00", 1, "signup", 1.0),
+            event(2, "2024-01-01 10:01:00", 2, "signup", 2.0)),
+          Seq(event(3, "2024-01-01 10:02:00", 3, "click", 3.0),
+            event(4, "2024-01-01 10:03:00", 1, "purchase", 4.0)),
+          Seq(event(5, "2024-01-01 10:04:00", 4, "view", 5.0))
+        ).foreach { slice =>
+          slice.toDS().coalesce(1).write.mode("append").parquet(inDir)
+          q.processAllAvailable()
+        }
+      finally q.stop()
+      assert(new File(s"$base/ckpt/commits").list()
+        .filterNot(_.startsWith(".")).toSet == Set("0", "1", "2"))
+      val expected = latest(s"$base/out")
+      assert(expected.map(_.user_id) == Set(1L, 2L, 3L, 4L))
+
+      // What a kill during batch 2 leaves behind. `v_2` is always
+      // written; `commits/2` is always missing, so a restart replays
+      // batch 2.
+      val crashes: Seq[(String, String => Unit)] = Seq(
+        "after v_2, before the latest overwrite" -> { out =>
+          FileUtils.deleteDirectory(new File(s"$out/latest"))
+          FileUtils.copyDirectory(new File(s"$out/v_1"),
+            new File(s"$out/latest"))
+        },
+        "inside the latest overwrite" -> { out =>
+          // Overwrite deletes the dir first; the killed job leaves only
+          // its uncommitted attempt dir.
+          FileUtils.deleteDirectory(new File(s"$out/latest"))
+          new File(s"$out/latest/_temporary/0").mkdirs()
+        },
+        "after the latest overwrite, before the commit" -> { _ => () })
+      crashes.zipWithIndex.foreach { case ((point, damage), i) =>
+        val out = s"$base/out_$i"; val ckpt = s"$base/ckpt_$i"
+        FileUtils.copyDirectory(new File(s"$base/out"), new File(out))
+        FileUtils.copyDirectory(new File(s"$base/ckpt"), new File(ckpt))
+        damage(out)
+        assert(new File(s"$ckpt/commits/2").delete())
+        new File(s"$ckpt/commits/.2.crc").delete()
+        startSink(out, ckpt, Trigger.AvailableNow()).awaitTermination()
+        assert(new File(s"$ckpt/commits/2").exists,
+          s"$point: the restart did not replay batch 2")
+        assert(latest(out) == expected, s"$point: latest differs")
+      }
+    } finally deleteRecursively(base)
+  }
+
   test("A11: daily distribution closes a day window via the watermark") {
     implicit val sqlCtx = spark.sqlContext
     val in = MemoryStream[Event]
@@ -1230,13 +1299,8 @@ class StreamOpsSpec extends GraftSpec {
     // verdict assembly must emit exactly TextOps.firstSeenScreen's
     // rows. An awkward 3-way slicing (uneven sizes, a batch boundary
     // right after a duplicate's first copy) exercises both the
-    // in-batch fold and the cross-batch state path; RocksDB is the
-    // scale provider for `transformWithState` state.
+    // in-batch fold and the cross-batch state path.
     implicit val sqlCtx = spark.sqlContext
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     val dir = "/root/testdata/sf0.001"
     val docs = graft.Tables.documents(spark, dir)
       .select($"doc_id", $"text").as[(Long, Option[String])]
@@ -1271,13 +1335,7 @@ class StreamOpsSpec extends GraftSpec {
       // test below covers exact + null-text.
       assert(batch.exists(_._5 == "near"))
       assert(batch.exists(_._5 == "novel"))
-    } finally {
-      q.stop()
-      prev match {
-        case Some(v) => spark.conf.set(key, v)
-        case None => spark.conf.unset(key)
-      }
-    }
+    } finally q.stop()
   }
 
   test("first-seen screen: seen-set survives a stop/restart from the " +
@@ -1286,10 +1344,6 @@ class StreamOpsSpec extends GraftSpec {
     // seen-set would re-admit every duplicate. File source (offsets in
     // the checkpoint) + foreachBatch (recoverable sink), the T5
     // restart discipline applied to the first-seen screen.
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     val base = java.nio.file.Files
       .createTempDirectory("graft-fs-ckpt-").toString
     val inDir = s"$base/in"; val ckpt = s"$base/ckpt"
@@ -1336,10 +1390,6 @@ class StreamOpsSpec extends GraftSpec {
       assert(verdicts(4L) == "novel")
     } finally {
       q2.stop()
-      prev match {
-        case Some(v) => spark.conf.set(key, v)
-        case None => spark.conf.unset(key)
-      }
       deleteRecursively(base)
     }
   }
@@ -1347,10 +1397,6 @@ class StreamOpsSpec extends GraftSpec {
   test("first-seen screen: full verdict ladder on a crafted replay, " +
       "cross-batch and in-batch dup paths") {
     implicit val sqlCtx = spark.sqlContext
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     val dupDir = freshScratch()
     val base = "alpha bravo charlie delta " * 32 // > one 64-token chunk
     val docs: Seq[(Long, Option[String])] = Seq(
@@ -1389,13 +1435,7 @@ class StreamOpsSpec extends GraftSpec {
       assert(verdicts(4L) == "near")
       assert(verdicts(5L) == "exact") // cross-batch dup via state
       assert(verdicts(6L) == "novel")
-    } finally {
-      q.stop()
-      prev match {
-        case Some(v) => spark.conf.set(key, v)
-        case None => spark.conf.unset(key)
-      }
-    }
+    } finally q.stop()
   }
 
   test("ordered funnel: stateful stream twin equals the batch operator " +
@@ -1405,10 +1445,6 @@ class StreamOpsSpec extends GraftSpec {
     // from state — and funnelReport over the accumulated FunnelReach
     // rows must emit exactly CdcOps.eventFunnel's 3-row report.
     implicit val sqlCtx = spark.sqlContext
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     val dir = "/root/testdata/sf0.001"
     val evs = graft.Tables.events(spark, dir)
       .select($"event_id", $"ts", $"user_id", $"event_type", $"value",
@@ -1450,22 +1486,12 @@ class StreamOpsSpec extends GraftSpec {
           r.getLong(3))).toSet
       assert(sLat == bLat)
       assert(sLat.nonEmpty)
-    } finally {
-      q.stop()
-      prev match {
-        case Some(v) => spark.conf.set(key, v)
-        case None => spark.conf.unset(key)
-      }
-    }
+    } finally q.stop()
   }
 
   test("ordered funnel: same-instant ties never advance; out-of-order " +
       "step types never anchor (crafted fixture vs batch)") {
     implicit val sqlCtx = spark.sqlContext
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     val tieDir = freshScratch()
     val evs = Seq(
       // user 20: click AT the view instant (no advance), later click
@@ -1502,22 +1528,12 @@ class StreamOpsSpec extends GraftSpec {
       // Pin the ladder itself: 3 viewers, 1 clicker-after-view, 1
       // purchaser — user 21's early click anchored nothing.
       assert(streamed.map(t => t._2).toSeq == Seq(3L, 1L, 1L))
-    } finally {
-      q.stop()
-      prev match {
-        case Some(v) => spark.conf.set(key, v)
-        case None => spark.conf.unset(key)
-      }
-    }
+    } finally q.stop()
   }
 
   test("windowed funnel: stream twin equals the deadline-bounded batch " +
       "operator on an ordered replay; deadline boundary inclusive") {
     implicit val sqlCtx = spark.sqlContext
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     // Real corpus first: the deadline genuinely bites there (the
     // unbounded funnel saturates at sf0.001).
     val dir = "/root/testdata/sf0.001"
@@ -1546,19 +1562,10 @@ class StreamOpsSpec extends GraftSpec {
         .collect().map(r => r.getLong(2))
       assert(batch.map(_._2).sum < unbounded.sum,
         "deadline did not reduce any funnel stage on the real corpus")
-    } finally {
-      q.stop()
-      prev match {
-        case Some(v) => spark.conf.set(key, v)
-        case None => spark.conf.unset(key)
-      }
-    }
+    } finally q.stop()
 
     // Boundary fixture: click exactly AT first-view + 24h converts
     // (inclusive <=); one second past does not.
-    val key2 = "spark.sql.streaming.stateStore.providerClass"
-    spark.conf.set(key2,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     val in2 = MemoryStream[Event]
     val q2 = StreamOps.eventFunnelWindowedStream(in2.toDS())
       .writeStream.format("memory").queryName("funnel_reach_wb")
@@ -1575,13 +1582,7 @@ class StreamOpsSpec extends GraftSpec {
           r.getAs[Int]("steps_reached")).toMap
       assert(reach(40L) == 2, s"inclusive deadline must convert: $reach")
       assert(reach(41L) == 1, s"past-deadline must not convert: $reach")
-    } finally {
-      q2.stop()
-      prev match {
-        case Some(v) => spark.conf.set(key2, v)
-        case None => spark.conf.unset(key2)
-      }
-    }
+    } finally q2.stop()
   }
 
   test("ordered funnel: anchors survive a stop/restart from the " +
@@ -1589,10 +1590,6 @@ class StreamOpsSpec extends GraftSpec {
     // A restart that lost the anchors would rule user 30's purchase
     // non-qualifying (no recovered click anchor) — the emitted
     // steps_reached after phase 2 is the direct witness of recovery.
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     val base = java.nio.file.Files
       .createTempDirectory("graft-funnel-ckpt-").toString
     val inDir = s"$base/in"; val ckpt = s"$base/ckpt"
@@ -1629,10 +1626,6 @@ class StreamOpsSpec extends GraftSpec {
         s"recovered anchors failed to qualify the purchase: $phase2")
     } finally {
       q2.stop()
-      prev match {
-        case Some(v) => spark.conf.set(key, v)
-        case None => spark.conf.unset(key)
-      }
       deleteRecursively(base)
     }
   }
@@ -1645,63 +1638,54 @@ class StreamOpsSpec extends GraftSpec {
     // REDELIVERED whole as a fourth batch (the at-least-once
     // contract). The emitted set must equal TextOps.winnowDecontam's
     // rows exactly: same verdict math, one row per doc despite the
-    // redelivery. transformWithState runs on RocksDB.
+    // redelivery.
     import org.apache.spark.sql.functions.{col, expr}
     implicit val sqlCtx = spark.sqlContext
     import spark.implicits._
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+    val dir = "/root/testdata/sf0.001"
+    val bucketed = graft.Tables.documents(spark, dir)
+      .select(col("doc_id"), col("text"),
+        expr("pmod(cast(conv(substring(md5(cast(doc_id as string))" +
+          ", 1, 15), 16, 10) as bigint), 100)").as("bucket"))
+    val evalCorpus = bucketed
+      .filter(col("bucket") >= graft.operators.TextOps.TrainPct)
+      .select("doc_id", "text")
+    val train = bucketed
+      .filter(col("bucket") < graft.operators.TextOps.TrainPct)
+      .select("doc_id", "text").collect()
+      .map(r => (r.getLong(0), r.getString(1)))
+    assert(train.length > 10, "fixture sanity: train band too small")
+    val in = MemoryStream[(Long, String)]
+    val q = StreamOps.winnowDecontamStream(
+        in.toDS().toDF("doc_id", "text"), evalCorpus)
+      .writeStream.format("memory").queryName("winnow_screen")
+      .outputMode("update").start()
     try {
-      val dir = "/root/testdata/sf0.001"
-      val bucketed = graft.Tables.documents(spark, dir)
-        .select(col("doc_id"), col("text"),
-          expr("pmod(cast(conv(substring(md5(cast(doc_id as string))" +
-            ", 1, 15), 16, 10) as bigint), 100)").as("bucket"))
-      val evalCorpus = bucketed
-        .filter(col("bucket") >= graft.operators.TextOps.TrainPct)
-        .select("doc_id", "text")
-      val train = bucketed
-        .filter(col("bucket") < graft.operators.TextOps.TrainPct)
-        .select("doc_id", "text").collect()
-        .map(r => (r.getLong(0), r.getString(1)))
-      assert(train.length > 10, "fixture sanity: train band too small")
-      val in = MemoryStream[(Long, String)]
-      val q = StreamOps.winnowDecontamStream(
-          in.toDS().toDF("doc_id", "text"), evalCorpus)
-        .writeStream.format("memory").queryName("winnow_screen")
-        .outputMode("update").start()
-      try {
-        (0 to 2).foreach { m =>
-          in.addData(train.filter(_._1 % 3 == m).toSeq)
-          q.processAllAvailable()
-        }
-        in.addData(train.filter(_._1 % 3 == 0).toSeq) // redelivery
+      (0 to 2).foreach { m =>
+        in.addData(train.filter(_._1 % 3 == m).toSeq)
         q.processAllAvailable()
-      } finally q.stop()
-      val live = spark.table("winnow_screen").collect()
-        .map(r => (r.getAs[Long]("doc_id"), r.getAs[Long]("n_fp"),
-          r.getAs[Long]("n_hits"), r.getAs[Long]("hit_mille"),
-          r.getAs[Boolean]("contaminated")))
-      // Exactly-once: one emission per doc despite the redelivery.
-      assert(live.map(_._1).distinct.length == live.length,
-        "a redelivered doc re-emitted")
-      val batch = graft.operators.TextOps.winnowDecontam(spark, dir)
-        .collect()
-        .map(r => (r.getAs[Long]("doc_id"), r.getAs[Long]("n_fp"),
-          r.getAs[Long]("n_hits"), r.getAs[Long]("hit_mille"),
-          r.getAs[Boolean]("contaminated")))
-      assert(live.toSet == batch.toSet,
-        s"stream/batch verdict mismatch: ${
-          (live.toSet -- batch.toSet).take(3)} vs ${
-          (batch.toSet -- live.toSet).take(3)}")
-      // The fixture must exercise both verdicts.
-      assert(batch.exists(_._5) && batch.exists(!_._5))
-    } finally prev match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
-    }
+      }
+      in.addData(train.filter(_._1 % 3 == 0).toSeq) // redelivery
+      q.processAllAvailable()
+    } finally q.stop()
+    val live = spark.table("winnow_screen").collect()
+      .map(r => (r.getAs[Long]("doc_id"), r.getAs[Long]("n_fp"),
+        r.getAs[Long]("n_hits"), r.getAs[Long]("hit_mille"),
+        r.getAs[Boolean]("contaminated")))
+    // Exactly-once: one emission per doc despite the redelivery.
+    assert(live.map(_._1).distinct.length == live.length,
+      "a redelivered doc re-emitted")
+    val batch = graft.operators.TextOps.winnowDecontam(spark, dir)
+      .collect()
+      .map(r => (r.getAs[Long]("doc_id"), r.getAs[Long]("n_fp"),
+        r.getAs[Long]("n_hits"), r.getAs[Long]("hit_mille"),
+        r.getAs[Boolean]("contaminated")))
+    assert(live.toSet == batch.toSet,
+      s"stream/batch verdict mismatch: ${
+        (live.toSet -- batch.toSet).take(3)} vs ${
+        (batch.toSet -- live.toSet).take(3)}")
+    // The fixture must exercise both verdicts.
+    assert(batch.exists(_._5) && batch.exists(!_._5))
   }
 
   test("winnow decontam stream: screened-set survives a stop/restart " +
@@ -1714,10 +1698,6 @@ class StreamOpsSpec extends GraftSpec {
     // suite (≥ w+k−1 = 7, winnowing's guarantee floor).
     import org.apache.spark.sql.functions.col
     import spark.implicits._
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     val base = java.nio.file.Files
       .createTempDirectory("graft-wd-ckpt-").toString
     val inDir = s"$base/in"; val ckpt = s"$base/ckpt"
@@ -1765,75 +1745,84 @@ class StreamOpsSpec extends GraftSpec {
         s"post-restart novel doc missing: ${phase2.mkString}")
     } finally {
       q2.stop()
-      prev match {
-        case Some(v) => spark.conf.set(key, v)
-        case None => spark.conf.unset(key)
-      }
       deleteRecursively(base)
     }
   }
 
   test("streaming quantile sketch equals the batch sketch over any " +
       "micro-batch split (the sketch's merge law, live)") {
-    // Feed the real sf0.01 corpus through the processor in TWO
+    // Feed the real sf0.01 corpus through the stream in TWO
     // micro-batches split by doc_id parity — the same split the batch
     // twin's merge spec uses — and require the final per-lang state to
     // be the batch sketch bit-for-bit: register-set checksum, register
-    // count, and the p50 covering read-out. transformWithState runs on
-    // RocksDB (the documented scale configuration).
+    // count, and the p50 covering read-out.
     import org.apache.spark.sql.functions.col
     implicit val sqlCtx = spark.sqlContext
     import spark.implicits._
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+    val base = graft.Tables.documents(spark, "/root/testdata/sf0.01")
+      .select(col("doc_id"), col("lang"), col("n_chars")).collect()
+      .map(r => DocArrival(r.getLong(0), r.getString(1), r.getLong(2)))
+    val in = MemoryStream[DocArrival]
+    val q = StreamOps.quantileSketchStream(in.toDS())
+      .writeStream.format("memory").queryName("qsketch_stream")
+      .outputMode("update").start()
     try {
-      val base = graft.Tables.documents(spark, "/root/testdata/sf0.01")
-        .select(col("doc_id"), col("lang"), col("n_chars")).collect()
-        .map(r => DocArrival(r.getLong(0), r.getString(1), r.getLong(2)))
-      val in = MemoryStream[DocArrival]
-      val q = StreamOps.quantileSketchStream(in.toDS())
-        .writeStream.format("memory").queryName("qsketch_stream")
-        .outputMode("update").start()
-      try {
-        in.addData(base.filter(_.doc_id % 2 == 0).toSeq)
-        q.processAllAvailable()
-        in.addData(base.filter(_.doc_id % 2 == 1).toSeq)
-        q.processAllAvailable()
-      } finally q.stop()
-      val live = spark.table("qsketch_stream")
-        .collect()
-        .map(r => (r.getAs[String]("lang"), r.getAs[Long]("n_seen"),
-          r.getAs[Int]("n_regs"), r.getAs[Long]("u_checksum"),
-          r.getAs[Long]("p50_est")))
-        .groupBy(_._1).map { case (l, rs) => l -> rs.maxBy(_._2) }
-      // Batch expectation from the operator's own register builder.
-      val batch = graft.operators.TextOps.groupedQuantileRegisters(
-          graft.Tables.documents(spark, "/root/testdata/sf0.01")
-            .select(col("lang"), col("doc_id"),
-              col("n_chars").as("v")))
-        .collect()
-        .map(r => (r.getAs[String]("lang"), r.getAs[Long]("doc_id"),
-          r.getAs[Long]("v"), r.getAs[Long]("u")))
-        .groupBy(_._1)
-      assert(live.keySet == batch.keySet)
-      batch.foreach { case (lang, rs) =>
-        val (_, _, nRegs, checksum, p50) = live(lang)
-        assert(nRegs == rs.length, s"$lang register count")
-        val expectSum = rs.map(_._4).foldLeft(0L)((a, u) =>
-          (a + u) % 2305843009213693951L)
-        assert(checksum == expectSum, s"$lang register-set checksum")
-        val byV = rs.sortBy(r => (r._3, r._2))
-        val kEff = rs.length.toLong
-        val expP50 = byV.zipWithIndex.collectFirst {
-          case (r, i) if (i + 1) * 100 >= kEff * 50 => r._3
-        }.get
-        assert(p50 == expP50, s"$lang p50 read-out")
-      }
-    } finally prev match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
+      in.addData(base.filter(_.doc_id % 2 == 0).toSeq)
+      q.processAllAvailable()
+      in.addData(base.filter(_.doc_id % 2 == 1).toSeq)
+      q.processAllAvailable()
+    } finally q.stop()
+    val live = spark.table("qsketch_stream")
+      .collect()
+      .map(r => (r.getAs[String]("lang"), r.getAs[Long]("n_seen"),
+        r.getAs[Int]("n_regs"), r.getAs[Long]("u_checksum"),
+        r.getAs[Long]("p50_est")))
+      .groupBy(_._1).map { case (l, rs) => l -> rs.maxBy(_._2) }
+    // Batch expectation from the operator's own register builder.
+    val batch = graft.operators.TextOps.groupedQuantileRegisters(
+        graft.Tables.documents(spark, "/root/testdata/sf0.01")
+          .select(col("lang"), col("doc_id"),
+            col("n_chars").as("v")))
+      .collect()
+      .map(r => (r.getAs[String]("lang"), r.getAs[Long]("doc_id"),
+        r.getAs[Long]("v"), r.getAs[Long]("u")))
+      .groupBy(_._1)
+    assert(live.keySet == batch.keySet)
+    batch.foreach { case (lang, rs) =>
+      val (_, _, nRegs, checksum, p50) = live(lang)
+      assert(nRegs == rs.length, s"$lang register count")
+      val expectSum = rs.map(_._4).foldLeft(0L)((a, u) =>
+        (a + u) % 2305843009213693951L)
+      assert(checksum == expectSum, s"$lang register-set checksum")
+      val byV = rs.sortBy(r => (r._3, r._2))
+      val kEff = rs.length.toLong
+      val expP50 = byV.zipWithIndex.collectFirst {
+        case (r, i) if (i + 1) * 100 >= kEff * 50 => r._3
+      }.get
+      assert(p50 == expP50, s"$lang p50 read-out")
     }
+  }
+
+  test("the session drops Spark's streaming AQE notices and no other " +
+      "warning of their loggers") {
+    import org.apache.logging.log4j.Level
+    import org.apache.logging.log4j.core.LoggerContext
+    import org.apache.logging.log4j.core.impl.Log4jLogEvent
+    import org.apache.logging.log4j.message.SimpleMessage
+    assert(spark != null) // Session.local installs the filters
+    def dropped(cls: String, msg: String): Boolean = {
+      val name = s"org.apache.spark.sql.execution.streaming.runtime.$cls"
+      LoggerContext.getContext(false).getConfiguration
+        .getLoggerConfig(name).isFiltered(Log4jLogEvent.newBuilder()
+          .setLoggerName(name).setLevel(Level.WARN)
+          .setMessage(new SimpleMessage(msg)).build())
+    }
+    assert(dropped("MicroBatchExecution",
+      "Disabling AQE since AQE is not supported in stateful workloads."))
+    assert(dropped("ResolveWriteToStream", "spark.sql.adaptive.enabled " +
+      "is not supported in streaming DataFrames/Datasets and will be disabled."))
+    assert(!dropped("MicroBatchExecution", "Query terminated with error"))
+    assert(!dropped("ResolveWriteToStream",
+      "Temporary checkpoint location created which is deleted normally"))
   }
 }

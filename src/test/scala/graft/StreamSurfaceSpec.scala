@@ -5,10 +5,10 @@ import scala.jdk.CollectionConverters._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Source-scan guard for the streaming surface: each stateful rule has
-  * one implementation in `StreamOps`, and every public `StreamOps` def is
-  * driven from somewhere else in the tree, so a second copy of a stateful
-  * surface or a helper nothing calls fails here. Comment lines are
-  * skipped. */
+  * one implementation in `StreamOps`, keyed state has one API, and every
+  * public `StreamOps` def is driven from somewhere else in the tree, so a
+  * second copy of a stateful surface, a second keyed-state API or a
+  * helper nothing calls fails here. Comment lines are skipped. */
 class StreamSurfaceSpec extends AnyFunSuite {
   private val streamOps =
     Paths.get("src/main/scala/graft/streaming/StreamOps.scala")
@@ -50,10 +50,19 @@ class StreamSurfaceSpec extends AnyFunSuite {
       "changeLog" -> "flatMapGroupsWithState",
       "activityState" -> "flatMapGroupsWithState",
       "velocityState" -> "flatMapGroupsWithState",
-      "firstSeenScreenStream" -> "transformWithState",
-      "eventFunnelStream" -> "transformWithState",
-      "quantileSketchStream" -> "transformWithState",
-      "winnowDecontamStream" -> "transformWithState"))
+      "firstSeenScreenStream" -> "flatMapGroupsWithState",
+      "eventFunnelStream" -> "flatMapGroupsWithState",
+      "quantileSketchStream" -> "flatMapGroupsWithState"))
+  }
+
+  test("keyed state has one API: no transformWithState in src/main") {
+    val api = """\b(transformWithState|StatefulProcessor)\b""".r
+    val hits = Files.walk(Paths.get("src/main")).iterator().asScala
+      .filter(_.toString.endsWith(".scala"))
+      .flatMap(p => codeLines(p).filter(api.findFirstIn(_).isDefined)
+        .map(l => s"${p.getFileName}: ${l.trim}"))
+      .toSeq
+    assert(hits.isEmpty, s"second keyed-state API in src/main: $hits")
   }
 
   test("every public StreamOps def is called outside StreamOps.scala") {
