@@ -6,7 +6,10 @@ import graft.operators.VectorOps
 /** Measurement harness for the ANN quality knobs: recall@1 of the IVF
   * variants against the exact brute-force nearest neighbor, per Lloyd
   * iteration count (0 = the untrained stride-sampled quantizer of
-  * `annIvfTop1`). Dev tool — run with
+  * `annIvfTop1`), then the PQ, MIH and RP families. The cosine ground
+  * truth is the memoized [[VectorOps.exactTop1]] the quality report
+  * reads, and stage-2 picks go through [[VectorOps.cosineTop1]]; only
+  * the exact L2 pick the PQ rows are judged by is derived here. Dev tool — run with
   * `sbt "runMain graft.RecallSweep [sfDir]"` (cores from
   * `SPARK_GRAFT_CPUS`, see [[Session]]); the measured numbers are
   * documented at [[VectorOps.LloydIters]]. Not part of the driver
@@ -17,8 +20,9 @@ object RecallSweep {
     val spark = Session.local(Session.cpus)
     graft.functions.Natives.ensure(spark)
     // Exact top-1 by brute force (N² dots — the harness runs at small SF
-    // only; the engine's scalable exact path is cosineTopK's broadcast
-    // form). Same (cosine desc, c_id asc) tiebreak as the ANN queries.
+    // only), with the same (cosine desc, c_id asc) tiebreak as the ANN
+    // queries.
+    val exact = VectorOps.exactTop1(spark, dir)
     val e = Tables.embeddings(spark, dir)
       .select(col("vec_id"), col("embedding"),
         sqrt(expr("vec_dot(embedding, embedding)")).as("norm"))
@@ -26,14 +30,6 @@ object RecallSweep {
       col("embedding").as("q_emb"), col("norm").as("q_norm"))
     val c = e.select(col("vec_id").as("c_id"),
       col("embedding").as("c_emb"), col("norm").as("c_norm"))
-    val exact = q.crossJoin(broadcast(c))
-      .filter(col("c_id") =!= col("q_id"))
-      .withColumn("cosine",
-        expr("vec_dot(q_emb, c_emb)") / (col("q_norm") * col("c_norm")))
-      .groupBy("q_id")
-      .agg(max(struct(col("cosine"), (-col("c_id")).as("neg_c"))).as("best"))
-      .select(col("q_id"), (-col("best.neg_c")).as("exact_c"))
-      .cache()
     val total = exact.count().toDouble
     for (iters <- 0 to 3) {
       val ann =
@@ -111,20 +107,14 @@ object RecallSweep {
     val candTrue = mihCand.join(exact, "q_id")
       .filter(col("c_id") === col("exact_c"))
       .select("q_id").distinct().count()
-    val fullBest = mihCand
-      .join(q, "q_id")
-      .join(c, "c_id")
-      .withColumn("cosine",
-        expr("vec_dot(q_emb, c_emb)") / (col("q_norm") * col("c_norm")))
-      .groupBy("q_id")
-      .agg(max(struct(col("cosine"), (-col("c_id")).as("neg_c"))).as("b"))
-      .select(col("q_id"), (-col("b.neg_c")).as("full_c"))
+    val fullBest = VectorOps.cosineTop1(mihCand, e)
+      .select(col("q_id"), col("c_id").as("full_c"))
     val retained = rr.join(fullBest, "q_id")
       .filter(col("c_id") === col("full_c")).count()
     println(f"mih_rerank true_in_cand=${candTrue / total}%.3f " +
       f"shortlist_retention=${retained / rrN}%.3f " +
       f"(cap=${VectorOps.MihRerankCap}%d, n=${total.toLong}%d)")
-    // PQ + exact-L2 rerank (round 12): stage-2 losslessness makes
+    // PQ + exact-L2 rerank: stage-2 losslessness makes
     // recall@1 equal the coarse candidate stage's true-neighbor
     // coverage — measured against the same exact-L2 pick as the bare
     // ADC argmin for a direct before/after.
@@ -134,7 +124,7 @@ object RecallSweep {
       .filter(col("c_id") === col("exact_l2_c")).count()
     println(f"pq_rerank recall@1(L2)=${pqrHits / total}%.3f " +
       f"(cap=${VectorOps.PqRerankCap}%d, n=${total.toLong}%d)")
-    // RP-256 + rerank (round 12): the longer-codes answer to the 64-bit
+    // RP-256 + rerank: the longer-codes answer to the 64-bit
     // ceiling — same decomposition as the MIH rerank (coverage,
     // recall@1, true-in-candidates) so the two families read
     // side-by-side.

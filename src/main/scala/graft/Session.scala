@@ -57,23 +57,29 @@ object Session {
     // WARN adds nothing.
     Configurator.setLevel(
       "org.apache.spark.sql.execution.window.WindowExec", Level.ERROR)
-    dropStreamingAqeNotices()
+    dropStreamingNotices()
     spark
   }
 
   /** Spark WARNs once or twice per streaming query start that it turns
     * AQE off: `MicroBatchExecution` for every stateful plan whatever the
     * session conf says, and `ResolveWriteToStream` whenever AQE is on in
-    * the session, which batch queries need. No caller can act on either,
-    * so exactly these two messages are dropped; every other message of
-    * the two loggers still prints at the root level. */
-  private def dropStreamingAqeNotices(): Unit = {
+    * the session, which batch queries need. On every stop, `DAGScheduler`
+    * WARNs that it found no active job of the query's job group to cancel,
+    * because the query's last job has already finished. No caller can act
+    * on any of the three, so exactly these messages are dropped; every
+    * other message of the three loggers still prints at the root level. */
+  private def dropStreamingNotices(): Unit = {
     val ctx = LoggerContext.getContext(false)
+    val runtime = "org.apache.spark.sql.execution.streaming.runtime"
     Seq(
-      "ResolveWriteToStream" -> "is not supported in streaming DataFrames",
-      "MicroBatchExecution" -> "Disabling AQE since AQE is not supported in stateful"
-    ).foreach { case (cls, text) =>
-      val name = s"org.apache.spark.sql.execution.streaming.runtime.$cls"
+      s"$runtime.ResolveWriteToStream" ->
+        "is not supported in streaming DataFrames",
+      s"$runtime.MicroBatchExecution" ->
+        "Disabling AQE since AQE is not supported in stateful",
+      "org.apache.spark.scheduler.DAGScheduler" ->
+        "Cannot find active jobs for it"
+    ).foreach { case (name, text) =>
       val lc = new LoggerConfig(name, null, true) // null level: the parent's
       lc.addFilter(StringMatchFilter.newBuilder().setMatchString(text)
         .setOnMatch(Filter.Result.DENY).setOnMismatch(Filter.Result.NEUTRAL)

@@ -57,9 +57,12 @@ object BatchOps {
     * shuffle), and customer joins the |customers|-row aggregate after —
     * order-less customers arrive null and are zero-filled, exactly the
     * post-join grouping's result. */
-  def customerOrdersRollup(spark: SparkSession, dir: String): DataFrame = {
-    val c = Tables.customer(spark, dir)
-    val o = Tables.orders(spark, dir)
+  def customerOrdersRollup(spark: SparkSession, dir: String): DataFrame =
+    customerRollupOf(Tables.customer(spark, dir), Tables.orders(spark, dir))
+
+  /** The A1 rollup body over customers `c` and an orders frame `o`, which
+    * [[customerRollupWindowed]] scopes to a date window. */
+  private def customerRollupOf(c: DataFrame, o: DataFrame): DataFrame = {
     val oa = o.groupBy(o("o_custkey"))
       .agg(
         count(o("o_orderkey")).as("agg_orders"),
@@ -165,25 +168,32 @@ object BatchOps {
 
   def productRollup(spark: SparkSession, dir: String): DataFrame = {
     val p = Tables.part(spark, dir)
-    val l = Tables.lineitem(spark, dir)
-    val o = Tables.orders(spark, dir)
-    val la = l.join(o, l("l_orderkey") === o("o_orderkey"), "left_outer")
-      .groupBy(l("l_partkey"))
-      .agg(
-        sum(l("l_quantity").cast("decimal(18,2)")).cast("double")
-          .as("agg_units"),
-        sum(l("l_extendedprice").cast("decimal(18,2)") *
-            (lit(1).cast("decimal(18,2)") -
-             l("l_discount").cast("decimal(18,2)"))).cast("double")
-          .as("agg_revenue"),
-        countDistinct(o("o_orderkey")).as("agg_orders"))
+    val la = partSales(Tables.lineitem(spark, dir), Tables.orders(spark, dir),
+      lit(true))
     p.join(la, p("p_partkey") === la("l_partkey"), "left_outer")
       .select(
         p("p_partkey"), p("p_name"), p("p_brand"), p("p_type"), p("p_size"),
-        coalesce(col("agg_units"), lit(0.0)).as("units_sold"),
-        coalesce(col("agg_revenue"), lit(0.0)).as("revenue"),
-        coalesce(col("agg_orders"), lit(0L)).as("order_count"))
+        coalesce(col("units_sold"), lit(0.0)).as("units_sold"),
+        coalesce(col("revenue"), lit(0.0)).as("revenue"),
+        coalesce(col("order_count"), lit(0L)).as("order_count"))
   }
+
+  /** The fact side of the A2 rollups: lineitem ⟕ orders rows that pass
+    * `keep`, aggregated per bare `l_partkey` (units_sold, revenue,
+    * order_count), so no part strings ride the shuffle. A `lit(true)`
+    * filter is dropped by the optimizer. */
+  private def partSales(l: DataFrame, o: DataFrame, keep: Column): DataFrame =
+    l.join(o, l("l_orderkey") === o("o_orderkey"), "left_outer")
+      .filter(keep)
+      .groupBy(l("l_partkey"))
+      .agg(
+        sum(l("l_quantity").cast("decimal(18,2)")).cast("double")
+          .as("units_sold"),
+        sum(l("l_extendedprice").cast("decimal(18,2)") *
+            (lit(1).cast("decimal(18,2)") -
+             l("l_discount").cast("decimal(18,2)"))).cast("double")
+          .as("revenue"),
+        countDistinct(o("o_orderkey")).as("order_count"))
 
   /** C4 guarded ratios + C5 category precedence + C6 stock-status chain.
     * pandas-overwrite precedence (batch_processor.py:157-173) becomes a
@@ -526,24 +536,9 @@ object BatchOps {
     * All customers are preserved (zero-filled) — the scope applies to the
     * fact side only, matching the reference's extract shape
     * (batch_processor.py:30-40). */
-  def customerRollupWindowed(spark: SparkSession, dir: String): DataFrame = {
-    val c = Tables.customer(spark, dir)
-    val o = scopedOrders(spark, dir, 30)
-    // Same fact-side-first aggregation as customerOrdersRollup, over the
-    // scan-pruned order window.
-    val oa = o.groupBy(o("o_custkey"))
-      .agg(
-        count(o("o_orderkey")).as("agg_orders"),
-        moneySum(o("o_totalprice")).as("agg_spent"),
-        max(o("o_orderdate")).as("agg_last"))
-    c.join(oa, c("c_custkey") === oa("o_custkey"), "left_outer")
-      .select(
-        c("c_custkey"), c("c_name"), c("c_mktsegment"),
-        coalesce(col("agg_orders"), lit(0L)).as("total_orders"),
-        coalesce(col("agg_spent"), lit(0.0)).as("total_spent"),
-        col("agg_last").as("last_order_date"))
+  def customerRollupWindowed(spark: SparkSession, dir: String): DataFrame =
+    customerRollupOf(Tables.customer(spark, dir), scopedOrders(spark, dir, 30))
       .orderBy("c_custkey")
-  }
 
   /** A2 rollup with the disjunctive post-join predicate (P3): keep rows
     * where l_shipdate OR o_orderdate falls in the trailing 90-day window
@@ -557,25 +552,14 @@ object BatchOps {
     val p = Tables.part(spark, dir)
     val l = Tables.lineitem(spark, dir)
     val o = Tables.orders(spark, dir)
-    val anchor = lit(l.agg(max(col("l_shipdate"))).head().get(0))
-    // Same fact-side-first aggregation as productRollup (narrow shuffle
-    // key). The disjunctive filter references only fact columns, so in
-    // the reference's post-join form a part with no QUALIFYING fact row
-    // never forms a group — hence the inner join back to `part` (not
-    // left): both forms emit exactly the parts with ≥1 surviving row.
-    val la = l.join(o, l("l_orderkey") === o("o_orderkey"), "left_outer")
-      .filter(
-        col("l_shipdate") >= anchor - expr("INTERVAL 90 DAYS") ||
-        col("o_orderdate") >= anchor - expr("INTERVAL 90 DAYS"))
-      .groupBy(l("l_partkey"))
-      .agg(
-        sum(l("l_quantity").cast("decimal(18,2)")).cast("double")
-          .as("units_sold"),
-        sum(l("l_extendedprice").cast("decimal(18,2)") *
-            (lit(1).cast("decimal(18,2)") -
-             l("l_discount").cast("decimal(18,2)"))).cast("double")
-          .as("revenue"),
-        countDistinct(o("o_orderkey")).as("order_count"))
+    val since = lit(l.agg(max(col("l_shipdate"))).head().get(0)) -
+      expr("INTERVAL 90 DAYS")
+    // The disjunctive filter references only fact columns, so in the
+    // reference's post-join form a part with no QUALIFYING fact row never
+    // forms a group — hence the inner join back to `part` (not left):
+    // both forms emit exactly the parts with ≥1 surviving row.
+    val la = partSales(l, o,
+      col("l_shipdate") >= since || col("o_orderdate") >= since)
     p.join(la, p("p_partkey") === la("l_partkey"))
       .select(p("p_partkey"), p("p_name"), p("p_brand"),
         col("units_sold"), col("revenue"), col("order_count"))

@@ -15,7 +15,7 @@ import graft.functions.Natives
   * (`graft.functions.DotProduct`, session-registered as `vec_dot`): a
   * tight generated loop with strict ascending-index accumulation — NOT
   * higher-order-function lambdas (`aggregate`/`zip_with` evaluate an
-  * interpreted lambda per element and dominated the round-4 bench), not
+  * interpreted lambda per element and dominated the bench), not
   * a boxing UDF, and no longer the 64-term unrolled `element_at` sum
   * whose stacked bytecode degraded the JIT in multi-stage queries. The
   * accumulation order matches the left-associated sums the oracle SQL
@@ -29,6 +29,14 @@ import graft.functions.Natives
   * bucket) hash partition, bucket membership is capped, and scoring runs
   * on deduplicated candidate id pairs — corpus × corpus never
   * materializes at any scale.
+  *
+  * Every nearest-neighbour query is the same four stages, each written
+  * once below: encode ([[normed]] norms, [[codeBands]] binary codes),
+  * generate candidates ([[ivfProbe]] over [[strideCentroids]] or a
+  * trained quantizer, the LSH pairs seen from both ends by [[oriented]],
+  * the banded code join [[bandedScoredPairs]]), verify (exact cosine in
+  * [[cosineTop1]], Hamming in [[hammingVerify]]), and pick the
+  * (cosine desc, c_id asc) winner per query in [[cosinePick]].
   */
 object VectorOps {
 
@@ -44,7 +52,7 @@ object VectorOps {
 
   /** Per-(table, bucket) membership cap: a pathological bucket (e.g. a
     * near-duplicate embedding cluster) contributes at most cap² pairs
-    * instead of m² — the skew guard the round-4 design lacked. Members
+    * instead of m². Members
     * are kept in vec_id order so the cap is deterministic. */
   val BucketCap = 64
 
@@ -161,6 +169,47 @@ object VectorOps {
     (0 until BitsPerTable).map { b =>
       s"(CASE WHEN ${projSql(c, hyperplanes(t * BitsPerTable + b))} > 0.0 THEN ${1 << b} ELSE 0 END)"
     }.mkString("(", " + ", ")")
+
+  // --- the nearest-neighbour stages (see the object scaladoc) ---
+
+  /** (vec_id, embedding, norm): the L2 norm is computed once per vector,
+    * not per pair — sqrt(Σx²) then a multiply is the same float ops as
+    * computing both inside the pair, so scores stay bit-identical to the
+    * oracle while the per-pair work drops to one dot product. */
+  private def normed(e: DataFrame): DataFrame =
+    e.select(col("vec_id"), col("embedding"),
+      sqrt(sq("embedding")).as("norm"))
+
+  /** The per-`by` winner of a scored candidate frame (`c_id`, `cosine`)
+    * by (cosine desc, c_id asc), as a max(struct) hash aggregate: the
+    * same deterministic pick as a row_number window, but with map-side
+    * partial combine and no per-key sort. `carry` columns ride the
+    * struct after (cosine, c_id), which is already a total order per
+    * key, so they never decide a tie. Returns `by`, `cosine` (unrounded),
+    * every carried column and `c_id`. */
+  private def cosinePick(scored: DataFrame, by: Seq[String],
+      carry: Column*): DataFrame =
+    scored.groupBy(by.map(col): _*)
+      .agg(max(struct(col("cosine") +: (-col("c_id")).as("neg_c") +: carry: _*))
+        .as("best"))
+      .select(by.map(col) :+ col("best.*"): _*)
+      .withColumn("c_id", -col("neg_c"))
+      .drop("neg_c")
+
+  /** Exact-cosine verify and pick over candidate pairs (`q_id`, `c_id`,
+    * carried columns): the embeddings of a [[normed]] frame join each
+    * side by hash on vec_id, so full-precision vectors are read once per
+    * side and never ride the candidate generation. */
+  private[graft] def cosineTop1(cand: DataFrame, e: DataFrame,
+      carry: Column*): DataFrame =
+    cosinePick(cand
+      .join(e.select(col("vec_id").as("q_id"),
+        col("embedding").as("q_emb"), col("norm").as("q_norm")), "q_id")
+      .join(e.select(col("vec_id").as("c_id"),
+        col("embedding").as("c_emb"), col("norm").as("c_norm")), "c_id")
+      .withColumn("cosine",
+        dot("q_emb", "c_emb") / (col("q_norm") * col("c_norm"))),
+      Seq("q_id"), carry: _*)
 
   /** Per-vector L2 norm + dimension — the normalization pass run before
     * indexing a corpus. */
@@ -312,9 +361,9 @@ object VectorOps {
     // to WindowGroupLimit (partial top-cap per map partition BEFORE the
     // shuffle + final after), so neither the shuffle nor the collect_list
     // buffer ever sees more than `BucketCap` members of a degenerate
-    // bucket — the round-6 slice-after-collect still materialized the
+    // bucket — a slice after collect_list would still materialize the
     // FULL membership in one aggregation row first. Kept members are the
-    // smallest vec_ids, identical to the old sorted-slice cap.
+    // smallest vec_ids.
     val wBucket = Window.partitionBy("tbl", "bucket").orderBy("vec_id")
     val members = hashed
       .withColumn("rn", row_number().over(wBucket))
@@ -329,8 +378,7 @@ object VectorOps {
                named_struct('a', x, 'b', y))))""")).as("p"))
       .select(col("p.a").as("a"), col("p.b").as("b"))
       .distinct()
-    val v = e.select(col("vec_id"), col("embedding"),
-      sqrt(sq("embedding")).as("norm"))
+    val v = normed(e)
     pairs
       .join(v.select(col("vec_id").as("a"), col("embedding").as("a_emb"),
         col("norm").as("a_norm")), "a")
@@ -359,25 +407,26 @@ object VectorOps {
         round(col("cosine"), 9).as("cosine"))
       .orderBy("vec_a", "vec_b")
 
-  /** Multi-table sign-LSH ANN top-1: each vector finds its nearest
-    * candidate neighbor (see [[lshScoredPairs]] for stages 1-4). The
-    * per-query winner is a max(struct(cosine, -c_id)) hash aggregate —
-    * same deterministic (cosine desc, c_id asc) pick as a row_number
-    * window, but with map-side partial combine and no per-key sort. */
-  def annLshTop1(spark: SparkSession, dir: String): DataFrame = {
-    val scored = lshScoredPairs(spark, dir)
-    val oriented = scored
-      .select(col("a").as("q_id"), col("b").as("c_id"), col("cosine"))
+  /** A symmetric pair frame (a, b, cosine) seen from both ends:
+    * (q_id, c_id, cosine) rows for a → b and b → a. */
+  private def oriented(scored: DataFrame): DataFrame =
+    scored.select(col("a").as("q_id"), col("b").as("c_id"), col("cosine"))
       .unionByName(scored
         .select(col("b").as("q_id"), col("a").as("c_id"), col("cosine")))
-    oriented
-      .groupBy("q_id")
-      .agg(max(struct(col("cosine"), (-col("c_id")).as("neg_c")))
-        .as("best"))
-      .select(col("q_id"), (-col("best.neg_c")).as("c_id"),
-        round(col("best.cosine"), 9).as("cosine"))
+
+  /** Each vector's nearest LSH candidate, (q_id, c_id, cosine) unsorted
+    * and unrounded: the one pick [[annLshTop1]], [[knnLabelAgreement]]
+    * and [[knnConfusion]] report on. */
+  private def lshTop1(spark: SparkSession, dir: String): DataFrame =
+    cosinePick(oriented(lshScoredPairs(spark, dir)), Seq("q_id"))
+
+  /** Multi-table sign-LSH ANN top-1: each vector finds its nearest
+    * candidate neighbor (see [[lshScoredPairs]] for stages 1-4, and
+    * [[cosinePick]] for the pick). */
+  def annLshTop1(spark: SparkSession, dir: String): DataFrame =
+    lshTop1(spark, dir)
+      .select(col("q_id"), col("c_id"), round(col("cosine"), 9).as("cosine"))
       .orderBy("q_id")
-  }
 
   /** Hard-negative mining — the contrastive-training data op: for each
     * vector, the most-similar neighbor with a DIFFERENT label (the
@@ -389,32 +438,19 @@ object VectorOps {
     * mine anyway. Labels join on after the id-only candidate shuffles
     * (embeddings and labels never ride the explode/distinct stages),
     * the different-label filter prunes before the per-query winner, and
-    * the winner is the same max(struct) partial-aggregable pick as
-    * [[annLshTop1]] — no per-key sort, map-side combinable, the
-    * 100 TB aggregation shape. */
+    * the winner is the shared [[cosinePick]] with c_label carried. */
   def hardNegatives(spark: SparkSession, dir: String): DataFrame = {
     val labels = Tables.embeddings(spark, dir)
       .select(col("vec_id"), col("label"))
-    val scored = lshScoredPairs(spark, dir)
-    val oriented = scored
-      .select(col("a").as("q_id"), col("b").as("c_id"), col("cosine"))
-      .unionByName(scored
-        .select(col("b").as("q_id"), col("a").as("c_id"), col("cosine")))
-    oriented
+    val candidates = oriented(lshScoredPairs(spark, dir))
       .join(labels.select(col("vec_id").as("q_id"),
         col("label").as("q_label")), "q_id")
       .join(labels.select(col("vec_id").as("c_id"),
         col("label").as("c_label")), "c_id")
       .filter(col("q_label") =!= col("c_label"))
-      .groupBy("q_id", "q_label")
-      // (cosine, neg_c) is already a total order per query; c_label
-      // rides along without affecting the pick.
-      .agg(max(struct(col("cosine"), (-col("c_id")).as("neg_c"),
-        col("c_label"))).as("best"))
-      .select(col("q_id"), col("q_label"),
-        (-col("best.neg_c")).as("c_id"),
-        col("best.c_label").as("c_label"),
-        round(col("best.cosine"), 9).as("cosine"))
+    cosinePick(candidates, Seq("q_id", "q_label"), col("c_label"))
+      .select(col("q_id"), col("q_label"), col("c_id"), col("c_label"),
+        round(col("cosine"), 9).as("cosine"))
       .orderBy("q_id")
   }
 
@@ -463,15 +499,7 @@ object VectorOps {
   def knnLabelAgreement(spark: SparkSession, dir: String): DataFrame = {
     val labels = Tables.embeddings(spark, dir)
       .select(col("vec_id"), col("label"))
-    val scored = lshScoredPairs(spark, dir)
-    val oriented = scored
-      .select(col("a").as("q_id"), col("b").as("c_id"), col("cosine"))
-      .unionByName(scored
-        .select(col("b").as("q_id"), col("a").as("c_id"), col("cosine")))
-    val pick = oriented
-      .groupBy("q_id")
-      .agg(max(struct(col("cosine"), (-col("c_id")).as("neg_c"))).as("best"))
-      .select(col("q_id"), (-col("best.neg_c")).as("c_id"))
+    val pick = lshTop1(spark, dir).select("q_id", "c_id")
     val totals = labels.groupBy("label").agg(count(lit(1)).as("n_vectors"))
     pick
       .join(labels.select(col("vec_id").as("q_id"),
@@ -535,15 +563,7 @@ object VectorOps {
   def knnConfusion(spark: SparkSession, dir: String): DataFrame = {
     val labels = Tables.embeddings(spark, dir)
       .select(col("vec_id"), col("label"))
-    val scored = lshScoredPairs(spark, dir)
-    val oriented = scored
-      .select(col("a").as("q_id"), col("b").as("c_id"), col("cosine"))
-      .unionByName(scored
-        .select(col("b").as("q_id"), col("a").as("c_id"), col("cosine")))
-    val pick = oriented
-      .groupBy("q_id")
-      .agg(max(struct(col("cosine"), (-col("c_id")).as("neg_c"))).as("best"))
-      .select(col("q_id"), (-col("best.neg_c")).as("c_id"))
+    val pick = lshTop1(spark, dir).select("q_id", "c_id")
     val cells = pick
       .join(labels.select(col("vec_id").as("q_id"),
         col("label").as("label")), "q_id")
@@ -592,6 +612,16 @@ object VectorOps {
        |FROM cells JOIN rt ON cells.label = rt.label
        |ORDER BY 1, 2""".stripMargin
 
+  /** The [[normed]] corpus every quantizer stage fans out over, behind a
+    * NUMBERED repartition: AQE coalesces shuffle stages by BYTES, and the
+    * N×C assignment is tiny in bytes but heavy in compute — byte-based
+    * coalescing would serialize it onto 1-2 cores. An explicit partition
+    * count (the session's parallelism) is exempt from AQE coalescing,
+    * keeping the fan-out on every core. */
+  private def ivfCorpus(spark: SparkSession, dir: String): DataFrame =
+    normed(Tables.embeddings(spark, dir)
+      .repartition(spark.sparkContext.defaultParallelism, col("vec_id")))
+
   /** IVF coarse-quantizer sizing: C ≈ √N centroids, sampled as every
     * stride-th vec_id with stride = ⌈N / ⌈√N⌉⌉. √N balances the two
     * cost terms of IVF — assignment is N×C and in-cell probing is
@@ -600,11 +630,73 @@ object VectorOps {
     * keeps both engines bit-identical while the SEARCH shape (assign to
     * nearest centroid, probe within the cell) is exactly the
     * trained-centroid plan. ceil/sqrt are correctly-rounded IEEE ops in
-    * both engines, so the oracle derives the identical stride in SQL. */
-  private def centroidStride(n: Long): Long = {
+    * both engines, so the oracle derives the identical stride in SQL.
+    *
+    * `e` is a [[normed]] frame of the `n`-vector corpus; the result is
+    * (cent_id, cent_emb, cent_norm). */
+  private def strideCentroids(e: DataFrame, n: Long): DataFrame = {
     val c = math.ceil(math.sqrt(n.toDouble)).toLong max 1L
-    math.max(1L, math.ceil(n.toDouble / c).toLong)
+    val stride = math.max(1L, math.ceil(n.toDouble / c).toLong)
+    e.filter(col("vec_id") % stride === 0)
+      .select(col("vec_id").as("cent_id"),
+        col("embedding").as("cent_emb"), col("norm").as("cent_norm"))
   }
+
+  /** The IVF candidate stage over a [[normed]] frame `e` and a coarse
+    * quantizer `cents` (cent_id, cent_emb, cent_norm): every vector is
+    * ranked against the broadcast centroids, INDEXED under its top-1
+    * cell, and PROBES the capped membership of its [[NProbe]] nearest
+    * cells. Returns (q_id, cent_id, c_id): candidates are unique per
+    * query (a candidate lives in exactly one cell), so no dedup stage is
+    * needed. */
+  private def ivfProbe(e: DataFrame, cents: DataFrame): DataFrame = {
+    // The N×C assignment fan-out joins on a NON-FOLDABLE always-zero key
+    // (pmod of the id): BroadcastNestedLoopJoin does not participate in
+    // whole-stage codegen, so above a crossJoin the dot product runs
+    // interpreted (measured ~5 s at sf0.1) — and a plain literal key
+    // constant-folds straight back into a crossJoin. As a
+    // BroadcastHashJoin the whole assign-score stage compiles.
+    // The centroid ranking is a row_number ≤ NProbe filter, which
+    // compiles to WindowGroupLimit: each map partition keeps only the
+    // top-NProbe centroids per vector BEFORE the shuffle, so ~NProbe×N
+    // rows ride the exchange, not N×C.
+    val wAssign = Window.partitionBy("vec_id")
+      .orderBy(col("sim").desc, col("cent_id"))
+    val ranked = e.withColumn("jk", pmod(col("vec_id"), lit(1)))
+      .join(broadcast(cents.withColumn("jk", pmod(col("cent_id"), lit(1)))),
+        "jk")
+      .withColumn("sim",
+        dot("embedding", "cent_emb") / (col("norm") * col("cent_norm")))
+      .select(col("vec_id"), col("cent_id"), col("sim"))
+      .withColumn("pr", row_number().over(wAssign))
+      .filter(col("pr") <= NProbe)
+    // Membership is rank-capped at `CellCap` BEFORE the aggregate
+    // (WindowGroupLimit again, ascending vec_id): each map partition
+    // forwards at most CellCap members per cell, so a degenerate cell can
+    // neither explode m² pairs nor grow the collect_list buffer past the
+    // cap. Both branches reuse the one ranked-assignment exchange.
+    val wCell = Window.partitionBy("cent_id").orderBy("vec_id")
+    val cells = ranked.filter(col("pr") === 1)
+      .select(col("vec_id"), col("cent_id"))
+      .withColumn("rn", row_number().over(wCell))
+      .filter(col("rn") <= CellCap)
+      .groupBy("cent_id")
+      .agg(array_sort(collect_list(col("vec_id"))).as("ids"))
+    ranked.select(col("vec_id").as("q_id"), col("cent_id"))
+      .join(cells, "cent_id")
+      .select(col("q_id"), col("cent_id"), explode(col("ids")).as("c_id"))
+      .filter(col("c_id") =!= col("q_id"))
+  }
+
+  /** The exact-cosine winner of an [[ivfProbe]] candidate frame,
+    * (q_id, cent_id, c_id, cosine) in q_id order. cent_id is the
+    * WINNER's cell (a query probes more than one); it rides the pick
+    * negated, and is determined by c_id, so it never decides a tie. */
+  private def ivfTop1(cand: DataFrame, e: DataFrame): DataFrame =
+    cosineTop1(cand, e, (-col("cent_id")).as("neg_cell"))
+      .select(col("q_id"), (-col("neg_cell")).as("cent_id"), col("c_id"),
+        round(col("cosine"), 9).as("cosine"))
+      .orderBy("q_id")
 
   /** IVF-style ANN top-1 — the inverted-file alternative to the sign-LSH
     * path: index every vector under its nearest centroid (broadcast the
@@ -619,82 +711,11 @@ object VectorOps {
     * min(stride, cap)² per cell even on a degenerately clustered corpus. */
   def annIvfTop1(spark: SparkSession, dir: String): DataFrame = {
     Natives.ensure(spark)
-    // NUMBERED repartition: AQE coalesces shuffle stages by BYTES, and
-    // this stage is tiny in bytes but heavy in compute (N×C dot
-    // products) — byte-based coalescing would serialize it onto 1-2
-    // cores. An explicit partition count (the session's parallelism) is
-    // exempt from AQE coalescing, keeping the fan-out on every core.
-    val e = Tables.embeddings(spark, dir)
-      .repartition(spark.sparkContext.defaultParallelism, col("vec_id"))
-      .select(col("vec_id"), col("embedding"),
-        sqrt(sq("embedding")).as("norm"))
+    val e = ivfCorpus(spark, dir)
     // One-scalar driver collect (like the windowed extracts' anchor):
     // the corpus size fixes the √N quantizer stride.
-    val stride = centroidStride(Tables.embeddings(spark, dir).count())
-    val cents = e.filter(col("vec_id") % stride === 0)
-      .select(col("vec_id").as("cent_id"),
-        col("embedding").as("cent_emb"), col("norm").as("cent_norm"))
-    // The N×C assignment fan-out joins on a NON-FOLDABLE always-zero key
-    // (pmod of the id): BroadcastNestedLoopJoin does not participate in
-    // whole-stage codegen, so above a crossJoin the unrolled dot product
-    // runs interpreted (measured ~5 s at sf0.1) — and a plain literal
-    // key constant-folds straight back into a crossJoin. As a
-    // BroadcastHashJoin the whole assign-score stage compiles.
-    // The centroid ranking is a row_number ≤ NProbe filter, which
-    // compiles to WindowGroupLimit: each map partition keeps only the
-    // top-NProbe centroids per vector BEFORE the shuffle, so ~NProbe×N
-    // rows ride the exchange, not N×C (the round-6 top-1-only form used
-    // a max(struct) hash aggregate; the rank limit generalizes it to
-    // nprobe cells at the same shuffle volume).
-    val wAssign = Window.partitionBy("vec_id")
-      .orderBy(col("sim").desc, col("cent_id"))
-    val ranked = e.withColumn("jk", pmod(col("vec_id"), lit(1)))
-      .join(broadcast(cents.withColumn("jk", pmod(col("cent_id"), lit(1)))),
-        "jk")
-      .withColumn("sim",
-        dot("embedding", "cent_emb") / (col("norm") * col("cent_norm")))
-      .select(col("vec_id"), col("cent_id"), col("sim"))
-      .withColumn("pr", row_number().over(wAssign))
-      .filter(col("pr") <= NProbe)
-    // Each vector is INDEXED under its top-1 cell only (the inverted
-    // file); membership is rank-capped at `CellCap` BEFORE the aggregate
-    // (WindowGroupLimit again), so a degenerate cell can neither explode
-    // m² pairs nor blow the collect_list buffer. Both branches below
-    // reuse the one ranked-assignment exchange.
-    val assigned = ranked.filter(col("pr") === 1)
-      .select(col("vec_id"), col("cent_id"))
-    val wCell = Window.partitionBy("cent_id").orderBy("vec_id")
-    val cells = assigned
-      .withColumn("rn", row_number().over(wCell))
-      .filter(col("rn") <= CellCap)
-      .groupBy("cent_id")
-      .agg(array_sort(collect_list(col("vec_id"))).as("ids"))
-    // Probe: every vector queries the capped membership of each of its
-    // NProbe nearest cells. Candidates are unique per query (a candidate
-    // lives in exactly one cell), so no dedup stage is needed.
-    val cand = ranked.select(col("vec_id").as("q_id"), col("cent_id"))
-      .join(cells, "cent_id")
-      .select(col("q_id"), col("cent_id"), explode(col("ids")).as("c_id"))
-      .filter(col("c_id") =!= col("q_id"))
-    cand
-      .join(e.select(col("vec_id").as("q_id"),
-        col("embedding").as("q_emb"), col("norm").as("q_norm")), "q_id")
-      .join(e.select(col("vec_id").as("c_id"),
-        col("embedding").as("c_emb"), col("norm").as("c_norm")), "c_id")
-      .withColumn("cosine",
-        dot("q_emb", "c_emb") / (col("q_norm") * col("c_norm")))
-      // Per-query winner as a max(struct) hash aggregate (map-side
-      // partial combine; same deterministic (cosine desc, c_id asc)
-      // pick as a window). cent_id is the WINNER's cell now that a
-      // query probes more than one — it rides the struct, determined by
-      // c_id so it never decides a tie.
-      .groupBy("q_id")
-      .agg(max(struct(col("cosine"), (-col("c_id")).as("neg_c"),
-        (-col("cent_id")).as("neg_cell"))).as("best"))
-      .select(col("q_id"), (-col("best.neg_cell")).as("cent_id"),
-        (-col("best.neg_c")).as("c_id"),
-        round(col("best.cosine"), 9).as("cosine"))
-      .orderBy("q_id")
+    val cents = strideCentroids(e, Tables.embeddings(spark, dir).count())
+    ivfTop1(ivfProbe(e, cents), e)
   }
 
   /** IVF with a TRAINED coarse quantizer — [[LloydIters]] Lloyd
@@ -718,9 +739,6 @@ object VectorOps {
   def annIvfTrainedTop1(spark: SparkSession, dir: String): DataFrame =
     annIvfTrainedTop1Iter(spark, dir, LloydIters)
 
-  /** [[annIvfTrainedTop1]] with an explicit iteration count — the public
-    * entry fixes `iters = LloydIters`; the parameter exists so the recall
-    * harness can sweep it. */
   /** [[LloydIters]]-trained coarse centroids (cent_id, cent_emb,
     * cent_norm) — the session memo of the TRAINED coarse quantizer,
     * keyed by `iters` as well as the dir. The quantizer is trained once
@@ -736,14 +754,8 @@ object VectorOps {
   private def trainedCoarseCentroidsUncached(spark: SparkSession,
       dir: String, iters: Int): DataFrame = {
     Natives.ensure(spark)
-    val e = Tables.embeddings(spark, dir)
-      .repartition(spark.sparkContext.defaultParallelism, col("vec_id"))
-      .select(col("vec_id"), col("embedding"),
-        sqrt(sq("embedding")).as("norm"))
-    val stride = centroidStride(Tables.embeddings(spark, dir).count())
-    val c0 = e.filter(col("vec_id") % stride === 0)
-      .select(col("vec_id").as("cent_id"),
-        col("embedding").as("cent_emb"), col("norm").as("cent_norm"))
+    val e = ivfCorpus(spark, dir)
+    val c0 = strideCentroids(e, Tables.embeddings(spark, dir).count())
     // Lloyd step (×iters): argmin assignment to the current
     // centroids (max(struct) hash aggregate — top-1 only, so no window
     // needed), then the fixed-point per-dimension mean per cell.
@@ -794,52 +806,15 @@ object VectorOps {
     (1 to iters).foldLeft(c0)((c, _) => lloydStep(c))
   }
 
+  /** [[annIvfTrainedTop1]] with an explicit iteration count — the public
+    * entry fixes `iters = LloydIters`; the parameter exists so the recall
+    * harness can sweep it. The search is [[annIvfTop1]]'s, against the
+    * trained quantizer. */
   private[graft] def annIvfTrainedTop1Iter(spark: SparkSession, dir: String,
       iters: Int): DataFrame = {
     Natives.ensure(spark)
-    val e = Tables.embeddings(spark, dir)
-      .repartition(spark.sparkContext.defaultParallelism, col("vec_id"))
-      .select(col("vec_id"), col("embedding"),
-        sqrt(sq("embedding")).as("norm"))
-    val trained = trainedCoarseCentroids(spark, dir, iters)
-    // Search phase: identical shape to annIvfTop1, against the trained
-    // quantizer.
-    val wAssign = Window.partitionBy("vec_id")
-      .orderBy(col("sim").desc, col("cent_id"))
-    val ranked = e.withColumn("jk", pmod(col("vec_id"), lit(1)))
-      .join(broadcast(trained.withColumn("jk", pmod(col("cent_id"), lit(1)))),
-        "jk")
-      .withColumn("sim",
-        dot("embedding", "cent_emb") / (col("norm") * col("cent_norm")))
-      .select(col("vec_id"), col("cent_id"), col("sim"))
-      .withColumn("pr", row_number().over(wAssign))
-      .filter(col("pr") <= NProbe)
-    val assigned = ranked.filter(col("pr") === 1)
-      .select(col("vec_id"), col("cent_id"))
-    val wCell = Window.partitionBy("cent_id").orderBy("vec_id")
-    val cells = assigned
-      .withColumn("rn", row_number().over(wCell))
-      .filter(col("rn") <= CellCap)
-      .groupBy("cent_id")
-      .agg(array_sort(collect_list(col("vec_id"))).as("ids"))
-    val cand = ranked.select(col("vec_id").as("q_id"), col("cent_id"))
-      .join(cells, "cent_id")
-      .select(col("q_id"), col("cent_id"), explode(col("ids")).as("c_id"))
-      .filter(col("c_id") =!= col("q_id"))
-    cand
-      .join(e.select(col("vec_id").as("q_id"),
-        col("embedding").as("q_emb"), col("norm").as("q_norm")), "q_id")
-      .join(e.select(col("vec_id").as("c_id"),
-        col("embedding").as("c_emb"), col("norm").as("c_norm")), "c_id")
-      .withColumn("cosine",
-        dot("q_emb", "c_emb") / (col("q_norm") * col("c_norm")))
-      .groupBy("q_id")
-      .agg(max(struct(col("cosine"), (-col("c_id")).as("neg_c"),
-        (-col("cent_id")).as("neg_cell"))).as("best"))
-      .select(col("q_id"), (-col("best.neg_cell")).as("cent_id"),
-        (-col("best.neg_c")).as("c_id"),
-        round(col("best.cosine"), 9).as("cosine"))
-      .orderBy("q_id")
+    val e = ivfCorpus(spark, dir)
+    ivfTop1(ivfProbe(e, trainedCoarseCentroids(spark, dir, iters)), e)
   }
 
   /** DuckDB oracle for [[annIvfTrainedTop1]] — same init, same
@@ -1554,14 +1529,13 @@ object VectorOps {
         col("adc").as("adc_dist"))
       .orderBy("q_id")
 
-  /** Session-scoped memo of the rank-capped ADC SHORTLIST — r19: the
-    * r18 memo checkpointed the FULL ADC-scored pair frame, and its
-    * materialization alone cost ~9.8 s at sf0.1/32c against ~2 s of
-    * per-query reuse (the r18 verdict's lead finding). Both registered
-    * consumers only ever read each query's [[PqRerankCap]] ADC-nearest
-    * rows ([[annPqRerankTop1]] by definition; [[annPqTop1]] reads the
-    * top-1, contained in any cap ≥ 1), so the memo now stores exactly
-    * that slice: N×cap rows instead of N×candidates. The rank filter
+  /** Session-scoped memo of the rank-capped ADC SHORTLIST. Both
+    * registered consumers only ever read each query's [[PqRerankCap]]
+    * ADC-nearest rows ([[annPqRerankTop1]] by definition; [[annPqTop1]]
+    * reads the top-1, contained in any cap ≥ 1), so the memo stores
+    * exactly that slice: N×cap rows instead of N×candidates —
+    * checkpointing the full ADC-scored pair frame cost more to
+    * materialize than its reuse saved. The rank filter
     * compiles to WindowGroupLimit (map-side ≤ cap rows per query
     * before the exchange). Populate cost visible as `pq_shortlist` in
     * `memo_populate`. */
@@ -1583,64 +1557,26 @@ object VectorOps {
       .select("q_id", "c_id", "cent_id", "adc", "rk")
   }
 
+  /** Every IVF candidate pair (q_id, c_id, cent_id) scored by its
+    * exact-decimal ADC distance `adc` — the coarse [[ivfProbe]] over the
+    * [[strideCentroids]] quantizer, then PQ-code scoring. */
   private[graft] def pqAdcScoredUncached(spark: SparkSession,
       dir: String): DataFrame = {
     Natives.ensure(spark)
-    val e = Tables.embeddings(spark, dir)
-      .repartition(spark.sparkContext.defaultParallelism, col("vec_id"))
-      .select(col("vec_id"), col("embedding"),
-        sqrt(sq("embedding")).as("norm"))
+    val e = ivfCorpus(spark, dir)
     // One-scalar driver collect (the documented anchor pattern): corpus
     // size fixes the √N coarse stride (the codebook stride inside
     // pqEncode derives from the same count).
     val n = Tables.embeddings(spark, dir).count()
-    val coarseStride = centroidStride(n)
     val pq = pqEncode(spark, dir, n)
-    // Coarse candidate generation — identical shape to annIvfTop1
-    // (ranked nprobe assignment, capped cells, probe join).
-    val cents = e.filter(col("vec_id") % coarseStride === 0)
-      .select(col("vec_id").as("cent_id"),
-        col("embedding").as("cent_emb"), col("norm").as("cent_norm"))
-    val wAssign = Window.partitionBy("vec_id")
-      .orderBy(col("sim").desc, col("cent_id"))
-    val ranked = e.withColumn("jk", pmod(col("vec_id"), lit(1)))
-      .join(broadcast(cents.withColumn("jk", pmod(col("cent_id"), lit(1)))),
-        "jk")
-      .withColumn("sim",
-        dot("embedding", "cent_emb") / (col("norm") * col("cent_norm")))
-      .select(col("vec_id"), col("cent_id"), col("sim"))
-      .withColumn("pr", row_number().over(wAssign))
-      .filter(col("pr") <= NProbe)
-    // Cell membership capped BEFORE the aggregate (WindowGroupLimit, the
-    // [[annIvfTop1]] recipe): the r11 fused form capped inside the
-    // aggregate with `slice(array_sort(collect_list(...)))`, which was
-    // one less exchange+sort locally but buffered the ENTIRE cell in one
-    // aggregation buffer before slicing — on a degenerately clustered
-    // corpus one cell ≈ the corpus, so the buffer was unbounded (the
-    // exact trap annIvfTop1's pre-cap exists to avoid). The rank filter
-    // compiles to WindowGroupLimit: each map partition keeps at most
-    // CellCap members per cell before the shuffle, and the collect_list
-    // buffer is ≤ CellCap elements by construction. Ascending-vec_id
-    // rank keeps the SAME survivors as the sorted-slice form, so the
-    // oracle is unchanged.
-    val wCell = Window.partitionBy("cent_id").orderBy("vec_id")
-    val cells = ranked.filter(col("pr") === 1)
-      .select(col("vec_id"), col("cent_id"))
-      .withColumn("rn", row_number().over(wCell))
-      .filter(col("rn") <= CellCap)
-      .groupBy("cent_id")
-      .agg(array_sort(collect_list(col("vec_id"))).as("ids"))
-    val cand = ranked.select(col("vec_id").as("q_id"), col("cent_id"))
-      .join(cells, "cent_id")
-      .select(col("q_id"), col("cent_id"), explode(col("ids")).as("c_id"))
-      .filter(col("c_id") =!= col("q_id"))
+    val cand = ivfProbe(e, strideCentroids(e, n))
     // ADC scoring, FUSED: a candidate pair carries only its 12-byte
     // codes (at scale this join moves the compressed index, never the
     // vectors). Three earlier shapes lost to this one, measured: joining
     // the m×K-double LUT arrays ACROSS AN EXCHANGE copied ~8 KB of array
     // payload per candidate row; higher-order transform/aggregate
-    // scoring dropped to interpreted per-element lambda eval; and the
-    // round-10 long form (pairs exploded to (pair, s, code) rows,
+    // scoring dropped to interpreted per-element lambda eval; and a
+    // long form (pairs exploded to (pair, s, code) rows,
     // LUTs flattened to (q_id, s, code, d) rows, one shuffled-hash join,
     // two hash aggregates) was exchange-clean but paid FOUR sequential
     // stage barriers — 2.2 s of the query's recorded 4.65 s at sf0.1
@@ -1654,8 +1590,8 @@ object VectorOps {
     // place from the join row and no array payload ever crosses an
     // exchange or lands in an output row. The per-pair ADC sum chains
     // DECIMAL(28,12) casts of the 16 subspace terms, so it is exact and
-    // order-independent — bit-identical to the round-10 decimal SUM
-    // aggregate and to the oracle's mirrored per-term cast — and the
+    // order-independent — bit-identical to a decimal SUM aggregate and
+    // to the oracle's mirrored per-term cast — and the
     // argmin keeps the (adc, c_id, cent_id) lexicographic tie-break.
     val codesWide = pq.select(col("vec_id").as("c_id") +:
       (0 until PqSubspaces).map(s => col(s"code$s")): _*)
@@ -2357,28 +2293,31 @@ object VectorOps {
     * coverage decomposition. Registered queries read the rank-capped
     * [[mihShortlist]] memo instead. */
   private[graft] def mihScoredPairsUncached(spark: SparkSession,
-      dir: String): DataFrame = {
+      dir: String): DataFrame =
+    bandedScoredPairs(codeBands(spark, dir, MihBands)(j =>
+      s"sign_bits(embedding, ${j * MihBandBits}, $MihBandBits)"),
+      MihBands, MihBucketCap)
+
+  /** The binary-code encoder of every banded family: one row per vector,
+    * `vec_id, b0..b{nBands-1}`, band j packed by the native expression
+    * `band(j)` (`sign_bits` or `rp_bits`, one generated loop per band —
+    * not an interpreted per-element lambda). Checkpointed: the postings,
+    * both verify sides and the probes all read it. */
+  private def codeBands(spark: SparkSession, dir: String, nBands: Int)(
+      band: Int => String): DataFrame = {
     Natives.ensure(spark)
-    // Native band packer (graft.functions.SignBits): the aggregate()
-    // HOF this replaces evaluated an interpreted lambda per ELEMENT —
-    // per vector per band, the binary-quantization hot path at scale.
-    val bandCols = (0 until MihBands).map { j =>
-      expr(s"sign_bits(embedding, ${j * MihBandBits}, $MihBandBits)")
-        .as(s"b$j")
-    }
-    val bands = Tables.embeddings(spark, dir)
-      .select(col("vec_id") +: bandCols: _*)
+    Tables.embeddings(spark, dir)
+      .select(col("vec_id") +:
+        (0 until nBands).map(j => expr(band(j)).as(s"b$j")): _*)
       .localCheckpoint()
-    bandedScoredPairs(bands, MihBands, MihBucketCap)
   }
 
-  /** Session-scoped memo of the rank-capped MIH shortlist — r19: the
-    * r18 memo (`mih_pairs`) checkpointed the FULL scored-pair frame,
-    * but every registered consumer ([[annMihTop1]],
-    * [[annMihRerankTop1]], [[annQualityReport]] through the latter)
-    * reads only each query's [[MihRerankCap]] Hamming-nearest rows —
-    * so the memo now stores exactly that slice (N×cap rows) and the
-    * per-call rank window disappears from every consumer. Populate
+  /** Session-scoped memo of the rank-capped MIH shortlist: every
+    * registered consumer ([[annMihTop1]], [[annMihRerankTop1]],
+    * [[annQualityReport]] through the latter) reads only each query's
+    * [[MihRerankCap]] Hamming-nearest rows, so the memo stores exactly
+    * that slice (N×cap rows, not the full scored-pair frame) and no
+    * consumer runs a rank window of its own. Populate
     * cost visible as `mih_shortlist` in `memo_populate`. */
   private[graft] def mihShortlist(spark: SparkSession,
       dir: String): DataFrame =
@@ -2394,18 +2333,36 @@ object VectorOps {
     * Returns (q_id, c_id, hamming). */
   private def bandedScoredPairs(bands: DataFrame, nBands: Int,
       bucketCap: Int): DataFrame = {
-    val posted = bands.select(col("vec_id"),
+    val capped = stopCapped(postings(bands, nBands), bucketCap)
+    hammingVerify(
+      capped.select(col("vec_id").as("q_id"), col("j"), col("bv"))
+        .join(capped.select(col("vec_id").as("c_id"), col("j"), col("bv")),
+          Seq("j", "bv")),
+      bands, nBands)
+  }
+
+  /** One (vec_id, j, bv) posting per vector and band. */
+  private def postings(bands: DataFrame, nBands: Int): DataFrame =
+    bands.select(col("vec_id"),
       posexplode(array((0 until nBands).map(j => col(s"b$j")): _*))
         .as(Seq("j", "bv")))
+
+  /** The postings of every (band, value) bucket of at most `bucketCap`
+    * members; larger buckets are dropped whole as stop bands. */
+  private def stopCapped(posted: DataFrame, bucketCap: Int): DataFrame = {
     val wB = Window.partitionBy("j", "bv")
-    val capped = posted
+    posted
       .withColumn("bsz", count(lit(1)).over(wB))
       .filter(col("bsz") <= bucketCap)
       .select("vec_id", "j", "bv")
-    val pairs = capped.select(col("vec_id").as("q_id"), col("j"), col("bv"))
-      .join(capped.select(col("vec_id").as("c_id"), col("j"), col("bv")),
-        Seq("j", "bv"))
-      .filter(col("q_id") =!= col("c_id"))
+  }
+
+  /** The Hamming verify of banded candidate rows (q_id, c_id, …): the
+    * distinct non-self pairs, scored by one codegen'd `bit_count(xor)`
+    * sum over the full codes of `bands`. Returns (q_id, c_id, hamming). */
+  private def hammingVerify(cand: DataFrame, bands: DataFrame,
+      nBands: Int): DataFrame = {
+    val pairs = cand.filter(col("q_id") =!= col("c_id"))
       .select("q_id", "c_id").distinct()
     val qb = bands.select(col("vec_id").as("q_id") +:
       (0 until nBands).map(j => col(s"b$j").as(s"qb$j")): _*)
@@ -2461,35 +2418,18 @@ object VectorOps {
     cosineRerankTop1(spark, dir, mihShortlist(spark, dir))
   }
 
-  /** Stage 2 shared by [[annMihRerankTop1]] and [[annRpRerankTop1]]:
-    * rescore the memoized [[MihRerankCap]]-capped Hamming shortlist
-    * with exact cosine over the raw embeddings, pick the
-    * (cosine desc, c_id asc) argmax. The corpus-sized embedding table
-    * joins the shortlist by hash on vec_id, so full-precision vectors
-    * are read once per shortlist side and never ride the candidate
-    * explosion. `scored` must already be rank-capped (the shortlist
-    * memos are, by construction). */
+  /** Stage 2 shared by the binary-code rerank queries: rescore the
+    * memoized [[MihRerankCap]]-capped Hamming shortlist with
+    * [[cosineTop1]], carrying each winner's Hamming distance. `scored`
+    * must already be rank-capped (the shortlist memos are, by
+    * construction). */
   private def cosineRerankTop1(spark: SparkSession, dir: String,
-      scored: DataFrame): DataFrame = {
-    val shortlist = scored.select("q_id", "c_id", "hamming")
-    val e = Tables.embeddings(spark, dir)
-      .select(col("vec_id"), col("embedding"),
-        sqrt(sq("embedding")).as("norm"))
-    shortlist
-      .join(e.select(col("vec_id").as("q_id"),
-        col("embedding").as("q_emb"), col("norm").as("q_norm")), "q_id")
-      .join(e.select(col("vec_id").as("c_id"),
-        col("embedding").as("c_emb"), col("norm").as("c_norm")), "c_id")
-      .withColumn("cosine",
-        dot("q_emb", "c_emb") / (col("q_norm") * col("c_norm")))
-      .groupBy("q_id")
-      .agg(max(struct(col("cosine"), (-col("c_id")).as("neg_c"),
-        col("hamming"))).as("best"))
-      .select(col("q_id"), (-col("best.neg_c")).as("c_id"),
-        col("best.hamming").as("hamming"),
-        round(col("best.cosine"), 9).as("cosine"))
+      scored: DataFrame): DataFrame =
+    cosineTop1(scored.select("q_id", "c_id", "hamming"),
+      normed(Tables.embeddings(spark, dir)), col("hamming"))
+      .select(col("q_id"), col("c_id"), col("hamming"),
+        round(col("cosine"), 9).as("cosine"))
       .orderBy("q_id")
-  }
 
   /** Random-projection band geometry: 256-bit codes as [[RpBands]]
     * byte-aligned bands. Chosen from the measured sf0.01 neighbor
@@ -2513,20 +2453,15 @@ object VectorOps {
     * scored-pair frame, exposed uncached for the recall harness.
     * Registered queries read the rank-capped [[rpShortlist]] memo. */
   private[graft] def rpScoredPairsUncached(spark: SparkSession,
-      dir: String): DataFrame = {
-    Natives.ensure(spark)
-    val bandCols = (0 until RpBands).map { j =>
-      expr(s"rp_bits(embedding, $j, $RpBandBits)").as(s"b$j")
-    }
-    val bands = Tables.embeddings(spark, dir)
-      .select(col("vec_id") +: bandCols: _*)
-      .localCheckpoint()
-    bandedScoredPairs(bands, RpBands, RpBucketCap)
-  }
+      dir: String): DataFrame =
+    bandedScoredPairs(rpBands(spark, dir), RpBands, RpBucketCap)
 
-  /** Session-scoped memo of the rank-capped RP shortlist — r19, same
-    * change as [[mihShortlist]]: the r18 `rp_pairs` memo stored the
-    * full scored-pair frame; its consumers ([[annRpRerankTop1]],
+  /** The 256-bit [[RandProj]] codes as [[RpBands]] `rp_bits` bands. */
+  private def rpBands(spark: SparkSession, dir: String): DataFrame =
+    codeBands(spark, dir, RpBands)(j => s"rp_bits(embedding, $j, $RpBandBits)")
+
+  /** Session-scoped memo of the rank-capped RP shortlist, for the
+    * [[mihShortlist]] reason: its consumers ([[annRpRerankTop1]],
     * [[annQualityReport]] through it) read only the
     * [[MihRerankCap]]-capped slice, so that slice is what the memo
     * holds. Populate cost visible as `rp_shortlist` in
@@ -2535,6 +2470,16 @@ object VectorOps {
       dir: String): DataFrame =
     graft.Memos.memo("rp_shortlist", spark, Seq(dir))(
       hammingShortlist(rpScoredPairsUncached(spark, dir))
+        .localCheckpoint())
+
+  /** Rank-capped multiprobe shortlist memo, for the [[mihShortlist]]
+    * reason: all three consumers (multiprobe top-1, the quality report
+    * through it, the rerank-cap curve) read only the
+    * [[MihRerankCap]]-capped (hamming, c_id) rank slice. */
+  private[graft] def rpMultiprobeShortlist(spark: SparkSession,
+      dir: String): DataFrame =
+    graft.Memos.memo("rp_multiprobe_shortlist", spark, Seq(dir))(
+      hammingShortlist(rpMultiprobeScoredPairsUncached(spark, dir))
         .localCheckpoint())
 
   /** MULTI-PROBE stage-1 for the 256-bit codes: each query probes its
@@ -2547,35 +2492,13 @@ object VectorOps {
     * construction: the stop-bucket cap still gates the POSTING side
     * (candidates never come from a flooded bucket), while probing is
     * never capped (it is O(bands·bits) per query regardless of data).
-    * The verify stays the full-code XOR popcount. */
-  /** Rank-capped multiprobe shortlist memo — r19, same change as
-    * [[mihShortlist]]: all three consumers (multiprobe top-1, the
-    * quality report through it, the rerank-cap curve) read only the
-    * [[MihRerankCap]]-capped (hamming, c_id) rank slice. */
-  private[graft] def rpMultiprobeShortlist(spark: SparkSession,
-      dir: String): DataFrame =
-    graft.Memos.memo("rp_multiprobe_shortlist", spark, Seq(dir))(
-      hammingShortlist(rpMultiprobeScoredPairsUncached(spark, dir))
-        .localCheckpoint())
-
-  /** The actual probe pipeline behind [[rpMultiprobeShortlist]] — the
-    * FULL scored-pair frame the shortlist rank-caps. */
+    * The verify stays the full-code XOR popcount of [[hammingVerify]].
+    * Returns the FULL scored-pair frame the shortlist rank-caps. */
   private def rpMultiprobeScoredPairsUncached(spark: SparkSession,
       dir: String): DataFrame = {
-    Natives.ensure(spark)
-    val bandCols = (0 until RpBands).map { j =>
-      expr(s"rp_bits(embedding, $j, $RpBandBits)").as(s"b$j")
-    }
-    val bands = Tables.embeddings(spark, dir)
-      .select(col("vec_id") +: bandCols: _*)
-      .localCheckpoint()
-    val posted = bands.select(col("vec_id"),
-      posexplode(array((0 until RpBands).map(j => col(s"b$j")): _*))
-        .as(Seq("j", "bv")))
-    val wB = Window.partitionBy("j", "bv")
-    val capped = posted
-      .withColumn("bsz", count(lit(1)).over(wB))
-      .filter(col("bsz") <= RpBucketCap)
+    val bands = rpBands(spark, dir)
+    val posted = postings(bands, RpBands)
+    val capped = stopCapped(posted, RpBucketCap)
       .select(col("vec_id").as("c_id"), col("j"), col("bv"))
     val probes = posted
       .withColumn("k", explode(sequence(lit(-1), lit(RpBandBits - 1))))
@@ -2583,18 +2506,7 @@ object VectorOps {
         when(col("k") === -1, col("bv"))
           .otherwise(expr("bv ^ shiftleft(CAST(1 AS BIGINT), k)")))
       .select(col("vec_id").as("q_id"), col("j"), col("pv").as("bv"))
-    val pairs = probes.join(capped, Seq("j", "bv"))
-      .filter(col("q_id") =!= col("c_id"))
-      .select("q_id", "c_id").distinct()
-    val qb = bands.select(col("vec_id").as("q_id") +:
-      (0 until RpBands).map(j => col(s"b$j").as(s"qb$j")): _*)
-    val cb = bands.select(col("vec_id").as("c_id") +:
-      (0 until RpBands).map(j => col(s"b$j").as(s"cb$j")): _*)
-    val ham = (0 until RpBands)
-      .map(j => expr(s"bit_count(qb$j ^ cb$j)"))
-      .reduce(_ + _)
-    pairs.join(qb, "q_id").join(cb, "c_id")
-      .select(col("q_id"), col("c_id"), ham.cast("int").as("hamming"))
+    hammingVerify(probes.join(capped, Seq("j", "bv")), bands, RpBands)
   }
 
   /** 256-bit RP + MULTI-PROBE + exact-cosine rerank — the recall tier
@@ -2610,7 +2522,7 @@ object VectorOps {
     cosineRerankTop1(spark, dir, rpMultiprobeShortlist(spark, dir))
   }
 
-  /** 256-bit random-hyperplane ANN + exact-cosine rerank — the round-12
+  /** 256-bit random-hyperplane ANN + exact-cosine rerank — the
     * answer to the 64-bit MIH candidate-coverage ceiling
     * ([[annMihRerankTop1]]'s measured 0.154 recall@1): stage 1 draws
     * [[RpBands]]×[[RpBandBits]] = 256 deterministic md5-salted
@@ -2638,27 +2550,10 @@ object VectorOps {
     cosineRerankTop1(spark, dir, rpShortlist(spark, dir))
   }
 
-  /** Standing ANN retrieval-quality report — the `RecallSweep` numbers
-    * as a first-class, oracle-checked query instead of a dev-tool
-    * printout (the r11 verdict's "second retrieval-quality measurement
-    * in the driver's view"): one row per ANN family with its query
-    * count, coverage (queries answered) and recall@1 (answers equal to
-    * the exact brute-force cosine pick), ALL-INTEGER so the row hashes
-    * carry the quality claim cross-engine. Families: the two binary-
-    * code rerank stacks ([[annMihRerankTop1]] 64-bit,
-    * [[annRpRerankTop1]] 256-bit) and the trained IVF
-    * ([[annIvfTrainedTop1]], memoized quantizer).
-    *
-    * Scale contract: ground truth is an exact N×N brute force (query
-    * set broadcast, corpus streamed — the [[cosineTopK]] join shape),
-    * so this is an OFFLINE EVAL op to run on a sampled query set at
-    * corpus scale (sample upstream; the report logic is
-    * sample-size-agnostic). The per-family joins and counts are
-    * id-only single-row aggregates. */
   /** Exact brute-force top-1 ground truth (q_id → exact_c), memoized
     * per (session, dir) like the other build-once eval artifacts: the
     * N² pass is paid one visible `memo_populate` time instead of once
-    * per report evaluation. */
+    * per report evaluation. [[graft.RecallSweep]] reads it too. */
   private[graft] def exactTop1(spark: SparkSession, dir: String): DataFrame =
     graft.Memos.memo("exact_top1", spark, Seq(dir))(
       exactTop1Uncached(spark, dir))
@@ -2666,28 +2561,41 @@ object VectorOps {
   private def exactTop1Uncached(spark: SparkSession,
       dir: String): DataFrame = {
     Natives.ensure(spark)
-    val e = Tables.embeddings(spark, dir)
-      .select(col("vec_id"), col("embedding"),
-        sqrt(sq("embedding")).as("norm"))
+    val e = normed(Tables.embeddings(spark, dir))
     val c = e.select(col("vec_id").as("c_id"), col("embedding").as("c_emb"),
         col("norm").as("c_norm"))
       .repartition(spark.sparkContext.defaultParallelism, col("c_id"))
     val q = e.select(col("vec_id").as("q_id"),
       col("embedding").as("q_emb"), col("norm").as("q_norm"))
-    // Exact pick: same non-foldable constant-key BroadcastHashJoin as
-    // cosineTopK (a BNLJ would evaluate the dot interpreted), same
-    // (cosine desc, c_id asc) tiebreak as every ANN family.
-    c.withColumn("jk", pmod(col("c_id"), lit(1)))
+    // Every pair through the same non-foldable constant-key
+    // BroadcastHashJoin as cosineTopK (a BNLJ would evaluate the dot
+    // interpreted), then the pick every ANN family uses.
+    cosinePick(c.withColumn("jk", pmod(col("c_id"), lit(1)))
       .join(broadcast(q.withColumn("jk", pmod(col("q_id"), lit(1)))), "jk")
       .filter(col("q_id") =!= col("c_id"))
       .withColumn("cosine",
-        dot("q_emb", "c_emb") / (col("q_norm") * col("c_norm")))
-      .groupBy("q_id")
-      .agg(max(struct(col("cosine"), (-col("c_id")).as("neg_c"))).as("b"))
-      .select(col("q_id"), (-col("b.neg_c")).as("exact_c"))
+        dot("q_emb", "c_emb") / (col("q_norm") * col("c_norm"))),
+      Seq("q_id"))
+      .select(col("q_id"), col("c_id").as("exact_c"))
       .localCheckpoint()
   }
 
+  /** Standing ANN retrieval-quality report — the `RecallSweep` numbers
+    * as a first-class, oracle-checked query instead of a dev-tool
+    * printout: one row per ANN family with its query count, coverage
+    * (queries answered) and recall@1 (answers equal to the exact
+    * brute-force cosine pick, [[exactTop1]]), ALL-INTEGER so the row
+    * hashes carry the quality claim cross-engine. Families: the two
+    * binary-code rerank stacks ([[annMihRerankTop1]] 64-bit,
+    * [[annRpRerankTop1]] 256-bit), the multiprobe RP stack and the
+    * trained IVF ([[annIvfTrainedTop1]], memoized quantizer).
+    *
+    * Scale contract: ground truth is an exact N×N brute force (query
+    * set broadcast, corpus streamed — the [[cosineTopK]] join shape),
+    * so this is an OFFLINE EVAL op to run on a sampled query set at
+    * corpus scale (sample upstream; the report logic is
+    * sample-size-agnostic). The per-family joins and counts are
+    * id-only single-row aggregates. */
   def annQualityReport(spark: SparkSession, dir: String): DataFrame = {
     Natives.ensure(spark)
     val exact = exactTop1(spark, dir)
@@ -2778,15 +2686,10 @@ object VectorOps {
   def lshRecallAtK(spark: SparkSession, dir: String): DataFrame = {
     Natives.ensure(spark)
     val exact = exactTop1(spark, dir)
-    val scored = lshScoredPairs(spark, dir)
-    val oriented = scored
-      .select(col("a").as("q_id"), col("b").as("c_id"), col("cosine"))
-      .unionByName(scored
-        .select(col("b").as("q_id"), col("a").as("c_id"), col("cosine")))
     val wq = Window.partitionBy("q_id")
       .orderBy(col("cosine").desc, col("c_id"))
-    recallCurveFrom(oriented.withColumn("rk", row_number().over(wq)),
-      exact)
+    recallCurveFrom(oriented(lshScoredPairs(spark, dir))
+      .withColumn("rk", row_number().over(wq)), exact)
   }
 
   /** Shared recall-curve tail: a ranked candidate frame

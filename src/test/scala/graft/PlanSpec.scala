@@ -239,10 +239,9 @@ class PlanSpec extends GraftSpec {
         (() => TextOps.tfidfTopK(spark, dir)),
       ("TextOps.scala", "zipfSlope") ->
         (() => TextOps.zipfSlope(spark, dir)),
-      ("VectorOps.scala", "annIvfTop1") ->
+      // the one IVF probe, as the untrained-quantizer query runs it
+      ("VectorOps.scala", "ivfProbe") ->
         (() => VectorOps.annIvfTop1(spark, dir)),
-      ("VectorOps.scala", "annIvfTrainedTop1Iter") ->
-        (() => VectorOps.annIvfTrainedTop1Iter(spark, dir, 1)),
       ("VectorOps.scala", "clusterSample") ->
         (() => VectorOps.clusterSample(spark, dir)),
       ("VectorOps.scala", "embeddingOutliers") ->
@@ -252,8 +251,6 @@ class PlanSpec extends GraftSpec {
       // the UNCACHED pipeline: the registered queries read the
       // session memo (a checkpoint scan), so the WindowGroupLimit
       // assert must run against the plan the populate executes.
-      ("VectorOps.scala", "pqAdcScoredUncached") ->
-        (() => VectorOps.pqAdcScoredUncached(spark, dir)),
       ("VectorOps.scala", "pqShortlistUncached") ->
         (() => VectorOps.pqShortlistUncached(spark, dir)),
       ("VectorOps.scala", "hammingShortlist") ->

@@ -1293,7 +1293,7 @@ class StreamOpsSpec extends GraftSpec {
   }
 
   test("first-seen screen: stateful stream twin equals the batch operator " +
-      "on an ordered replay (RocksDB provider)") {
+      "on an ordered replay") {
     // The replay contract: stream the corpus in doc_id order — in any
     // micro-batch slicing — and firstSeenScreenStream + the per-batch
     // verdict assembly must emit exactly TextOps.firstSeenScreen's
@@ -1339,7 +1339,7 @@ class StreamOpsSpec extends GraftSpec {
   }
 
   test("first-seen screen: seen-set survives a stop/restart from the " +
-      "checkpoint (RocksDB)") {
+      "checkpoint") {
     // The screen's state IS the product — a restart that lost the
     // seen-set would re-admit every duplicate. File source (offsets in
     // the checkpoint) + foreachBatch (recoverable sink), the T5
@@ -1439,7 +1439,7 @@ class StreamOpsSpec extends GraftSpec {
   }
 
   test("ordered funnel: stateful stream twin equals the batch operator " +
-      "on an ordered replay of the real corpus (RocksDB)") {
+      "on an ordered replay of the real corpus") {
     // The replay contract: feed sf0.001 events in (ts, event_id) order
     // — an awkward 3-way slicing so anchors advance both in-batch and
     // from state — and funnelReport over the accumulated FunnelReach
@@ -1586,7 +1586,7 @@ class StreamOpsSpec extends GraftSpec {
   }
 
   test("ordered funnel: anchors survive a stop/restart from the " +
-      "checkpoint (RocksDB)") {
+      "checkpoint") {
     // A restart that lost the anchors would rule user 30's purchase
     // non-qualifying (no recovered click anchor) — the emitted
     // steps_reached after phase 2 is the direct witness of recovery.
@@ -1689,7 +1689,7 @@ class StreamOpsSpec extends GraftSpec {
   }
 
   test("winnow decontam stream: screened-set survives a stop/restart " +
-      "from the checkpoint (RocksDB)") {
+      "from the checkpoint") {
     // The exactly-once ledger must recover: a post-restart redelivery
     // is suppressible ONLY from checkpointed state. File source
     // (offsets in the checkpoint) + foreachBatch (recoverable sink) —
@@ -1811,7 +1811,9 @@ class StreamOpsSpec extends GraftSpec {
     import org.apache.logging.log4j.message.SimpleMessage
     assert(spark != null) // Session.local installs the filters
     def dropped(cls: String, msg: String): Boolean = {
-      val name = s"org.apache.spark.sql.execution.streaming.runtime.$cls"
+      val name =
+        if (cls.contains(".")) cls
+        else s"org.apache.spark.sql.execution.streaming.runtime.$cls"
       LoggerContext.getContext(false).getConfiguration
         .getLoggerConfig(name).isFiltered(Log4jLogEvent.newBuilder()
           .setLoggerName(name).setLevel(Level.WARN)
@@ -1824,5 +1826,10 @@ class StreamOpsSpec extends GraftSpec {
     assert(!dropped("MicroBatchExecution", "Query terminated with error"))
     assert(!dropped("ResolveWriteToStream",
       "Temporary checkpoint location created which is deleted normally"))
+    // The stop-time cancel notice, logged once or twice per query stop.
+    val dag = "org.apache.spark.scheduler.DAGScheduler"
+    assert(dropped(dag, "Failed to cancel job group " +
+      "5f0c8a3e-1d2b-4c6e-9a7f-3b8d2e1c0a94. Cannot find active jobs for it."))
+    assert(!dropped(dag, "Broadcasting large task binary with size 1.2 MiB"))
   }
 }

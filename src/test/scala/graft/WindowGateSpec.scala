@@ -153,12 +153,8 @@ object WindowGateSpec {
       "data-keyed: md5(text) — group count scales with distinct texts",
     ("TextOps.scala", "zipfSlope") ->
       "rank-capped: rank <= ZipfTopRanks compiles to WindowGroupLimit",
-    ("VectorOps.scala", "annIvfTop1") ->
+    ("VectorOps.scala", "ivfProbe") ->
       "data-keyed: vec_id assignment; in-cell scoring rank-capped (NProbe/CellCap -> WindowGroupLimit)",
-    ("VectorOps.scala", "annIvfTrainedTop1Iter") ->
-      "data-keyed: vec_id assignment; in-cell scoring rank-capped (WindowGroupLimit)",
-    ("VectorOps.scala", "bandedScoredPairs") ->
-      "data-keyed: (band j, band value) bucket",
     ("VectorOps.scala", "clusterSample") ->
       "rank-capped: samp_rank <= SampleQuota compiles to WindowGroupLimit",
     ("VectorOps.scala", "hammingShortlist") ->
@@ -173,11 +169,9 @@ object WindowGateSpec {
       "data-keyed: (tbl, bucket) hash bucket",
     ("VectorOps.scala", "pqEncodeUncached") ->
       "bounded frame: codebook grain — PqCodebook rows per subspace",
-    ("VectorOps.scala", "pqAdcScoredUncached") ->
-      "data-keyed: vec_id assignment; coarse ranking rank-capped (WindowGroupLimit)",
     ("VectorOps.scala", "pqShortlistUncached") ->
       "data-keyed: q_id; shortlist rank-capped: rk <= PqRerankCap compiles to WindowGroupLimit",
-    ("VectorOps.scala", "rpMultiprobeScoredPairsUncached") ->
+    ("VectorOps.scala", "stopCapped") ->
       "data-keyed: (band j, band value) bucket")
 }
 
