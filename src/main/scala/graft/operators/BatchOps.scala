@@ -1508,13 +1508,10 @@ object BatchOps {
 
   /** Market-basket co-occurrence — which parts sell together: distinct
     * part pairs within each order counted across orders, top
-    * [[CopurchaseTopK]] by (count desc, pair). In-order pair explosion
-    * uses the collect-and-lambda shape — the RIGHT regime for it: an
-    * order's distinct parts are single digits, so the quadratic is tiny
-    * and stays in one shuffle (the self-join alternative pays the fact
-    * scan twice; measured the other way around on the big-bucket
-    * near-dup corpus). Top-k is orderBy+limit ⇒ TakeOrderedAndProject,
-    * never a global sort. */
+    * [[CopurchaseTopK]] by (count desc, pair). An order's distinct
+    * parts are single digits, so the in-order pairs are a tiny
+    * quadratic per order. Top-k is orderBy+limit ⇒
+    * TakeOrderedAndProject, never a global sort. */
   def partCopurchase(spark: SparkSession, dir: String): DataFrame =
     basketPairCounts(spark, dir)
       .withColumnRenamed("n_ab", "n_orders")
@@ -1526,7 +1523,7 @@ object BatchOps {
     * [[basketRules]] (collect_set over raw lineitem dedups exactly like
     * the lp DISTINCT projection, so the two fronts were always the same
     * computation; this just writes it once). Deliberately a plain plan,
-    * NOT a session memo: an r18 A/B measured the memoized checkpoint
+    * NOT a session memo: an A/B measured the memoized checkpoint
     * NET-NEGATIVE on the suite total (populate 3.7 s — cold-codegen +
     * 1.5M-row checkpoint materialization — vs ~1.8 s of steady-state
     * reuse savings across both consumers at sf0.1). At 100 TB the
@@ -1537,10 +1534,10 @@ object BatchOps {
     pairCountsFrom(orderBaskets(spark, dir))
 
   /** Per-order distinct sorted part sets — the shared basket grain of
-    * [[basketPairCounts]] and [[basketRules]]' marginals (r19: the
-    * rules query used to re-derive its item counts and basket total
-    * from a SECOND fact-wide DISTINCT; both now read this one
-    * aggregate). A plain plan for the single-consumer path
+    * [[basketPairCounts]] and [[basketRules]]' marginals, so the rules
+    * query derives its item counts and basket total from this one
+    * aggregate, not a second fact-wide DISTINCT. A plain plan for the
+    * single-consumer path
     * ([[partCopurchase]]); [[basketRules]] checkpoints it per call for
     * its three consumers. */
   private def orderBaskets(spark: SparkSession, dir: String): DataFrame =
@@ -1549,17 +1546,12 @@ object BatchOps {
       .groupBy("l_orderkey")
       .agg(array_sort(collect_set(col("l_partkey"))).as("parts"))
 
-  /** The in-basket pair explode + co-occurrence count over a basket
-    * frame from [[orderBaskets]]. */
+  /** The in-basket part pairs + co-occurrence count over a basket
+    * frame from [[orderBaskets]]: its distinct parts, paired per order. */
   private def pairCountsFrom(baskets: DataFrame): DataFrame =
-    baskets
-      .filter(size(col("parts")) > 1)
-      .select(explode(expr(
-        """flatten(transform(parts, x ->
-             transform(filter(parts, y -> y > x), y ->
-               named_struct('part_a', x, 'part_b', y))))""")).as("p"))
-      .groupBy(col("p.part_a").as("part_a"),
-        col("p.part_b").as("part_b"))
+    Candidates.pairs(baskets.select(col("l_orderkey"),
+        explode(col("parts")).as("part")), Seq("l_orderkey"), "part")
+      .groupBy("part_a", "part_b")
       .agg(count(lit(1)).as("n_ab"))
 
   /** Association rules emitted from [[partCopurchase]]'s pair counts —
@@ -1570,19 +1562,19 @@ object BatchOps {
     * lift-ordered top-[[BasketRuleTopK]] cut, tie-broken on the rule
     * key) are bit-deterministic cross-engine.
     *
-    * Scale: basket pairs come from the same per-order explode as
+    * Scale: basket pairs come from the same per-order pairs as
     * [[partCopurchase]] (bounded by per-basket size², never item²);
     * the item marginals join is keyed on the item id, and the global
     * basket total rides a 1-row broadcast. */
   def basketRules(spark: SparkSession, dir: String): DataFrame = {
-    // r19 (guide §1.2 — one fact pass, shared): marginals and the pair
-    // counts all derive from ONE per-order basket aggregate. The item
+    // One fact pass, shared: marginals and the pair counts all derive
+    // from ONE per-order basket aggregate. The item
     // marginal = explode of the per-order distinct part sets (exactly
     // the old fact-wide (orderkey, partkey) DISTINCT, already grouped);
     // the basket total = the basket row count. The basket frame is
     // localCheckpointed per call — three consumers read one
     // materialization instead of the fact paying two full
-    // dedup/aggregate passes. (Still NOT a session memo: the r18 A/B
+    // dedup/aggregate passes. (Still NOT a session memo: an A/B
     // measured the cross-call memo net-negative; this checkpoint lives
     // and dies inside one call.)
     val baskets = orderBaskets(spark, dir).localCheckpoint()
@@ -4800,12 +4792,8 @@ object BatchOps {
         substring(md5(col("c_custkey").cast("string")), 1, 15).as("addr"))
     val recs = base.unionByName(twins)
       .withColumn("block", substring(col("addr"), 1, LinkBlockLen))
-    val lhs = recs.select(col("block"), col("rec_id").as("rec_a"),
-      col("addr").as("addr_a"), col("entity_key").as("ent_a"))
-    val rhs = recs.select(col("block"), col("rec_id").as("rec_b"),
-      col("addr").as("addr_b"), col("entity_key").as("ent_b"))
-    lhs.join(rhs, "block")
-      .filter(col("rec_a") < col("rec_b"))
+    Candidates.pairs(recs.select(col("block"), col("rec_id").as("rec"),
+        col("addr"), col("entity_key").as("ent")), Seq("block"), "rec")
       .withColumn("lev", levenshtein(col("addr_a"), col("addr_b")))
       .filter(col("lev") <= LinkMaxEdit)
       .select(col("rec_a"), col("rec_b"), col("lev"),

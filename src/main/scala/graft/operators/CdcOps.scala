@@ -811,11 +811,8 @@ object CdcOps {
       .groupBy("type_a", "type_b")
       .agg(max(col("h")).as("hk"), count(lit(1)).as("k_union"),
         sum(col("in_a") * col("in_b")).as("inter_sketch"))
-    val exact = du.select(col("event_type").as("type_a"),
-        col("user_id"))
-      .join(du.select(col("event_type").as("type_b"), col("user_id")),
-        "user_id")
-      .filter(col("type_a") < col("type_b"))
+    val exact = Candidates.pairs(du.select(col("user_id"),
+        col("event_type").as("type")), Seq("user_id"), "type")
       .groupBy("type_a", "type_b")
       .agg(count(lit(1)).as("n_inter_exact"))
     est.join(exact, Seq("type_a", "type_b"), "left")
@@ -2775,12 +2772,12 @@ object CdcOps {
     * exact session counts.
     *
     * Scale: session membership collapses to DISTINCT (session, type)
-    * rows (bounded by sessions × type-cardinality); the pair explode is
-    * per-session over ≤ |types| elements, and marginals/totals are
+    * rows (bounded by sessions × type-cardinality); the type pairs are
+    * per-session over ≤ |types| members, and marginals/totals are
     * 1-row-per-type broadcasts. */
   def sessionCopresence(spark: SparkSession, dir: String): DataFrame = {
-    // localCheckpoint: three plan branches (marginals, total, pair
-    // explode) read `types` — without the cut the scan + session
+    // localCheckpoint: three plan branches (marginals, total, type
+    // pairs) read `types` — without the cut the scan + session
     // windows + distinct would execute three times (the
     // nearDupPairsCore precedent); the frame is (session, type)-grain,
     // tiny.
@@ -2793,14 +2790,12 @@ object CdcOps {
     val marg = types.groupBy("event_type").agg(count(lit(1)).as("n_type"))
     val tot = types.select("user_id", "session_seq").distinct()
       .agg(count(lit(1)).as("t"))
-    types.groupBy("user_id", "session_seq")
-      .agg(array_sort(collect_set(col("event_type"))).as("tys"))
-      .filter(size(col("tys")) > 1)
-      .select(explode(expr(
-        """flatten(transform(tys, x ->
-             transform(filter(tys, y -> y > x), y ->
-               named_struct('type_a', x, 'type_b', y))))""")).as("p"))
-      .groupBy(col("p.type_a").as("type_a"), col("p.type_b").as("type_b"))
+    // The session key is one struct, which is never NULL: events without
+    // a user form sessions of their own, as in the oracle's GROUP BY.
+    Candidates.pairs(types.select(
+        struct(col("user_id"), col("session_seq")).as("session"),
+        col("event_type").as("type")), Seq("session"), "type")
+      .groupBy("type_a", "type_b")
       .agg(count(lit(1)).as("n_together"))
       .join(broadcast(marg.select(col("event_type").as("type_a"),
         col("n_type").as("n_a"))), Seq("type_a"))

@@ -318,38 +318,20 @@ object TextOps {
     val docs = shingleDocs(spark, dir)
     val post = docs.select(col("doc_id"), col("lang"), col("len_bucket"),
       col("n_sh"), explode(col("sh")).as("shingle"))
-    val kept = docFreqCap match {
-      case Some(cap) =>
-        // Production shape: the df cut runs BEFORE pair generation. A
-        // window count on the posting key (spillable) drops
-        // stop-shingle postings up front, bounding any bucket at cap.
-        val wPost = Window.partitionBy("shingle", "lang", "len_bucket")
-        post.withColumn("df", count(lit(1)).over(wPost))
-          .filter(col("df").between(2, cap))
-          .drop("df")
-      case None =>
-        // Exact variant (the correctness twin): every posting kept,
-        // bucket size unbounded by design — the capped form is what
-        // ships.
-        post
-    }
-    // Pair generation is a posting SELF-EQUI-JOIN, not a collect_list
-    // + lambda explode: higher-order-function lambdas run INTERPRETED
-    // per emitted pair (the simhash_pairs lesson — its generator
-    // rewrite took 5.3 s → 0.8 s), while the join + count fuse into
-    // whole-stage codegen. The FLAT posting frame is checkpointed so
-    // both aliases read one materialization (fixed-width rows
-    // checkpoint in ~0.1 s; checkpointing the upstream shingle ARRAY
-    // column instead measured ~5 s at sf0.1 — more than the whole
-    // join — which is why the shared [[shingleDocs]] front stays a
-    // plan, not a memo).
+    val block = Seq("shingle", "lang", "len_bucket")
+    // Exact variant (the correctness twin): every posting kept, bucket
+    // size unbounded by design. The capped form is what ships: the df
+    // cut runs BEFORE pair generation, bounding any bucket at cap.
+    val kept = docFreqCap.fold(post)(Candidates.dropAbove(post, block, _))
+    // The FLAT posting frame is checkpointed so both join sides read one
+    // materialization (fixed-width rows checkpoint in ~0.1 s;
+    // checkpointing the upstream shingle ARRAY column instead measured
+    // ~5 s at sf0.1 — more than the whole join — which is why the
+    // shared [[shingleDocs]] front stays a plan, not a memo).
     val keptCk = kept.localCheckpoint()
-    val a = keptCk.select(col("shingle"), col("lang"), col("len_bucket"),
-      col("doc_id").as("doc_a"), col("n_sh").as("n_a"))
-    val b = keptCk.select(col("shingle"), col("lang"), col("len_bucket"),
-      col("doc_id").as("doc_b"), col("n_sh").as("n_b"))
-    a.join(b, Seq("shingle", "lang", "len_bucket"))
-      .filter(col("doc_a") < col("doc_b"))
+    Candidates.pairs(keptCk.select(col("shingle"), col("lang"),
+        col("len_bucket"), col("doc_id").as("doc"), col("n_sh").as("n")),
+        block, "doc")
       .groupBy(col("doc_a"), col("doc_b"), col("n_a"), col("n_b"))
       .agg(count(lit(1)).cast("int").as("n_inter"))
       .withColumn("n_union", (col("n_a") + col("n_b") - col("n_inter")).cast("int"))
@@ -468,7 +450,7 @@ object TextOps {
     *
     * Scale shape: one global df aggregate (vocab-sized), a per-doc rank
     * window (partitioned by doc — never global), prefix postings
-    * grouped per (shingle, block) with the same in-bucket pair explode
+    * paired per (shingle, block) by the same [[Candidates.pairs]] join
     * as [[nearDupJaccard]], DISTINCT candidate pairs, then one
     * verification join carrying the two shingle arrays per CANDIDATE
     * (candidate volume is the filtered minority — exactly PPJoin's
@@ -521,48 +503,36 @@ object TextOps {
     //   keeps the pair if ANY occurrence does.
     val alphaNum = PrefixJaccardNum                    // t/(1+t) = 3/8
     val alphaDen = PrefixJaccardNum + PrefixJaccardDen
-    // Pair generation is a SELF-EQUI-JOIN on the posting key, NOT the
-    // collect_list + lambda explode the df-capped variant uses: this
-    // corpus's ~1k-shingle vocabulary makes posting lists huge, and a
-    // higher-order-function explode over them is INTERPRETED per pair
-    // (tens of millions of lambda calls, outside codegen). The join +
-    // filter fuse into one whole-stage-codegen pass producing the same
-    // raw pairs, with PPJoin's filters applied inline before anything
-    // shuffles.
     // The FLAT prefix-posting frame is checkpointed before the
     // self-join (the [[nearDupJaccard]] `keptCk` device): without it
     // the scan → repartition → shingle transform → explode → df join →
-    // per-doc rank window executes on BOTH join aliases — ~2× the
-    // scan+shuffle bill at 100 TB and the GC-pressure scatter the r14
-    // bench recorded ([3.3, 10.1, 6.1] s at sf0.1 under load). The
-    // frame is fixed-width longs and, at t = 3/5, ~40% of postings
-    // (105k of 265k rows at sf0.1); the eager materialization measures
-    // ~1.0 s — it pays the front once, including the dfreq leg — and
-    // every downstream consumer (both self-join aliases, the dedup,
-    // the verify probe) reads the stored rows. Only the two
-    // verify-side `docs` lookups still recompute the shingle arrays:
-    // the array column is the one that measured ~5 s to materialize,
-    // and the verify join touches it once per candidate side, not per
-    // posting. (Measured-and-rejected alternatives, sf0.1 medians:
-    // no checkpoint 2.7 s steady but 3× scatter under suite pressure;
-    // checkpointing the full posting frame + relational posting-count
-    // verification 4.7 s; checkpointing the array frame 3.4 s.)
-    // Absolute numbers are box-state-sensitive: the post-reboot r15
-    // close re-measured 3.6-4.2 s steady with the SAME phase
-    // proportions (checkpoint ~1.0 / self-join ~0.6 / verify ~1.4)
-    // and <1.2× scatter — the plan's relative ordering vs the
-    // rejected alternatives is the stable fact, per SURVEY §6 note 6.
+    // per-doc rank window executes on BOTH join sides — ~2× the
+    // scan+shuffle bill at 100 TB, and a 3× run-to-run scatter at sf0.1
+    // under load. The frame is fixed-width longs and, at t = 3/5, ~40%
+    // of postings (105k of 265k rows at sf0.1); the eager
+    // materialization measures ~1.0 s — it pays the front once,
+    // including the dfreq leg — and every downstream consumer (both
+    // join sides, the dedup, the verify probe) reads the stored rows.
+    // Only the two verify-side `docs` lookups still recompute the
+    // shingle arrays: the array column is the one that measured ~5 s to
+    // materialize, and the verify join touches it once per candidate
+    // side, not per posting. (Measured-and-rejected alternatives, sf0.1
+    // medians: no checkpoint 2.7 s steady but 3× scatter under suite
+    // pressure; checkpointing the full posting frame + relational
+    // posting-count verification 4.7 s; checkpointing the array frame
+    // 3.4 s.) Absolute times move with the box's load; the phase
+    // proportions (checkpoint ~1.0 / self-join ~0.6 / verify ~1.4) and
+    // the ordering against the rejected alternatives are the stable
+    // fact, per SURVEY §6 note 6.
     val pp = prefixPost.select(col("shingle"), col("lang"),
       col("len_bucket"), col("doc_id"), col("n_sh"), col("rk"))
       .localCheckpoint()
-    val cands = pp.toDF("shingle", "lang", "len_bucket",
-        "doc_a", "n_a0", "rk_a")
-      .join(pp.toDF("shingle", "lang", "len_bucket",
-        "doc_b", "n_b0", "rk_b"), Seq("shingle", "lang", "len_bucket"))
-      .filter(col("doc_a") < col("doc_b")
+    val cands = Candidates.pairs(pp.toDF("shingle", "lang", "len_bucket",
+        "doc", "n0", "rk"), Seq("shingle", "lang", "len_bucket"), "doc")
+      .filter(
         // Length filter: J ≥ t ⟹ inter ≥ t·max ⟹ DEN·min ≥ NUM·max.
-        && lit(PrefixJaccardDen) * least(col("n_a0"), col("n_b0")) >=
-          lit(PrefixJaccardNum) * greatest(col("n_a0"), col("n_b0"))
+        lit(PrefixJaccardDen) * least(col("n0_a"), col("n0_b")) >=
+          lit(PrefixJaccardNum) * greatest(col("n0_a"), col("n0_b"))
         // Positional filter (lossless): a qualifying pair's FIRST
         // common token in the global (df, shingle) order sits in BOTH
         // prefixes — if it hid in a's suffix the overlap would be
@@ -571,9 +541,9 @@ object TextOps {
         // occurrence with that bound < α = ⌈t/(1+t)·(n_a+n_b)⌉ drops;
         // the first-common-token occurrence always survives, and
         // DISTINCT keeps the pair if ANY occurrence does.
-        && lit(1) + least(col("n_a0") - col("rk_a"),
-          col("n_b0") - col("rk_b")) >=
-          expr(s"($alphaNum * (n_a0 + n_b0) + ${alphaDen - 1}) " +
+        && lit(1) + least(col("n0_a") - col("rk_a"),
+          col("n0_b") - col("rk_b")) >=
+          expr(s"($alphaNum * (n0_a + n0_b) + ${alphaDen - 1}) " +
             s"div $alphaDen"))
       .select(col("doc_a"), col("doc_b"))
       .distinct()
@@ -670,23 +640,17 @@ object TextOps {
     * distinct-shingle count of the smaller doc (the df cut prunes the
     * intersection only — mirrored exactly in the oracle).
     * Contained = fewer shingles (tie: smaller doc_id); all-integer
-    * floor-mille; one posting self-equi-join over a checkpointed flat
-    * frame (the [[nearDupJaccard]] keptCk device). */
+    * floor-mille; one [[Candidates.pairs]] join over a checkpointed
+    * flat frame (the [[nearDupJaccard]] keptCk device). */
   def nearDupContainment(spark: SparkSession, dir: String): DataFrame = {
     val docs = shingleDocs(spark, dir)
     val post = docs.select(col("doc_id"), col("lang"), col("n_sh"),
       explode(col("sh")).as("shingle"))
-    val wPost = Window.partitionBy("shingle", "lang")
-    val keptCk = post.withColumn("df", count(lit(1)).over(wPost))
-      .filter(col("df").between(2, NearDupDocFreqCap))
-      .drop("df")
-      .localCheckpoint()
-    val a = keptCk.select(col("shingle"), col("lang"),
-      col("doc_id").as("doc_a"), col("n_sh").as("n_a"))
-    val b = keptCk.select(col("shingle"), col("lang"),
-      col("doc_id").as("doc_b"), col("n_sh").as("n_b"))
-    a.join(b, Seq("shingle", "lang"))
-      .filter(col("doc_a") < col("doc_b"))
+    val keptCk = Candidates.dropAbove(post, Seq("shingle", "lang"),
+      NearDupDocFreqCap).localCheckpoint()
+    Candidates.pairs(keptCk.select(col("shingle"), col("lang"),
+        col("doc_id").as("doc"), col("n_sh").as("n")),
+        Seq("shingle", "lang"), "doc")
       .groupBy(col("doc_a"), col("doc_b"), col("n_a"), col("n_b"))
       .agg(count(lit(1)).cast("int").as("n_inter"))
       .withColumn("containment_mille",
@@ -781,12 +745,12 @@ object TextOps {
     * so each band takes its min over an independently shuffled order —
     * the classic cheap approximation of k independent minhash
     * permutations. Everything per-shingle is plain codegen'd expressions
-    * (the round-4 version ran bands × shingles interpreted md5 lambdas —
-    * the bench's hottest query).
+    * (bands × shingles interpreted md5 lambdas made this the bench's
+    * hottest query).
     *
-    * Candidate generation is groupBy(band, signature) with membership
-    * sorted and CAPPED at `MinhashBucketCap` — a degenerate bucket
-    * (boilerplate-heavy corpora hashing thousands of docs to one
+    * Candidates share a (band, signature) bucket whose membership is
+    * CAPPED at the `MinhashBucketCap` smallest doc_ids — a degenerate
+    * bucket (boilerplate-heavy corpora hashing thousands of docs to one
     * signature) contributes at most cap² pairs instead of m². Output:
     * candidate pairs with the number of colliding bands. */
   def minhashCandidates(spark: SparkSession, dir: String): DataFrame =
@@ -819,25 +783,13 @@ object TextOps {
       .select(col("doc_id"),
         posexplode(array((0 until MinhashBands).map(b => col(s"sig$b")): _*))
           .as(Seq("band", "band_sig")))
-    // Rank-cap BEFORE the membership aggregate (row_number ≤ cap →
-    // WindowGroupLimit: ≤ cap rows per bucket survive each map partition
-    // before the shuffle), so neither the shuffle nor the collect_list
-    // buffer sees a degenerate bucket's full membership — the round-6
-    // slice-after-collect bounded pair compute but still materialized the
-    // whole bucket in one aggregation row. Same kept set (smallest
-    // doc_ids) as the old sorted slice.
-    val wBucket = Window.partitionBy("band", "band_sig").orderBy("doc_id")
-    sig
-      .withColumn("rn", row_number().over(wBucket))
-      .filter(col("rn") <= MinhashBucketCap)
-      .groupBy("band", "band_sig")
-      .agg(array_sort(collect_list(col("doc_id"))).as("ids"))
-      .filter(size(col("ids")) > 1)
-      .select(explode(expr(
-        """flatten(transform(ids, x ->
-             transform(filter(ids, y -> y > x), y ->
-               named_struct('doc_a', x, 'doc_b', y))))""")).as("p"))
-      .groupBy(col("p.doc_a").as("doc_a"), col("p.doc_b").as("doc_b"))
+    // A doc holds one signature per band, so a pair meets once per
+    // colliding band and the per-pair count is n_bands.
+    val bucket = Seq("band", "band_sig")
+    Candidates.pairs(Candidates.firstK(
+        sig.withColumnRenamed("doc_id", "doc"), bucket, "doc",
+        MinhashBucketCap), bucket, "doc")
+      .groupBy("doc_a", "doc_b")
       .agg(count(lit(1)).as("n_bands"))
   }
 
@@ -908,34 +860,28 @@ object TextOps {
       .select(col("doc_id"), expr("simhash60(hs)").as("simhash"))
     // The fingerprint rides through the band buckets (one long per
     // member), so the Hamming check needs no join back to `sim` — the
-    // 60-col vote aggregate runs ONCE and the pair stage is pure
-    // integer arithmetic on (id, simhash) structs.
+    // vote aggregate runs ONCE and the pair stage is pure integer
+    // arithmetic on (id, simhash) structs.
     val banded = sim.select(col("doc_id"), col("simhash"),
       posexplode(array((0 until SimhashBands).map(k =>
         expr(s"(simhash >> ${k * SimhashBandBits}) & ${(1 << SimhashBandBits) - 1}")): _*))
         .as(Seq("band", "band_key")))
-    // Rank-cap before the aggregate (same WindowGroupLimit shape as
-    // minhashCandidates): the buffer and the shuffle are both bounded at
-    // `SimhashBucketCap` members per bucket, kept in doc_id order —
-    // identical survivors to the old sorted slice (struct ordering is
-    // field-by-field and doc_id leads).
-    val wBand = Window.partitionBy("band", "band_key").orderBy("doc_id")
-    banded
-      .withColumn("rn", row_number().over(wBand))
-      .filter(col("rn") <= SimhashBucketCap)
+    // Buckets keep their first `SimhashBucketCap` members in doc_id
+    // order (the minhashCandidates cap).
+    Candidates.firstK(banded, Seq("band", "band_key"), "doc_id",
+        SimhashBucketCap)
       .groupBy("band", "band_key")
       .agg(array_sort(collect_list(
         struct(col("doc_id"), col("simhash")))).as("ds"))
       .filter(size(col("ds")) > 1)
       // In-bucket ordered-pair emission as TWO chained generators —
       // posexplode picks the left member, explode over the slice past
-      // it picks every right member — instead of the former nested
-      // transform/filter lambda, whose higher-order functions are
-      // INTERPRETED per element (the last interpreted stage on this
-      // hot path; the same gap vec_dot_prefixes closed for prefix
-      // dots). posexplode/slice/explode are all codegen'd, the pair
-      // count is identical (i < j by the sorted-struct order), and the
-      // work stays bounded at cap²/2 pairs per bucket.
+      // it picks every right member; all codegen'd, i < j by the
+      // sorted-struct order, at most cap²/2 pairs per bucket. This is
+      // the one pair generator outside [[Candidates.pairs]]: the
+      // posting self-join measured slower here (sf0.1, 4 cores,
+      // interleaved in one JVM: 0.90 s against 0.84 s), because each
+      // join side re-runs the rank-capped bucket window.
       .select(posexplode(col("ds")).as(Seq("i", "x")), col("ds"))
       .select(col("x.doc_id").as("doc_a"), col("x.simhash").as("sim_a"),
         explode(slice(col("ds"), col("i") + lit(2),
@@ -1769,7 +1715,12 @@ object TextOps {
     * bag-of-words fingerprint (a reordered copy of a test document in
     * the training crawl is still contamination), so this catches what
     * exact-hash dedup misses. One hash aggregate + a per-group source-set
-    * explode; no pairwise document join at any scale. */
+    * explode; no pairwise document join at any scale. The source pairs
+    * are the one nested-lambda explode outside [[Candidates.pairs]]: a
+    * bag's source set has a handful of members, and the posting
+    * self-join measured slower on it (sf0.1, 4 cores, interleaved in
+    * one JVM: 0.36 s against 0.31 s), paying a second shuffle and a
+    * sort for pairs the lambda emits from one aggregate row. */
   def crossSourceContamination(spark: SparkSession, dir: String): DataFrame =
     Tables.documents(spark, dir)
       .groupBy(md5(array_join(array_sort(array_distinct(tokens)), " "))
@@ -5610,18 +5561,12 @@ object TextOps {
     val totals = counts.groupBy("source")
       .agg(sum(col("c")).as("n"), count(lit(1)).as("vocab"))
     val enriched = counts.join(broadcast(totals), "source")
-    val a = enriched.select(
-      col("source").as("source_a"), col("token"),
-      col("c").as("ca"), col("n").as("na"))
-    val b = enriched.select(
-      col("source").as("source_b"), col("token"),
-      col("c").as("cb"), col("n").as("nb"))
-    val overlap = a.join(b, Seq("token"))
-      .filter(col("source_a") < col("source_b"))
+    val overlap = Candidates.pairs(enriched.select(col("token"),
+        col("source"), col("c"), col("n")), Seq("token"), "source")
       .groupBy("source_a", "source_b")
       .agg(
         count(lit(1)).as("ovl_common"),
-        sum(least(col("ca") * col("nb"), col("cb") * col("na")))
+        sum(least(col("c_a") * col("n_b"), col("c_b") * col("n_a")))
           .as("ovl_min_mass"))
     // Full pair SPINE from the per-source totals (sources², tiny), so
     // fully-disjoint source pairs — TV = 1, Jaccard = 0, precisely the
@@ -7009,27 +6954,6 @@ object TextOps {
       s"greatest(1L, cast(size(h) as bigint) - ${WinnowWindow - 1})), " +
       s"i -> array_min(slice(h, cast(i as int), $WinnowWindow))))"
 
-  /** WINNOWING CANDIDATE PAIRS — the MOSS use of winnowing (r16
-    * verdict order #5): winnow the [[WinnowPairK]]-word k-gram stream
-    * per document ([[WinnowWindow]]-window minima, the
-    * [[winnowFingerprints]] selection rule), explode the selected
-    * fingerprints into postings, and self-join on the fingerprint,
-    * emitting every document pair that shares one with its
-    * shared-fingerprint count and an overlap ratio against the smaller
-    * set. Winnowing's guarantee makes this the whole plagiarism/copy
-    * search: any shared run of ≥ w+k−1 = 7 words selects at least one
-    * common fingerprint, so every such pair surfaces here — at
-    * ~2/(w+1) of the k-gram index mass.
-    *
-    * Scale shape: exactly [[nearDupJaccard]]'s production posting join
-    * — fingerprint-grain partial+final df count, the
-    * [[NearDupDocFreqCap]] stop-fingerprint cut BEFORE pair explosion
-    * (bounding any posting bucket at cap²; boilerplate fingerprints in
-    * ~every doc carry no copy signal), a localCheckpointed flat
-    * posting frame read by both join aliases, and a pair-grain count
-    * that fuses into codegen. Nothing is all-pairs, and the wide
-    * k-gram (above) keeps the posting volume proportional to actual
-    * shared-passage mass. */
   /** The per-doc winnowed fingerprint sets over the
     * [[WinnowPairK]]-word k-gram stream — the shared front of
     * [[winnowPairs]] and [[winnowDecontam]]. The compact (doc_id, fps)
@@ -7079,18 +7003,10 @@ object TextOps {
         .select(col("doc_id"),
           size(col("fps")).cast("long").as("n_fp"),
           explode(col("fps")).as("fp"))
-      val wPost = Window.partitionBy("fp")
-      val kept = post
-        .withColumn("df", count(lit(1)).over(wPost))
-        .filter(col("df").between(2, NearDupDocFreqCap))
-        .drop("df")
+      val kept = Candidates.dropAbove(post, Seq("fp"), NearDupDocFreqCap)
         .localCheckpoint()
-      val a = kept.select(col("fp"), col("doc_id").as("doc_a"),
-        col("n_fp").as("n_fp_a"))
-      val b = kept.select(col("fp"), col("doc_id").as("doc_b"),
-        col("n_fp").as("n_fp_b"))
-      a.join(b, Seq("fp"))
-        .filter(col("doc_a") < col("doc_b"))
+      Candidates.pairs(kept.select(col("fp"), col("doc_id").as("doc"),
+          col("n_fp")), Seq("fp"), "doc")
         .groupBy(col("doc_a"), col("doc_b"), col("n_fp_a"),
           col("n_fp_b"))
         .agg(count(lit(1)).as("n_shared_fp"))
@@ -7101,9 +7017,31 @@ object TextOps {
         .localCheckpoint()
     }
 
-  /** BENCH NOTE (memo-backed): the registered query re-emits the
-    * [[winnowPairsCore]] checkpoint; the pipeline cost appears once as
-    * the `winnow_pairs` entry of `memo_populate`. */
+  /** WINNOWING CANDIDATE PAIRS — the MOSS use of winnowing: winnow
+    * the [[WinnowPairK]]-word k-gram stream per document
+    * ([[WinnowWindow]]-window minima, the
+    * [[winnowFingerprints]] selection rule), explode the selected
+    * fingerprints into postings, and pair them on the fingerprint,
+    * emitting every document pair that shares one with its
+    * shared-fingerprint count and an overlap ratio against the smaller
+    * set. Winnowing's guarantee makes this the whole plagiarism/copy
+    * search: any shared run of ≥ w+k−1 = 7 words selects at least one
+    * common fingerprint, so every such pair surfaces here — at
+    * ~2/(w+1) of the k-gram index mass.
+    *
+    * Scale shape: exactly [[nearDupJaccard]]'s production posting join
+    * — a fingerprint-grain df count, the
+    * [[NearDupDocFreqCap]] stop-fingerprint cut BEFORE pair explosion
+    * (bounding any posting bucket at cap²; boilerplate fingerprints in
+    * ~every doc carry no copy signal), a localCheckpointed flat
+    * posting frame read by both join sides, and a pair-grain count
+    * that fuses into codegen. Nothing is all-pairs, and the wide
+    * k-gram keeps the posting volume proportional to actual
+    * shared-passage mass.
+    *
+    * The registered query re-emits the [[winnowPairsCore]] memo; the
+    * pipeline cost appears once as the `winnow_pairs` entry of
+    * `memo_populate`. */
   def winnowPairs(spark: SparkSession, dir: String): DataFrame =
     winnowPairsCore(spark, dir).orderBy("doc_a", "doc_b")
 
@@ -7392,13 +7330,9 @@ object TextOps {
       .filter(col("df").between(2, NearDupDocFreqCap))
       .select("fp")
     val kept = post.join(fpDocs, Seq("fp")).localCheckpoint()
-    val a = kept.select(col("fp"), col("doc_id").as("doc_a"),
-      col("pos").as("pos_a"))
-    val b = kept.select(col("fp"), col("doc_id").as("doc_b"),
-      col("pos").as("pos_b"))
     val spanEnd = w + WinnowPairK - 2
-    a.join(b, Seq("fp"))
-      .filter(col("doc_a") < col("doc_b"))
+    Candidates.pairs(kept.select(col("fp"), col("doc_id").as("doc"),
+        col("pos")), Seq("fp"), "doc")
       .groupBy(col("doc_a"), col("doc_b"))
       .agg(
         countDistinct(col("fp")).as("n_shared_fp"),

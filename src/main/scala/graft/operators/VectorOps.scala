@@ -180,6 +180,33 @@ object VectorOps {
     e.select(col("vec_id"), col("embedding"),
       sqrt(sq("embedding")).as("norm"))
 
+  /** Every row of `big` beside every row of the broadcast `small`, as a
+    * BroadcastHashJoin on a NON-FOLDABLE always-zero key (pmod of each
+    * side's id): a BroadcastNestedLoopJoin does not take part in
+    * whole-stage codegen, so a dot product above a crossJoin runs
+    * interpreted (measured ~5 s at sf0.1), and a plain literal key
+    * constant-folds straight back into a crossJoin. */
+  private def fanOut(big: DataFrame, bigId: String, small: DataFrame,
+      smallId: String): DataFrame =
+    big.withColumn("jk", pmod(col(bigId), lit(1)))
+      .join(broadcast(small.withColumn("jk", pmod(col(smallId), lit(1)))),
+        "jk")
+
+  /** Each vector's nearest centroid, (vec_id, cent_id, sim), over a
+    * [[normed]]-style frame `e` and centroids (cent_id, cent_emb,
+    * cent_norm): the [[fanOut]] against the broadcast centroids, then a
+    * max(struct(sim, -cent_id)) hash aggregate — top-1 only, so no
+    * window, and ties go to the smallest cent_id. */
+  private def nearestCentroid(e: DataFrame, cents: DataFrame): DataFrame =
+    fanOut(e, "vec_id", cents, "cent_id")
+      .withColumn("sim",
+        dot("embedding", "cent_emb") / (col("norm") * col("cent_norm")))
+      .groupBy(col("vec_id"))
+      .agg(max(struct(col("sim"), (-col("cent_id")).as("neg_cent")))
+        .as("best"))
+      .select(col("vec_id"), (-col("best.neg_cent")).as("cent_id"),
+        col("best.sim").as("sim"))
+
   /** The per-`by` winner of a scored candidate frame (`c_id`, `cosine`)
     * by (cosine desc, c_id asc), as a max(struct) hash aggregate: the
     * same deterministic pick as a row_number window, but with map-side
@@ -303,12 +330,7 @@ object VectorOps {
       .repartition(spark.sparkContext.defaultParallelism, col("c_id"))
     val w = Window.partitionBy("q_id")
       .orderBy(col("cosine").desc, col("c_id"))
-    // Non-foldable constant-key BroadcastHashJoin instead of a non-equi
-    // broadcast join for the k×N fan-out — same codegen rationale as
-    // annIvfTop1's assignment stage (a BNLJ evaluates the dot
-    // interpreted; a plain literal key folds back into a crossJoin).
-    c.withColumn("jk", pmod(col("c_id"), lit(1)))
-      .join(broadcast(q.withColumn("jk", pmod(col("q_id"), lit(1)))), "jk")
+    fanOut(c, "c_id", q, "q_id")
       .filter(col("q_id") =!= col("c_id"))
       .withColumn("cosine",
         dot("q_emb", "c_emb") / (col("q_norm") * col("c_norm")))
@@ -327,11 +349,11 @@ object VectorOps {
     * Plan shape (each stage a bounded hash shuffle — the 100 TB path):
     *   1. one pass computes all table buckets + the norm per vector
     *      (unrolled codegen arithmetic);
-    *   2. (table, bucket) membership lists, sorted and CAPPED at
-    *      `BucketCap` — a degenerate bucket can never explode m² pairs;
-    *   3. in-bucket ordered id pairs, deduplicated across tables
-    *      (id-only rows — embeddings are NOT carried through the
-    *      explode/distinct shuffles);
+    *   2. (table, bucket) postings CAPPED at the `BucketCap` smallest
+    *      vec_ids — a degenerate bucket can never explode m² pairs;
+    *   3. in-bucket id pairs ([[Candidates.pairs]]), deduplicated
+    *      across tables (id-only rows — embeddings are NOT carried
+    *      through the pair/distinct shuffles);
     *   4. embeddings re-joined for pair scoring (one codegen'd dot
     *      product per pair), mirrored to both orientations, top-1 per
     *      query by (cosine desc, c_id).
@@ -345,8 +367,8 @@ object VectorOps {
   /** The actual candidate pipeline behind [[lshScoredPairs]]'s memo — SIX
     * consumers (LSH top-1, cosine near-dup, label agreement/confusion,
     * hard negatives, recall@k) share the checkpointed pair frame
-    * instead of re-running the explode/dedup/score stages each. */
-  private def lshScoredPairsUncached(spark: SparkSession,
+    * instead of re-running the pair/dedup/score stages each. */
+  private[graft] def lshScoredPairsUncached(spark: SparkSession,
       dir: String): DataFrame = {
     Natives.ensure(spark)
     val e = Tables.embeddings(spark, dir)
@@ -357,26 +379,11 @@ object VectorOps {
       .select(col("vec_id"),
         posexplode(array((0 until NumTables).map(t => col(s"b$t")): _*))
           .as(Seq("tbl", "bucket")))
-    // Rank-cap BEFORE the membership aggregate: row_number ≤ cap compiles
-    // to WindowGroupLimit (partial top-cap per map partition BEFORE the
-    // shuffle + final after), so neither the shuffle nor the collect_list
-    // buffer ever sees more than `BucketCap` members of a degenerate
-    // bucket — a slice after collect_list would still materialize the
-    // FULL membership in one aggregation row first. Kept members are the
-    // smallest vec_ids.
-    val wBucket = Window.partitionBy("tbl", "bucket").orderBy("vec_id")
-    val members = hashed
-      .withColumn("rn", row_number().over(wBucket))
-      .filter(col("rn") <= BucketCap)
-      .groupBy("tbl", "bucket")
-      .agg(array_sort(collect_list(col("vec_id"))).as("ids"))
-      .filter(size(col("ids")) > 1)
-    val pairs = members
-      .select(explode(expr(
-        """flatten(transform(ids, x ->
-             transform(filter(ids, y -> y > x), y ->
-               named_struct('a', x, 'b', y))))""")).as("p"))
-      .select(col("p.a").as("a"), col("p.b").as("b"))
+    val cell = Seq("tbl", "bucket")
+    val pairs = Candidates.pairs(Candidates.firstK(
+        hashed.withColumnRenamed("vec_id", "v"), cell, "v", BucketCap),
+        cell, "v")
+      .select(col("v_a").as("a"), col("v_b").as("b"))
       .distinct()
     val v = normed(e)
     pairs
@@ -650,21 +657,14 @@ object VectorOps {
     * query (a candidate lives in exactly one cell), so no dedup stage is
     * needed. */
   private def ivfProbe(e: DataFrame, cents: DataFrame): DataFrame = {
-    // The N×C assignment fan-out joins on a NON-FOLDABLE always-zero key
-    // (pmod of the id): BroadcastNestedLoopJoin does not participate in
-    // whole-stage codegen, so above a crossJoin the dot product runs
-    // interpreted (measured ~5 s at sf0.1) — and a plain literal key
-    // constant-folds straight back into a crossJoin. As a
-    // BroadcastHashJoin the whole assign-score stage compiles.
-    // The centroid ranking is a row_number ≤ NProbe filter, which
-    // compiles to WindowGroupLimit: each map partition keeps only the
-    // top-NProbe centroids per vector BEFORE the shuffle, so ~NProbe×N
-    // rows ride the exchange, not N×C.
+    // The N×C assignment is a [[fanOut]], so the whole assign-score
+    // stage compiles. The centroid ranking is a row_number ≤ NProbe
+    // filter, which compiles to WindowGroupLimit: each map partition
+    // keeps only the top-NProbe centroids per vector BEFORE the
+    // shuffle, so ~NProbe×N rows ride the exchange, not N×C.
     val wAssign = Window.partitionBy("vec_id")
       .orderBy(col("sim").desc, col("cent_id"))
-    val ranked = e.withColumn("jk", pmod(col("vec_id"), lit(1)))
-      .join(broadcast(cents.withColumn("jk", pmod(col("cent_id"), lit(1)))),
-        "jk")
+    val ranked = fanOut(e, "vec_id", cents, "cent_id")
       .withColumn("sim",
         dot("embedding", "cent_emb") / (col("norm") * col("cent_norm")))
       .select(col("vec_id"), col("cent_id"), col("sim"))
@@ -756,9 +756,9 @@ object VectorOps {
     Natives.ensure(spark)
     val e = ivfCorpus(spark, dir)
     val c0 = strideCentroids(e, Tables.embeddings(spark, dir).count())
-    // Lloyd step (×iters): argmin assignment to the current
-    // centroids (max(struct) hash aggregate — top-1 only, so no window
-    // needed), then the fixed-point per-dimension mean per cell.
+    // Lloyd step (×iters): [[nearestCentroid]] assignment to the
+    // current centroids, then the fixed-point per-dimension mean per
+    // cell.
     // Per-dimension means via posexplode + ONE decimal sum — not 64
     // column-wise sum expressions: the wide form generated enough
     // bytecode (on top of this query's two unrolled dot stages) to
@@ -772,15 +772,8 @@ object VectorOps {
     // the broadcast build; it also keeps the plan size constant in the
     // iteration count instead of nesting.
     def lloydStep(cents: DataFrame): DataFrame = {
-      val a = e.withColumn("jk", pmod(col("vec_id"), lit(1)))
-        .join(broadcast(cents.withColumn("jk", pmod(col("cent_id"), lit(1)))),
-          "jk")
-        .withColumn("sim",
-          dot("embedding", "cent_emb") / (col("norm") * col("cent_norm")))
-        .groupBy(col("vec_id").as("v"))
-        .agg(max(struct(col("sim"), (-col("cent_id")).as("neg_cent")))
-          .as("best"))
-        .select(col("v"), (-col("best.neg_cent")).as("cent_id"))
+      val a = nearestCentroid(e, cents)
+        .select(col("vec_id").as("v"), col("cent_id"))
       // FIXED-POINT per-dimension means (floor at 2^40, long sums) —
       // not decimal-cast sums: the double→DECIMAL(28,12) cast rounds
       // at digit 12 and can land on a half-tie where Spark (HALF_UP)
@@ -948,16 +941,7 @@ object VectorOps {
       .select(col("vec_id"), col("embedding"), col("label"),
         sqrt(sq("embedding")).as("norm"))
     val trained = trainedCoarseCentroids(spark, dir, LloydIters)
-    e.withColumn("jk", pmod(col("vec_id"), lit(1)))
-      .join(broadcast(trained.withColumn("jk", pmod(col("cent_id"), lit(1)))),
-        "jk")
-      .withColumn("sim",
-        dot("embedding", "cent_emb") / (col("norm") * col("cent_norm")))
-      .groupBy(col("vec_id"))
-      .agg(max(struct(col("sim"), (-col("cent_id")).as("neg_cent")))
-        .as("best"))
-      .select(col("vec_id"), (-col("best.neg_cent")).as("cent_id"),
-        col("best.sim").as("sim"))
+    nearestCentroid(e, trained)
       .join(e.select(col("vec_id"), col("label"), col("norm")), "vec_id")
   }
 
@@ -2327,17 +2311,20 @@ object VectorOps {
 
   /** The banded pigeonhole candidate + Hamming-verify stage shared by
     * the MIH (64-bit sign codes) and RP (256-bit hyperplane codes)
-    * families: postings per (band, value), stop-bucket cap, per-band
-    * equi-join, pair dedup, then one codegen'd `bit_count(xor)` sum
-    * over the band columns. `bands` must carry `vec_id, b0..b{n-1}`.
-    * Returns (q_id, c_id, hamming). */
+    * families: postings per (band, value), stop buckets dropped above
+    * the cap, the unordered id pairs sharing a band seen from both
+    * ends, pair dedup, then one codegen'd `bit_count(xor)` sum over the
+    * band columns. `bands` must carry `vec_id, b0..b{n-1}`. Returns
+    * (q_id, c_id, hamming). */
   private def bandedScoredPairs(bands: DataFrame, nBands: Int,
       bucketCap: Int): DataFrame = {
-    val capped = stopCapped(postings(bands, nBands), bucketCap)
-    hammingVerify(
-      capped.select(col("vec_id").as("q_id"), col("j"), col("bv"))
-        .join(capped.select(col("vec_id").as("c_id"), col("j"), col("bv")),
-          Seq("j", "bv")),
+    val band = Seq("j", "bv")
+    val pairs = Candidates.pairs(Candidates.dropAbove(
+        postings(bands, nBands), band, bucketCap), band, "vec_id")
+    hammingVerify(pairs.select(col("vec_id_a").as("q_id"),
+        col("vec_id_b").as("c_id"))
+      .unionByName(pairs.select(col("vec_id_b").as("q_id"),
+        col("vec_id_a").as("c_id"))),
       bands, nBands)
   }
 
@@ -2346,16 +2333,6 @@ object VectorOps {
     bands.select(col("vec_id"),
       posexplode(array((0 until nBands).map(j => col(s"b$j")): _*))
         .as(Seq("j", "bv")))
-
-  /** The postings of every (band, value) bucket of at most `bucketCap`
-    * members; larger buckets are dropped whole as stop bands. */
-  private def stopCapped(posted: DataFrame, bucketCap: Int): DataFrame = {
-    val wB = Window.partitionBy("j", "bv")
-    posted
-      .withColumn("bsz", count(lit(1)).over(wB))
-      .filter(col("bsz") <= bucketCap)
-      .select("vec_id", "j", "bv")
-  }
 
   /** The Hamming verify of banded candidate rows (q_id, c_id, …): the
     * distinct non-self pairs, scored by one codegen'd `bit_count(xor)`
@@ -2498,7 +2475,9 @@ object VectorOps {
       dir: String): DataFrame = {
     val bands = rpBands(spark, dir)
     val posted = postings(bands, RpBands)
-    val capped = stopCapped(posted, RpBucketCap)
+    // Singleton buckets stay: a query reaches them by a flipped probe.
+    val capped = Candidates.dropAbove(posted, Seq("j", "bv"), RpBucketCap,
+        minSize = 1)
       .select(col("vec_id").as("c_id"), col("j"), col("bv"))
     val probes = posted
       .withColumn("k", explode(sequence(lit(-1), lit(RpBandBits - 1))))
@@ -2567,11 +2546,9 @@ object VectorOps {
       .repartition(spark.sparkContext.defaultParallelism, col("c_id"))
     val q = e.select(col("vec_id").as("q_id"),
       col("embedding").as("q_emb"), col("norm").as("q_norm"))
-    // Every pair through the same non-foldable constant-key
-    // BroadcastHashJoin as cosineTopK (a BNLJ would evaluate the dot
-    // interpreted), then the pick every ANN family uses.
-    cosinePick(c.withColumn("jk", pmod(col("c_id"), lit(1)))
-      .join(broadcast(q.withColumn("jk", pmod(col("q_id"), lit(1)))), "jk")
+    // Every pair through the [[fanOut]], then the pick every ANN
+    // family uses.
+    cosinePick(fanOut(c, "c_id", q, "q_id")
       .filter(col("q_id") =!= col("c_id"))
       .withColumn("cosine",
         dot("q_emb", "c_emb") / (col("q_norm") * col("c_norm"))),
@@ -2712,7 +2689,8 @@ object VectorOps {
       .selectExpr(s"stack(${RecallKs.size}, $stackArms) AS (k, n_hits)")
       .crossJoin(broadcast(tot))
       .select(col("k"), col("n_queries"), col("n_hits"),
-        expr("(n_hits * 1000) div n_queries").as("recall_mille"))
+        expr("(n_hits * 1000) div nullif(n_queries, 0)")
+          .as("recall_mille"))
       .orderBy("k")
   }
 
@@ -3372,15 +3350,12 @@ object VectorOps {
       .filter(col("a_val") =!= col("b_val"))
       .select(
         when(col("a_val"), col("a")).otherwise(col("b")).as("val_id"),
-        when(col("a_val"), col("b")).otherwise(col("a")).as("train_id"),
+        when(col("a_val"), col("b")).otherwise(col("a")).as("c_id"),
         col("cosine"))
-    cross
-      .groupBy("val_id")
-      .agg(max(struct(col("cosine"), (-col("train_id")).as("neg_t")))
-        .as("best"))
-      .select(col("val_id"), (-col("best.neg_t")).as("train_id"),
-        round(col("best.cosine"), 9).as("cosine"),
-        (col("best.cosine") >= NearDupMinCosine).as("contaminated"))
+    cosinePick(cross, Seq("val_id"))
+      .select(col("val_id"), col("c_id").as("train_id"),
+        round(col("cosine"), 9).as("cosine"),
+        (col("cosine") >= NearDupMinCosine).as("contaminated"))
       .orderBy("val_id")
   }
 
@@ -3457,9 +3432,7 @@ object VectorOps {
     def cosK(k: Int): Column =
       element_at(col("pd"), MatryoshkaDims.indexOf(k) + 1) /
         (col(s"qn$k") * col(s"cn$k"))
-    val perQ = c
-      .withColumn("jk", pmod(col("c_id"), lit(1)))
-      .join(broadcast(q.withColumn("jk", pmod(col("q_id"), lit(1)))), "jk")
+    val perQ = fanOut(c, "c_id", q, "q_id")
       .filter(col("q_id") =!= col("c_id"))
       .withColumn("pd",
         expr(s"vec_dot_prefixes(q_emb, c_emb, '$ksStr')"))

@@ -196,7 +196,7 @@ class PlanSpec extends GraftSpec {
   }
 
   test("every rank-capped keyed-allowlist annotation compiles to WindowGroupLimit") {
-    // DERIVED from WindowGateSpec.keyedAllowlist (r14 audit order #3):
+    // DERIVED from WindowGateSpec.keyedAllowlist:
     // any entry whose justification cites a WindowGroupLimit cap (≤ cap
     // rows per group forwarded on the MAP side, before the exchange —
     // reverting to slice(collect_list(...)) or a plain post-window
@@ -208,7 +208,8 @@ class PlanSpec extends GraftSpec {
     // annotation can no longer rot in either direction.
     val rankCapped = WindowGateSpec.keyedAllowlist
       .filter(_._2.contains("WindowGroupLimit")).keySet
-    val builders: Map[(String, String), () => DataFrame] = Map(
+    // A shared operator has one builder per caller.
+    val builders: Seq[((String, String), () => DataFrame)] = Seq(
       ("BatchOps.scala", "neymanSample") ->
         (() => BatchOps.neymanSample(spark, dir)),
       ("BatchOps.scala", "trendingParts7d") ->
@@ -217,6 +218,12 @@ class PlanSpec extends GraftSpec {
         (() => CdcOps.kmvDistinct(spark, dir)),
       ("CdcOps.scala", "kmvOverlap") ->
         (() => CdcOps.kmvOverlap(spark, dir)),
+      ("Candidates.scala", "firstK") ->
+        (() => TextOps.minhashCandidatesUncached(spark, dir)),
+      ("Candidates.scala", "firstK") ->
+        (() => VectorOps.lshScoredPairsUncached(spark, dir)),
+      ("Candidates.scala", "firstK") ->
+        (() => TextOps.simhashPairs(spark, dir)),
       ("TextOps.scala", "bm25TopK") ->
         (() => TextOps.bm25TopK(spark, dir)),
       ("TextOps.scala", "lpaStep") ->
@@ -256,11 +263,11 @@ class PlanSpec extends GraftSpec {
       ("VectorOps.scala", "hammingShortlist") ->
         (() => VectorOps.hammingShortlist(
           VectorOps.mihScoredPairsUncached(spark, dir))))
-    val unmapped = rankCapped.diff(builders.keySet)
+    val unmapped = rankCapped.diff(builders.map(_._1).toSet)
     assert(unmapped.isEmpty,
       s"rank-capped annotation(s) without a plan-assert builder: $unmapped")
-    rankCapped.toSeq.sortBy(_.toString()).foreach { site =>
-      val plan = executedPlan(builders(site)())
+    builders.filter(b => rankCapped(b._1)).foreach { case (site, build) =>
+      val plan = executedPlan(build())
       assert(plan.contains("WindowGroupLimit"),
         s"$site is annotated rank-capped but its executed plan has no " +
           s"WindowGroupLimit:\n$plan")

@@ -116,8 +116,6 @@ object WindowGateSpec {
       "bounded frame: merged length grid per source pair — value-domain",
     ("TextOps.scala", "lengthQuantileSketch") ->
       "bounded frame: (lang, fixed bin) sketch grain",
-    ("TextOps.scala", "winnowPairsCore") ->
-      "data-keyed: fp posting key (df-capped before pair explosion)",
     ("TextOps.scala", "groupedQuantileRegisters") ->
       ("rank-capped: rk <= GroupQSampleK per lang compiles to " +
         "WindowGroupLimit"),
@@ -127,19 +125,11 @@ object WindowGateSpec {
         "(lang, n_chars) value grain"),
     ("TextOps.scala", "lpaStep") ->
       "data-keyed: src vertex id; rn = 1 majority pick compiles to WindowGroupLimit",
-    ("TextOps.scala", "minhashCandidatesUncached") ->
-      "data-keyed: (band, band_sig) — bucket count scales with data",
-    ("TextOps.scala", "nearDupContainment") ->
-      "data-keyed: (shingle, lang) posting key (df-capped)",
-    ("TextOps.scala", "nearDupJaccard") ->
-      "data-keyed: (shingle, lang, len_bucket) posting key",
     ("TextOps.scala", "nearDupJaccardPrefix") -> "data-keyed: doc_id",
     ("TextOps.scala", "paragraphDedup") ->
       "data-keyed: md5(paragraph) — group count scales with distinct paragraphs",
     ("TextOps.scala", "qualityCalibration") ->
       "bounded frame: (source, n_chars) distinct grain — value-domain",
-    ("TextOps.scala", "simhashPairs") ->
-      "data-keyed: (band, band_key) bucket",
     ("TextOps.scala", "splitBalance") ->
       "bounded frame: (split, lang) aggregate — 3 x |langs| rows",
     ("TextOps.scala", "stratifiedSample") ->
@@ -165,14 +155,16 @@ object WindowGateSpec {
     ("VectorOps.scala", "labelCohesion") ->
       "rank-capped: rn <= CohesionCap compiles to WindowGroupLimit",
     ("VectorOps.scala", "lshRecallAtK") -> "data-keyed: q_id",
-    ("VectorOps.scala", "lshScoredPairsUncached") ->
-      "data-keyed: (tbl, bucket) hash bucket",
     ("VectorOps.scala", "pqEncodeUncached") ->
       "bounded frame: codebook grain — PqCodebook rows per subspace",
     ("VectorOps.scala", "pqShortlistUncached") ->
       "data-keyed: q_id; shortlist rank-capped: rk <= PqRerankCap compiles to WindowGroupLimit",
-    ("VectorOps.scala", "stopCapped") ->
-      "data-keyed: (band j, band value) bucket")
+    ("Candidates.scala", "dropAbove") ->
+      ("data-keyed: posting bucket key (shingle, fingerprint, band " +
+        "value) — bucket count scales with the data"),
+    ("Candidates.scala", "firstK") ->
+      ("data-keyed: posting bucket key (minhash, simhash, LSH bucket); " +
+        "rank-capped: rn <= k compiles to WindowGroupLimit"))
 }
 
 class WindowGateSpec extends AnyFunSuite {
